@@ -565,63 +565,39 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return dataset_cached(_TABLE_CACHE, spark, sf_dir, (f"{name}.parquet",), build)
 
 
-def scatter(df: DataFrame) -> DataFrame:
-    """Small-input parallelism repair: round-robin repartition to the
-    cluster's core count — SKIPPED when the input is already wide.
+def scatter(df: DataFrame, *keys: str) -> DataFrame:
+    """Small-input parallelism repair: repartition to the cluster's core
+    count — SKIPPED when the input is already wide.
 
     Small parquet inputs arrive as one split (files below
     spark.sql.files.maxPartitionBytes), which serializes any CPU-heavy
     map work (per-token md5, shingle expansion) onto one core. A cheap
-    round-robin shuffle of the compact source rows buys full-width
-    parallelism for the expensive downstream transform (measured
-    3.2 s → 0.5 s on md5-heavy pipelines at sf0.1). It never changes
-    results (all consumers re-aggregate by key).
+    shuffle of the compact source rows buys full-width parallelism for
+    the expensive downstream transform. It never changes results (all
+    consumers re-aggregate by key).
 
-    `repartition` is NOT free at scale: it round-robins every row
-    through a full shuffle regardless of input width, so on a 100 TB
-    input that already spans thousands of splits it would be a
-    gratuitous O(data) exchange. The partition-count check below is
-    metadata-only (physical planning, no job) and skips the shuffle
-    whenever the scan already provides ≥ defaultParallelism splits —
-    exactly the case where the repartition stops paying. Probe cost:
-    one planning pass, then ~0.6 ms per call (measured) — PySpark
+    With no ``keys`` the repair is round-robin. With ``keys`` it is
+    HASH-partitioned, so a downstream aggregation keyed on (a superset
+    of) ``keys`` REUSES the partitioning instead of paying its own
+    exchange (ClusteredDistribution is satisfied by any
+    hashpartitioning on the keys, whatever the partition count), and
+    the keyed repartition skips round-robin's sortBeforeRepartition
+    pass. Hash balance then depends on the key: use only unique-ish
+    keys (doc_id), never a hot one.
+
+    `repartition` is NOT free at scale: it moves every row through a
+    full shuffle regardless of input width, so on an input that
+    already spans thousands of splits it would be a gratuitous O(data)
+    exchange. The partition-count check below is metadata-only
+    (physical planning, no job) and skips the shuffle whenever the
+    scan already provides ≥ defaultParallelism splits. PySpark
     memoizes `.rdd` per DataFrame object, and table() frames are
-    themselves cached per dataset snapshot, so the planning happens
-    once per snapshot, not once per query build.
+    cached per dataset snapshot, so the probe plans once per snapshot.
     """
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= parallelism:
         return df
-    return df.repartition(parallelism)
-
-
-def scatter_by(df: DataFrame, *cols: str) -> DataFrame:
-    """``scatter`` keyed by ``cols``: the same small-input parallelism
-    repair, but HASH-partitioned so a downstream aggregation keyed on
-    (a superset of) ``cols`` can REUSE the partitioning instead of
-    paying its own exchange (guide §2.4 — two operations keyed the same
-    way share one shuffle; ClusteredDistribution is satisfied by any
-    hashpartitioning on the keys, whatever the partition count).
-    Measured on dedup_simhash (r11): the round-robin scatter left the
-    packed-popcount groupBy(doc_id) needing a second Exchange +
-    partial/final agg split; keying the scatter by doc_id folds the
-    aggregation into one Complete-mode pass — 2 Exchanges → 1.
-
-    Two costs the keyed variant AVOIDS vs round-robin: keyless
-    repartition(n) locally sorts its input so retried tasks reproduce
-    the same row assignment (spark.sql.execution.sortBeforeRepartition,
-    guide §2.5) — hash repartition needs no such sort; and the saved
-    downstream exchange. The cost it ADDS: hash balance now depends on
-    the key — use only keys that are unique-ish (doc_id) or provably
-    high-cardinality relative to the partition count, never a hot key.
-    Like ``scatter``, already-wide inputs pass through untouched (the
-    downstream agg then pays its own exchange as before — correct at
-    scale, where the scan provides width and a forced repartition
-    would be a gratuitous O(data) exchange)."""
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= parallelism:
-        return df
-    return df.repartition(parallelism, *cols)
+    return df.repartition(parallelism, *keys)
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:
@@ -680,5 +656,5 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
 # and the extra full-row shuffle measurably REGRESSES every former call
 # site (events_tumbling_window 0.29 s no-widen vs 0.73 s widened at
 # sf0.1), so it was removed rather than kept as an attractive nuisance.
-# scatter() (below) remains for genuinely CPU-bound map pipelines
+# scatter() (above) remains for genuinely CPU-bound map pipelines
 # (per-shingle md5), where the cheap pre-shuffle still pays.

@@ -1,12 +1,10 @@
-"""Sinks (SURVEY.md §2.1 S2/K1/K2/X2/X3).
+"""Sinks (SURVEY.md §2.1 K1/K2/X2/X3).
 
 Reference behavior: per-run timestamped CSV per table under
 ``transformed_data/{song,album,artist}_data/`` with header, UTF-8,
-single object (spotifytransform.py:19-24,101-130); raw zone gets
-pretty JSON (spotifyextract.py:92-101).
+single object (spotifytransform.py:19-24,101-130).
 
-Scale posture: single-file CSV (`coalesce(1)`) is reference-parity ONLY
-— the default is multi-part output, one file per partition, which is
+Scale posture: multi-part output, one file per partition, which is
 what survives 100 TB. Run-scoped output naming maps to a run_id
 subdirectory instead of a filename suffix.
 """
@@ -16,30 +14,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def write_csv(
-    df: DataFrame,
-    out_dir: str,
-    *,
-    mode: str = "overwrite",
-    single_file: bool = False,
-) -> None:
-    """K1/K2: header CSV sink. single_file=True reproduces the
-    reference's one-object-per-table semantic (anti-pattern at scale,
-    kept for parity)."""
-    if single_file:
-        df = df.coalesce(1)
+def write_csv(df: DataFrame, out_dir: str) -> None:
+    """K1/K2: header CSV sink, overwriting ``out_dir``. Multi-part
+    output (one file per partition) — the reference's single object
+    per table is a coalesce(1) away, an anti-pattern at scale."""
     (
-        df.write.mode(mode)
+        df.write.mode("overwrite")
         .option("header", True)
         .option("encoding", "UTF-8")
         .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ssXXX")
         .csv(out_dir)
     )
-
-
-def write_raw_json(df: DataFrame, out_dir: str, *, mode: str = "overwrite") -> None:
-    """S2: raw-zone JSON sink (one JSON object per row)."""
-    df.write.mode(mode).json(out_dir)
 
 
 def run_output_dir(base: str, table_name: str, run_id: str) -> str:

@@ -123,7 +123,7 @@ def _keep_first(df: DataFrame, key: str) -> DataFrame:
     )
 
 
-def make_albums(items: DataFrame, *, deduped: bool = True) -> DataFrame:
+def make_albums(items: DataFrame) -> DataFrame:
     """P1 + C2 + D2: albums dimension (spotifytransform.py:26-37,97-99)."""
     proj = items.select(
         "doc_order",
@@ -134,12 +134,12 @@ def make_albums(items: DataFrame, *, deduped: bool = True) -> DataFrame:
         F.col("item.track.album.total_tracks").alias("total_tracks"),
         F.col("item.track.album.external_urls.spotify").alias("url"),
     )
-    if deduped:
-        proj = _keep_first(proj, "album_id")
-    return proj.select("album_id", "name", "release_date", "total_tracks", "url")
+    return _keep_first(proj, "album_id").select(
+        "album_id", "name", "release_date", "total_tracks", "url"
+    )
 
 
-def make_artists(items: DataFrame, *, deduped: bool = True) -> DataFrame:
+def make_artists(items: DataFrame) -> DataFrame:
     """P2 + D1: artists dimension from artists[0] ONLY — the reference's
     lossy array-head projection (spotifytransform.py:43-45). The
     generalized explode-all-artists form is explode_artists()."""
@@ -151,9 +151,7 @@ def make_artists(items: DataFrame, *, deduped: bool = True) -> DataFrame:
         head.getField("name").alias("name"),
         head.getField("external_urls").getField("spotify").alias("url"),
     )
-    if deduped:
-        proj = _keep_first(proj, "artist_id")
-    return proj.select("artist_id", "name", "url")
+    return _keep_first(proj, "artist_id").select("artist_id", "name", "url")
 
 
 def explode_artists(items: DataFrame) -> DataFrame:
@@ -186,6 +184,19 @@ def make_songs(items: DataFrame) -> DataFrame:
     )
 
 
+def star_tables(items: DataFrame) -> dict[str, DataFrame]:
+    """The star schema over exploded items: songs fact plus the
+    keep-first artists and albums dimensions — the ONE builder shared
+    by the batch transform and the streaming sink (streaming/pipeline.py
+    sink_batch), so a micro-batch is the batch query run over that
+    batch's blobs."""
+    return {
+        "songs": make_songs(items),
+        "artists": make_artists(items),
+        "albums": make_albums(items),
+    }
+
+
 def transform(raw: DataFrame) -> dict[str, DataFrame]:
     """The full reference transform: one exploded SUBTREE, three branches.
 
@@ -195,11 +206,7 @@ def transform(raw: DataFrame) -> dict[str, DataFrame]:
     subplans across ACTIONS, so a consumer that executes all three
     branches (the streaming sink's per-batch CSV writes) re-reads and
     re-parses the raw JSON once per branch unless it persists the
-    exploded frame first (streaming/pipeline.py sink_batch does).
+    exploded frame first and calls star_tables on it (streaming/
+    pipeline.py sink_batch does).
     """
-    items = explode_items(raw)
-    return {
-        "songs": make_songs(items),
-        "artists": make_artists(items),
-        "albums": make_albums(items),
-    }
+    return star_tables(explode_items(raw))

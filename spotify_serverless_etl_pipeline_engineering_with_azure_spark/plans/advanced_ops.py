@@ -26,7 +26,6 @@ from ..catalog import (
     checkpoint_frame,
     dataset_cached,
     persisted,
-    scatter,
     table,
 )
 from ..functions.exact import dsum

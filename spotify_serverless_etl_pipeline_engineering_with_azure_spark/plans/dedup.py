@@ -29,7 +29,6 @@ from ..catalog import (
     dataset_cached,
     release,
     scatter,
-    scatter_by,
     scratch_roots,
     table,
 )
@@ -445,13 +444,12 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     this quarters the per-row aggregate update work (measured
     0.87 s → 0.61 s at sf0.1); versus a nested higher-order-function
     fold (shuffle-free but interpreted — HOF lambdas skip whole-stage
-    codegen) it measured ~5× faster. Since r11 the plan carries ONE
-    exchange total: the small-input parallelism repair is
-    scatter_by(docs, "doc_id"), whose hashpartitioning the
+    codegen) it measured ~5× faster. The plan carries ONE exchange
+    total: the small-input parallelism repair is
+    scatter(docs, "doc_id"), whose hashpartitioning the
     groupBy(doc_id) reuses (guide §2.4), so the packed aggregation
-    runs as a single in-stage pass with no second shuffle — measured
-    0.88 → 0.46 s median at sf0.1 and 1.10 → 0.74 s at sf1, beyond
-    spread, results bit-identical (scripts/measure_simhash_ab.py).
+    runs as a single in-stage pass with no second shuffle (the
+    round-robin comparison is recorded in SIMHASH_AB_r11.json).
 
     Capacity: each 16-bit field holds a popcount ≤ 65535 and the packed
     sum stays below 2^63 for ≤ 32767 tokens per document — far above
@@ -461,15 +459,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     SUM(±1)); shiftright/`% 2` extraction is exact on the non-negative
     48-bit hash, matching the oracle's `(h // 2^j) % 2`.
     """
-    return _simhash_plan(spark, sf_dir)
-
-
-def _simhash_plan(
-    spark: SparkSession, sf_dir: str, keyed_scatter: bool = True
-) -> DataFrame:
-    """dedup_simhash's plan with the parallelism-repair shuffle's
-    keying exposed for measured A/Bs (``keyed_scatter=False`` is the
-    pre-r11 round-robin shape, kept as the comparator)."""
     docs = table(spark, sf_dir, "documents")
     # Cap the aggregation's input at MAX+1 tokens per doc BEFORE any
     # hashing: bounds the packed SUM away from int64 overflow regardless
@@ -479,13 +468,12 @@ def _simhash_plan(
     # second token array per doc (measured +20% on this, the slowest
     # headline query); the generator emits rows straight into a codegen'd
     # row filter and only surviving tokens reach md5.
-    # The parallelism-repair shuffle is KEYED by doc_id (r11): the
+    # The parallelism-repair shuffle is KEYED by doc_id: the
     # packed-popcount groupBy(doc_id) below reuses its partitioning, so
-    # the plan drops from 2 Exchanges + partial/final agg to 1 Exchange
-    # + one Complete-mode agg (guide §2.4), and the keyed repartition
-    # skips round-robin's sortBeforeRepartition pass. doc_id is unique,
-    # so hash balance matches round-robin's.
-    src = scatter_by(docs, "doc_id") if keyed_scatter else scatter(docs)
+    # the plan has 1 Exchange + one Complete-mode agg (guide §2.4), and
+    # the keyed repartition skips round-robin's sortBeforeRepartition
+    # pass. doc_id is unique, so hash balance matches round-robin's.
+    src = scatter(docs, "doc_id")
     tok = (
         src
         .select("doc_id", F.posexplode(F.split("text", " ")).alias("pos", "t"))
@@ -1792,9 +1780,9 @@ def _pfj_intersect_batches(batches, threshold: float | None = None):
     ``float64(n_common) / float64(ma + mb − n_common) >= t`` — numpy
     float64 division is the same IEEE-754 double division the JVM
     performs on ``CAST(n_common AS DOUBLE) / n_union``, so fusing
-    moves the filter without moving any rounding boundary (the pinned
-    arm-equality test compares the fused arm row-for-row against the
-    JVM arm, which keeps the external filter). n_union >= 1 always:
+    moves the filter without moving any rounding boundary (a pinned
+    test compares the fused kernel row-for-row against a JVM
+    array_intersect reference that filters externally). n_union >= 1 always:
     inner joins over non-empty profile arrays give ma, mb >= 1 and
     n_common <= min(ma, mb).
 
@@ -1807,7 +1795,7 @@ def _pfj_intersect_batches(batches, threshold: float | None = None):
     batch's packed b-keys — the same batched sorted-merge the numpy
     mirror uses. The rows never leave the join's stage: mapInArrow
     pipelines inside it (no exchange), so the plan's shuffle shape is
-    IDENTICAL to the JVM variant and the only new cost is the Arrow
+    IDENTICAL to a JVM projection's and the only new cost is the Arrow
     IPC hop, linear in candidate bytes.
 
     Mechanics: flatten both list columns; pack each element into one
@@ -1819,9 +1807,8 @@ def _pfj_intersect_batches(batches, threshold: float | None = None):
     monotonically_increasing_id — partition id in the high bits, so
     span is usually ~2^38 but unbounded in principle), fall back to a
     batch-local np.unique remap, which is exact for any id range.
-    Intersection SIZES are what both arms return, so the kernel is
-    bit-equivalent to array_intersect semantics on unique arrays (a
-    pinned test compares the two arms row-for-row)."""
+    Intersection SIZES are all it returns, so the kernel is
+    bit-equivalent to array_intersect semantics on unique arrays."""
     import numpy as np
     import pyarrow as pa
 
@@ -1894,39 +1881,20 @@ def _pfj_intersect_batches(batches, threshold: float | None = None):
 
 
 def _pfj_intersect_passing(batches):
-    """mapInArrow entry point for the production arrow arm: the
-    intersection kernel with the member's jaccard threshold fused in
-    (importable module-level function, not a lambda/partial, so reused
-    Python workers can resolve it by reference)."""
+    """mapInArrow entry point for production: the intersection kernel
+    with the member's jaccard threshold fused in (importable
+    module-level function, not a lambda/partial, so reused Python
+    workers can resolve it by reference)."""
     return _pfj_intersect_batches(batches, threshold=PF_JACCARD_T)
 
 
-def _pfj_plan(spark: SparkSession, sf_dir: str, verify: str = "arrow") -> DataFrame:
-    """The prefix-filter Jaccard plan behind dedup_prefix_filter_jaccard,
-    with the verification backend exposed for measured A/Bs:
-
-    - ``arrow`` (production): the join projects (doc_a, doc_b, sa, sb)
-      into ``_pfj_intersect_passing`` via mapInArrow — vectorized
-      sorted-merge counting with the jaccard threshold FUSED into the
-      kernel (only passing rows cross the IPC boundary back; the
-      jvm/hof arms apply the identical predicate externally), pipelined
-      inside the join's stage.
-    - ``arrow_unfused``: the r10 production shape — same kernel but
-      every counted candidate returns across the IPC boundary and the
-      threshold runs as a Catalyst Filter. Kept live so the fusion's
-      cost delta stays reproducible within one session.
-    - ``jvm``: size(array_intersect(sa, sb)) in the join's projection —
-      the pre-r10 shape, kept as the A/B comparator and the
-      arm-equality test's second opinion.
-    - ``hof``: size(filter(sa, x -> array_contains(sb, x))) — the
-      verdict-suggested higher-order-function arm; O(|sa|·|sb|) linear
-      scans per row (array_contains per element), measured for the
-      record.
-
-    All three arms share the identical candidate join (same shuffles,
-    same exactness filters) and the identical SQL tail modulo WHERE the
-    jaccard filter runs (inside the kernel for arrow, a Catalyst Filter
-    for jvm/hof), so an A/B isolates verification + boundary cost."""
+def _pfj_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The prefix-filter candidate self-join behind
+    dedup_prefix_filter_jaccard: one row (doc_a, doc_b, sa, sb) per
+    (pair, shared prefix shingle) that survives the length and
+    positional filters, with sa/sb each side's sorted, unique shingle-id
+    array. Verification (counting |sa ∩ sb| and applying the jaccard
+    threshold) is the caller's."""
     # vocab (frozen shingle ids + df counts), the prefix probe frame,
     # and the ride-along profile arrays come from the cached id-keyed
     # index — see _pfj_index for why the id assignment must be frozen
@@ -1951,31 +1919,27 @@ def _pfj_plan(spark: SparkSession, sf_dir: str, verify: str = "arrow") -> DataFr
     # (b) pair-level array attach (distinct cand, then two profile
     #     joins) halves that but must route the 700M-pair stream WITH
     #     a ~1.3 KB array through the second attach's shuffle once the
-    #     profile side outgrows broadcast — ~500 GB at sf10, the run
-    #     that killed this host's disk.
+    #     profile side outgrows broadcast — ~500 GB at sf10.
     # Riding the arrays makes every shuffle corpus-linear: the prefix
     # side costs prefix-entries × array width (id-keyed: 8 B/element
     # instead of the shingle string), the emission stream is filtered
-    # and intersected MAP-SIDE inside the join's stage (JVM projection
-    # or pipelined mapInArrow — no exchange either way), and the only
-    # pair-level exchange is the final distinct over rows that already
-    # passed jaccard >= t — RESULT-sized (each true pair × its passing
-    # prefix shingles, all copies bit-identical since the row is a
-    # pure function of the pair). The ~k× redundant intersections for
-    # a pair sharing k prefix shingles are the documented price —
-    # row-local vectorized work that scales with cores, traded against
-    # the pair-stream shuffle that does not scale with disk; the r9 id
-    # substitution cut the per-candidate constant 220 → 48 µs·core and
-    # the r10 Arrow kernel attacks the rest (see
-    # _pfj_intersect_batches). collect_set is PER-DOC (bounded by
-    # document token count), never a bucket expansion.
+    # and intersected MAP-SIDE inside the join's stage (pipelined
+    # mapInArrow — no exchange), and the only pair-level exchange is
+    # the final distinct over rows that already passed jaccard >= t —
+    # RESULT-sized (each true pair × its passing prefix shingles, all
+    # copies bit-identical since the row is a pure function of the
+    # pair). The ~k× redundant intersections for a pair sharing k
+    # prefix shingles are the documented price — row-local vectorized
+    # work that scales with cores, traded against the pair-stream
+    # shuffle that does not scale with disk. collect_set is PER-DOC
+    # (bounded by document token count), never a bucket expansion.
     #
-    # Length + positional filters (see docstring): both thresholds are
-    # relaxed by 0.5 — sizes/overlaps are integers, so half-unit slack
-    # can only ADMIT extra candidates (verified exactly in the same
-    # join), never drop a true pair to t·m landing on a float rounding
-    # boundary. They sit in the JOIN CONDITION, so rejected emissions
-    # never reach the verification projection.
+    # Length + positional filters (see dedup_prefix_filter_jaccard):
+    # both thresholds are relaxed by 0.5 — sizes/overlaps are integers,
+    # so half-unit slack can only ADMIT extra candidates (verified
+    # exactly in the same join), never drop a true pair to t·m landing
+    # on a float rounding boundary. They sit in the JOIN CONDITION, so
+    # rejected emissions never reach verification.
     overlap_frac = PF_JACCARD_T / (1.0 + PF_JACCARD_T)
     pref_a = prefix.join(profiles, "doc_id").select(
         F.col("doc_id").alias("doc_a"),
@@ -1991,7 +1955,7 @@ def _pfj_plan(spark: SparkSession, sf_dir: str, verify: str = "arrow") -> DataFr
         F.col("shid").alias("shid_b"),
         F.col("shs").alias("sb"),
     )
-    cand = pref_a.join(
+    return pref_a.join(
         pref_b,
         (F.col("shid") == F.col("shid_b"))
         & (F.col("doc_a") < F.col("doc_b"))
@@ -2003,63 +1967,7 @@ def _pfj_plan(spark: SparkSession, sf_dir: str, verify: str = "arrow") -> DataFr
             1 + F.least(F.col("ma") - F.col("ia"), F.col("mb") - F.col("ib"))
             >= overlap_frac * (F.col("ma") + F.col("mb")) - F.lit(0.5)
         ),
-    )
-    if verify == "arrow":
-        # The jaccard threshold is FUSED into the kernel (r11): failing
-        # candidates are dropped batch-locally before the Arrow IPC
-        # return hop, so the boundary carries only result-rate rows.
-        # The kernel applies the bit-identical double-division predicate
-        # the other arms apply externally below.
-        counted = cand.select("doc_a", "doc_b", "sa", "sb").mapInArrow(
-            _pfj_intersect_passing,
-            "doc_a long, doc_b long, n_common long, ma long, mb long",
-        )
-    elif verify == "arrow_unfused":
-        counted = cand.select("doc_a", "doc_b", "sa", "sb").mapInArrow(
-            _pfj_intersect_batches,
-            "doc_a long, doc_b long, n_common long, ma long, mb long",
-        )
-    elif verify == "hof":
-        counted = cand.select(
-            "doc_a",
-            "doc_b",
-            F.size(
-                F.filter("sa", lambda x: F.array_contains("sb", x))
-            ).cast("long").alias("n_common"),
-            F.size("sa").cast("long").alias("ma"),
-            F.size("sb").cast("long").alias("mb"),
-        )
-    else:  # "jvm"
-        counted = cand.select(
-            "doc_a",
-            "doc_b",
-            # cast: size() is INT; the member's pinned schema (and the
-            # oracle's COUNT/SUM arithmetic) is BIGINT
-            F.size(F.array_intersect("sa", "sb")).cast("long").alias("n_common"),
-            F.size("sa").cast("long").alias("ma"),
-            F.size("sb").cast("long").alias("mb"),
-        )
-    emitted = counted.withColumn(
-        "n_union", F.col("ma") + F.col("mb") - F.col("n_common")
-    )
-    if verify != "arrow":
-        # jvm/hof arms count every candidate, so they filter here; the
-        # arrow kernel already emitted only passing rows (same
-        # predicate, same float64 arithmetic — see
-        # _pfj_intersect_batches).
-        emitted = emitted.filter(
-            F.col("n_common").cast("double") / F.col("n_union") >= PF_JACCARD_T
-        )
-    return (
-        emitted
-        .withColumn(
-            "jaccard",
-            F.round(F.col("n_common").cast("double") / F.col("n_union") * 1000000.0)
-            / 1000000.0,
-        )
-        .select("doc_a", "doc_b", "n_common", "n_union", "jaccard")
-        .distinct()
-    )
+    ).select("doc_a", "doc_b", "sa", "sb")
 
 
 @register(
@@ -2121,12 +2029,12 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     _pfj_index; intersection sizes are bijection-invariant, so results
     are bit-identical to string-set semantics) and counts the exact
     intersection row-locally INSIDE the pair-generating self-join's
-    stage — since r10 via the Arrow-batched vectorized sorted-merge
-    kernel (_pfj_intersect_batches, pipelined mapInArrow: no new
-    exchange, measured A/B in PFJ_AB_r10.json) rather than JVM
-    array_intersect's per-row hash set — see _pfj_plan for the two
-    rejected shapes, the three measured verification arms, and why
-    every shuffle here is corpus-linear. Integer-over-integer division
+    stage via the Arrow-batched vectorized sorted-merge kernel
+    (_pfj_intersect_batches, pipelined mapInArrow: no new exchange)
+    rather than JVM array_intersect's per-row hash set — see
+    _pfj_candidates for the two rejected shapes and why every shuffle
+    here is corpus-linear (the verification-backend A/Bs are recorded
+    in PFJ_AB_r1*.json). Integer-over-integer division
     makes the threshold decision engine-exact.
 
     Honest quadratic contract: a cluster of k docs that genuinely ARE
@@ -2159,4 +2067,22 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     in one row and hit the JVM 2³¹-element limit on web-scale
     boilerplate, while the join emits the same pairs as a stream.
     """
-    return _pfj_plan(spark, sf_dir, verify="arrow")
+    # The jaccard threshold is FUSED into the kernel: failing
+    # candidates are dropped batch-locally before the Arrow IPC return
+    # hop, so the boundary carries only result-rate rows (see
+    # _pfj_intersect_batches for the exact double-division predicate).
+    passing = _pfj_candidates(spark, sf_dir).mapInArrow(
+        _pfj_intersect_passing,
+        "doc_a long, doc_b long, n_common long, ma long, mb long",
+    )
+    return (
+        passing
+        .withColumn("n_union", F.col("ma") + F.col("mb") - F.col("n_common"))
+        .withColumn(
+            "jaccard",
+            F.round(F.col("n_common").cast("double") / F.col("n_union") * 1000000.0)
+            / 1000000.0,
+        )
+        .select("doc_a", "doc_b", "n_common", "n_union", "jaccard")
+        .distinct()
+    )

@@ -410,7 +410,7 @@ def streaming_csv_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         }
         for name, df in branches.items():
-            write_csv(df, f"{out}/{name}/batch_id={batch_id}", mode="overwrite")
+            write_csv(df, f"{out}/{name}/batch_id={batch_id}")
 
     with narrow_state_partitions(spark):
         q = (

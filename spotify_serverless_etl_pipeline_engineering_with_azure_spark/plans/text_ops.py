@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import persisted, scatter, scatter_by, table
+from ..catalog import persisted, scatter, table
 from ..functions.exact import dec, roundk, sql_roundk
 from ..functions.hashing import md5_int48, sql_md5_int48
 from ..registry import register
@@ -549,8 +549,8 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (doc_id, term) exchange disappears; and when the df join
     # broadcasts, the persisted tf's partitioning survives to the
     # per-doc top-k window, which then skips ITS exchange too
-    # (measured 5 → 3 Exchanges, see OPTIMIZATION_r11.md).
-    tok = scatter_by(docs, "doc_id").select(
+    # (measured 5 → 4 Exchanges, see OPTIMIZATION_r11.md).
+    tok = scatter(docs, "doc_id").select(
         "doc_id", F.explode(_tokens()).alias("term")
     )
     # persisted(): tf — the heaviest aggregation here, near-corpus
@@ -632,7 +632,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keeps this hashpartitioning(doc_id) all the way to the final
     # per-doc aggregation, which then reuses it instead of paying its
     # own exchange; the vocab count still shuffles by tok either way.
-    toks = scatter_by(docs, "doc_id").select(
+    toks = scatter(docs, "doc_id").select(
         "doc_id", F.explode(_tokens()).alias("tok")
     )
     # persisted(): the vocab aggregate feeds BOTH the grand total and

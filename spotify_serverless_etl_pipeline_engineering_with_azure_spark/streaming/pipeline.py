@@ -14,8 +14,9 @@ Reference mapping:
                       one streaming query otherwise)
   D1 streaming form → dropDuplicatesWithinWatermark
 
-Scale posture: watermarks bound all state; maxFilesPerTrigger paces
-ingest; foreachBatch writes are idempotent per (run, batch_id).
+Scale posture: watermarks bound all state; maxFilesPerTrigger=1 paces
+ingest one blob per trigger; foreachBatch writes are idempotent per
+(run, batch_id).
 """
 
 from __future__ import annotations
@@ -32,19 +33,16 @@ from ..operators.sinks import write_csv
 
 
 def spotify_file_stream(
-    spark: SparkSession,
-    input_dir: str,
-    *,
-    archive_dir: str | None = None,
-    max_files_per_trigger: int | None = None,
+    spark: SparkSession, input_dir: str, *, archive_dir: str | None = None
 ) -> DataFrame:
-    """S3: the raw-zone directory as an unbounded file stream."""
+    """S3: the raw-zone directory as an unbounded file stream, one blob
+    per micro-batch — the reference's one-invocation-per-blob
+    semantics."""
     reader = (
         spark.readStream.schema(spotify.PLAYLIST_SCHEMA)
         .option("multiLine", True)
+        .option("maxFilesPerTrigger", 1)
     )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     if archive_dir:
         # M1: move-after-process, engine-managed and atomic per batch.
         reader = reader.option("cleanSource", "archive").option(
@@ -54,8 +52,8 @@ def spotify_file_stream(
     # (spotify.read_raw_json): keep-first dedup orders by (doc_order,
     # pos) and pos restarts at 0 per file, so a CONSTANT here would
     # leave cross-file ties broken arbitrarily whenever a micro-batch
-    # carries more than one file (maxFilesPerTrigger unset or >1) —
-    # silently diverging from pandas keep='first'.
+    # carries more than one file — silently diverging from pandas
+    # keep='first'.
     return reader.json(input_dir).withColumn("doc_order", F.input_file_name())
 
 
@@ -66,23 +64,20 @@ def run_spotify_pipeline(
     checkpoint_dir: str,
     *,
     archive_dir: str | None = None,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = 1,
 ) -> StreamingQuery:
     """The full reference transform as a stream: readStream → explode →
-    3 branches → foreachBatch CSV ×3 (spotifytransform.py:77-130).
+    3 branches → foreachBatch CSV ×3 (spotifytransform.py:77-130),
+    drained with an availableNow trigger, one blob per micro-batch.
 
-    maxFilesPerTrigger defaults to 1 — one blob per micro-batch, the
-    reference's one-invocation-per-blob semantics. NOTE on archival
-    parity: Spark's source cleaner moves a batch's files when the NEXT
-    batch is planned, so the most recent file trails until more data
-    arrives. That trade (slightly-late archive, exactly-once via
-    checkpoint) replaces the reference's eager but non-atomic
+    Each micro-batch is the batch transform run over that batch's blob:
+    the sink calls the same spotify.star_tables builder. NOTE on
+    archival parity: Spark's source cleaner moves a batch's files when
+    the NEXT batch is planned, so the most recent file trails until
+    more data arrives. That trade (slightly-late archive, exactly-once
+    via checkpoint) replaces the reference's eager but non-atomic
     copy+delete with swallowed errors (spotifytransform.py:137-158).
     """
-    raw = spotify_file_stream(
-        spark, input_dir, archive_dir=archive_dir, max_files_per_trigger=max_files_per_trigger
-    )
+    raw = spotify_file_stream(spark, input_dir, archive_dir=archive_dir)
 
     def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
         # persist the shared exploded subtree: Spark shares no subplans,
@@ -93,24 +88,18 @@ def run_spotify_pipeline(
         # a failed write can't leak the CacheManager entry.
         items = spotify.explode_items(batch_df).persist()
         try:
-            tables = {
-                "songs": spotify.make_songs(items),
-                "artists": spotify.make_artists(items),
-                "albums": spotify.make_albums(items),
-            }
-            for name, df in tables.items():
-                write_csv(df, f"{output_base}/{name}_data/batch_id={batch_id}", mode="overwrite")
+            for name, df in spotify.star_tables(items).items():
+                write_csv(df, f"{output_base}/{name}_data/batch_id={batch_id}")
         finally:
             release(items)
 
-    writer = (
+    return (
         raw.writeStream.foreachBatch(sink_batch)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _staged_dir(sf_dir: str, name: str) -> str:

@@ -245,28 +245,44 @@ WHERE CAST(c AS DOUBLE) / (sa.m + sb.m - c) >= {PF_JACCARD_T}
 
 
 def test_prefix_filter_verification_arms_are_bit_identical(spark, sf_dir):
-    """The verification backends behind _pfj_plan — the fused-threshold
-    Arrow kernel (production), the r10 unfused Arrow shape, JVM
-    array_intersect (the pre-r10 shape), and the HOF linear-scan arm —
-    share one candidate join and must emit row-for-row identical
-    results: the kernel substitutes only HOW |sa ∩ sb| is counted and
-    WHERE the threshold runs, never which pairs exist or what their
-    sizes are."""
+    """Production verification — the fused-threshold Arrow kernel — must
+    emit row-for-row what an independent JVM reference emits over the
+    SAME candidate join: size(array_intersect(sa, sb)) with the jaccard
+    threshold as an external Catalyst filter. The kernel substitutes
+    only HOW |sa ∩ sb| is counted and WHERE the threshold runs, never
+    which pairs exist or what their sizes are."""
     from spotify_serverless_etl_pipeline_engineering_with_azure_spark.plans.dedup import (
-        _pfj_plan,
+        PF_JACCARD_T,
+        _pfj_candidates,
+        dedup_prefix_filter_jaccard,
     )
 
+    n_union = F.size("sa") + F.size("sb") - F.size(F.array_intersect("sa", "sb"))
+    reference = (
+        _pfj_candidates(spark, sf_dir)
+        .select(
+            "doc_a",
+            "doc_b",
+            F.size(F.array_intersect("sa", "sb")).cast("long").alias("n_common"),
+            n_union.cast("long").alias("n_union"),
+        )
+        .filter(F.col("n_common").cast("double") / F.col("n_union") >= PF_JACCARD_T)
+        .withColumn(
+            "jaccard",
+            F.round(F.col("n_common").cast("double") / F.col("n_union") * 1000000.0)
+            / 1000000.0,
+        )
+        .distinct()
+    )
     frames = {
-        arm: _pfj_plan(spark, sf_dir, verify=arm)
-        .toPandas()
-        .sort_values(["doc_a", "doc_b"])
-        .reset_index(drop=True)
-        for arm in ("arrow", "arrow_unfused", "jvm", "hof")
+        arm: df.toPandas().sort_values(["doc_a", "doc_b"]).reset_index(drop=True)
+        for arm, df in (
+            ("arrow", dedup_prefix_filter_jaccard(spark, sf_dir)),
+            ("jvm", reference),
+        )
     }
     assert len(frames["arrow"]) > 0, "fixture produced no near-dup pairs"
-    assert frames["arrow"].equals(frames["arrow_unfused"])
     assert frames["arrow"].equals(frames["jvm"])
-    assert frames["arrow"].equals(frames["hof"])
 
 
 def test_pfj_intersect_kernel_packing_and_fallback_paths():
@@ -325,9 +341,9 @@ def test_pfj_intersect_kernel_packing_and_fallback_paths():
 
 
 def test_pfj_kernel_fused_threshold_filters_before_ipc():
-    """The r11 fused jaccard threshold must drop failing candidates
+    """The fused jaccard threshold must drop failing candidates
     INSIDE the kernel (so they never cross the Arrow boundary) using
-    the exact double-division predicate the jvm/hof arms apply
+    the exact double-division predicate the JVM reference applies
     externally — including the boundary case where n_common/n_union
     lands exactly on the threshold (>=, so it passes)."""
     import pyarrow as pa
@@ -355,7 +371,7 @@ def test_pfj_kernel_fused_threshold_filters_before_ipc():
     # 0 common (fail)
     b = batch(
         [[1, 2, 3], [1, 2], [1, 2, 3, 4], [7]],
-        [[1, 2, 3], [2, 3], [1, 2, 3], [8]],
+        [[1, 2, 3], [2, 3], [1, 2, 3, 9], [8]],
     )
     assert PF_JACCARD_T == 0.6, "boundary row below assumes t=0.6"
     out = list(_pfj_intersect_batches(iter([b]), threshold=PF_JACCARD_T))
@@ -364,7 +380,7 @@ def test_pfj_kernel_fused_threshold_filters_before_ipc():
     assert got["doc_a"] == [0, 2]
     assert got["doc_b"] == [100, 102]
     assert got["n_common"] == [3, 3]
-    assert got["ma"] == [3, 4] and got["mb"] == [3, 3]
+    assert got["ma"] == [3, 4] and got["mb"] == [3, 4]
 
     # production entry point behaves identically
     got2 = list(_pfj_intersect_passing(iter([batch([[1, 2, 3]], [[1, 2, 3]])])))

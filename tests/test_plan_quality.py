@@ -23,9 +23,9 @@ from spotify_serverless_etl_pipeline_engineering_with_azure_spark.plans import (
 from .conftest import SF_SMOKE
 
 
-def _plan(spark, name: str) -> str:
+def _plan(spark, name: str, mode: str = "formatted") -> str:
     df = registry.queries()[name](spark, SF_SMOKE)
-    jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
     return df._jdf.queryExecution().explainString(jmode)
 
 
@@ -304,32 +304,54 @@ WINDOW_GROUP_LIMIT_QUERIES = (
 )
 
 
+# The regression shape, in explain order (each node prints ABOVE its
+# child): a Window whose input — directly or through its Sort — is an
+# ENSURE_REQUIREMENTS hash exchange, with no group limit in between.
+_WINDOW_FED_BY_EXCHANGE = re.compile(
+    r"Window \[[^\n]*\n"
+    r"(?:[\s:]*\+- (?:\*\(\d+\) )?Sort [^\n]*\n)?"
+    r"[\s:]*\+- Exchange hashpartitioning\([^\n]*, ENSURE_REQUIREMENTS"
+)
+
+
 @pytest.mark.parametrize("name", WINDOW_GROUP_LIMIT_QUERIES)
 def test_rank_limit_window_keeps_partial_group_limit(spark, name):
-    df = registry.queries()[name](spark, SF_SMOKE)
-    jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
-    plan = df._jdf.queryExecution().explainString(jmode)
+    plan = _plan(spark, name, "simple")
     if re.search(r"WindowGroupLimit .*, Partial", plan):
         assert re.search(r"WindowGroupLimit .*, Final", plan), plan
         return
     # No Partial group limit is ONLY safe when no exchange feeds the
     # window at all — the window reuses an upstream partitioning, so
     # the funnel the partial limit protects against does not exist
-    # (r11: text_tfidf_top_terms's top-k window reuses scatter_by's
-    # doc_id partitioning at test SFs; at scale the tf aggregate
-    # re-keys by (doc_id, term), the window pays its exchange, and
-    # Spark re-plans the Partial/Final split). The dangerous shape —
-    # a window-feeding ENSURE_REQUIREMENTS exchange WITHOUT the
-    # partial limit — still fails.
-    assert not re.search(
-        r"Exchange hashpartitioning\([^)]*\), ENSURE_REQUIREMENTS[^\n]*\n\s*\+- Window", plan
-    ) and not re.search(
-        r"Exchange hashpartitioning\([^)]*\), ENSURE_REQUIREMENTS[^\n]*\n\s*\+- \*\(\d+\) Sort", plan
-    ), (
+    # (text_tfidf_top_terms's top-k window can reuse
+    # scatter(docs, "doc_id")'s partitioning when the tf aggregate
+    # keeps it; at scale the tf aggregate re-keys by (doc_id, term),
+    # the window pays its exchange, and Spark re-plans the
+    # Partial/Final split). The dangerous shape — a window-feeding
+    # ENSURE_REQUIREMENTS exchange WITHOUT the partial limit — fails.
+    assert not _WINDOW_FED_BY_EXCHANGE.search(plan), (
         f"{name}: no map-side WindowGroupLimit(Partial) AND the window "
         f"still pays an exchange — the rank filter no longer bounds rows "
         f"before the shuffle:\n{plan}"
     )
+
+
+def test_rank_limit_guard_fires_without_partial_group_limit(spark):
+    """Negative fixture for the guard above: with the optimizer's
+    group-limit insertion disabled, a pinned rank-limit query takes the
+    regression shape, and the guard's pattern must match it."""
+    key = "spark.sql.optimizer.windowGroupLimitThreshold"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "-1")
+    try:
+        plan = _plan(spark, "window_rank_topn", "simple")
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    assert "WindowGroupLimit" not in plan, plan
+    assert _WINDOW_FED_BY_EXCHANGE.search(plan), plan
 
 
 def test_scatter_passes_wide_frames_through(spark):
@@ -388,10 +410,11 @@ HEADLINE_EXCHANGE_BUDGET = {
     # groupBy) live in _minhash_index / _ngram_index, not the
     # per-query search plan — same split as sim_ann_ivf below
     "dedup_minhash_lsh": (1, 0),
-    # The 1 is scatter_by(docs, "doc_id")'s small-input repair, whose
+    # The 1 is scatter(docs, "doc_id")'s small-input repair, whose
     # hashpartitioning the packed-popcount groupBy(doc_id) REUSES (r11:
     # round-robin scatter left a second agg exchange — 2 → 1, measured
-    # 1.9×/1.5× at sf0.1/sf1, scripts/measure_simhash_ab.py). The pin
+    # 1.9×/1.5× at sf0.1/sf1; the round-robin arm and its A/B script
+    # were removed later, the measurement stays in SIMHASH_AB_r11.json). The pin
     # assumes this suite's environment (local[32] + single-split
     # sf0.001 fixtures keep the scan below defaultParallelism, so the
     # conditional scatter fires); if the fixture layout ever widens,

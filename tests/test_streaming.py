@@ -5,12 +5,19 @@ from __future__ import annotations
 
 import glob
 import os
+from collections import Counter
 
 from pyspark.sql import functions as F
 
 from spotify_serverless_etl_pipeline_engineering_with_azure_spark.operators.fixtures import (
+    blob_name,
     generate_docs,
     write_json_dir,
+)
+from spotify_serverless_etl_pipeline_engineering_with_azure_spark.operators.sinks import write_csv
+from spotify_serverless_etl_pipeline_engineering_with_azure_spark.operators.spotify import (
+    read_raw_json,
+    transform,
 )
 from spotify_serverless_etl_pipeline_engineering_with_azure_spark.streaming.pipeline import (
     events_stream,
@@ -22,7 +29,8 @@ from spotify_serverless_etl_pipeline_engineering_with_azure_spark.streaming.pipe
 
 def test_spotify_stream_foreachbatch_csv_and_archive(spark, tmp_path):
     """readStream raw JSON → transform → 3 CSV sinks; source files
-    archived after processing (M1 replacement)."""
+    archived after processing (M1 replacement); each micro-batch's
+    three tables equal the batch transform over that batch's blob."""
     raw_dir = str(tmp_path / "raw")
     archive = str(tmp_path / "processed")
     out = str(tmp_path / "out")
@@ -58,6 +66,28 @@ def test_spotify_stream_foreachbatch_csv_and_archive(spark, tmp_path):
     assert len(archived) == len(paths) - 1
     remaining = glob.glob(f"{raw_dir}/*.json")
     assert len(remaining) == 1
+
+    # Stream equals batch, per blob. Song ids are track_<doc>_<item>,
+    # so each batch's songs name the one blob it consumed; an identical
+    # copy of that blob goes through read_raw_json → transform →
+    # write_csv, and both CSV outputs are read back the same way.
+    ref_dir = str(tmp_path / "ref")
+    write_json_dir(ref_dir, n_docs=3)
+
+    def csv_rows(path):
+        return Counter(tuple(r) for r in spark.read.option("header", True).csv(path).collect())
+
+    batches = sorted(os.path.basename(d) for d in glob.glob(f"{out}/songs_data/batch_id=*"))
+    assert len(batches) == len(paths)
+    for batch in batches:
+        songs = spark.read.option("header", True).csv(f"{out}/songs_data/{batch}")
+        blobs = {r.song_id.split("_")[1] for r in songs.select("song_id").collect()}
+        assert len(blobs) == 1, f"{batch}: songs from blobs {sorted(blobs)}"
+        blob = os.path.join(ref_dir, blob_name(int(blobs.pop())))
+        for name, df in transform(read_raw_json(spark, blob)).items():
+            want = str(tmp_path / "want" / batch / name)
+            write_csv(df, want)
+            assert csv_rows(f"{out}/{name}_data/{batch}") == csv_rows(want), (batch, name)
 
 
 def test_windowed_counts_match_batch(spark, sf_dir):
