@@ -51,13 +51,14 @@ _FALLBACK_SESSION_IDS: "weakref.WeakKeyDictionary[SparkSession, str]" = (
     weakref.WeakKeyDictionary()
 )
 
-# Entry cap for caches of CHECKPOINTED index frames (see
-# dataset_cached's max_entries): sized for many live test fixtures/SF
-# dirs at once while bounding a production driver that sweeps unbounded
-# snapshot directories. The lazy-plan caches (_TABLE_CACHE,
-# _RAW_SCHEMA_CACHE) deliberately do NOT use it — their entries cost
-# kilobytes and their hit rate is the whole point.
-MAX_CHECKPOINT_ENTRIES = 16
+# Entry cap of the index registry (cached_index), shared by every index
+# family: sized for many live test fixtures/SF dirs at once while
+# bounding a production driver that sweeps unbounded snapshot
+# directories. The lazy-plan caches (_TABLE_CACHE, _RAW_SCHEMA_CACHE)
+# deliberately do NOT use it — their entries cost kilobytes and their
+# hit rate is the whole point.
+MAX_CHECKPOINT_ENTRIES = 64
+_INDEX_CACHE: dict[tuple, object] = {}
 
 
 def _session_uuid(spark: SparkSession) -> str:
@@ -84,8 +85,8 @@ def dataset_cached(cache: dict, spark: SparkSession, sf_dir: str,
     index) and EVICT the superseded snapshot on regeneration.
 
     One identity scheme for every dataset-keyed cache in the engine
-    (loaded tables here; the MinHash-LSH buckets, n-gram posting lists,
-    sign-LSH and IVF indexes in plans/): identity = (sf_dir, files,
+    (loaded tables, raw schemas, persisted() frames and the
+    cached_index registry): identity = (sf_dir, files,
     params, applicationId, sessionUUID), freshness = each file's
     (mtime_ns, size).
     A fresh stat → cache hit. A stale one → the old entry is DELETED
@@ -168,10 +169,29 @@ def dataset_cached(cache: dict, spark: SparkSession, sf_dir: str,
     return val
 
 
+def cached_index(spark: SparkSession, sf_dir: str, files: tuple[str, ...],
+                 family: str, build, params: tuple = ()):
+    """THE index registry: memoize one family's materialized index
+    (a frame, a tuple or dict of frames) per dataset snapshot, with
+    dataset_cached's identity, supersession and dead-app semantics.
+
+    ``family`` leads the params in the identity, so two families over
+    the same files (MinHash bands and n-gram postings both key on
+    ``documents.parquet``) never collide. All families share one
+    LRU cap, MAX_CHECKPOINT_ENTRIES: dropping an entry's driver
+    reference is what releases its checkpoint blocks, and a wrong
+    eviction only costs a rebuild. ``build`` may itself call
+    cached_index (IVF shares the vector store)."""
+    return dataset_cached(
+        _INDEX_CACHE, spark, sf_dir, files, build, params=(family, *params),
+        max_entries=MAX_CHECKPOINT_ENTRIES,
+    )
+
+
 # Shared registry for persisted() — entries pin executor storage, so a
-# larger-than-MAX_CHECKPOINT_ENTRIES cap bounds a snapshot-sweeping
-# driver without thrashing the many (tag × dataset) combinations a test
-# session holds live; a wrong eviction only costs a rebuild.
+# cap bounds a snapshot-sweeping driver without thrashing the many
+# (tag × dataset) combinations a test session holds live; a wrong
+# eviction only costs a rebuild.
 MAX_PERSISTED_ENTRIES = 64
 _PERSISTED_FRAMES: dict[tuple, DataFrame] = {}
 
@@ -228,121 +248,65 @@ def release(*frames: DataFrame | None) -> None:
             pass
 
 
-_INDEX_SEQ = iter(range(1 << 62))
+def materialize(df: DataFrame) -> DataFrame:
+    """THE eager materializer: compute ``df`` once and truncate its
+    lineage. Every index build, iterative-loop round boundary and
+    shared in-query aggregate goes through here.
+
+    The SparkContext checkpoint dir (``sc.setCheckpointDir`` or the
+    ``spark.checkpoint.dir`` conf) is the engine's one durability
+    switch. Set, the frame becomes a reliable ``checkpoint()`` under
+    it: shared storage by Spark's own contract, so it survives
+    executor loss. Unset, it is a ``localCheckpoint()``: blocks live
+    unreplicated in executor storage, and a lost executor leaves no
+    recompute path — right for local mode, not for a long-lived
+    cluster job.
+
+    Retention under a checkpoint dir: every call writes an ``rdd-*``
+    dir, and Spark deletes superseded ones only with
+    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` (off by
+    default; see session.py). The engine cannot sweep them itself: the
+    path of a DataFrame checkpoint is not exposed to Python."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
+
 
 # Rows per partition under which a cached-index frame's partitions are
 # task-overhead-bound rather than compute-bound in its search-side
-# consumers (measured at sf0.1/sf1 — see checkpoint_frame's floor
-# docstring and IVF_FLOOR_AB_r10.json).
+# consumers (measured at sf0.1/sf1 — IVF_FLOOR_AB_r10.json).
 _FLOOR_ROWS_PER_PART = 2048
 
 
-def checkpoint_frame(df: DataFrame, tag: str = "frame") -> DataFrame:
-    """Materialize a cached-index frame and truncate its lineage.
-
-    Default: ``localCheckpoint(eager=True)`` — right for local and
-    single-application runs, but the blocks live in EXECUTOR storage,
-    unreplicated: on a 1000-executor cluster a single lost executor
-    (spot reclaim, OOM kill — routine over hours) permanently destroys
-    checkpoint blocks with NO recompute path (lineage was truncated),
-    poisoning every consumer of the cached index until supersession,
-    and a corpus-sized index pins tens of TB of executor memory/disk.
-
-    Setting ``SPARK_GRAFT_INDEX_DIR`` to a shared path (object
-    storage / DFS at cluster scale) switches every index builder to a
-    DURABLE parquet round-trip: the frame becomes a real index TABLE —
-    replicated by the storage layer, survives executor loss, readable
-    across jobs — which is the production shape the index docstrings
-    describe. Lifecycle mirrors streaming.pipeline.run_to_parquet:
-    each build writes a fresh run-unique directory (a fixed overwrite
-    path would be silently re-read — or broken — under superseded
-    cached frames that still point at it), dirs nest under this
-    application's ``app_scoped_dir`` and same-host dead-PID dirs are
-    swept on the next build, and within one live session superseded
-    builds accumulate
-    bounded by build count (kilobytes-to-megabytes at test SF; an
-    orchestrator owning a real shared store would instead key paths by
-    corpus snapshot and run retention there).
-
-    SEARCH-PARALLELISM FLOOR (guide §2: partitioning must be
-    scale-adaptive — and that cuts both ways): the build plan's last
-    shuffle is AQE-coalesced by BYTES, so a small index table (the IVF
-    posting/probe maps, a modest vector store) collapses to ONE
-    partition — and search stages inherit that layout whenever the
-    planner pipelines on the index scan. Measured at sf1: AQE's
-    runtime SMJ→broadcast conversion races the probe-side exchange
-    materialization, so sim_ann_ivf nondeterministically flipped
-    between reading a 3-partition AQEShuffleRead (3.4 s) and
-    pipelining the whole candidate expansion + cosine fold into the
-    1-partition index scan (6.8 s, single task on a 32-core host) —
-    byte-based coalescing is blind to the ~60× compute fan-out per
-    index row downstream (IVF_FLOOR_AB_r10.json). Index tables are
-    written once and searched many times, so below-floor frames are
-    resharded at build time to
+def checkpoint_frame(df: DataFrame) -> DataFrame:
+    """``materialize`` an index frame, then apply the SEARCH-PARALLELISM
+    FLOOR: a frame with fewer partitions than
 
         min(defaultParallelism, ceil(rows / _FLOOR_ROWS_PER_PART))
 
-    — ROW-AWARE, not a flat cores floor, because the first cut of
-    this change resharded every frame to core count and the sf0.1
-    bench paid for it: a 2,835-row pair table spread over 32
-    partitions turned a 0.14 s query into 0.35 s of task-scheduling
-    overhead (measured, same artifact) while gaining nothing. A
-    partition under ~2k rows is overhead-bound in the measured
-    consumers; compute-amplifying consumers still reach full machine
-    width once the frame carries ≳ 64k rows. The residual is stated
-    honestly: a rows-based floor cannot see PER-ROW compute, so an
-    extreme-fan-out operator over a small frame may still underuse
-    cores at small corpus sizes — inert at scale, where byte-sizing
-    dominates partition counts anyway. Mechanics: the localCheckpoint
-    branch pays one extra pass over an already-materialized SMALL
-    frame (a below-floor frame is small by construction); the durable
-    branch leaves a lazy round-robin repartition above the parquet
-    scan instead — the scan stays the durable recompute root (a
-    localCheckpoint on top would reintroduce exactly the
-    executor-loss poisoning this branch exists to avoid), and
-    consumers pay one small-table shuffle per query. Frames at or
-    above their target are returned untouched.
-    """
+    is resharded to that count and materialized again.
+
+    The build plan's last shuffle is AQE-coalesced by BYTES, so a
+    small index table collapses to one partition and every search
+    stage that pipelines on its scan runs single-task (sim_ann_ivf at
+    sf1 flipped between 3.4 s and 6.8 s on it — IVF_FLOOR_AB_r10.json).
+    The floor is ROW-AWARE, not a flat cores floor: a micro frame
+    spread over every core turns into task-scheduling overhead. Frames
+    at or above their target are returned untouched, and a frame that
+    already has >= defaultParallelism partitions is never counted.
+
+    defaultParallelism is sampled at build time: under dynamic
+    allocation an index built before executors scale up keeps the
+    lower floor (SPARK_GRAFT_EXTRA_CONFS can pin one)."""
     import math
-    import os
 
-    root = os.environ.get("SPARK_GRAFT_INDEX_DIR")
-    spark = df.sparkSession
-    # The cap is defaultParallelism SAMPLED AT BUILD TIME. Known
-    # limitation for cluster posture: under dynamic allocation an index
-    # built before executors scale up locks in a lower floor (the
-    # localCheckpoint branch freezes it physically); a deployment that
-    # cares should build indexes after warm-up or set
-    # SPARK_GRAFT_EXTRA_CONFS to pin a parallelism floor. Inert at
-    # corpus scale either way — byte-sizing dominates partition counts
-    # there (see floor rationale above).
-    cores = spark.sparkContext.defaultParallelism
-
-    def reshard_target(frame: DataFrame) -> int | None:
-        """Floor target when the frame is under-partitioned, else None.
-        Checks partition count BEFORE counting rows: when the frame
-        already has >= cores partitions the outcome is predetermined
-        (the target is capped at cores), and in the durable branch the
-        count() would be an extra full parquet-scan job per index build
-        on corpus-sized tables (r10 ADVICE)."""
-        if frame.rdd.getNumPartitions() >= cores:
-            return None
-        t = min(
-            cores, max(1, math.ceil(frame.count() / _FLOOR_ROWS_PER_PART))
-        )
-        return t if frame.rdd.getNumPartitions() < t else None
-
-    if not root:
-        out = df.localCheckpoint(eager=True)
-        if (t := reshard_target(out)) is not None:
-            out = out.repartition(t).localCheckpoint(eager=True)
+    out = materialize(df)
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    parts = out.rdd.getNumPartitions()
+    if parts >= cores:
         return out
-    path = os.path.join(app_scoped_dir(root, spark), f"{tag}_{next(_INDEX_SEQ)}")
-    df.write.mode("error").parquet(path)
-    out = spark.read.parquet(path)
-    if (t := reshard_target(out)) is not None:
-        out = out.repartition(t)
-    return out
+    target = min(cores, max(1, math.ceil(out.count() / _FLOOR_ROWS_PER_PART)))
+    return materialize(out.repartition(target)) if parts < target else out
 
 
 def _host_hash() -> str:
@@ -351,9 +315,10 @@ def _host_hash() -> str:
     storage root: two containers on one node (hostNetwork pods share
     the node hostname) run in separate PID namespaces, so an os.kill
     probe from one gives a false dead-verdict for the other's live
-    pids — rmtree would then destroy a LIVE driver's durable index
-    tables. The identity therefore folds in the boot id (distinguishes
-    machines that share a hostname across a fleet) and this process's
+    pids — rmtree would then destroy a LIVE driver's sink outputs and
+    stream drains. The identity therefore folds in the boot id
+    (distinguishes machines that share a hostname across a fleet) and
+    this process's
     PID-NAMESPACE inode (distinguishes co-hosted containers; a pid is
     only probe-able within its own namespace). 12 hex chars (48 bits):
     a 10^4-driver fleet has ~4e-7 pair-collision odds, vs percent-level
@@ -378,7 +343,7 @@ def _host_hash() -> str:
 
 
 def app_scoped_dir(root: str, spark: SparkSession) -> str:
-    """THE per-application scratch-dir convention (index store, stream
+    """THE per-application scratch-dir convention (sink outputs, stream
     drains, bucketed layouts): sweep dead same-host app dirs under
     ``root``, then return this application's directory
     ``root/app_<pid>_<hosthash>_<apphash>`` (not created). Callers nest
@@ -411,8 +376,7 @@ def sink_run_dir(spark: SparkSession, kind: str, sf_dir: str) -> str:
       under repeated in-app invocation — accepted DELIBERATELY: the
       fixed-dir alternative silently broke every previously returned
       frame, and scratch retention inside a live application belongs
-      to the orchestrator that owns the rerun loop, exactly as
-      checkpoint_frame's production note says for index snapshots.
+      to the orchestrator that owns the rerun loop.
     - LOCAL-MODE STAND-IN: a file:/tmp path is only meaningful in
       local mode — on a real cluster every executor commits part
       files to its OWN node's disk and a driver-side read-back
@@ -438,20 +402,14 @@ def scratch_roots(
     parquet round-trips (the CC/PageRank stats re-roots), plus a
     ``cleanup()`` that best-effort removes them.
 
-    Resolution order — the first cluster-visible root wins:
-
-    1. ``spark.sse.scratchDir`` conf: an explicit scratch root
-       (object store / DFS on a real cluster).
-    2. the SparkContext's reliable checkpoint dir, if set: by Spark's
-       own ``setCheckpointDir`` contract it must already be shared
-       storage on a multi-node cluster, so it is exactly the right
-       home for internal materializations.
-    3. driver-local ``tempfile.mkdtemp`` — LOCAL-MODE STAND-IN (the
-       ``sink_run_dir`` caveat verbatim): on a real cluster every
-       executor commits part files to its OWN node's disk and a
-       driver-side read-back silently sees a partial dataset, so
-       production deployments MUST configure (1) or (2). Correct in
-       this repo's local[32] contract, where all verdicts run.
+    The root is the SparkContext's checkpoint dir when set (the same
+    one durability switch ``materialize`` reads — shared storage by
+    ``setCheckpointDir``'s own contract on a multi-node cluster), else
+    driver-local ``tempfile.mkdtemp`` — a LOCAL-MODE STAND-IN (the
+    ``sink_run_dir`` caveat): on a real cluster every executor commits
+    part files to its OWN node's disk and a driver-side read-back
+    silently sees a partial dataset, so cluster deployments MUST set a
+    checkpoint dir.
 
     Paths are call-unique (uuid-suffixed) so concurrent or repeated
     invocations never clobber each other; ``cleanup()`` deletes
@@ -462,9 +420,7 @@ def scratch_roots(
     import os
     import tempfile
 
-    root = spark.conf.get("spark.sse.scratchDir", None)
-    if root is None:
-        root = spark.sparkContext.getCheckpointDir()
+    root = spark.sparkContext.getCheckpointDir()
     tag = uuid.uuid4().hex[:8]
     if root is not None:
         paths = [os.path.join(root, f"{prefix}_{tag}_{i}") for i in range(n)]
@@ -483,7 +439,7 @@ def scratch_roots(
 
     def cleanup() -> None:
         # Hadoop FS delete, not shutil: paths may be file:/hdfs:/s3a:
-        # URIs depending on which root won above. Best-effort — a
+        # URIs depending on the checkpoint dir. Best-effort — a
         # cleanup failure must never mask the computation's result —
         # but LOUD: a persistent permission error on a shared scratch
         # root would otherwise leak vertex-sized dirs forever with
@@ -512,10 +468,9 @@ def _sweep_dead_app_dirs(root: str) -> None:
     gone. PID liveness is only knowable on the process's own host, so
     dirs stamped with another host's hash are left alone (on a shared
     DFS/object-store root, deleting a foreign app's dir would destroy
-    LIVE index tables another driver is reading — exactly the loss the
-    durable store exists to prevent); entries that don't parse as our
-    naming convention are skipped, never deleted (the root is a
-    user-supplied directory that may hold unrelated data)."""
+    LIVE outputs another driver is reading); entries that don't parse
+    as our naming convention are skipped, never deleted (the root is
+    a user-supplied directory that may hold unrelated data)."""
     import glob
     import os
     import shutil

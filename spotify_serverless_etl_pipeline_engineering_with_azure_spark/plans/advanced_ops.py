@@ -22,9 +22,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import (
-    MAX_CHECKPOINT_ENTRIES,
+    cached_index,
     checkpoint_frame,
-    dataset_cached,
+    materialize,
     persisted,
     table,
 )
@@ -248,17 +248,14 @@ def _codebook_sim():
     )
 
 
-_IVF_INDEX_CACHE: dict[tuple, dict] = {}
-
-
 def _ivf_index(spark: SparkSession, sf_dir: str) -> dict:
     """Build (or fetch) the IVF index: the assignment table, the
     inverted cell lists, and the normed vector store — each eagerly
-    localCheckpoint'd so QUERIES against the index pay probe-side work
+    materialized so QUERIES against the index pay probe-side work
     only. This is the real IVF architecture (FAISS et al. separate
     index BUILD from SEARCH; an index is built once and queried many
     times); at cluster scale these frames are materialized index
-    tables. Identity/eviction semantics are catalog.dataset_cached's
+    tables. Identity/eviction semantics are catalog.cached_index's
     (the K/nprobe hyperparameters join the identity via params; a
     checkpointed RDD dies with its context).
     """
@@ -282,26 +279,23 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> dict:
         # two extra driver jobs per build, one per direct test call.)
         k = _ivf_k(vector_store(spark, sf_dir).count())
         nprobe = _ivf_nprobe(k)
-        cells = checkpoint_frame(_ivf_member_frame(spark, sf_dir, k), "ivf_cells")
-        probes = checkpoint_frame(
-            _ivf_probe_cells_frame(spark, sf_dir, k, nprobe), "ivf_probes"
-        )
+        cells = checkpoint_frame(_ivf_member_frame(spark, sf_dir, k))
+        probes = checkpoint_frame(_ivf_probe_cells_frame(spark, sf_dir, k, nprobe))
         # The re-rank vector store is THE shared one (one checkpoint
         # for brute-force, SemDeDup, and IVF — not a private copy).
         return {"probes": probes, "cells": cells,
                 "vectors": vector_store(spark, sf_dir),
                 "k": k, "nprobe": nprobe}
 
-    return dataset_cached(
-        _IVF_INDEX_CACHE,
+    return cached_index(
         spark,
         sf_dir,
         ("embeddings.parquet",),
+        "ivf",
         build,
         # K and nprobe derive from corpus size inside the build; the
         # marker versions the cache across sizing-rule changes.
         params=("ksqrtN", "npsqrtK", _PROBE_MOD),
-        max_entries=MAX_CHECKPOINT_ENTRIES,
     )
 
 
@@ -718,22 +712,20 @@ def agg_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     second aggregation.
     """
     orders = table(spark, sf_dir, "orders")
-    # localCheckpoint the 5-row sketch aggregate: Spark shares no
+    # materialize the 5-row sketch aggregate: Spark shares no
     # subplans, so its two consumers (the broadcast into the rank pass
     # and the final join) would otherwise each re-run the whole
     # aggregation — doubling exactly the exact-distinct shuffle this
     # query exists to showcase avoiding, and re-executing the sketches
     # (whose merge order Spark randomizes) between the rank measurement
     # and the verdict row.
-    sk = (
-        orders.groupBy("o_orderpriority")
-        .agg(
+    sk = materialize(
+        orders.groupBy("o_orderpriority").agg(
             F.approx_count_distinct("o_custkey", 0.01).alias("acd"),
             F.percentile_approx("o_totalprice", 0.5, 10000).alias("amed"),
             F.count_distinct(F.col("o_custkey")).alias("exact_customers"),
             F.count(F.lit(1)).alias("n_orders"),
         )
-        .localCheckpoint(eager=True)
     )
     ranks = (
         orders.select("o_orderpriority", "o_totalprice")

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..catalog import persisted, table
+from ..catalog import materialize, persisted, table
 from ..functions.exact import dec, sql_dsum
 from ..registry import register
 
@@ -381,7 +381,7 @@ def _distributed_ntile(
     n mod t tiles get ⌈n/t⌉ rows, the rest ⌊n/t⌋ — bit-identical to
     the window function's assignment for a TOTAL order).
 
-    The range-partitioned frame is eagerly localCheckpoint'd before
+    The range-partitioned frame is eagerly materialized before
     anything reads it: the partition-size offsets must describe the
     SAME physical partitioning the row_number window later sees, and
     repartitionByRange re-samples its boundaries per execution — an
@@ -390,7 +390,7 @@ def _distributed_ntile(
     per-partition sizes are bounded by the shuffle-partition count,
     never by data.
     """
-    keyed = df.repartitionByRange(*order_cols).localCheckpoint(eager=True)
+    keyed = materialize(df.repartitionByRange(*order_cols))
     pid = keyed.withColumn("_pid", F.spark_partition_id())
     sizes = {
         r["_pid"]: r["n"]
@@ -490,7 +490,7 @@ def events_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = table(spark, sf_dir, "events")
     anchor = ev.agg(F.to_date(F.max("ts")).alias("anchor_day"))
-    purchases = (
+    purchases = materialize(
         ev.filter(F.col("event_type") == "purchase")
         .groupBy("user_id")
         .agg(
@@ -505,7 +505,6 @@ def events_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
             "frequency",
             "monetary",
         )
-        .localCheckpoint(eager=True)
     )
     r = _distributed_ntile(
         purchases.select("user_id", "recency_days"),

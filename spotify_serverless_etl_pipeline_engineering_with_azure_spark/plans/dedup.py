@@ -24,9 +24,9 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import (
-    MAX_CHECKPOINT_ENTRIES,
+    cached_index,
     checkpoint_frame,
-    dataset_cached,
+    materialize,
     release,
     scatter,
     scratch_roots,
@@ -281,12 +281,9 @@ def _band_signatures(docs: DataFrame) -> DataFrame:
     ).select("doc_id", F.col("b.band").alias("band"), F.col("b.sig").alias("sig"))
 
 
-_MINHASH_INDEX_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-
 def _minhash_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Build (or fetch) the LSH index: (bands, pairs), both eagerly
-    localCheckpoint'd once per (dataset identity, Spark application).
+    materialized once per (dataset identity, Spark application).
 
     - ``bands`` (doc_id, band, sig): the signature POSTING TABLE. Every
       row is O(1) wide — deliberately NOT per-bucket id arrays, whose
@@ -307,23 +304,16 @@ def _minhash_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFra
     these are materialized signature/candidate tables — the standard
     shape for corpus dedup, where signatures are computed once per
     snapshot and reused across dedup, clustering, and incremental
-    joins. Identity/eviction semantics are catalog.dataset_cached's
+    joins. Identity/eviction semantics are catalog.cached_index's
     (supersession releases the old checkpoints).
     """
 
     def build() -> tuple[DataFrame, DataFrame]:
-        bands = checkpoint_frame(_minhash_bands_frame(spark, sf_dir), "minhash_bands")
-        pairs = checkpoint_frame(_minhash_pairs_frame(bands), "minhash_pairs")
+        bands = checkpoint_frame(_minhash_bands_frame(spark, sf_dir))
+        pairs = checkpoint_frame(_minhash_pairs_frame(bands))
         return (bands, pairs)
 
-    return dataset_cached(
-        _MINHASH_INDEX_CACHE,
-        spark,
-        sf_dir,
-        ("documents.parquet",),
-        build,
-        max_entries=MAX_CHECKPOINT_ENTRIES,
-    )
+    return cached_index(spark, sf_dir, ("documents.parquet",), "minhash", build)
 
 
 def _minhash_bands_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -349,14 +339,10 @@ def _minhash_pairs_frame(bands: DataFrame) -> DataFrame:
     both the small and star legs consume it, and without the
     truncation the full-posting-table stats shuffle runs twice per
     index build (verified in the executed plan — no ReusedExchange
-    dedups it). checkpoint_frame rather than a bare localCheckpoint so
-    the durable-index mode covers the BUILD too: a mid-build executor
-    loss of lazily-checkpointed stats blocks has no recompute path and
-    would abort the whole build — the failure class the durable store
-    exists to remove. Its build shape stays explain-visible via
+    dedups it). Its build shape stays explain-visible via
     _minhash_stats_frame.
     """
-    stats = checkpoint_frame(_minhash_stats_frame(bands), "minhash_stats")
+    stats = checkpoint_frame(_minhash_stats_frame(bands))
     small = (
         bands.join(
             stats.filter(
@@ -525,15 +511,12 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # similarity signal anyway (standard DF pruning).
 NGRAM_DF_CAP = 32
 
-_NGRAM_INDEX_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-
 def _ngram_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Build (or fetch) the DF-pruned shingle inverted index over the
     bounded probe subset (doc_id % 5 = 0): (sh, ids) with ids sorted,
     buckets wider than NGRAM_DF_CAP dropped — plus the per-doc sizes
     (doc_id, sz) over the PRUNED vocabulary. Both eagerly
-    localCheckpoint'd once per (dataset identity, Spark application) —
+    materialized once per (dataset identity, Spark application) —
     the same build/search split as _minhash_index: one groupBy builds
     the inverted index AND implicitly the DF counts (bucket width),
     pruning happens BEFORE any quadratic pair expansion (bounded
@@ -543,22 +526,18 @@ def _ngram_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
     share subplans, so two broadcast consumers would otherwise shuffle
     twice). At cluster scale these are materialized posting-list /
     doc-stat tables keyed on the corpus snapshot. Identity/eviction
-    semantics are catalog.dataset_cached's."""
+    semantics are catalog.cached_index's."""
 
     def build() -> tuple[DataFrame, DataFrame]:
-        kept = checkpoint_frame(_ngram_index_frame(spark, sf_dir), "ngram_index")
+        kept = checkpoint_frame(_ngram_index_frame(spark, sf_dir))
         sizes = checkpoint_frame(
             kept.select(F.explode("ids").alias("doc_id"))
             .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("sz")),
-            "ngram_sizes",
+            .agg(F.count(F.lit(1)).alias("sz"))
         )
         return (kept, sizes)
 
-    return dataset_cached(
-        _NGRAM_INDEX_CACHE, spark, sf_dir, ("documents.parquet",), build,
-        max_entries=MAX_CHECKPOINT_ENTRIES,
-    )
+    return cached_index(spark, sf_dir, ("documents.parquet",), "ngram", build)
 
 
 def _ngram_index_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -683,12 +662,9 @@ _SQL_SEMDEDUP_K = (
 )
 
 
-_SEMDEDUP_MEMBER_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _semdedup_member(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, cluster): broadcast-codebook nearest-centroid
-    assignment. Checkpointed once per dataset (catalog.dataset_cached):
+    assignment. Materialized once per dataset (catalog.cached_index):
     Spark does not share subplans, so the two consumers inside one
     SemDeDup query (cell grouping and the per-vector verdict join) —
     plus dedup_embedding_cosine's pair generation — would otherwise
@@ -696,14 +672,13 @@ def _semdedup_member(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale this is the materialized assignment table every SemDeDup
     pipeline persists."""
 
-    return dataset_cached(
-        _SEMDEDUP_MEMBER_CACHE,
+    return cached_index(
         spark,
         sf_dir,
         ("embeddings.parquet",),
-        lambda: checkpoint_frame(_semdedup_member_frame(spark, sf_dir), "semdedup_member"),
+        "semdedup_member",
+        lambda: checkpoint_frame(_semdedup_member_frame(spark, sf_dir)),
         params=("ksqrt2",),  # K derived from corpus size inside the build
-        max_entries=MAX_CHECKPOINT_ENTRIES,
     )
 
 
@@ -1189,8 +1164,8 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     Convergence is checked via a driver-side count per round (the
     per-round WORK is fully distributed; the driver only sees the
     single converged/not-converged scalar, which is how any iterative
-    Spark algorithm terminates). localCheckpoint truncates lineage so
-    plans don't grow exponentially with rounds. The DuckDB oracle
+    Spark algorithm terminates). catalog.materialize truncates lineage
+    so plans don't grow exponentially with rounds. The DuckDB oracle
     computes the same fixpoint as a recursive CTE — the fixpoint
     (label = component min) is algorithm-independent, so the shortcut
     changes round counts, never results.
@@ -1220,55 +1195,61 @@ _CC_REROOT_EVERY = 8
 def _stats_reroot(df: DataFrame, path: str) -> DataFrame:
     """Materialize df to parquet and read it back: truncates lineage
     AND resets Catalyst's sizeInBytes statistics to the file's real
-    bytes (localCheckpoint keeps inflated originStats — see
-    _CC_REROOT_EVERY; reliable checkpoint() carries them identically,
-    measured on Spark 4.1.2, so durable checkpointing does NOT subsume
-    this). The path is overwritten on reuse; callers alternate two
-    paths so a frame still lazily consumed is never clobbered. Paths
-    come from catalog.scratch_roots, so on a configured cluster they
-    live on shared storage (spark.sse.scratchDir or the checkpoint
-    dir) — a driver-local tmp write would silently read back a
-    PARTIAL table on any multi-node cluster (catalog.sink_run_dir
-    documents the failure mode)."""
+    bytes (both localCheckpoint and reliable checkpoint() keep the
+    inflated originStats — see _CC_REROOT_EVERY; measured on Spark
+    4.1.2 — so catalog.materialize does NOT subsume this). The path is
+    overwritten on reuse; callers alternate two paths so a frame still
+    lazily consumed is never clobbered."""
     df.write.mode("overwrite").parquet(path)
     return df.sparkSession.read.parquet(path)
 
 
-def _round_checkpoint(df: DataFrame) -> DataFrame:
-    """Round-boundary materialization for the iterative loops (CC,
-    PageRank): reliable ``checkpoint()`` when the application has a
-    checkpoint dir configured, else ``localCheckpoint()``.
+class _Reroots:
+    """The stats re-root guard the iterative loops (CC, PageRank) share.
 
-    localCheckpoint blocks live unreplicated in executor storage with
-    lineage TRUNCATED — on a real cluster one lost executor mid-loop
-    (spot reclaim, OOM kill) aborts the whole job with no recompute
-    path: Spark's documented caveat. A configured checkpoint dir is
-    shared storage by ``setCheckpointDir``'s own contract, so the
-    reliable branch survives executor loss; local mode (no dir set)
-    keeps the exact prior behavior. NOTE: reliable checkpoint() still
-    carries the plan's inflated originStats forward exactly like
-    localCheckpoint (measured on Spark 4.1.2 — bit length doubles per
-    round under BOTH), so it does not replace _stats_reroot; the
-    durability and stats-bounding mechanisms stay orthogonal.
+    ``round(df, n)`` re-roots round ``n``'s frame through parquet every
+    _CC_REROOT_EVERY rounds, alternating two catalog.scratch_roots dirs
+    (by the time a path is overwritten, 2·_CC_REROOT_EVERY rounds
+    later, every intervening round has been materialized, so nothing
+    lazily references it). The dirs are allocated LAZILY: most graphs
+    converge before the first boundary and pay no allocation or sweep.
+    ``detach(df)`` materializes the loop's final frame when it landed
+    on a re-root round — it is then a lazy read of a scratch dir the
+    exit sweep is about to delete; any other round's frame is already
+    materialized. Loops call ``sweep()`` in ``finally``: success has
+    detached, and on the error path no frame escapes the loop, so both
+    dirs are unreferenced on every path."""
 
-    RETENTION CONTRACT (what survives a CC/PageRank call when a
-    checkpoint dir is configured): every round boundary writes a
-    vertex-sized ``rdd-*`` dir under the checkpoint dir, and Spark
-    deletes superseded ones only when
-    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` (off by
-    default) — cluster deployments that call ``setCheckpointDir`` MUST
-    set it, or O(rounds) vertex-sized dirs accumulate per invocation.
-    With the cleaner on, each round's checkpoint is reclaimed when its
-    superseded RDD is GC'd on the driver; the FINAL round's dir stays
-    referenced by the returned frame and legitimately survives until
-    that frame is GC'd. The engine cannot sweep these itself the way
-    it sweeps its own scratch_roots dirs: the rdd-* path of a
-    DataFrame checkpoint is not exposed to Python, and deleting any
-    non-final one by pattern would race the cleaner. Local mode (no
-    checkpoint dir → localCheckpoint branch) writes no dirs at all."""
-    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
+    def __init__(self, spark: SparkSession, prefix: str):
+        self.spark, self.prefix = spark, prefix
+        self.dirs: list[str] | None = None
+        self.cleanup = None
+        self.rooted = False
+
+    def round(self, df: DataFrame, round_no: int) -> DataFrame:
+        self.rooted = round_no % _CC_REROOT_EVERY == 0
+        if not self.rooted:
+            return df
+        if self.dirs is None:
+            self.dirs, self.cleanup = scratch_roots(self.spark, self.prefix, 2)
+        return _stats_reroot(df, self.dirs[(round_no // _CC_REROOT_EVERY) % 2])
+
+    def detach(self, df: DataFrame) -> DataFrame:
+        return materialize(df) if self.rooted else df
+
+    def sweep(self) -> None:
+        if self.cleanup is not None:
+            self.cleanup()
+
+
+def _undirected_edges(pairs: DataFrame) -> DataFrame:
+    """(a, b) in both directions for each (doc_a, doc_b) pair, deduped
+    and materialized — the edge set both iterative loops start from."""
+    return materialize(
+        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
+        .unionByName(pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b")))
+        .distinct()
+    )
 
 
 def _min_label_components(pairs: DataFrame, max_rounds: int = 200) -> DataFrame:
@@ -1277,27 +1258,10 @@ def _min_label_components(pairs: DataFrame, max_rounds: int = 200) -> DataFrame:
     with synthetic graphs (a 300-link path proves the O(log diameter)
     round count — without the jump, that fixture needs 300 rounds).
     Returns (v, label) for every vertex incident to a pair."""
-    # Two alternating re-root paths (see _stats_reroot): by the time a
-    # path is overwritten (2·_CC_REROOT_EVERY rounds later), every
-    # intervening round's eager checkpoint has materialized, so
-    # nothing lazily references it. scratch_roots resolves them to
-    # cluster-visible storage when configured (spark.sse.scratchDir /
-    # checkpoint dir) and driver tmp only as the local-mode stand-in;
-    # sweep() removes both dirs once the returned frame no longer
-    # roots in them (post-fixpoint detach below). Allocated LAZILY —
-    # the _pagerank_on_pairs pattern: most graphs converge before the
-    # first _CC_REROOT_EVERY boundary and should not pay a dir
-    # allocation (or sweep) for a guard that never fires.
-    reroot_dirs: list[str] | None = None
-    sweep_reroots = None
-    edges = _round_checkpoint(
-        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .unionByName(pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b")))
-        .distinct()
-    )
+    edges = _undirected_edges(pairs)
     # persist(): the initial label table is consumed up to three times
     # in round 1 (neighbor-min join, hook join, convergence count)
-    # before the first checkpointed new_labels replaces it; released
+    # before the first materialized new_labels replaces it; released
     # explicitly at the end of round 1 (CacheManager entries outlive
     # driver GC, and this plan is rooted in the per-call edges
     # checkpoint, so it would leak one vertex-table entry per call).
@@ -1308,6 +1272,7 @@ def _min_label_components(pairs: DataFrame, max_rounds: int = 200) -> DataFrame:
         .persist()
     )
     hooked = None
+    reroots = _Reroots(pairs.sparkSession, "cc_labels_reroot")
     # Loop to the FIXPOINT (changed == 0), not a fixed round cap:
     # returning unconverged labels would silently disagree with the
     # oracle's recursive-CTE fixpoint. The hard ceiling only guards
@@ -1333,12 +1298,12 @@ def _min_label_components(pairs: DataFrame, max_rounds: int = 200) -> DataFrame:
             # and Spark shares no subplans — without caching, the hook
             # subtree (edge join + neighbor-min shuffle) executes twice per
             # round, which at web-scale edge sets doubles the round's
-            # dominant cost. persist, NOT localCheckpoint: it is explicitly
+            # dominant cost. persist, NOT materialize: it is explicitly
             # unpersist()ed at the end of the round (a per-round checkpoint
             # would pin one vertex-sized block set per round, released only
             # at GC's leisure), it keeps lineage (executor loss recomputes
             # instead of aborting the loop), and plan growth is not a
-            # concern because new_labels' eager checkpoint below re-roots
+            # concern because new_labels' materialize below re-roots
             # every round's plan.
             hooked = (
                 labels.join(neighbor_min, labels.v == F.col("nv"), "left")
@@ -1355,32 +1320,26 @@ def _min_label_components(pairs: DataFrame, max_rounds: int = 200) -> DataFrame:
             # vertices themselves; mins of labels stay labels), so the
             # lookup always resolves; coalesce is belt-and-braces.
             jump = hooked.select(F.col("v").alias("jv"), F.col("label").alias("jlabel"))
-            new_labels = _round_checkpoint(
-                hooked.join(jump, hooked.label == F.col("jv"), "left")
-                .select(
-                    "v",
-                    F.coalesce(F.col("jlabel"), F.col("label")).alias("label"),
-                )
-            )
-            labels_root_in_scratch = round_no % _CC_REROOT_EVERY == 0
-            if labels_root_in_scratch:
-                if reroot_dirs is None:
-                    reroot_dirs, sweep_reroots = scratch_roots(
-                        pairs.sparkSession, "cc_labels_reroot", 2
+            new_labels = reroots.round(
+                materialize(
+                    hooked.join(jump, hooked.label == F.col("jv"), "left")
+                    .select(
+                        "v",
+                        F.coalesce(F.col("jlabel"), F.col("label")).alias("label"),
                     )
-                new_labels = _stats_reroot(
-                    new_labels, reroot_dirs[(round_no // _CC_REROOT_EVERY) % 2]
-                )
+                ),
+                round_no,
+            )
             changed = (
                 new_labels.alias("n")
                 .join(labels.alias("o"), F.col("n.v") == F.col("o.v"))
                 .filter(F.col("n.label") != F.col("o.label"))
                 .count()
             )
-            # new_labels is materialized (eager checkpoint) and the round's
-            # convergence count is done — release hooked's blocks now
-            # instead of waiting for driver GC (and the initial label cache
-            # after round 1, its last consumer).
+            # new_labels is materialized and the round's convergence
+            # count is done — release hooked's blocks now instead of
+            # waiting for driver GC (and the initial label cache after
+            # round 1, its last consumer).
             hooked.unpersist()
             if round_no == 1:
                 init_labels.unpersist()
@@ -1391,24 +1350,10 @@ def _min_label_components(pairs: DataFrame, max_rounds: int = 200) -> DataFrame:
             raise RuntimeError(
                 f"connected components did not converge in {max_rounds} rounds"
             )
-        # Post-fixpoint detach: if convergence landed exactly on a
-        # re-root round, the final frame is a lazy read of a scratch
-        # parquet dir the sweep below is about to delete — one more
-        # eager checkpoint moves its blocks out of the scratch dirs.
-        # Any other round's frame is already checkpoint-materialized
-        # (the re-root parquet was last read by that round's changed
-        # count), so the sweep is safe without extra work.
-        if labels_root_in_scratch:
-            labels = _round_checkpoint(labels)
+        labels = reroots.detach(labels)
     finally:
         release(hooked, init_labels)
-        # Both dirs are now unreferenced on every path: success
-        # detached above; on the error path no frame escapes the call.
-        # Closes the two-vertex-table-dirs-per-call leak a bare
-        # mkdtemp convention had. (None when the loop converged before
-        # the first re-root boundary — nothing was allocated.)
-        if sweep_reroots is not None:
-            sweep_reroots()
+        reroots.sweep()
     return labels
 
 
@@ -1525,14 +1470,13 @@ def graph_pagerank_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Iterative groupBy-join rounds exactly like connected components
     above: per round, each vertex's rank disperses along its edges and
-    re-aggregates — one shuffle per iteration, edges checkpointed once
-    (reliably when the app configures a checkpoint dir, locally
-    otherwise — see _round_checkpoint). The undirected graph has no
-    dangling nodes (every vertex has
-    degree ≥ 1), so no leaked-mass correction term is needed. Ranks are
-    quantized to 6dp at every iteration boundary and contributions
-    summed as exact decimals, making the whole computation bit-identical
-    to the oracle's unrolled-CTE form regardless of summation order.
+    re-aggregates — one shuffle per iteration, edges materialized once
+    (catalog.materialize). The undirected graph has no dangling nodes
+    (every vertex has degree ≥ 1), so no leaked-mass correction term is
+    needed. Ranks are quantized to 6dp at every iteration boundary and
+    contributions summed as exact decimals, making the whole
+    computation bit-identical to the oracle's unrolled-CTE form
+    regardless of summation order.
 
     (On this synthetic corpus the candidate graph is a union of
     near-cliques — regular components — so ranks converge to uniform;
@@ -1557,12 +1501,7 @@ def _pagerank_on_pairs(pairs: DataFrame, iters: int = PR_ITERS) -> DataFrame:
     pins that — so the loop carries the identical parquet re-root
     guard: any future convergence-driven iteration count stays
     bounded instead of walking into the overflow."""
-    spark = pairs.sparkSession
-    edges = _round_checkpoint(
-        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .unionByName(pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b")))
-        .distinct()
-    )
+    edges = _undirected_edges(pairs)
     # persist(): deg is consumed by the n count, the rank init, AND the
     # contribution join in EVERY iteration — uncached, the degree
     # shuffle over the edge set re-executes once per PageRank round.
@@ -1578,6 +1517,7 @@ def _pagerank_on_pairs(pairs: DataFrame, iters: int = PR_ITERS) -> DataFrame:
     # explicitly on BOTH paths: a failure mid-iteration (executor loss,
     # ANSI overflow) would otherwise leak deg's entry for the
     # application's lifetime.
+    reroots = _Reroots(pairs.sparkSession, "pr_ranks_reroot")
     try:
         n = deg.count()
         if n == 0:
@@ -1600,53 +1540,34 @@ def _pagerank_on_pairs(pairs: DataFrame, iters: int = PR_ITERS) -> DataFrame:
         # the oracle now casts to DOUBLE first and both engines compute the
         # identical base.
         base = (1.0 - PR_DAMPING) / float(n)
-        # Re-root scratch dirs are allocated lazily: the production
-        # PR_ITERS=3 path never crosses the boundary and should not
-        # pay a dir allocation (or sweep) for a guard it never fires.
-        reroot_dirs: list[str] | None = None
-        sweep_reroots = None
-        ranks_root_in_scratch = False
-        try:
-            for it in range(1, iters + 1):
-                contribs = (
-                    edges.join(ranks.withColumnRenamed("v", "rv"), F.col("rv") == F.col("a"))
-                    .join(deg.select(F.col("v").alias("dv"), "deg"), F.col("dv") == F.col("a"))
-                    .select(
-                        "b",
-                        (F.round(F.col("r") / F.col("deg") * 1000000000.0) / 1000000000.0)
-                        .cast("decimal(28,12)")
-                        .alias("c"),
-                    )
-                    .groupBy("b")
-                    .agg(F.sum("c").alias("contrib"))
+        for it in range(1, iters + 1):
+            contribs = (
+                edges.join(ranks.withColumnRenamed("v", "rv"), F.col("rv") == F.col("a"))
+                .join(deg.select(F.col("v").alias("dv"), "deg"), F.col("dv") == F.col("a"))
+                .select(
+                    "b",
+                    (F.round(F.col("r") / F.col("deg") * 1000000000.0) / 1000000000.0)
+                    .cast("decimal(28,12)")
+                    .alias("c"),
                 )
-                ranks = _round_checkpoint(
+                .groupBy("b")
+                .agg(F.sum("c").alias("contrib"))
+            )
+            ranks = reroots.round(
+                materialize(
                     contribs.select(
                         F.col("b").alias("v"),
                         quant(
                             F.lit(base) + PR_DAMPING * F.col("contrib").cast("double")
                         ).alias("r"),
                     )
-                )
-                ranks_root_in_scratch = it % _CC_REROOT_EVERY == 0
-                if ranks_root_in_scratch:
-                    if reroot_dirs is None:
-                        reroot_dirs, sweep_reroots = scratch_roots(
-                            spark, "pr_ranks_reroot", 2
-                        )
-                    ranks = _stats_reroot(
-                        ranks, reroot_dirs[(it // _CC_REROOT_EVERY) % 2]
-                    )
-            # Same post-loop detach as the CC loop: if the final
-            # iteration landed on a re-root boundary, move the result
-            # off the scratch parquet before the sweep deletes it.
-            if ranks_root_in_scratch:
-                ranks = _round_checkpoint(ranks)
-        finally:
-            if sweep_reroots is not None:
-                sweep_reroots()
+                ),
+                it,
+            )
+        ranks = reroots.detach(ranks)
     finally:
         release(deg)
+        reroots.sweep()
     return ranks.select(F.col("v").alias("doc_id"), F.col("r").alias("pagerank"))
 
 
@@ -1660,9 +1581,6 @@ def _pagerank_on_pairs(pairs: DataFrame, iters: int = PR_ITERS) -> DataFrame:
 # PPJoin), which makes this join EXACT: no false negatives, unlike
 # MinHash LSH.
 PF_JACCARD_T = 0.6
-
-
-_PFJ_INDEX_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
 
 
 def _pfj_index(
@@ -1722,8 +1640,7 @@ def _pfj_index(
         )
         dfreq = toks.groupBy("sh").agg(F.count(F.lit(1)).alias("dfc"))
         vocab = checkpoint_frame(
-            dfreq.withColumn("shid", F.monotonically_increasing_id()),
-            "pfj_vocab",
+            dfreq.withColumn("shid", F.monotonically_increasing_id())
         )
         # The df-order window stays keyed on the STRING (dfc, sh) —
         # the positional semantics the mirror and oracle pin — while
@@ -1740,25 +1657,16 @@ def _pfj_index(
                 F.col("i")
                 <= F.col("m") - F.ceil(F.lit(PF_JACCARD_T) * F.col("m")) + 1
             )
-            .select("doc_id", "i", "m", "shid"),
-            "pfj_prefix",
+            .select("doc_id", "i", "m", "shid")
         )
         profiles = checkpoint_frame(
             toks.join(vocab.select("sh", "shid"), "sh")
             .groupBy("doc_id")
-            .agg(F.sort_array(F.collect_set("shid")).alias("shs")),
-            "pfj_profiles",
+            .agg(F.sort_array(F.collect_set("shid")).alias("shs"))
         )
         return (vocab, prefix, profiles)
 
-    return dataset_cached(
-        _PFJ_INDEX_CACHE,
-        spark,
-        sf_dir,
-        ("documents.parquet",),
-        build,
-        max_entries=MAX_CHECKPOINT_ENTRIES,
-    )
+    return cached_index(spark, sf_dir, ("documents.parquet",), "pfj", build)
 
 
 def _pfj_intersect_batches(batches, threshold: float | None = None):

@@ -15,13 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import (
-    MAX_CHECKPOINT_ENTRIES,
-    checkpoint_frame,
-    dataset_cached,
-    scatter,
-    table,
-)
+from ..catalog import cached_index, checkpoint_frame, scatter, table
 from ..functions.vectors import (
     LSH_TABLES,
     dot,
@@ -50,9 +44,6 @@ LSH_PROBE_LIMIT = 20
 LSH_TOPK = 3
 
 
-_VECTOR_STORE_CACHE: dict[tuple, DataFrame] = {}
-
-
 def vector_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE materialized vector store: (vec_id, embedding, nrm), norms
     folded once per corpus snapshot, shared by every vector operator
@@ -61,14 +52,13 @@ def vector_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     side of every pair-attach join re-scans the parquet and re-folds
     the norms (Spark shares no subplans), and the identical stored
     doubles are what make every cosine bit-identical across reads.
-    Identity/eviction semantics are catalog.dataset_cached's."""
-    return dataset_cached(
-        _VECTOR_STORE_CACHE,
+    Identity/eviction semantics are catalog.cached_index's."""
+    return cached_index(
         spark,
         sf_dir,
         ("embeddings.parquet",),
-        lambda: checkpoint_frame(_vector_store_frame(spark, sf_dir), "vector_store"),
-        max_entries=MAX_CHECKPOINT_ENTRIES,
+        "vector_store",
+        lambda: checkpoint_frame(_vector_store_frame(spark, sf_dir)),
     )
 
 
@@ -130,12 +120,9 @@ def sim_cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LSH_INDEX_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build (or fetch) the sign-LSH hash tables: (vec_id, embedding,
-    nrm, table, bucket), eagerly localCheckpoint'd once per dataset and
+    nrm, table, bucket), eagerly materialized once per dataset and
     Spark application. Index BUILD is separated from SEARCH exactly as
     a serving ANN system does it — the hyperplane projections run once
     per vector at build time; queries pay only the candidate join and
@@ -146,15 +133,14 @@ def _lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector store — the _ivf_index shape — would be ~LSH_TABLES× smaller
     but adds a per-query attach join; at LSH_TABLES=2 the space cost is
     bounded and the search stays one equi-join). Identity/eviction
-    semantics are catalog.dataset_cached's."""
+    semantics are catalog.cached_index's."""
 
-    return dataset_cached(
-        _LSH_INDEX_CACHE,
+    return cached_index(
         spark,
         sf_dir,
         ("embeddings.parquet",),
-        lambda: checkpoint_frame(_lsh_index_frame(spark, sf_dir), "lsh_index"),
-        max_entries=MAX_CHECKPOINT_ENTRIES,
+        "lsh",
+        lambda: checkpoint_frame(_lsh_index_frame(spark, sf_dir)),
     )
 
 

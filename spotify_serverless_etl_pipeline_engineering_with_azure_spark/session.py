@@ -13,13 +13,18 @@ initialPartitionNum) high for the largest expected shuffle and lets
 AQE coalesce small stages, with SPARK_GRAFT_SHUFFLE_PARTITIONS as the
 non-AQE floor.
 
-Checkpoint hygiene: a cluster deployment that calls
-``sc.setCheckpointDir`` (which switches the iterative loops' round
-boundaries to reliable checkpoints — plans/dedup._round_checkpoint)
-must also set ``spark.cleaner.referenceTracking.cleanCheckpoints=true``
-so Spark reclaims superseded per-round ``rdd-*`` dirs; it is off by
-default, and without it CC/PageRank accumulate O(rounds) vertex-sized
-dirs on shared storage per invocation. Local mode (no checkpoint dir)
+Checkpoint hygiene: the SparkContext checkpoint dir is the engine's
+one durability switch. Set it (``sc.setCheckpointDir`` or the
+``spark.checkpoint.dir`` conf, e.g. through SPARK_GRAFT_EXTRA_CONFS)
+and every eager materialization — index builds, iterative-loop round
+boundaries, shared in-query aggregates (catalog.materialize) — becomes
+a reliable checkpoint on that shared storage, and the CC/PageRank
+stats re-roots land under it too (catalog.scratch_roots). A cluster
+deployment that sets it must also set
+``spark.cleaner.referenceTracking.cleanCheckpoints=true`` so Spark
+reclaims superseded ``rdd-*`` dirs; it is off by default, and without
+it CC/PageRank accumulate O(rounds) vertex-sized dirs per invocation.
+Local mode (no checkpoint dir) uses executor-local checkpoints and
 writes none.
 """
 

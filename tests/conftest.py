@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 import time
@@ -33,3 +34,18 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SSE_TEST_SF_DIR", SF_SMOKE)
+
+
+@contextlib.contextmanager
+def checkpoint_dir(spark, path):
+    """Set the session-scoped SparkContext's checkpoint dir (the
+    engine's one durability switch) for the block and yield it as a
+    local path; restore the no-dir default on exit, so every other
+    test keeps the local-checkpoint path."""
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None, "fixture session should start without one"
+    sc.setCheckpointDir(str(path))
+    try:
+        yield sc.getCheckpointDir().replace("file:", "")
+    finally:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(spark._jvm.scala.Option.apply(None))

@@ -235,3 +235,37 @@ def test_distributed_ntile_broadcast_offset_path(spark, monkeypatch):
         ).collect()
     }
     assert got == want
+
+
+def test_checkpoint_dir_makes_eager_materializations_durable(spark, sf_dir, tmp_path):
+    """The checkpoint dir is the one durability switch: with one set,
+    _distributed_ntile's range-partitioned frame and agg_approx_sketches'
+    sketch aggregate become reliable checkpoints under it (rdd-* dirs),
+    and both return the same rows as the local-checkpoint run."""
+    import os
+
+    from spotify_serverless_etl_pipeline_engineering_with_azure_spark.plans.behavior_ops import (
+        _distributed_ntile,
+    )
+
+    from .conftest import checkpoint_dir
+
+    df = (
+        spark.range(97)
+        .select((F.col("id") * 7919 % 104729).alias("metric"), F.col("id").alias("user_id"))
+        .repartition(5)
+    )
+    order = [F.desc("metric"), F.asc("user_id")]
+    runs = {
+        "ntile": lambda: _distributed_ntile(df, order, 4, "score"),
+        "sketches": lambda: ALL["agg_approx_sketches"].fn(spark, sf_dir),
+    }
+    for name, run in runs.items():
+        local = sorted(map(tuple, run().collect()))
+        with checkpoint_dir(spark, tmp_path / name) as ck:
+            durable = sorted(map(tuple, run().collect()))
+            entries = os.listdir(ck)
+        assert any(e.startswith("rdd-") for e in entries), (
+            f"{name}: no reliable checkpoint under the checkpoint dir: {entries}"
+        )
+        assert durable == local, name

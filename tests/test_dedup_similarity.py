@@ -402,9 +402,12 @@ def test_index_caches_reuse_and_invalidate(spark, sf_dir, tmp_path):
     """The per-dataset index caches (_minhash_index, _ngram_index) must
     serve the SAME checkpointed frame for an unchanged corpus snapshot
     and rebuild when the underlying parquet changes — a stale hit would
-    silently answer dedup queries from a superseded corpus."""
+    silently answer dedup queries from a superseded corpus. Both
+    families key on documents.parquet in the one shared registry, so
+    their entries must stay apart."""
     import shutil
 
+    from spotify_serverless_etl_pipeline_engineering_with_azure_spark import catalog
     from spotify_serverless_etl_pipeline_engineering_with_azure_spark.plans import dedup
 
     ds = tmp_path / "ds"
@@ -429,8 +432,12 @@ def test_index_caches_reuse_and_invalidate(spark, sf_dir, tmp_path):
     assert k2 is not k1
     # Supersession EVICTS the stale entry (an append-only cache would
     # pin every superseded checkpointed index for the app's lifetime).
-    for cache in (dedup._MINHASH_INDEX_CACHE, dedup._NGRAM_INDEX_CACHE):
-        assert sum(1 for k in cache if k[0][0] == str(ds)) == 1
+    for family in ("minhash", "ngram"):
+        assert sum(
+            1
+            for k in catalog._INDEX_CACHE
+            if k[0][0] == str(ds) and k[0][2][0] == family
+        ) == 1
     # Rebuilt index reflects the new corpus: no odd doc_id anywhere.
     odd = b2[0].filter(F.col("doc_id") % 2 == 1).count()
     assert odd == 0
@@ -576,10 +583,15 @@ def test_persisted_survives_session_restart(tmp_path):
 def test_run_to_parquet_sweeps_dead_process_dirs(spark, tmp_path, monkeypatch):
     """A drain base dir left by a process that no longer exists must be
     swept on the next invocation; the current invocation's own run dir
-    must survive (it backs the returned lazy frame)."""
+    must survive (it backs the returned lazy frame). The sweep
+    (catalog.app_scoped_dir) must leave foreign-host app dirs alone (PID
+    liveness is not knowable across hosts on a shared store) and never
+    delete entries that don't parse as the naming convention (user data
+    under a user-supplied root)."""
     import glob
     import hashlib
     import os
+    import shutil
 
     from spotify_serverless_etl_pipeline_engineering_with_azure_spark.streaming.pipeline import (
         run_to_parquet,
@@ -593,6 +605,10 @@ def test_run_to_parquet_sweeps_dead_process_dirs(spark, tmp_path, monkeypatch):
     base = f"/tmp/sse_drain_sweeptest_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
     dead = f"{base}/app_999999999_{_host_hash()}_dead0000"
     os.makedirs(f"{dead}/run_old", exist_ok=True)
+    foreign = f"{base}/app_999999999_0ther0st_dead0000"
+    unparseable = f"{base}/app_metadata"
+    for d in (foreign, unparseable):
+        os.makedirs(d, exist_ok=True)
 
     from spotify_serverless_etl_pipeline_engineering_with_azure_spark.streaming.pipeline import (
         events_stream,
@@ -605,11 +621,17 @@ def test_run_to_parquet_sweeps_dead_process_dirs(spark, tmp_path, monkeypatch):
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    back, q = run_to_parquet(deduped, "sweeptest", sf_dir)
-    assert not os.path.exists(dead), "dead-pid drain dir must be swept"
-    live = glob.glob(f"{base}/app_{os.getpid()}_*/run_*")
-    assert live, "this invocation's run dir must exist"
-    assert back.count() > 0, "returned frame must read the landed parquet"
+    try:
+        back, q = run_to_parquet(deduped, "sweeptest", sf_dir)
+        assert not os.path.exists(dead), "dead-pid drain dir must be swept"
+        assert os.path.exists(foreign), "foreign-host app dirs must never be swept"
+        assert os.path.exists(unparseable), "non-convention entries must never be deleted"
+        live = glob.glob(f"{base}/app_{os.getpid()}_*/run_*")
+        assert live, "this invocation's run dir must exist"
+        assert back.count() > 0, "returned frame must read the landed parquet"
+    finally:
+        for d in (foreign, unparseable):
+            shutil.rmtree(d, ignore_errors=True)
 
 
 def test_connected_components_pointer_jumping_on_a_drift_chain(spark):
@@ -736,7 +758,7 @@ def test_iterative_loops_use_reliable_checkpoint_when_dir_configured(
     their executor (lineage truncated — one lost executor aborts the
     whole loop; Spark's documented caveat), so when the application
     has configured a reliable checkpoint dir — shared storage by
-    setCheckpointDir's own contract — _round_checkpoint must take the
+    setCheckpointDir's own contract — catalog.materialize must take the
     durable branch (rdd-* dirs appear under it), and the stats
     re-root scratch must resolve UNDER that cluster-visible root
     (never driver tmp) and be swept post-fixpoint."""
@@ -775,29 +797,29 @@ def test_iterative_loops_use_reliable_checkpoint_when_dir_configured(
 
 def test_scratch_roots_resolution_and_cleanup(spark, tmp_path):
     """catalog.scratch_roots is the cluster-visibility convention for
-    engine-internal parquet round-trips: an explicit
-    spark.sse.scratchDir conf wins, then the reliable checkpoint dir,
-    then driver-local tempfile as the documented local-mode stand-in;
-    cleanup() removes the paths through the Hadoop FS API."""
+    engine-internal parquet round-trips: the reliable checkpoint dir
+    when one is set, else driver-local tempfile as the documented
+    local-mode stand-in; cleanup() removes the paths through the
+    Hadoop FS API."""
     import os
 
     from spotify_serverless_etl_pipeline_engineering_with_azure_spark.catalog import (
         scratch_roots,
     )
 
-    # (1) conf wins
+    from .conftest import checkpoint_dir
+
+    # (1) a checkpoint dir wins
     root = str(tmp_path / "scratch")
-    os.makedirs(root)
-    spark.conf.set("spark.sse.scratchDir", root)
-    try:
+    with checkpoint_dir(spark, root) as ck:
+        assert ck.startswith(root)
         paths, cleanup = scratch_roots(spark, "probe", 2)
-        assert all(p.startswith(root) for p in paths)
+        local = [p.replace("file:", "") for p in paths]
+        assert all(p.startswith(ck) for p in local)
         assert len(set(paths)) == 2
         spark.range(5).write.mode("overwrite").parquet(paths[0])
         cleanup()
-        assert not any(os.path.exists(p) for p in paths)
-    finally:
-        spark.conf.unset("spark.sse.scratchDir")
+        assert not any(os.path.exists(p) for p in local)
     # (2) fallback: driver tempfile, created and removable — and
     # `file:`-pinned, so writes/read-backs/cleanup resolve to the
     # driver-local filesystem mkdtemp created the dirs on even when
@@ -863,43 +885,46 @@ def test_iterative_persist_lifecycles_are_exception_safe(spark, monkeypatch):
 
 def test_checkpoint_frame_search_parallelism_floor(spark, tmp_path, monkeypatch):
     """checkpoint_frame reshards a below-floor frame up to
-    min(defaultParallelism, ceil(rows / _FLOOR_ROWS_PER_PART)) — in
-    BOTH branches. The build plan's last shuffle is AQE-coalesced by
-    BYTES, so a small index table collapses to one partition and every
-    search stage that pipelines on its scan runs single-threaded
-    (measured: sim_ann_ivf at sf1 flipped 3.4 s ↔ 6.8 s on whether AQE
-    kept or elided the probe-side exchange over the 1-partition index
-    — IVF_FLOOR_AB_r10.json). The floor is ROW-AWARE: a micro frame
+    min(defaultParallelism, ceil(rows / _FLOOR_ROWS_PER_PART)) — with
+    and without a checkpoint dir. The build plan's last shuffle is
+    AQE-coalesced by BYTES, so a small index table collapses to one
+    partition and every search stage that pipelines on its scan runs
+    single-threaded (measured: sim_ann_ivf at sf1 flipped 3.4 s ↔ 6.8 s
+    on whether AQE kept or elided the probe-side exchange over the
+    1-partition index — IVF_FLOOR_AB_r10.json). The floor is ROW-AWARE: a micro frame
     must stay compact (a 2,835-row table resharded to 32 partitions
     measurably turned a 0.14 s consumer into 0.35 s of task overhead),
     and frames already at/above their target must be returned
     untouched — at corpus scale the byte-sized count dominates and a
     forced repartition DOWN would be a regression."""
     import math
+    import os
 
     from spotify_serverless_etl_pipeline_engineering_with_azure_spark.catalog import (
         _FLOOR_ROWS_PER_PART,
         checkpoint_frame,
     )
 
+    from .conftest import checkpoint_dir
+
     cores = spark.sparkContext.defaultParallelism
     n_big = 4 * _FLOOR_ROWS_PER_PART  # enough rows for >1 target part
     big = spark.range(n_big).coalesce(1)
 
-    out = checkpoint_frame(big, "floor_test")
+    out = checkpoint_frame(big)
     expect = min(cores, math.ceil(n_big / _FLOOR_ROWS_PER_PART))
     assert out.rdd.getNumPartitions() == expect
     assert sorted(r["id"] for r in out.collect()) == list(range(n_big))
 
     # Micro frame: target is 1 — must NOT be spread across cores.
-    micro = checkpoint_frame(spark.range(100).coalesce(1), "floor_test_micro")
+    micro = checkpoint_frame(spark.range(100).coalesce(1))
     assert micro.rdd.getNumPartitions() == 1
 
     # At/above the target: untouched (no reshard, count preserved) —
     # and the verdict must be reached WITHOUT running a count() job:
     # with >= cores partitions the cap predetermines the outcome, and
-    # in the durable branch that count is a full parquet-scan job per
-    # index build on corpus-sized tables (r10 ADVICE).
+    # on corpus-sized tables that count is a full extra job per index
+    # build (r10 ADVICE).
     from pyspark.sql import DataFrame as _DF
 
     wide = spark.range(n_big).repartition(cores + 3)
@@ -908,63 +933,47 @@ def test_checkpoint_frame_search_parallelism_floor(spark, tmp_path, monkeypatch)
             raise AssertionError("count() ran for an already-wide frame")
 
         m.setattr(_DF, "count", _boom)
-        kept = checkpoint_frame(wide, "floor_test_wide")
+        kept = checkpoint_frame(wide)
     assert kept.rdd.getNumPartitions() == cores + 3
 
-    # Durable branch: the parquet scan of a small index table packs to
-    # few splits; the returned frame must still carry the target (lazy
-    # repartition above the scan — the scan stays the durable root).
-    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
-    dur = checkpoint_frame(big, "floor_test_durable")
-    assert dur.rdd.getNumPartitions() == expect
-    assert sorted(r["id"] for r in dur.collect()) == list(range(n_big))
+    # Durable branch: under a checkpoint dir both materializations are
+    # reliable checkpoints, and the floor still applies.
+    with checkpoint_dir(spark, tmp_path / "ck") as ck:
+        dur = checkpoint_frame(big)
+        assert dur.rdd.getNumPartitions() == expect
+        assert sorted(r["id"] for r in dur.collect()) == list(range(n_big))
+        assert any(e.startswith("rdd-") for e in os.listdir(ck))
 
 
-def test_durable_index_store_roundtrip_and_sweep(spark, sf_dir, tmp_path, monkeypatch):
-    """SPARK_GRAFT_INDEX_DIR flips index materialization from executor-
-    local localCheckpoint blocks (unreplicated — lost with an executor)
-    to a durable parquet round-trip, the production shape: replicated
-    by the storage layer, survives executor loss, readable across jobs.
-    The durable index must serve identical results, write under this
-    process's app_<pid> dir, and sweep same-host dead-PID debris on
-    build — while leaving foreign-host app dirs (PID liveness is not
-    knowable across hosts on a shared store) and entries that don't
-    parse as the naming convention (user data under a user-supplied
-    root) strictly alone."""
-    import glob
+def test_durable_index_store_roundtrip_and_sweep(spark, sf_dir, tmp_path):
+    """With a checkpoint dir set, index builds become reliable
+    checkpoints under it (rdd-* dirs) — replicated by the storage layer
+    and surviving executor loss, unlike executor-local localCheckpoint
+    blocks — and the durable index serves the same rows as the local
+    build. (The dead-app sweep is app_scoped_dir's, covered by
+    test_run_to_parquet_sweeps_dead_process_dirs.)"""
     import os
     import shutil
 
-    from spotify_serverless_etl_pipeline_engineering_with_azure_spark.catalog import (
-        _host_hash,
-    )
     from spotify_serverless_etl_pipeline_engineering_with_azure_spark.plans import dedup
+
+    from .conftest import checkpoint_dir
 
     ds = tmp_path / "ds"
     ds.mkdir()
     shutil.copy(f"{sf_dir}/documents.parquet", ds / "documents.parquet")
     baseline = dedup.dedup_minhash_lsh(spark, str(ds)).toPandas()
 
-    store = tmp_path / "index_store"
-    dead = store / f"app_999999999_{_host_hash()}_dead0000"
-    dead.mkdir(parents=True)
-    foreign = store / "app_999999999_0ther0st_dead0000"
-    foreign.mkdir(parents=True)
-    unparseable = store / "app_metadata"
-    unparseable.mkdir(parents=True)
-    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(store))
-    # Fresh dataset identity so the cache cannot serve the
-    # localCheckpoint-mode build.
+    # Fresh dataset identity so the cache cannot serve the local build.
     ds2 = tmp_path / "ds2"
     ds2.mkdir()
     shutil.copy(f"{sf_dir}/documents.parquet", ds2 / "documents.parquet")
-    durable = dedup.dedup_minhash_lsh(spark, str(ds2)).toPandas()
-
-    assert not dead.exists(), "dead-app index dir must be swept on build"
-    assert foreign.exists(), "foreign-host app dirs must never be swept"
-    assert unparseable.exists(), "non-convention entries must never be deleted"
-    live = glob.glob(str(store / f"app_{os.getpid()}_*" / "minhash_*"))
-    assert len(live) >= 2, "bands + pairs must land as parquet index tables"
+    with checkpoint_dir(spark, tmp_path / "ck") as ck:
+        durable = dedup.dedup_minhash_lsh(spark, str(ds2)).toPandas()
+        entries = os.listdir(ck)
+    assert sum(e.startswith("rdd-") for e in entries) >= 2, (
+        f"bands + pairs must land as reliable checkpoints: {entries}"
+    )
 
     def key(pdf):
         return sorted(

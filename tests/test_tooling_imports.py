@@ -1,4 +1,5 @@
-"""Scripts and benchmark files import only names the package still has.
+"""Scripts and benchmark files import only names the package still has,
+and the package takes its settings in one place.
 
 Measurement scripts are not run by the suite, so a script left
 importing a deleted function would otherwise only fail when someone
@@ -19,6 +20,10 @@ TOOL_FILES = sorted(
     os.path.relpath(p, ROOT)
     for pattern in ("scripts/*.py", "perfbench/*.py", "bench.py")
     for p in glob.glob(os.path.join(ROOT, pattern))
+)
+PACKAGE_FILES = sorted(
+    os.path.relpath(p, ROOT)
+    for p in glob.glob(os.path.join(ROOT, PACKAGE, "**", "*.py"), recursive=True)
 )
 
 
@@ -60,3 +65,48 @@ def test_tool_imports_resolve(path):
         except ImportError:
             missing.append(f"{module}.{name}")
     assert not missing, f"{path} imports names the package lacks: {missing}"
+
+
+def setting_reads(source: str) -> list[tuple[int, str]]:
+    """(line, what) for every ``os.environ`` / ``os.getenv`` use and
+    every call that passes a ``spark.sse.*`` conf key."""
+    found = []
+    for node in ast.walk(ast.parse(source)):
+        if (
+            isinstance(node, ast.Attribute)
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "os"
+            and node.attr in ("environ", "getenv")
+        ):
+            found.append((node.lineno, f"os.{node.attr}"))
+        elif isinstance(node, ast.ImportFrom) and node.module == "os":
+            found += [
+                (node.lineno, f"from os import {a.name}")
+                for a in node.names
+                if a.name in ("environ", "getenv")
+            ]
+        elif isinstance(node, ast.Call):
+            found += [
+                (node.lineno, a.value)
+                for a in node.args
+                if isinstance(a, ast.Constant)
+                and isinstance(a.value, str)
+                and a.value.startswith("spark.sse.")
+            ]
+    return found
+
+
+def test_only_session_reads_settings():
+    """session.py maps the environment to Spark confs; every other
+    package module reads its settings from the SparkSession, and no
+    module invents a private ``spark.sse.*`` conf (the SparkContext
+    checkpoint dir is the one durability switch)."""
+    assert f"{PACKAGE}/session.py" in PACKAGE_FILES
+    bad = []
+    for path in PACKAGE_FILES:
+        with open(os.path.join(ROOT, path), encoding="utf-8") as f:
+            reads = setting_reads(f.read())
+        if path == f"{PACKAGE}/session.py":
+            reads = [r for r in reads if r[1].startswith("spark.sse.")]
+        bad += [f"{path}:{line}: {what}" for line, what in reads]
+    assert not bad, f"settings read outside session.py: {bad}"
