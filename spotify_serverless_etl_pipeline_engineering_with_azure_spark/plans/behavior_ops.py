@@ -364,9 +364,11 @@ def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # janino rejects methods over 64 KB of bytecode and each literal pair
 # costs constants + branch code, so the map literal has a hard codegen
 # ceiling at roughly a few thousand pairs — while the cluster posture
-# this module documents (SPARK_GRAFT_SHUFFLE_INITIAL) runs 1e5-1e6
-# range partitions. 512 stays an order of magnitude under the cliff
-# while keeping every test/local shape on the no-join fast path.
+# session.py documents (spark.sql.shuffle.partitions and
+# spark.sql.adaptive.coalescePartitions.initialPartitionNum sized to
+# shuffle bytes) runs 1e5-1e6 range partitions. 512 stays an order of
+# magnitude under the cliff while keeping every test/local shape on the
+# no-join fast path.
 _NTILE_MAP_LITERAL_MAX = 512
 
 
@@ -412,7 +414,7 @@ def _distributed_ntile(
         rank = (F.row_number().over(w) + off_map[F.col("_pid")]).cast("long")
         ranked = pid.withColumn("_rn_global", rank)
     else:
-        # Cluster posture (SPARK_GRAFT_SHUFFLE_INITIAL ~1e5-1e6 range
+        # Cluster posture (spark.sql.shuffle.partitions ~1e5-1e6 range
         # partitions): one literal pair per partition would be a
         # multi-MB expression past janino's 64 KB method / constant-pool
         # limits — the same codegen cliff the kmeans literal-codebook

@@ -3,20 +3,10 @@
 the drained result. With a single micro-batch no rows are late, so the
 streaming results equal their batch shadows and stay oracle-checkable.
 
-PER-INVOCATION FIXED COST, measured so future rounds stop re-litigating
-it (r11, streaming_tumbling_window at sf0.1, warm session, 3 reps via
-StreamingQueryProgress.durationMs): of a ~1.2-1.5 s wall, the actual
-windowed aggregation (batch 0 addBatch) is ~0.4 s. The rest is
-micro-batch machinery that scales with TRIGGER COUNT, not data volume:
-~0.1 s plan build, ~0.1 s query start (temp checkpoint dir + WAL init +
-source listing), batch 0 overhead ~0.23 s (queryPlanning ~120 ms,
-walCommit ~35 ms, commitOffsets ~35 ms, latestOffset ~35 ms), a no-data
-FINALIZATION trigger ~0.3 s (update-mode watermark eviction re-plans
-and commits: addBatch ~200 ms + planning/WAL ~100 ms), and ~0.12 s
-memory-sink read-back. None of it is removable without not running a
-real streaming query (sink-gaming); on a 24/7 production stream these
-costs amortize to one trigger's overhead per interval, and the
-per-batch numbers above are the honest per-trigger floor.
+Per-invocation cost is per-trigger micro-batch machinery (plan build,
+query start, WAL commits, a no-data finalization trigger) on top of
+the aggregation itself; it scales with trigger count, not data volume.
+The measured breakdown is in OPTIMIZATION_r11.md (verdict item 7).
 """
 
 from __future__ import annotations
@@ -300,35 +290,12 @@ def streaming_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint + deterministic paths, spotifytransform.py:101-158).
     Reading the landed files back and aggregating must equal
     aggregating the source directly."""
-    from ..catalog import sink_run_dir
-
-    # Run-unique, app-scoped, swept (sink_run_dir's contract): the old
-    # fixed per-dataset dir was rmtree'd on every build — destroying
-    # the files backing any previously returned frame — and its
-    # uuid-named checkpoint dirs leaked outside every swept root. The
-    # checkpoint now lives inside the run dir.
-    out = sink_run_dir(spark, "feb", sf_dir)
-
-    def sink(batch_df, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{out}/data/batch_id={batch_id}")
-
-    with narrow_state_partitions(spark):
-        q = (
-            events_stream(spark, sf_dir)
-            .select("event_id", "event_type", "value")
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", f"{out}/_ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError("foreachBatch stream did not drain")
     from ..functions.exact import dsum
 
-    back = spark.read.option("basePath", f"{out}/data").parquet(
-        f"{out}/data/batch_id=*"
+    back, _ = run_to_parquet(
+        events_stream(spark, sf_dir).select("event_id", "event_type", "value"),
+        "feb",
+        sf_dir,
     )
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"), dsum(F.col("value"), 2).alias("sum_value")

@@ -8,10 +8,10 @@ BYTES (~128–200 MB per reduce partition → ~10⁵–10⁶ partitions for a
 100 TB shuffle), never core count, and AQE's coalescePartitions only
 merges DOWN from the configured initial count — it never splits an
 oversized partition up. A cluster deployment therefore sets
-SPARK_GRAFT_SHUFFLE_INITIAL (→ adaptive.coalescePartitions.
-initialPartitionNum) high for the largest expected shuffle and lets
-AQE coalesce small stages, with SPARK_GRAFT_SHUFFLE_PARTITIONS as the
-non-AQE floor.
+``spark.sql.adaptive.coalescePartitions.initialPartitionNum`` high for
+the largest expected shuffle and lets AQE coalesce small stages, with
+``spark.sql.shuffle.partitions`` as the non-AQE floor (both through
+SPARK_GRAFT_EXTRA_CONFS, which overrides the cores-derived default).
 
 Checkpoint hygiene: the SparkContext checkpoint dir is the engine's
 one durability switch. Set it (``sc.setCheckpointDir`` or the
@@ -47,15 +47,15 @@ def session_confs(
 
     SPARK_GRAFT_CPUS sizes both local parallelism and shuffle
     partitions; SPARK_GRAFT_MASTER overrides the master URL (cluster
-    posture); SPARK_GRAFT_DRIVER_MEM sizes the driver heap.
+    posture); SPARK_GRAFT_DRIVER_MEM sizes the driver heap;
+    SPARK_GRAFT_EXTRA_CONFS (``parse_confs`` grammar) adds or overrides
+    any conf.
     """
     e = os.environ if env is None else env
     cpus = e.get("SPARK_GRAFT_CPUS", "32")
     master = e.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     confs = {
-        "spark.sql.shuffle.partitions": str(
-            shuffle_partitions or e.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-        ),
+        "spark.sql.shuffle.partitions": str(shuffle_partitions or cpus),
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -76,35 +76,28 @@ def session_confs(
         # re-pins this per call for driver-constructed sessions.
         "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
     }
-    # Cluster shuffle sizing (see module docstring): AQE can only
-    # coalesce DOWN from the initial partition count, so a 100 TB
-    # shuffle needs the ceiling raised explicitly — cores-sized
-    # partitions would be ~3 TB each and no runtime re-plan can fix it.
-    init = e.get("SPARK_GRAFT_SHUFFLE_INITIAL")
-    if init:
-        confs["spark.sql.adaptive.coalescePartitions.initialPartitionNum"] = init
-    # Generic conf passthrough ("k=v;k2=v2"): lets a deployment (or a
-    # measured config A/B, guide §1) override/extend session confs
-    # without code edits. Applied LAST so explicit entries win over the
-    # local defaults above; the driver's bench stays comparable because
-    # the variable is unset there. Format limitation: values containing
-    # ';' cannot be expressed (the split is unconditional). A segment
-    # WITHOUT '=' is a config error — silently setting that conf to ""
-    # would fail session boot with a confusing Spark error far from the
-    # cause (r10 ADVICE), so raise here with the offending segment.
-    extra = e.get("SPARK_GRAFT_EXTRA_CONFS")
-    if extra:
-        for kv in extra.split(";"):
-            kv = kv.strip()
-            if not kv:
-                continue
-            k, sep, v = kv.partition("=")
-            if not sep or not k.strip():
-                raise ValueError(
-                    f"SPARK_GRAFT_EXTRA_CONFS segment {kv!r} is not 'key=value'"
-                )
-            confs[k.strip()] = v.strip()
+    # Applied LAST so explicit entries win over the local defaults above.
+    confs.update(parse_confs(e.get("SPARK_GRAFT_EXTRA_CONFS", "")))
     return master, confs
+
+
+def parse_confs(spec: str) -> dict[str, str]:
+    """Parse the SPARK_GRAFT_EXTRA_CONFS grammar, ``"k=v;k2=v2"``, into
+    a conf dict. Whitespace and empty segments are tolerated; values
+    containing ';' cannot be expressed (the split is unconditional). A
+    segment without '=' (or with an empty key) raises ValueError naming
+    it: silently setting that conf to "" would fail session boot with a
+    Spark error far from the cause."""
+    confs = {}
+    for kv in spec.split(";"):
+        kv = kv.strip()
+        if not kv:
+            continue
+        k, sep, v = kv.partition("=")
+        if not sep or not k.strip():
+            raise ValueError(f"conf segment {kv!r} is not 'key=value'")
+        confs[k.strip()] = v.strip()
+    return confs
 
 
 def get_spark(

@@ -127,6 +127,17 @@ def test_o3_session_config_from_env():
     assert confs["spark.sql.join.preferSortMergeJoin"] == "false"
     assert confs["spark.driver.memory"] == "8g"
 
+    # Cluster shuffle sizing goes through the same passthrough: it
+    # overrides the CPU-derived partition count.
+    master, confs = session_confs(
+        env={
+            "SPARK_GRAFT_CPUS": "8",
+            "SPARK_GRAFT_EXTRA_CONFS": "spark.sql.shuffle.partitions=200000",
+        }
+    )
+    assert master == "local[8]"
+    assert confs["spark.sql.shuffle.partitions"] == "200000"
+
     # A segment without '=' is a config error: silently setting the
     # conf to "" would fail session boot with a confusing Spark error
     # far from the cause (r10 ADVICE) — raise loud, name the segment.

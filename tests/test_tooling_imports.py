@@ -1,5 +1,6 @@
 """Scripts and benchmark files import only names the package still has,
-and the package takes its settings in one place.
+scripts import only sibling scripts and root modules that exist, and the
+package takes its settings in one place.
 
 Measurement scripts are not run by the suite, so a script left
 importing a deleted function would otherwise only fail when someone
@@ -10,6 +11,7 @@ from __future__ import annotations
 import ast
 import glob
 import importlib
+import importlib.util
 import os
 
 import pytest
@@ -41,6 +43,66 @@ def package_imports(source: str) -> list[tuple[str, str | None]]:
     return found
 
 
+def defined_names(path: str) -> set[str]:
+    """Top-level names a module defines: defs, classes, assignments and
+    imports, including those under a top-level if/try."""
+    with open(path, encoding="utf-8") as f:
+        names, stack = set(), list(ast.parse(f.read()).body)
+    while stack:
+        node = stack.pop()
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+            for target in node.targets if isinstance(node, ast.Assign) else [node.target]:
+                names |= {n.id for n in ast.walk(target) if isinstance(n, ast.Name)}
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            names |= {(a.asname or a.name).split(".")[0] for a in node.names}
+        elif isinstance(node, (ast.If, ast.Try)):
+            stack += node.body + node.orelse + getattr(node, "finalbody", [])
+            stack += [b for h in getattr(node, "handlers", []) for b in h.body]
+    return names
+
+
+def bare_import_problems(path: str) -> list[str]:
+    """Bare imports in a script that name a sibling script or a repo-root
+    module (``from bench import HEADLINE``, ``from tests.oracle_mirror
+    import compare``): each must name an existing file that defines the
+    imported names. A module that is neither local nor importable (a
+    deleted sibling) is reported too."""
+    with open(os.path.join(ROOT, path), encoding="utf-8") as f:
+        tree = ast.parse(f.read())
+    problems = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.level == 0:
+            wanted = [(node.module, [a.name for a in node.names if a.name != "*"])]
+        elif isinstance(node, ast.Import):
+            wanted = [(a.name, []) for a in node.names]
+        else:
+            continue
+        for module, names in wanted:
+            if module.split(".")[0] == PACKAGE:
+                continue
+            rel = module.replace(".", os.sep)
+            local = [
+                p
+                for base in (os.path.join(ROOT, "scripts"), ROOT)
+                for p in (os.path.join(base, rel + ".py"), os.path.join(base, rel, "__init__.py"))
+                if os.path.isfile(p)
+            ]
+            if not local:
+                if importlib.util.find_spec(module.split(".")[0]) is None:
+                    problems.append(f"{module}: no such module")
+                continue
+            defined = defined_names(local[0])
+            problems += [
+                f"{module}.{n}"
+                for n in names
+                if n not in defined
+                and not os.path.isfile(os.path.join(os.path.dirname(local[0]), n + ".py"))
+            ]
+    return problems
+
+
 def test_tool_files_found():
     assert "bench.py" in TOOL_FILES
     assert any(f.startswith("scripts/") for f in TOOL_FILES)
@@ -65,6 +127,9 @@ def test_tool_imports_resolve(path):
         except ImportError:
             missing.append(f"{module}.{name}")
     assert not missing, f"{path} imports names the package lacks: {missing}"
+    if path.startswith("scripts/"):
+        problems = bare_import_problems(path)
+        assert not problems, f"{path} imports missing local modules or names: {problems}"
 
 
 def setting_reads(source: str) -> list[tuple[int, str]]:
