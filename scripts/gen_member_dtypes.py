@@ -1,21 +1,25 @@
 """Regenerate plans/member_dtypes.py — the pinned Spark dtype
 signature of every digest-suite member query.
 
-The digest's h3 column folds the member's EXACT dtype string on the
-Spark side and this pinned signature on the DuckDB side, so any dtype
-drift (int→bigint, decimal precision, …) flips the driver row even
-when the canonicalization class ('v'/'d'/'t') is unchanged.
+The pin is the one per-member schema record: the digest derives each
+column's canonicalization class ('v'/'d'/'t') from it, and its h3
+column folds the member's EXACT dtype string on the Spark side and
+this pinned signature on the DuckDB side, so any dtype drift
+(int→bigint, decimal precision, …) flips the driver row even when the
+class is unchanged.
 
-Run after adding/changing a suite member:
+Adding a suite member is one step after listing it in SUITES: run
 
     python scripts/gen_member_dtypes.py
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import SparkSession  # noqa: E402
 
@@ -27,9 +31,8 @@ from spotify_serverless_etl_pipeline_engineering_with_azure_spark.plans.suites i
 
 SF_DIR = "/root/testdata/sf0.001"
 
-OUT = (
-    "/root/repo/spotify_serverless_etl_pipeline_engineering_with_azure_spark/"
-    "plans/member_dtypes.py"
+OUT = os.path.join(
+    REPO, "spotify_serverless_etl_pipeline_engineering_with_azure_spark", "plans", "member_dtypes.py"
 )
 
 HEADER = '''"""Pinned Spark dtype signatures per digest-suite member —

@@ -1,7 +1,8 @@
 """Registry entries that execute REAL Structured Streaming queries
-(availableNow over the bounded test tables → memory sink) and return
-the drained result. With a single micro-batch no rows are late, so the
-streaming results equal their batch shadows and stay oracle-checkable.
+(availableNow over the bounded test tables → run_to_parquet) and
+return the drained result. With a single micro-batch no rows are late,
+so the streaming results equal their batch shadows and stay
+oracle-checkable.
 
 Per-invocation cost is per-trigger micro-batch machinery (plan build,
 query start, WAL commits, a no-data finalization trigger) on top of
@@ -11,27 +12,20 @@ The measured breakdown is in OPTIMIZATION_r11.md (verdict item 7).
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
 from ..streaming.pipeline import (
+    _foreach_batch_drain,
     events_stream,
-    narrow_state_partitions,
-    run_to_memory,
     run_to_parquet,
     windowed_counts,
 )
 
 
-def _sink_name(prefix: str) -> str:
-    return f"{prefix}_{uuid.uuid4().hex[:8]}"
-
-
 def _assert_single_data_batch(q, name: str) -> None:
-    """UPDATE-mode memory sinks APPEND each trigger's emitted rows: if
+    """UPDATE-mode drains APPEND each trigger's emitted rows: if
     the bounded drain ever split into 2+ micro-batches, a group updated
     in both would land twice (stale + final) and the read-back would
     carry duplicate rows — silently. The single-file staging makes the
@@ -64,7 +58,7 @@ GROUP BY 1, 2
 )
 def streaming_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S3 generalized: watermarked tumbling-window counts, executed as a
-    real streaming query (file source → availableNow → memory sink).
+    real streaming query (file source → availableNow → run_to_parquet).
 
     UPDATE output mode, not complete: complete mode disables
     watermark-based state eviction by definition (every window ever
@@ -74,12 +68,11 @@ def streaming_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-micro-batch drain the two modes emit identical rows, so the
     oracle equality is unchanged — the mode choice is the honest
     production posture, not a result change."""
-    name = _sink_name("stream_win")
-    q = run_to_memory(
-        windowed_counts(events_stream(spark, sf_dir)), name, output_mode="update"
+    back, q = run_to_parquet(
+        windowed_counts(events_stream(spark, sf_dir)), "win", sf_dir, output_mode="update"
     )
     _assert_single_data_batch(q, "streaming_tumbling_window")
-    return spark.table(name)
+    return back.drop("batch_id")
 
 
 @register(
@@ -92,15 +85,6 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Only the key columns are emitted (which physical row survives is
     engine-internal), so the result set equals DISTINCT keys.
-
-    The deduped stream drains through run_to_parquet (foreachBatch →
-    per-batch parquet, executor-side writes), NOT a memory sink: unlike
-    the aggregate-shaped siblings whose sinks hold bounded group
-    cardinalities, this output is distinct-KEY-sized — at ~10⁹ users a
-    memory sink would materialize billions of rows in driver JVM
-    memory during the drain. The distributed sink is the production
-    shape (dedup feeds a table, not the driver); reading the landed
-    files back is the test harness's comparison path.
 
     ORACLE EQUALITY DEPENDS ON THE SINGLE-DATA-BATCH DRAIN, asserted
     below: dropDuplicatesWithinWatermark only holds a key's state for
@@ -142,7 +126,6 @@ def streaming_static_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import table as static_table
     from ..functions.exact import dsum
 
-    name = _sink_name("stream_enrich")
     cust = static_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     ev = events_stream(spark, sf_dir)
     agg = (
@@ -154,8 +137,8 @@ def streaming_static_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_mktsegment")
         .agg(F.count(F.lit(1)).alias("n_events"), dsum(F.col("value"), 2).alias("sum_value"))
     )
-    run_to_memory(agg, name, output_mode="complete")
-    return spark.table(name)
+    back, _ = run_to_parquet(agg, "enrich", sf_dir, output_mode="complete")
+    return back.drop("batch_id")
 
 
 @register(
@@ -180,12 +163,9 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The per-user counts are PARTIALLY AGGREGATED INSIDE foreachBatch
     (run_to_parquet's batch_transform hook) and landed as per-batch
-    parquet, then summed across batches — the incremental-ETL shape.
-    The earlier revision sank the raw join output to a memory sink and
-    aggregated afterwards: at production volume the interval join
-    emits O(events) attribution pairs, and a memory sink materializes
-    every one of them in driver JVM memory — the one data-sized
-    intermediate in this module. Append-mode emits each joined row at
+    parquet, then summed across batches — the incremental-ETL shape:
+    the interval join emits O(events) attribution pairs, and only
+    per-batch counts land on disk. Append-mode emits each joined row at
     most once, but EXACTNESS vs the batch-join oracle still depends on
     the single-data-batch drain (asserted below): across a
     watermark-advancing batch split, a click more than 1 h older than
@@ -257,7 +237,6 @@ def streaming_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed windows (complete mode retains and re-emits every window
     ever seen — unbounded on a 24/7 stream); identical rows over the
     bounded single-batch drain (see streaming_tumbling_window)."""
-    name = _sink_name("stream_slide")
     ev = events_stream(spark, sf_dir)
     from ..functions.exact import dsum
 
@@ -267,9 +246,9 @@ def streaming_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_events"), dsum(F.col("value"), 2).alias("sum_value"))
         .select(F.col("w.start").alias("window_start"), "n_events", "sum_value")
     )
-    q = run_to_memory(agg, name, output_mode="update")
+    back, q = run_to_parquet(agg, "slide", sf_dir, output_mode="update")
     _assert_single_data_batch(q, "streaming_sliding_window")
-    return spark.table(name)
+    return back.drop("batch_id")
 
 
 @register(
@@ -379,17 +358,9 @@ def streaming_csv_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         for name, df in branches.items():
             write_csv(df, f"{out}/{name}/batch_id={batch_id}")
 
-    with narrow_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError("csv sink stream did not drain")
+    _foreach_batch_drain(
+        stream, sink, ckpt, "stream_csv", output_mode="append", timeout_s=300
+    )
 
     def read_back(name: str, value_field: str) -> DataFrame:
         df = (
@@ -477,13 +448,8 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     accepts that in-flight sessions are not yet visible. The one-batch
     drain here emits everything because nothing is late.
 
-    The drain is run_to_parquet, NOT a memory sink: the output is one
-    row per user-SESSION — data-sized, unlike the bounded-cardinality
-    aggregates the memory-sink siblings hold — so a memory sink would
-    materialize every session in driver JVM memory during the drain
-    (~10⁹ users × sessions at production volume). Complete mode
-    re-emits the whole table per trigger; run_to_parquet reads back
-    only the LAST batch for complete-mode drains, so a trailing
+    Complete mode re-emits the whole table per trigger; run_to_parquet
+    reads back only the LAST batch for complete-mode drains, so a trailing
     no-data trigger can never double the result, and the data-batch
     assert pins the oracle-equality contract (all input in one batch →
     nothing late).

@@ -2,10 +2,10 @@
 
 The external driver hash-compares a BOUNDED PREFIX of the registry
 against DuckDB (round 1 checked exactly the first 50 registered
-queries). With 116 oracle-backed queries, per-query driver rows cannot
-cover the full surface — so each suite here re-runs a whole family of
-registered queries and reduces every member's FULL result to an
-order-insensitive digest row:
+queries). With far more oracle-backed queries than that, per-query
+driver rows cannot cover the full surface — so each suite here re-runs
+a whole family of registered queries and reduces every member's FULL
+result to an order-insensitive digest row:
 
     (qname, n_rows, h1, h2)
 
@@ -20,7 +20,10 @@ one green suite row certifies hash-level parity of every member's full
 result set. Any value/row/schema drift in any member flips the suite
 row red.
 
-Canonicalization must be byte-identical across engines per column:
+Canonicalization must be byte-identical across engines per column.
+Each column's class comes from the member's pinned Spark dtype in
+plans/member_dtypes.py (``_spark_class``), the one per-member schema
+record:
 
 - class 'v' (verbatim): strings, ints, dates, booleans, decimals cast
   straight to their canonical string form (identical in both engines).
@@ -57,187 +60,16 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import MERSENNE31, md5_int48, sql_md5_int48
-from ..registry import REGISTRY, register
+from ..registry import REGISTRY, import_query_modules, register
+from .member_dtypes import MEMBER_DTYPES
 
 # Member queries must be registered before the digests can compose
-# their oracles; importing the defining modules here (self-registering,
-# idempotent) makes this module import-order-independent.
-from ..multimodal import media  # noqa: F401  (multimodal_binary_meta)
-from ..operators import spotify_queries  # noqa: F401  (reference_pipeline_suite)
-from . import (  # noqa: F401
-    advanced_ops,
-    analytics,
-    behavior_ops,
-    dedup,
-    etl_ops,
-    extended_ops,
-    llm_corpus,
-    misc_ops,
-    quality_ops,
-    reference_ops,
-    scale_ops,
-    similarity,
-    sketches,
-    streaming_queries,
-    text_ops,
-    tpch_suite,
-    udfs,
-)
+# their oracles; importing them here makes this module
+# import-order-independent.
+import_query_modules()
 
 _SEP = "\x1f"
 _NULL = "∅"
-
-# Canonicalization class per member-query result column, derived from
-# the oracle's DuckDB result schema: 'v' = verbatim string cast,
-# 'd' = double (round(x·1e6) -> decimal(38,0) -> string), 't' = timestamp
-# (epoch microseconds). Generated from DESCRIBE over the oracle SQL at
-# sf0.01; test_suites.py asserts the Spark result schema maps to the
-# same classes, so type drift on either side fails loudly.
-MEMBER_KINDS: dict[str, dict[str, str]] = {
-    "q1_pricing_summary": {"l_returnflag": "v", "l_linestatus": "v", "sum_qty": "d", "sum_base_price": "d", "sum_disc_price": "d", "sum_charge": "d", "avg_qty": "d", "avg_price": "d", "avg_disc": "d", "count_order": "v"},
-    "q2_top_supplier_per_nation": {"n_name": "v", "s_suppkey": "v", "s_name": "v", "s_acctbal": "d"},
-    "q3_shipping_priority": {"l_orderkey": "v", "revenue": "d", "orderdate": "v", "o_orderpriority": "v"},
-    "q4_order_priority": {"o_orderpriority": "v", "order_count": "v"},
-    "q5_local_supplier_volume": {"n_name": "v", "revenue": "d"},
-    "q6_forecast_revenue": {"revenue": "d"},
-    "q7_volume_shipping": {"supp_nation": "v", "cust_nation": "v", "l_year": "v", "revenue": "d"},
-    "q8_market_share": {"o_year": "v", "mkt_share": "d"},
-    "q9_product_profit": {"nation": "v", "o_year": "v", "sum_profit": "d"},
-    "q10_returned_items": {"c_custkey": "v", "c_name": "v", "revenue": "d", "c_acctbal": "d", "n_name": "v"},
-    "q11_important_parts": {"l_partkey": "v", "part_value": "d"},
-    "q12_priority_by_linestatus": {"l_linestatus": "v", "high_line_count": "v", "low_line_count": "v"},
-    "q13_customer_distribution": {"c_count": "v", "custdist": "v"},
-    "q14_promo_revenue": {"promo_revenue": "d"},
-    "q15_top_supplier": {"s_suppkey": "v", "s_name": "v", "total_revenue": "d"},
-    "q16_parts_supplier_cnt": {"p_brand": "v", "p_size": "v", "supplier_cnt": "v"},
-    "q17_small_quantity_revenue": {"avg_yearly": "d"},
-    "q18_large_volume_customers": {"c_name": "v", "c_custkey": "v", "o_orderkey": "v", "orderdate": "v", "o_totalprice": "d", "total_qty": "d"},
-    "q19_disjunctive_revenue": {"revenue": "d"},
-    "q20_promotion_suppliers": {"s_suppkey": "v", "s_name": "v"},
-    "q21_sole_returning_supplier": {"s_name": "v", "numwait": "v"},
-    "q22_dormant_customers": {"c_nationkey": "v", "numcust": "v", "totacctbal": "d"},
-    "top_customers_by_revenue": {"c_custkey": "v", "c_name": "v", "n_name": "v", "revenue": "d"},
-    "join_left_outer": {"c_custkey": "v", "n_orders": "v", "total_spent": "d"},
-    "join_semi": {"c_custkey": "v", "c_name": "v"},
-    "join_anti": {"c_custkey": "v", "c_nationkey": "v"},
-    "agg_rollup": {"r_name": "v", "n_name": "v", "n_customers": "v", "sum_bal": "d"},
-    "agg_cube": {"o_orderstatus": "v", "o_orderpriority": "v", "n_orders": "v", "total": "d"},
-    "sql_grouping_sets": {"r_name": "v", "n_name": "v", "n_customers": "v"},
-    "agg_distinct": {"o_orderpriority": "v", "n_customers": "v", "n_orders": "v", "n_days": "v"},
-    "agg_percentiles": {"c_mktsegment": "v", "median_bal": "d", "p90_bal": "d", "min_bal": "d", "max_bal": "d"},
-    "agg_statistical_moments": {"c_mktsegment": "v", "std_bal": "d", "var_bal": "d", "corr_bal_key": "d", "covar_bal_nation": "d"},
-    "agg_min_max_by": {"c_nationkey": "v", "richest_customer": "v", "poorest_customer": "v", "max_bal": "d"},
-    "agg_string_concat": {"c_nationkey": "v", "segments": "v", "n_segments": "v"},
-    "agg_approx_sketches": {"o_orderpriority": "v", "n_orders": "v", "exact_customers": "v", "cd_within_bounds": "v", "pct_within_bounds": "v"},
-    "window_rank_topn": {"c_nationkey": "v", "c_custkey": "v", "c_acctbal": "d", "rnk": "v", "drnk": "v", "rn": "v"},
-    "window_running_lag": {"o_custkey": "v", "o_orderkey": "v", "running_spend": "d", "prev_price": "d", "days_since_prev": "v"},
-    "window_frames": {"c_nationkey": "v", "c_custkey": "v", "c_acctbal": "d", "peers_within_100": "v", "richest_key": "v", "poorest_key": "v", "quartile": "v", "pct_rank": "d", "cume": "d"},
-    "set_ops": {"op": "v", "n_nationkey": "v"},
-    "set_ops_all": {"op": "v", "n_nationkey": "v"},
-    "union_schema_evolution": {"doc_id": "v", "source": "v", "n_chars": "v", "lang": "v", "quality_tier": "v"},
-    "scalar_string": {"c_custkey": "v", "name_lower": "v", "name_len": "v", "name_prefix": "v", "name_suffix": "v", "name_num": "v", "seg_nation": "v"},
-    "scalar_date": {"o_orderkey": "v", "order_year": "v", "order_month": "v", "order_quarter": "v", "order_ym": "v", "due_date": "v", "days_since_epoch": "v"},
-    "scalar_math": {"l_orderkey": "v", "l_linenumber": "v", "qty_sqrt": "d", "price_floor": "v", "price_ceil": "v", "disc_amount": "d", "partkey_mod": "v", "disc_sq": "d", "disc_dev": "d"},
-    "scalar_conditional": {"o_orderkey": "v", "status_label": "v", "size_bucket": "v", "status_or_x": "v"},
-    "scalar_string_extended": {"s_suppkey": "v", "name_upper": "v", "name_trimmed": "v", "name_padded": "v", "key_padded": "v", "name_replaced": "v", "name_rev": "v", "repeated": "v", "hash_pos": "v", "has_hash": "v", "is_supplier": "v"},
-    "scalar_regexp": {"p_partkey": "v", "p_name": "v", "starts_with_color": "v", "n_vowels": "v", "devoweled": "v", "last_word": "v"},
-    "scalar_math_transcendental": {"l_orderkey": "v", "l_linenumber": "v", "price_ln": "d", "price_log10": "d", "disc_exp": "d", "disc_sin": "d", "tax_atan": "d", "growth": "d"},
-    "scalar_casts": {"o_orderkey": "v", "key_str": "v", "key_roundtrip": "v", "price_str": "v", "price_floor_int": "v", "is_big": "v", "bad_cast": "v"},
-    "scalar_date_advanced": {"o_orderkey": "v", "month_start": "v", "month_end": "v", "plus3mo": "v", "doy": "v", "dow_sun1": "v"},
-    "scalar_bitwise": {"o_orderkey": "v", "key_xor": "v", "with_flag": "v", "low_byte": "v", "shifted_up": "v", "shifted_down": "v", "popcount": "v", "smallest": "v", "biggest": "v"},
-    "null_semantics": {"c_custkey": "v", "seg_or_null": "v", "bal_or_zero": "d", "bal_is_null": "v", "nullsafe_eq_self": "v", "presence": "v"},
-    "struct_ops": {"c_custkey": "v", "k_from_struct": "v", "bal_from_struct": "d", "seg_nested": "v", "json_roundtrip_ok": "v"},
-    "map_functions": {"event_id": "v", "n_keys": "v", "keys_csv": "v", "k_val": "v", "dbl_val": "v", "val_sum": "v"},
-    "explode_variants": {"doc_id": "v", "pos": "v", "tok": "v", "src": "v"},
-    "array_functions": {"doc_id": "v", "vocab_size": "v", "first3": "v", "longest_token": "v", "mentions_spark": "v", "vocab": "v"},
-    "udf_pandas_scalar": {"doc_id": "v", "n_tokens": "v"},
-    "udf_apply_in_pandas": {"o_orderstatus": "v", "o_orderpriority": "v", "n_orders": "v", "max_price": "d", "span_days": "v"},
-    "udf_map_in_arrow": {"doc_id": "v", "n_tokens_arrow": "v", "n_chars_arrow": "v"},
-    "from_json_props": {"k": "v", "n": "v"},
-    "text_token_count": {"doc_id": "v", "n_tokens": "v", "n_chars_actual": "v", "chars_ok": "v"},
-    "text_quality_score": {"doc_id": "v", "n_tokens": "v", "stop_ratio": "d", "chars_per_token": "d", "quality_class": "v"},
-    "text_lang_id": {"lang": "v", "predicted_lang": "v", "n_docs": "v"},
-    "text_fingerprint": {"doc_id": "v", "fingerprint": "v"},
-    "text_bpe_token_count": {"doc_id": "v", "n_ws_tokens": "v", "n_bpe_tokens": "v", "n_unique_bpe": "v"},
-    "events_tumbling_window": {"window_start": "t", "event_type": "v", "n_events": "v", "sum_value": "d"},
-    "events_sessionization": {"user_id": "v", "session_seq": "v", "n_events": "v", "session_start": "t", "session_end": "t"},
-    "events_session_window_builtin": {"user_id": "v", "session_start": "t", "n_events": "v"},
-    "sql_shared_dialect": {"nation": "v", "o_year": "v", "n_lineitems": "v", "n_returned": "v", "revenue": "d"},
-    "parquet_partitioned_roundtrip": {"o_orderpriority": "v", "n": "v", "total": "d"},
-    "unpivot_lineitem": {"l_orderkey": "v", "l_linenumber": "v", "measure": "v", "val": "d"},
-    # day is DATE in DuckDB but timestamp in Spark (pandas collapses both
-    # to datetime64): canonicalize as epoch-us with a TIMESTAMP cast.
-    "events_multires_rollup": {"gid": "v", "day": "t", "hour": "t", "event_type": "v", "n_events": "v", "sum_value": "d"},
-    "timeseries_gap_fill": {"event_type": "v", "day": "t", "n_events": "v", "was_gap": "v"},
-    "scd2_user_value_history": {"user_id": "v", "value": "d", "effective_from": "t", "effective_to": "t", "is_current": "v"},
-    "fuzzy_match_part_names": {"name_a": "v", "name_b": "v", "edit_dist": "v"},
-    "streaming_sliding_window": {"window_start": "t", "n_events": "v", "sum_value": "d"},
-    "streaming_stream_stream_join": {"user_id": "v", "n_attributed": "v"},
-    "streaming_static_enrich_join": {"c_mktsegment": "v", "n_events": "v", "sum_value": "d"},
-    "streaming_foreach_batch_sink": {"event_type": "v", "n_events": "v", "sum_value": "d"},
-    "streaming_stateful_user_totals": {"user_id": "v", "n_events": "v", "sum_value": "d"},
-    "multimodal_binary_meta": {"doc_id": "v", "media_type": "v", "n_bytes": "v"},
-    "multimodal_decode_features": {"doc_id": "v", "media_type": "v", "n_bytes": "v", "width": "v", "height": "v", "n_frames": "v", "duration_ms": "v"},
-    "multimodal_resize": {"doc_id": "v", "media_type": "v", "orig_w": "v", "orig_h": "v", "new_w": "v", "new_h": "v", "n_bytes_out": "v"},
-    "multimodal_frame_sample": {"doc_id": "v", "n_sampled": "v", "last_frame_idx": "v", "bytes_sampled": "v"},
-    "text_chunk_windows": {"doc_id": "v", "chunk_idx": "v", "start_tok": "v", "n_chunk_tokens": "v", "chunk_text": "v"},
-    "corpus_pack_sequences": {"shard": "v", "bin": "v", "n_docs": "v", "n_tokens_packed": "v", "fill_ratio": "d"},
-    "text_repetition_signals": {"doc_id": "v", "n_tokens": "v", "n_unique": "v", "dup_token_frac": "d", "top_token_frac": "d", "top_bigram_frac": "d"},
-    "text_pii_redaction": {"doc_id": "v", "n_emails": "v", "n_phones": "v", "redacted": "v", "redacted_len": "v"},
-    "corpus_sample_stratified": {"doc_id": "v", "lang": "v", "source": "v"},
-    "corpus_mix_stats": {"lang": "v", "source": "v", "n_docs": "v", "n_tokens": "v", "token_share": "d"},
-    "corpus_quality_filter": {"doc_id": "v", "n_tokens": "v", "dup_token_frac": "d", "top_token_frac": "d", "reject_reason": "v", "keep": "v"},
-    "window_time_range_trailing": {"user_id": "v", "event_id": "v", "n_last7d": "v", "sum_last7d": "d"},
-    "text_tfidf_top_terms": {"doc_id": "v", "term": "v", "tf": "v", "df": "v", "score": "d", "rn": "v"},
-    "corpus_decontaminate": {"doc_id": "v", "n_contaminated_grams": "v", "n_grams": "v", "contamination_frac": "d"},
-    "sketch_hll_distinct": {"o_orderpriority": "v", "hll_estimate": "d", "empty_registers": "v", "exact_distinct": "v"},
-    "sketch_countmin_heavy_hitters": {"term": "v", "true_count": "v", "cms_estimate": "v"},
-    "bloom_filter_prune_join": {"o_orderpriority": "v", "n_orders": "v", "revenue": "d"},
-    "dq_referential_integrity": {"relationship": "v", "n_child_rows": "v", "n_orphans": "v", "integrity_ok": "v"},
-    "dq_profile_orders": {"column_name": "v", "n_rows": "v", "n_nulls": "v", "n_distinct": "v", "min_value": "v", "max_value": "v"},
-    "agg_histogram": {"bin": "v", "lo_dollars": "v", "hi_dollars": "v", "n_orders": "v"},
-    "graph_pagerank_neardup": {"doc_id": "v", "pagerank": "d"},
-    "text_pmi_collocations": {"w1": "v", "w2": "v", "n_pair": "v", "pmi": "d"},
-    "text_vocab_coverage": {"rank": "v", "token": "v", "cnt": "v", "cum_share": "d"},
-    "cluster_kmeans_embeddings": {"vec_id": "v", "cluster_id": "v", "dist_sq": "d"},
-    "dedup_semdedup": {"vec_id": "v", "cluster": "v", "max_sim_lower": "d", "keep": "v"},
-    "corpus_cross_source_overlap": {"source_a": "v", "source_b": "v", "n_pairs": "v"},
-    "text_unigram_logprob": {"doc_id": "v", "n_tokens": "v", "h_bits": "d"},
-    "orc_sink_roundtrip": {"l_returnflag": "v", "n": "v", "total": "d"},
-    "streaming_session_window": {"user_id": "v", "session_start": "t", "n_events": "v"},
-    "observe_pipeline_metrics": {"n_rows": "v", "n_null_priority": "v", "total_price": "d", "min_key": "v", "max_key": "v"},
-    "udtf_sentence_stats": {"doc_id": "v", "tok": "v", "tok_len": "v", "is_long": "v"},
-    "compact_small_files": {"n_files_before": "v", "n_files_after": "v", "n_rows": "v", "total_price": "d"},
-    "dedup_incremental_delta": {"doc_id": "v", "first_match": "v", "is_dup": "v"},
-    "corpus_end_to_end_accounting": {"source": "v", "n_docs": "v", "n_kept": "v", "n_drop_quality": "v", "n_drop_dup": "v", "n_drop_contaminated": "v", "n_tokens_kept": "v"},
-    "events_funnel_conversion": {"step": "v", "step_name": "v", "n_users": "v", "conv_rate": "d"},
-    "events_cohort_retention": {"cohort_week": "t", "week_offset": "v", "n_active": "v", "retention": "d"},
-    "timeseries_ewma_decay": {"user_id": "v", "n_events": "v", "ewma_value": "d"},
-    "agg_salted_skew": {"l_returnflag": "v", "n_rows": "v", "sum_price": "d"},
-    "events_attribution_last_touch": {"purchase_id": "v", "user_id": "v", "purchase_ts": "t", "last_click_ts": "t", "gap_us": "v", "attributed": "v"},
-    "events_markov_transitions": {"cur_type": "v", "next_type": "v", "n_pairs": "v", "prob": "d"},
-    "events_rfm_segmentation": {"user_id": "v", "recency_days": "v", "frequency": "v", "monetary": "d", "r_score": "v", "f_score": "v", "m_score": "v"},
-    "corpus_length_band_filter": {"doc_id": "v", "n_chars_txt": "v", "keep": "v"},
-    "events_point_in_time_enrich": {"purchase_id": "v", "user_id": "v", "purchase_ts": "t", "dim_value_at": "d", "has_dim": "v"},
-    "sketch_hll_merge": {"n_sketches": "v", "hll_estimate": "d", "empty_registers": "v", "exact_distinct": "v"},
-    "corpus_sample_reservoir": {"doc_id": "v", "lang": "v", "rn": "v"},
-    "table_diff_snapshot": {"status": "v", "n_rows": "v", "sum_old": "d", "sum_new": "d"},
-    "events_anomaly_zscore": {"event_type": "v", "day": "t", "n_events": "v", "zscore": "d", "is_anomaly": "v"},
-    "streaming_stateful_funnel": {"step": "v", "step_name": "v", "n_users": "v"},
-    "streaming_tumbling_window": {"window_start": "t", "event_type": "v", "n_events": "v", "sum_value": "d"},
-    "streaming_dedup_watermark": {"user_id": "v", "event_type": "v"},
-    "dedup_prefix_filter_jaccard": {"doc_a": "v", "doc_b": "v", "n_common": "v", "n_union": "v", "jaccard": "d"},
-    "events_rolling_active_users": {"report_day": "t", "dau_users": "v", "wau_users": "v", "stickiness": "d"},
-    "orders_seasonality_mom_yoy": {"month": "t", "n_orders": "v", "revenue": "d", "prev_month_revenue": "d", "prev_year_revenue": "d", "mom_growth": "d", "yoy_growth": "d"},
-    "part_name_fingerprint_clusters": {"fkey": "v", "n_rows": "v", "n_variants": "v", "canonical_name": "v", "canonical_key": "v"},
-    "top_parts_pareto": {"rnk": "v", "l_partkey": "v", "revenue": "d", "cum_share": "d", "in_top20pct": "v"},
-    "events_error_budget_sli": {"day": "t", "n_total": "v", "n_errors": "v", "error_rate": "d", "error_rate_7d": "d", "budget_burned": "v"},
-    "ref_x2_runid_sink": {"o_orderpriority": "v", "n": "v", "run_id_ok": "v", "run_id_len": "v"},
-    "spotify_songs": {"song_id": "v", "name": "v", "duration_ms": "v", "url": "v", "popularity": "v", "added_date": "t", "album_id": "v", "artist_id": "v"},
-    "spotify_artists": {"artist_id": "v", "name": "v", "url": "v"},
-    "spotify_albums": {"album_id": "v", "name": "v", "release_date": "v", "total_tracks": "v", "url": "v"},
-    "spotify_artists_exploded": {"page": "v", "pos": "v", "artist_pos": "v", "artist_id": "v", "name": "v", "url": "v"},
-}
 
 # Suite membership. Every member is an oracle-backed registered query;
 # the suite certifies all of them through one driver row each.
@@ -384,6 +216,15 @@ def _spark_class(dtype: str) -> str:
     raise TypeError(f"no canonicalization class for Spark dtype {dtype!r}")
 
 
+def _member_kinds(qname: str) -> dict[str, str] | None:
+    """``{column: class}`` from the member's pinned dtype signature
+    (see dtype_signature for the split rules); None when unpinned."""
+    sig = MEMBER_DTYPES.get(qname)
+    if sig is None:
+        return None
+    return {c: _spark_class(dt) for c, dt in (kv.split(":", 1) for kv in sig.split(";"))}
+
+
 def _canon_spark(name: str, cls: str) -> Column:
     col = F.col(name)
     if cls == "d":
@@ -499,31 +340,28 @@ def digest_fold_exprs(h) -> tuple:
 
 def digest_spark(df: DataFrame, qname: str) -> DataFrame:
     """Reduce a member query's result to its (qname, n_rows, h1, h2, h3)
-    digest. h3 pins the member's EXACT dtype signature: the Spark side
-    hashes the actual df.dtypes, the SQL side hashes the pinned
-    signature from plans/member_dtypes.py — so an int→bigint or
-    decimal-precision drift flips the row even though its
-    canonicalization class ('v'/'d'/'t') is unchanged."""
-    from .member_dtypes import MEMBER_DTYPES
-
-    kinds = MEMBER_KINDS[qname]
+    digest. The column set and each column's class must match the pin
+    in plans/member_dtypes.py. h3 pins the EXACT dtype signature: the
+    Spark side hashes the actual df.dtypes, the SQL side hashes the
+    pin — so an int→bigint or decimal-precision drift flips the row
+    even though its canonicalization class ('v'/'d'/'t') is unchanged."""
+    kinds = _member_kinds(qname)
+    if kinds is None:
+        raise ValueError(
+            f"{qname} missing from plans/member_dtypes.py — "
+            "run scripts/gen_member_dtypes.py"
+        )
     cols = sorted(kinds)
     actual = dict(df.dtypes)
     if sorted(actual) != cols:
-        raise ValueError(
-            f"{qname}: spark columns {sorted(actual)} != expected {cols}"
-        )
+        raise ValueError(f"{qname}: spark columns {sorted(actual)} != pinned {cols}")
     for c in cols:
         got = _spark_class(actual[c])
         if got != kinds[c]:
             raise TypeError(
                 f"{qname}.{c}: spark dtype {actual[c]} maps to class {got!r}, "
-                f"oracle schema says {kinds[c]!r}"
+                f"pinned dtype says {kinds[c]!r}"
             )
-    assert qname in MEMBER_DTYPES, (
-        f"{qname} missing from plans/member_dtypes.py — "
-        "run scripts/gen_member_dtypes.py"
-    )
     row = F.concat_ws(_SEP, *[_canon_spark(c, kinds[c]) for c in cols])
     h = md5_int48(row) % MERSENNE31
     h1, h2 = digest_fold_exprs(F.col("h"))
@@ -545,16 +383,19 @@ def digest_spark(df: DataFrame, qname: str) -> DataFrame:
 
 
 def digest_sql(qname: str, oracle: str) -> str:
-    from .member_dtypes import MEMBER_DTYPES
-
-    kinds = MEMBER_KINDS[qname]
+    kinds = _member_kinds(qname)
+    if kinds is None:
+        # Unpinned member (scripts/gen_member_dtypes.py bootstraps the
+        # pin by importing this module): a row no Spark digest can
+        # equal, since COUNT is never negative — fail-loud, not
+        # fail-open, and no import-time error.
+        return (
+            f"SELECT '{qname}' AS qname, CAST(-1 AS BIGINT) AS n_rows, "
+            "CAST(0 AS BIGINT) AS h1, CAST(0 AS BIGINT) AS h2, CAST(0 AS BIGINT) AS h3"
+        )
     cols = sorted(kinds)
     row = "CONCAT_WS(CHR(31), " + ", ".join(_canon_sql(c, kinds[c]) for c in cols) + ")"
-    # .get: during scripts/gen_member_dtypes.py bootstrap the pin may
-    # not exist yet; an unpinned member hashes '' here, which can never
-    # equal the Spark side's actual-signature hash — fail-loud, not
-    # fail-open.
-    h3 = _sig_hash(MEMBER_DTYPES.get(qname, ""))
+    h3 = _sig_hash(MEMBER_DTYPES[qname])
     return f"""
 SELECT '{qname}' AS qname,
        COUNT(*) AS n_rows,

@@ -31,7 +31,8 @@ class Query:
 
 REGISTRY: dict[str, Query] = {}
 
-# Modules that register queries on import.
+# Modules that register queries on import. plans.suites is left out:
+# it composes its members' oracles, so it imports these first.
 _QUERY_MODULES = (
     "plans.analytics",
     "plans.reference_ops",
@@ -52,12 +53,16 @@ _QUERY_MODULES = (
     "plans.llm_corpus",
     "operators.spotify_queries",
     "multimodal.media",
-    # suites must load LAST: they compose the oracles of already-
-    # registered member queries into digest queries.
-    "plans.suites",
 )
 
 _loaded = False
+
+
+def import_query_modules() -> None:
+    """Import (idempotently) every query module except plans.suites."""
+    pkg = __name__.rsplit(".", 1)[0]
+    for mod in _QUERY_MODULES:
+        importlib.import_module(f"{pkg}.{mod}")
 
 
 def _ensure_workers_can_import(spark: SparkSession) -> None:
@@ -215,9 +220,8 @@ PRIORITY: tuple[str, ...] = (
 def load_all() -> dict[str, Query]:
     global _loaded
     if not _loaded:
-        pkg = __name__.rsplit(".", 1)[0]
-        for mod in _QUERY_MODULES:
-            importlib.import_module(f"{pkg}.{mod}")
+        import_query_modules()
+        from .plans import suites  # noqa: F401  (registers the digest suites)
         missing = [n for n in PRIORITY if n not in REGISTRY]
         if missing:
             raise RuntimeError(f"PRIORITY names not registered: {missing}")

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..catalog import release
+from ..catalog import release, sink_run_dir
 from ..operators import spotify
 from ..operators.sinks import write_csv
 
@@ -185,26 +185,25 @@ def narrow_state_partitions(spark: SparkSession):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def run_to_memory(
-    df: DataFrame, name: str, *, output_mode: str = "complete", timeout_s: int = 300
-):
-    """Drive a (bounded) stream to a memory sink with availableNow and
-    block until drained. Returns the finished StreamingQuery so callers
-    can assert drain-shape contracts (e.g. single-data-batch) from its
-    progress history."""
+def _foreach_batch_drain(
+    df: DataFrame, sink, checkpoint: str, name: str, *, output_mode: str, timeout_s: int
+) -> StreamingQuery:
+    """Start ``df`` → foreachBatch(``sink``) with availableNow under
+    narrow_state_partitions and block until drained; on timeout stop
+    the query and raise TimeoutError."""
     with narrow_state_partitions(df.sparkSession):
         q = (
-            df.writeStream.format("memory")
-            .queryName(name)
+            df.writeStream.foreachBatch(sink)
+            .option("checkpointLocation", checkpoint)
             .outputMode(output_mode)
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(timeout_s)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError(f"stream {name} did not drain in {timeout_s}s")
-        return q
+    q.awaitTermination(timeout_s)
+    if q.isActive:
+        q.stop()
+        raise TimeoutError(f"stream {name} did not drain in {timeout_s}s")
+    return q
 
 
 def run_to_parquet(
@@ -219,72 +218,48 @@ def run_to_parquet(
     """Drive a (bounded) stream through foreachBatch into per-batch
     parquet and return (read-back DataFrame, finished StreamingQuery).
 
-    THE drain for data-sized streaming outputs (distinct keys, join
-    pairs, per-user state rows): executor-side writes, nothing lands in
-    driver JVM memory — Spark's memory sink holds its entire table on
-    the driver, which is fine for bounded aggregates and fatal for
-    outputs that grow with the data. ``batch_transform`` (optional) is
-    applied to each micro-batch DataFrame before the write — the
-    per-batch PARTIAL AGGREGATION hook (e.g. pre-counting join pairs so
-    only counts land on disk).
-
-    Filesystem lifecycle, deliberate on all three axes:
-    - each invocation writes a FRESH ``run_<uuid>`` dir (checkpoint
-      inside it), so a re-invocation in the same session never deletes
-      files under a previously returned lazy DataFrame (a fixed
-      rmtree'd path would FileNotFound any held frame, and would race
-      a concurrent process on the same dataset);
-    - run dirs nest under ``catalog.app_scoped_dir``'s per-application
-      directory, and same-host dirs whose PID is no longer alive are
-      swept on entry — dead sessions' debris is collected by the next
-      user of the same (query, dataset) instead of accumulating
-      forever;
-    - within one live session, runs accumulate (bounded by invocation
-      count, megabytes at test SF) exactly like the uuid-named memory
-      sinks they replaced, and are swept by the next session.
+    THE drain for streaming queries: executor-side writes, nothing
+    lands in driver JVM memory (Spark's memory sink holds its entire
+    table on the driver, fatal for outputs that grow with the data).
+    ``batch_transform`` (optional) is applied to each micro-batch
+    DataFrame before the write — the per-batch PARTIAL AGGREGATION
+    hook (e.g. pre-counting join pairs so only counts land on disk).
+    The run dir is ``catalog.sink_run_dir``'s (run-unique, app-scoped,
+    dead-process dirs swept), checkpoint inside it, so a re-invocation
+    never deletes files under a previously returned lazy frame.
     """
     import glob
-    import hashlib
-    import uuid
-
-    from ..catalog import app_scoped_dir
 
     spark = df.sparkSession
-    base = f"/tmp/sse_drain_{prefix}_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-    run = f"{app_scoped_dir(base, spark)}/run_{uuid.uuid4().hex[:8]}"
+    run = sink_run_dir(spark, f"drain_{prefix}", sf_dir)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         out = batch_transform(batch_df) if batch_transform else batch_df
         out.write.mode("overwrite").parquet(f"{run}/data/batch_id={batch_id}")
 
-    with narrow_state_partitions(spark):
-        q = (
-            df.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", f"{run}/_ckpt")
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination(timeout_s)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError(f"stream {prefix} did not drain in {timeout_s}s")
-    if not glob.glob(f"{run}/data/batch_id=*"):
+    q = _foreach_batch_drain(
+        df, sink, f"{run}/_ckpt", prefix, output_mode=output_mode, timeout_s=timeout_s
+    )
+    # The read-back's shape: batch_transform (it may change the schema)
+    # over an empty frame. Handing its schema to the reader spares the
+    # footer-inference job a schema-less parquet read runs.
+    shape = spark.createDataFrame([], df.schema)
+    if batch_transform is not None:
+        shape = batch_transform(shape)
+    batches = glob.glob(f"{run}/data/batch_id=*")
+    if not batches:
         # Zero DATA batches (an empty bounded source never invokes
         # foreachBatch) → the glob target was never created, and
         # spark.read.parquet on it raises a confusing path-not-found
-        # AnalysisException. Return an empty frame with the same shape
-        # the read-back would have: batch_transform applied (it may
-        # change the schema) plus the batch_id partition column the
-        # directory layout adds. limit(0) guards the ROW contract, not
-        # just the schema: a GLOBAL-aggregate transform evaluated over
-        # an empty static frame yields one row (count=0 etc.) that the
-        # disk read-back path could never produce — foreachBatch never
-        # ran, so zero rows is the only faithful result.
-        empty = spark.createDataFrame([], df.schema)
-        if batch_transform is not None:
-            empty = batch_transform(empty)
-        return empty.limit(0).withColumn("batch_id", F.lit(None).cast("int")), q
+        # AnalysisException. Return an empty frame with the read-back's
+        # columns plus the batch_id partition column the directory
+        # layout adds. limit(0) guards the ROW contract, not just the
+        # schema: a GLOBAL-aggregate transform evaluated over an empty
+        # static frame yields one row (count=0 etc.) that the disk
+        # read-back path could never produce — foreachBatch never ran,
+        # so zero rows is the only faithful result.
+        return shape.limit(0).withColumn("batch_id", F.lit(None).cast("int")), q
+    reader = spark.read.schema(shape.schema).option("basePath", f"{run}/data")
     if output_mode == "complete":
         # COMPLETE mode re-emits the ENTIRE result table every
         # trigger, so the union-of-all-batches read-back is correct
@@ -294,15 +269,11 @@ def run_to_parquet(
         # every row while the data-batch assert stayed green. The
         # last batch IS the result by definition; read back only the
         # max batch_id.
-        last = max(
-            glob.glob(f"{run}/data/batch_id=*"),
-            key=lambda d: int(d.rsplit("=", 1)[1]),
-        )
-        back = spark.read.option("basePath", f"{run}/data").parquet(last)
+        back = reader.parquet(max(batches, key=lambda d: int(d.rsplit("=", 1)[1])))
     else:
-        # append/update emit disjoint per-trigger deltas; the union of
-        # all batch dirs is the stream's full output.
-        back = spark.read.option("basePath", f"{run}/data").parquet(
-            f"{run}/data/batch_id=*"
-        )
+        # append emits disjoint per-trigger deltas, so the union of all
+        # batch dirs is the stream's full output; update re-emits a
+        # group in every trigger that changes it, so update-mode
+        # callers assert a single data batch.
+        back = reader.parquet(f"{run}/data/batch_id=*")
     return back, q

@@ -589,7 +589,6 @@ def test_run_to_parquet_sweeps_dead_process_dirs(spark, tmp_path, monkeypatch):
     delete entries that don't parse as the naming convention (user data
     under a user-supplied root)."""
     import glob
-    import hashlib
     import os
     import shutil
 
@@ -602,7 +601,7 @@ def test_run_to_parquet_sweeps_dead_process_dirs(spark, tmp_path, monkeypatch):
     )
 
     sf_dir = "/root/testdata/sf0.001"
-    base = f"/tmp/sse_drain_sweeptest_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
+    base = "/tmp/sse_sinks"  # catalog.sink_run_dir's root
     dead = f"{base}/app_999999999_{_host_hash()}_dead0000"
     os.makedirs(f"{dead}/run_old", exist_ok=True)
     foreign = f"{base}/app_999999999_0ther0st_dead0000"
@@ -626,7 +625,7 @@ def test_run_to_parquet_sweeps_dead_process_dirs(spark, tmp_path, monkeypatch):
         assert not os.path.exists(dead), "dead-pid drain dir must be swept"
         assert os.path.exists(foreign), "foreign-host app dirs must never be swept"
         assert os.path.exists(unparseable), "non-convention entries must never be deleted"
-        live = glob.glob(f"{base}/app_{os.getpid()}_*/run_*")
+        live = glob.glob(f"{base}/app_{os.getpid()}_*/drain_sweeptest_*")
         assert live, "this invocation's run dir must exist"
         assert back.count() > 0, "returned frame must read the landed parquet"
     finally:

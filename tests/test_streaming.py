@@ -22,7 +22,7 @@ from spotify_serverless_etl_pipeline_engineering_with_azure_spark.operators.spot
 from spotify_serverless_etl_pipeline_engineering_with_azure_spark.streaming.pipeline import (
     events_stream,
     run_spotify_pipeline,
-    run_to_memory,
+    run_to_parquet,
     windowed_counts,
 )
 
@@ -92,9 +92,10 @@ def test_spotify_stream_foreachbatch_csv_and_archive(spark, tmp_path):
 
 def test_windowed_counts_match_batch(spark, sf_dir):
     """Single micro-batch → no late rows → streaming agg == batch agg."""
-    name = "t_stream_batch_equiv"
-    run_to_memory(windowed_counts(events_stream(spark, sf_dir)), name)
-    streamed = {tuple(r) for r in spark.table(name).collect()}
+    back, _ = run_to_parquet(
+        windowed_counts(events_stream(spark, sf_dir)), "t_batch_equiv", sf_dir, output_mode="complete"
+    )
+    streamed = {tuple(r) for r in back.drop("batch_id").collect()}
 
     from spotify_serverless_etl_pipeline_engineering_with_azure_spark.catalog import table
     from spotify_serverless_etl_pipeline_engineering_with_azure_spark.functions.exact import dsum

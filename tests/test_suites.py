@@ -16,8 +16,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from spotify_serverless_etl_pipeline_engineering_with_azure_spark.plans.member_dtypes import (
+    MEMBER_DTYPES,
+)
 from spotify_serverless_etl_pipeline_engineering_with_azure_spark.plans.suites import (
-    MEMBER_KINDS,
     SUITES,
     digest_fold_exprs,
     digest_spark,
@@ -56,7 +58,7 @@ def test_suite_members_exist_with_kinds():
         for m in members:
             assert m in reg, f"{suite}: unknown member {m}"
             assert reg[m].oracle is not None, f"{suite}: member {m} has no oracle"
-            assert m in MEMBER_KINDS, f"{suite}: member {m} missing MEMBER_KINDS"
+            assert m in MEMBER_DTYPES, f"{suite}: member {m} has no pinned dtypes"
 
 
 def test_digest_flips_on_value_change(spark):
@@ -86,9 +88,6 @@ def test_digest_flips_on_same_class_dtype_drift(spark):
     """int→bigint stays inside canonicalization class 'v', so h1/h2 and
     the class check cannot see it — h3 (exact dtype signature vs the
     pinned plans/member_dtypes.py entry) must flip the row."""
-    from spotify_serverless_etl_pipeline_engineering_with_azure_spark.plans.member_dtypes import (
-        MEMBER_DTYPES,
-    )
     from spotify_serverless_etl_pipeline_engineering_with_azure_spark.plans.suites import (
         _sig_hash,
         dtype_signature,
@@ -108,11 +107,9 @@ def test_digest_flips_on_same_class_dtype_drift(spark):
 
 
 def test_member_dtypes_pins_complete():
-    """Every suite member has a pinned exact-dtype signature consistent
-    with its MEMBER_KINDS classes."""
-    from spotify_serverless_etl_pipeline_engineering_with_azure_spark.plans.member_dtypes import (
-        MEMBER_DTYPES,
-    )
+    """Every suite member has a pinned exact-dtype signature, and every
+    pinned dtype maps to a canonicalization class (the pin is where the
+    digest takes each column's class from)."""
     from spotify_serverless_etl_pipeline_engineering_with_azure_spark.plans.suites import (
         _spark_class,
     )
@@ -121,10 +118,42 @@ def test_member_dtypes_pins_complete():
     missing = sorted(members - set(MEMBER_DTYPES))
     assert not missing, f"run scripts/gen_member_dtypes.py: {missing}"
     for m in sorted(members):
-        pinned = dict(kv.split(":", 1) for kv in MEMBER_DTYPES[m].split(";"))
-        assert sorted(pinned) == sorted(MEMBER_KINDS[m]), m
-        for c, dt in pinned.items():
-            assert _spark_class(dt) == MEMBER_KINDS[m][c], (m, c, dt)
+        for kv in MEMBER_DTYPES[m].split(";"):
+            c, dt = kv.split(":", 1)
+            assert _spark_class(dt) in ("v", "d", "t"), (m, c, dt)
+
+
+def test_unpinned_member_suite_builds_and_fails_loud(spark):
+    """A member with no pin yet (the state scripts/gen_member_dtypes.py
+    bootstraps from) must not break building its suite: the DuckDB
+    oracle row carries a negative n_rows no Spark COUNT can equal, and
+    the Spark digest refuses the member, naming the script."""
+    import duckdb
+
+    from spotify_serverless_etl_pipeline_engineering_with_azure_spark.plans.suites import (
+        _make_suite,
+    )
+    from spotify_serverless_etl_pipeline_engineering_with_azure_spark.registry import (
+        REGISTRY,
+        register,
+    )
+
+    load_all()
+    member, suite = "unpinned_probe", "unpinned_probe_suite"
+    assert member not in MEMBER_DTYPES
+    register(member, oracle="SELECT 1 AS x")(
+        lambda spark, sf_dir: spark.range(1).select(F.lit(1).alias("x"))
+    )
+    try:
+        _make_suite(suite, (member,))
+        with duckdb.connect() as con:
+            row = con.execute(REGISTRY[suite].oracle).fetchone()
+        assert row[0] == member and row[1] < 0
+        with pytest.raises(ValueError, match="gen_member_dtypes"):
+            REGISTRY[suite].fn(spark, SF_SMOKE)
+    finally:
+        REGISTRY.pop(member, None)
+        REGISTRY.pop(suite, None)
 
 
 @pytest.mark.parametrize("suite", sorted(SUITES))
