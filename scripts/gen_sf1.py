@@ -20,6 +20,14 @@ Construction (no randomness — rebuilding yields byte-identical data):
   (int32 FKs, timestamp[us], list<float>) so the driver's readers see
   byte-identical column types.
 
+When documents are generated, a bounded sub-corpus `<dst_dir>_pfj` is
+written beside the output: every copy of the first PFJ_BASES base
+documents, so near-duplicate clusters keep their full width while the
+corpus stays small enough for the quadratic prefix-filter Jaccard
+oracle. Its other tables are symlinks into dst_dir, so
+`check_parity.py <dst_dir>_pfj --only dedup_prefix_filter_jaccard,advanced_misc_suite`
+runs the registered queries and oracles unchanged on it.
+
 Usage: python scripts/gen_sf1.py [src_dir] [dst_dir]
        (defaults /root/testdata/sf0.1 -> /tmp/sf1)
 """
@@ -36,6 +44,7 @@ import pyarrow.parquet as pq
 
 COPIES = 10
 VERBATIM = ("region", "nation")
+PFJ_BASES = 500  # base documents kept per copy in the <dst>_pfj sub-corpus
 
 # key column -> (owning table, column holding the key domain's max)
 KEY_DOMAINS = {
@@ -158,6 +167,21 @@ def _assert_referential_integrity(dst: str, only: set[str] | None = None) -> Non
     print(f"referential integrity: {len(checks)} FK edges clean")
 
 
+def _write_pfj_subcorpus(dst: str, period: int) -> None:
+    """`<dst>_pfj`: the documents whose base id (doc_id mod the per-copy
+    offset) is below PFJ_BASES, in every copy; other tables symlinked."""
+    sub = dst.rstrip("/") + "_pfj"
+    os.makedirs(sub, exist_ok=True)
+    for name in (*VERBATIM, *REMAP):
+        target, link = os.path.abspath(f"{dst}/{name}.parquet"), f"{sub}/{name}.parquet"
+        if name != "documents" and os.path.exists(target) and not os.path.lexists(link):
+            os.symlink(target, link)
+    docs = pq.read_table(f"{dst}/documents.parquet")
+    keep = docs.column("doc_id").to_numpy() % period < PFJ_BASES
+    pq.write_table(docs.filter(pa.array(keep)).sort_by("doc_id"), f"{sub}/documents.parquet")
+    print(f"{sub}: documents {docs.num_rows} -> {int(keep.sum())} rows, other tables linked")
+
+
 def main() -> int:
     import argparse
 
@@ -210,6 +234,8 @@ def main() -> int:
         print(f"{name}: {base.num_rows} -> {full.num_rows} rows")
 
     _assert_referential_integrity(dst, only)
+    if only is None or "documents" in only:
+        _write_pfj_subcorpus(dst, offsets["doc_id"])
     return 0
 
 

@@ -38,7 +38,7 @@ TOPK = 5
 N_PROBES = 10
 
 # sign-LSH search contract — shared by the registered query, its DuckDB
-# oracle, and scripts/verify_ann_full.py's full-population mirror, so a
+# oracle, and scripts/verify_scale.py's full-population mirror, so a
 # product-constant change cannot silently drift the verifier.
 LSH_PROBE_LIMIT = 20
 LSH_TOPK = 3

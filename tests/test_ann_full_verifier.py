@@ -1,10 +1,9 @@
-"""Regression test for scripts/verify_ann_full.py — the full-population
-numpy mirrors that certify the ANN search members (sim_ann_ivf,
-sim_ann_lsh_bucketed) past the sampled sf10 evidence
-(ANN_FULL_r07.json). Pinned against the REGISTERED oracle SQL on a
-synthetic 64-dim corpus (the hyperplane tables are 64-dim, so the LSH
-oracle requires the real EMB_DIM) with exact duplicates to force
-assignment and ranking ties."""
+"""Regression test for the ANN references in scripts/verify_scale.py —
+the full-population numpy mirrors that certify the ANN search members
+(sim_ann_ivf, sim_ann_lsh_bucketed) at scale. Pinned against the
+REGISTERED oracle SQL on a synthetic 64-dim corpus (the hyperplane
+tables are 64-dim, so the LSH oracle requires the real EMB_DIM) with
+exact duplicates to force assignment and ranking ties."""
 
 from __future__ import annotations
 
@@ -19,7 +18,7 @@ sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
 )
 
-from verify_ann_full import reference_ivf, reference_lsh  # noqa: E402
+from verify_scale import load_store, reference_ivf, reference_lsh  # noqa: E402
 
 
 def test_ann_references_match_registered_oracle_sql(tmp_path):
@@ -57,7 +56,7 @@ def test_ann_references_match_registered_oracle_sql(tmp_path):
             ivf["rk"].astype("int64"),
         )
     )
-    assert got_ivf == sorted(reference_ivf(str(tmp_path)))
+    assert got_ivf == sorted(reference_ivf(load_store(str(tmp_path))))
 
     lsh_sql = REGISTRY["sim_ann_lsh_bucketed"].oracle
     lsh = con.execute(lsh_sql).fetchdf()
@@ -69,6 +68,6 @@ def test_ann_references_match_registered_oracle_sql(tmp_path):
             lsh["rank"].astype("int64"),
         )
     )
-    assert got_lsh == sorted(reference_lsh(str(tmp_path)))
+    assert got_lsh == sorted(reference_lsh(load_store(str(tmp_path))))
     # the duplicate-probe construction actually produced a 1.0 hit
     assert any(c == 1.0 for _, _, c, _ in got_ivf)

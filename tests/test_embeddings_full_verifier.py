@@ -1,11 +1,11 @@
-"""Regression tests for scripts/verify_embeddings_full.py — the
-full-population numpy mirror that certifies the embedding dedup family
-(dedup_embedding_cosine, dedup_semdedup) at scales the pairwise DuckDB
-oracle cannot reach (EMB_FULL_r07.json). The mirror is pinned here
-against the REGISTERED oracle SQL itself on a synthetic corpus crafted
-to hit the hard spots: exact duplicate vectors (assignment ties →
-min-cid rule), near-duplicates straddling the emission threshold, and
-negative cosines (sign-aware HALF_UP)."""
+"""Regression tests for the embedding references in
+scripts/verify_scale.py — the full-population numpy mirror that
+certifies the embedding dedup family (dedup_embedding_cosine,
+dedup_semdedup) at scales the pairwise DuckDB oracle cannot reach. The
+mirror is pinned here against the REGISTERED oracle SQL itself on a
+synthetic corpus crafted to hit the hard spots: exact duplicate
+vectors (assignment ties → min-cid rule), near-duplicates straddling
+the emission threshold, and negative cosines (sign-aware HALF_UP)."""
 
 from __future__ import annotations
 
@@ -20,7 +20,8 @@ sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
 )
 
-from verify_embeddings_full import (  # noqa: E402
+from verify_scale import (  # noqa: E402
+    load_store,
     reference_outputs,
     round6_vec,
     seq_fold_rows,
@@ -91,14 +92,16 @@ def test_reference_matches_registered_oracle_sql(tmp_path):
         .reset_index(drop=True)
     )
 
-    ref = reference_outputs(str(tmp_path), row_block=7)  # odd block: exercise chunk seams
-    assert np.array_equal(sd["vec_id"].to_numpy(np.int64), ref["vec_ids"])
-    assert np.array_equal(sd["cluster"].to_numpy(np.int64), ref["cluster"])
-    assert np.array_equal(sd["max_sim_lower"].to_numpy(np.float64), ref["max_sim_lower"])
-    assert np.array_equal(sd["keep"].to_numpy(bool), ref["keep"])
-    assert np.array_equal(ec["vec_a"].to_numpy(np.int64), ref["pair_a"])
-    assert np.array_equal(ec["vec_b"].to_numpy(np.int64), ref["pair_b"])
-    assert np.array_equal(ec["cos_sim"].to_numpy(np.float64), ref["pair_cs"])
+    # odd block: exercise chunk seams
+    ref = reference_outputs(load_store(str(tmp_path)), row_block=7)
+    rsd, rec = ref["semdedup"], ref["cosine"]
+    assert np.array_equal(sd["vec_id"].to_numpy(np.int64), rsd["vec_id"])
+    assert np.array_equal(sd["cluster"].to_numpy(np.int64), rsd["cluster"])
+    assert np.array_equal(sd["max_sim_lower"].to_numpy(np.float64), rsd["max_sim_lower"])
+    assert np.array_equal(sd["keep"].to_numpy(bool), rsd["keep"])
+    assert np.array_equal(ec["vec_a"].to_numpy(np.int64), rec["vec_a"])
+    assert np.array_equal(ec["vec_b"].to_numpy(np.int64), rec["vec_b"])
+    assert np.array_equal(ec["cos_sim"].to_numpy(np.float64), rec["cos_sim"])
     # the crafted corpus actually exercised the hard spots
-    assert (ref["max_sim_lower"] == 1.0).any()  # exact-dup cosine
-    assert not ref["keep"].all()  # some drops happened
+    assert (rsd["max_sim_lower"] == 1.0).any()  # exact-dup cosine
+    assert not rsd["keep"].all()  # some drops happened

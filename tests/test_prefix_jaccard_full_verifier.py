@@ -1,14 +1,14 @@
-"""Regression tests for scripts/verify_prefix_jaccard_full.py — the
-full-population numpy mirror that certifies dedup_prefix_filter_jaccard
-at scales the member's quadratic DuckDB oracle cannot reach
-(PFJ_FULL_r08.json). The mirror is pinned here against the REGISTERED
-oracle SQL itself (which applies NO length/positional filters — so a
-filter that wrongly dropped a true pair would surface as a missing row
-in this compare) on a corpus crafted to hit the hard spots: an
-exact-duplicate boilerplate cluster, a pair landing EXACTLY on the
-0.6 threshold (3/5), sub-threshold near-misses, document-frequency
-ties forcing the ORDER BY sh tiebreak, and a sub-3-token doc excluded
-from shingling."""
+"""Regression tests for the prefix-filter Jaccard reference in
+scripts/verify_scale.py — the full-population numpy mirror that
+certifies dedup_prefix_filter_jaccard at scales the member's quadratic
+DuckDB oracle cannot reach. The mirror is pinned here against the
+REGISTERED oracle SQL itself (which applies NO length/positional
+filters — so a filter that wrongly dropped a true pair would surface
+as a missing row in this compare) on a corpus crafted to hit the hard
+spots: an exact-duplicate boilerplate cluster, a pair landing EXACTLY
+on the 0.6 threshold (3/5), sub-threshold near-misses, document-
+frequency ties forcing the ORDER BY sh tiebreak, and a sub-3-token doc
+excluded from shingling."""
 
 from __future__ import annotations
 
@@ -25,7 +25,7 @@ sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
 )
 
-from verify_prefix_jaccard_full import (  # noqa: E402
+from verify_scale import (  # noqa: E402
     load_shingles,
     reference_output,
 )

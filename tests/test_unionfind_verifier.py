@@ -1,11 +1,11 @@
-"""Regression tests for scripts/verify_cc_unionfind.py — the
-cross-implementation union-find that certifies the recursive-oracle
-dedup members (connected components, filtered corpus) at scales the
-DuckDB recursive CTE cannot reach (CC_UNIONFIND_r07.json). A verifier
-used as ground truth must itself be pinned: (a) against a brute-force
-BFS reference on hypothesis-generated random graphs, and (b) against
-the engine's pointer-jumping loop on a synthetic pair frame, so all
-three independent algorithms are mutually checked at test scale."""
+"""Regression tests for the union-find and PageRank references in
+scripts/verify_scale.py, which certify the recursive-oracle dedup
+members (connected components, filtered corpus, PageRank) at scales
+the DuckDB recursive CTE cannot reach. A verifier used as ground truth
+must itself be pinned: (a) against a brute-force BFS reference on
+hypothesis-generated random graphs, and (b) against the engine's
+pointer-jumping loop on a synthetic pair frame, so all three
+independent algorithms are mutually checked at test scale."""
 
 from __future__ import annotations
 
@@ -21,9 +21,9 @@ sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
 )
 
-from verify_cc_unionfind import (  # noqa: E402
-    _pagerank_reference,
-    _vec_round_half_up,
+from verify_scale import (  # noqa: E402
+    pagerank_reference,
+    round6_vec,
     union_find_components,
 )
 
@@ -113,7 +113,7 @@ def test_vec_round_half_up_matches_decimal_at_ties():
         float(decimal.Decimal(float(y)).quantize(decimal.Decimal(1), decimal.ROUND_HALF_UP))
         for y in ys
     ]
-    assert _vec_round_half_up(ys).tolist() == want
+    assert round6_vec(ys).tolist() == want
 
 
 def test_pagerank_reference_matches_engine_on_irregular_graph(spark):
@@ -132,7 +132,7 @@ def test_pagerank_reference_matches_engine_on_irregular_graph(spark):
     a = np.array([e[0] for e in edges], dtype=np.int64)
     b = np.array([e[1] for e in edges], dtype=np.int64)
     verts, _ = union_find_components(a, b)
-    ranks = _pagerank_reference(verts, a, b)
+    ranks = pagerank_reference(verts, a, b)
     assert got == set(zip(verts.tolist(), ranks.tolist()))
     # irregularity sanity: the hub outranks a spoke
     by_id = dict(zip(verts.tolist(), ranks.tolist()))
