@@ -272,9 +272,25 @@ def materialize(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
+def share(df: DataFrame) -> DataFrame:
+    """A frame that several actions read, computed once across them.
+
+    Spark shares no subplan across actions, so N writes over one frame
+    compute it N times. Under a checkpoint dir this is ``materialize``
+    (durable, one extra job). Without one it is a LAZY local
+    checkpoint: the first action computes and stores the blocks, the
+    later ones read them, and Spark's ContextCleaner frees them once
+    the frame is unreachable. ``persist()`` would not do: CacheManager
+    entries are never released by driver GC, and callers of ``share``
+    get no release hook."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return materialize(df)
+    return df.localCheckpoint(eager=False)
+
+
 # Rows per partition under which a cached-index frame's partitions are
 # task-overhead-bound rather than compute-bound in its search-side
-# consumers (measured at sf0.1/sf1 — IVF_FLOOR_AB_r10.json).
+# consumers (IVF_FLOOR_AB_r10.json).
 _FLOOR_ROWS_PER_PART = 2048
 
 
@@ -284,16 +300,13 @@ def checkpoint_frame(df: DataFrame) -> DataFrame:
 
         min(defaultParallelism, ceil(rows / _FLOOR_ROWS_PER_PART))
 
-    is resharded to that count and materialized again.
-
-    The build plan's last shuffle is AQE-coalesced by BYTES, so a
-    small index table collapses to one partition and every search
-    stage that pipelines on its scan runs single-task (sim_ann_ivf at
-    sf1 flipped between 3.4 s and 6.8 s on it — IVF_FLOOR_AB_r10.json).
-    The floor is ROW-AWARE, not a flat cores floor: a micro frame
-    spread over every core turns into task-scheduling overhead. Frames
-    at or above their target are returned untouched, and a frame that
-    already has >= defaultParallelism partitions is never counted.
+    is resharded to that count and materialized again, so that search
+    stages pipelined on its scan do not run single-task after AQE
+    coalesced the build's last shuffle by bytes. The floor is
+    row-aware, not a flat cores floor, because a micro frame spread
+    over every core is task-scheduling overhead. Frames at or above
+    their target are returned untouched, and a frame that already has
+    >= defaultParallelism partitions is never counted.
 
     defaultParallelism is sampled at build time: under dynamic
     allocation an index built before executors scale up keeps the
@@ -602,14 +615,3 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register all test tables as temp views (for spark.sql queries)."""
     for name in TABLES:
         table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-# NOTE: a widen() helper (round-robin repartition to repair split-
-# starved single-file scans before low-cardinality aggregates) lived
-# here in round 2. It existed to parallelize the then-expensive decimal
-# SUM map work; with dsum's split-long fast path the map side is cheap
-# and the extra full-row shuffle measurably REGRESSES every former call
-# site (events_tumbling_window 0.29 s no-widen vs 0.73 s widened at
-# sf0.1), so it was removed rather than kept as an attractive nuisance.
-# scatter() (above) remains for genuinely CPU-bound map pipelines
-# (per-shingle md5), where the cheap pre-shuffle still pays.

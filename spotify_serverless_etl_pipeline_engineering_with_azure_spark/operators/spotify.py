@@ -10,16 +10,17 @@ Operator parity (SURVEY.md §2.1, citations into /root/reference/):
   P4 schema attach   → .alias per column (spotifytransform.py:91,94,97)
   C1 ts cast         → to_timestamp (spotifytransform.py:92)
   C2 mixed dates     → parse_release_date (spotifytransform.py:99)
-  D1/D2 dedup        → row_number over (doc_order, pos) == 1
+  D1/D2 dedup        → min_by over a (doc_order, pos) struct key
                        (spotifytransform.py:95,98 — pandas keep='first';
                        distributed "first" is made explicit as
                        file-order × item-position, SURVEY.md §7)
 
 Scale posture: one wide `select` per branch — Catalyst prunes the
 nested schema down to the accessed fields (the reference does this
-pruning by hand); dedup is a window over the natural key, which at
-100 TB shuffles once on the key. For set-semantics dedup (row choice
-irrelevant) use ``dropDuplicates`` instead — noted per call site.
+pruning by hand); dedup is a keep-first aggregate over the natural
+key, which shuffles once on the key unless the input already sits in
+one partition. For set-semantics dedup (row choice irrelevant) use
+``dropDuplicates`` instead — noted per call site.
 """
 
 from __future__ import annotations
@@ -28,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..catalog import share
 from ..functions.dates import parse_release_date
 
 # Explicit input schema for the playlist JSON —
@@ -186,10 +188,7 @@ def make_songs(items: DataFrame) -> DataFrame:
 
 def star_tables(items: DataFrame) -> dict[str, DataFrame]:
     """The star schema over exploded items: songs fact plus the
-    keep-first artists and albums dimensions — the ONE builder shared
-    by the batch transform and the streaming sink (streaming/pipeline.py
-    sink_batch), so a micro-batch is the batch query run over that
-    batch's blobs."""
+    keep-first artists and albums dimensions."""
     return {
         "songs": make_songs(items),
         "artists": make_artists(items),
@@ -198,15 +197,11 @@ def star_tables(items: DataFrame) -> dict[str, DataFrame]:
 
 
 def transform(raw: DataFrame) -> dict[str, DataFrame]:
-    """The full reference transform: one exploded SUBTREE, three branches.
+    """The full reference transform (spotifytransform.py:77-99): the
+    star schema over the raw playlist docs, for a backfill and for one
+    micro-batch alike.
 
-    Reference flow at spotifytransform.py:77-99 (three separate passes
-    over data['items']); here the explode subtree is shared in the PLAN
-    and Catalyst prunes each branch's nested reads — but Spark shares no
-    subplans across ACTIONS, so a consumer that executes all three
-    branches (the streaming sink's per-batch CSV writes) re-reads and
-    re-parses the raw JSON once per branch unless it persists the
-    exploded frame first and calls star_tables on it (streaming/
-    pipeline.py sink_batch does).
+    The exploded items are ``catalog.share``d, so a caller that writes
+    all three tables parses the raw JSON once, not once per table.
     """
-    return star_tables(explode_items(raw))
+    return star_tables(share(explode_items(raw)))

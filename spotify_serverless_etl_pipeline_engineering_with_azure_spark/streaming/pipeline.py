@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..catalog import release, sink_run_dir
+from ..catalog import sink_run_dir
 from ..operators import spotify
 from ..operators.sinks import write_csv
 
@@ -69,8 +69,8 @@ def run_spotify_pipeline(
     3 branches → foreachBatch CSV ×3 (spotifytransform.py:77-130),
     drained with an availableNow trigger, one blob per micro-batch.
 
-    Each micro-batch is the batch transform run over that batch's blob:
-    the sink calls the same spotify.star_tables builder. NOTE on
+    Each micro-batch is spotify.transform run over that batch's blob,
+    the same code path as a backfill. NOTE on
     archival parity: Spark's source cleaner moves a batch's files when
     the NEXT batch is planned, so the most recent file trails until
     more data arrives. That trade (slightly-late archive, exactly-once
@@ -80,18 +80,14 @@ def run_spotify_pipeline(
     raw = spotify_file_stream(spark, input_dir, archive_dir=archive_dir)
 
     def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # persist the shared exploded subtree: Spark shares no subplans,
-        # so the three branch writes would otherwise each re-read and
-        # re-JSON-parse the batch's raw blobs from scratch (three full
-        # scans per micro-batch — an availableNow backfill over a
-        # 100 TB raw zone would parse ~300 TB). Released in finally so
-        # a failed write can't leak the CacheManager entry.
-        items = spotify.explode_items(batch_df).persist()
-        try:
-            for name, df in spotify.star_tables(items).items():
-                write_csv(df, f"{output_base}/{name}_data/batch_id={batch_id}")
-        finally:
-            release(items)
+        # A micro-batch is the batch transform over its blob. The file
+        # source hands over one unsplittable multiLine blob per batch,
+        # so coalesce(1) moves no data; it tells Catalyst the input is
+        # one partition, which already satisfies keep-first's
+        # distribution, so no Exchange is planned. Keep-first orders on
+        # (doc_order, pos), so the result holds for any batch.
+        for name, df in spotify.transform(batch_df.coalesce(1)).items():
+            write_csv(df, f"{output_base}/{name}_data/batch_id={batch_id}")
 
     return (
         raw.writeStream.foreachBatch(sink_batch)

@@ -239,16 +239,24 @@ def test_distributed_ntile_broadcast_offset_path(spark, monkeypatch):
 
 def test_checkpoint_dir_makes_eager_materializations_durable(spark, sf_dir, tmp_path):
     """The checkpoint dir is the one durability switch: with one set,
-    _distributed_ntile's range-partitioned frame and agg_approx_sketches'
-    sketch aggregate become reliable checkpoints under it (rdd-* dirs),
-    and both return the same rows as the local-checkpoint run."""
+    _distributed_ntile's range-partitioned frame, agg_approx_sketches'
+    sketch aggregate and spotify.transform's shared items become
+    reliable checkpoints under it (rdd-* dirs), and each returns the
+    same rows as the local-checkpoint run."""
     import os
 
+    from spotify_serverless_etl_pipeline_engineering_with_azure_spark.operators import spotify
+    from spotify_serverless_etl_pipeline_engineering_with_azure_spark.operators.fixtures import (
+        write_json_dir,
+    )
     from spotify_serverless_etl_pipeline_engineering_with_azure_spark.plans.behavior_ops import (
         _distributed_ntile,
     )
 
     from .conftest import checkpoint_dir
+
+    raw_dir = str(tmp_path / "raw")
+    write_json_dir(raw_dir)
 
     df = (
         spark.range(97)
@@ -257,13 +265,20 @@ def test_checkpoint_dir_makes_eager_materializations_durable(spark, sf_dir, tmp_
     )
     order = [F.desc("metric"), F.asc("user_id")]
     runs = {
-        "ntile": lambda: _distributed_ntile(df, order, 4, "score"),
-        "sketches": lambda: ALL["agg_approx_sketches"].fn(spark, sf_dir),
+        "ntile": lambda: _distributed_ntile(df, order, 4, "score").collect(),
+        "sketches": lambda: ALL["agg_approx_sketches"].fn(spark, sf_dir).collect(),
+        "spotify_transform": lambda: [
+            (table_name, *row)
+            for table_name, out in spotify.transform(
+                spotify.read_raw_json(spark, raw_dir)
+            ).items()
+            for row in out.collect()
+        ],
     }
     for name, run in runs.items():
-        local = sorted(map(tuple, run().collect()))
+        local = sorted(map(tuple, run()))
         with checkpoint_dir(spark, tmp_path / name) as ck:
-            durable = sorted(map(tuple, run().collect()))
+            durable = sorted(map(tuple, run()))
             entries = os.listdir(ck)
         assert any(e.startswith("rdd-") for e in entries), (
             f"{name}: no reliable checkpoint under the checkpoint dir: {entries}"

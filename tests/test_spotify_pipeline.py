@@ -128,6 +128,28 @@ def test_json_dir_roundtrip(spark, tmp_path, docs):
     assert sorted(tuple(r) for r in got["albums"].collect()) == sorted(exp_albums)
 
 
+def test_transform_parses_raw_json_once(spark, tmp_path):
+    """transform shares the exploded items across its three tables, so
+    no table's plan scans the raw JSON again: the parse runs once per
+    transform, not once per written table. The unshared builder over
+    the same raw frame is the negative fixture: one JSON scan per
+    table."""
+    write_json_dir(str(tmp_path / "raw"))
+    raw = spotify.read_raw_json(spark, str(tmp_path / "raw"))
+
+    def json_scans(tables):
+        return sum(
+            "FileScan json" in df._jdf.queryExecution().executedPlan().toString()
+            for df in tables.values()
+        )
+
+    shared = spotify.transform(raw)
+    for df in shared.values():
+        df.collect()
+    assert json_scans(shared) == 0
+    assert json_scans(spotify.star_tables(spotify.explode_items(raw))) == 3
+
+
 def test_datasource_tolerates_explicit_nulls(tmp_path):
     """The Spotify API emits EXPLICIT nulls ('items': null on an empty
     page, 'track': null for removed/local tracks); the reader must skip

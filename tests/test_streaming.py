@@ -67,18 +67,22 @@ def test_spotify_stream_foreachbatch_csv_and_archive(spark, tmp_path):
     remaining = glob.glob(f"{raw_dir}/*.json")
     assert len(remaining) == 1
 
-    # Stream equals batch, per blob. Song ids are track_<doc>_<item>,
-    # so each batch's songs name the one blob it consumed; an identical
-    # copy of that blob goes through read_raw_json → transform →
-    # write_csv, and both CSV outputs are read back the same way.
+    _assert_batches_equal_batch_transform(spark, out, tmp_path, n_docs=3)
+
+
+def _assert_batches_equal_batch_transform(spark, out, tmp_path, n_docs):
+    """Stream equals batch, per blob. Song ids are track_<doc>_<item>,
+    so each batch's songs name the one blob it consumed; an identical
+    copy of that blob goes through read_raw_json → transform →
+    write_csv, and both CSV outputs are read back the same way."""
     ref_dir = str(tmp_path / "ref")
-    write_json_dir(ref_dir, n_docs=3)
+    write_json_dir(ref_dir, n_docs=n_docs)
 
     def csv_rows(path):
         return Counter(tuple(r) for r in spark.read.option("header", True).csv(path).collect())
 
     batches = sorted(os.path.basename(d) for d in glob.glob(f"{out}/songs_data/batch_id=*"))
-    assert len(batches) == len(paths)
+    assert len(batches) == n_docs
     for batch in batches:
         songs = spark.read.option("header", True).csv(f"{out}/songs_data/{batch}")
         blobs = {r.song_id.split("_")[1] for r in songs.select("song_id").collect()}
@@ -88,6 +92,70 @@ def test_spotify_stream_foreachbatch_csv_and_archive(spark, tmp_path):
             want = str(tmp_path / "want" / batch / name)
             write_csv(df, want)
             assert csv_rows(f"{out}/{name}_data/{batch}") == csv_rows(want), (batch, name)
+
+
+def test_stream_restart_resumes_without_repeats(spark, tmp_path):
+    """Drain two of four blobs, stage the other two and drain again
+    from the same checkpoint: batch ids run 0..3 with none repeated,
+    every batch equals the batch transform of its blob, and the archive
+    plus the raw dir hold each blob exactly once."""
+    import shutil
+    import time
+
+    staged = write_json_dir(str(tmp_path / "staged"), n_docs=4)
+    raw_dir = str(tmp_path / "raw")
+    archive = str(tmp_path / "processed")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(raw_dir)
+
+    batch_ids = []
+    for part in (staged[:2], staged[2:]):
+        for p in part:
+            shutil.move(p, raw_dir)
+        q = run_spotify_pipeline(spark, raw_dir, out, ckpt, archive_dir=archive)
+        q.awaitTermination(240)
+        assert not q.isActive
+        batch_ids += [pr["batchId"] for pr in q.recentProgress if pr["numInputRows"] > 0]
+    assert batch_ids == [0, 1, 2, 3]
+
+    # The cleaner archives a batch's blob when the next batch plans, so
+    # only the last blob stays in the raw dir; the restart archives the
+    # first drain's trailing blob.
+    archived = []
+    for _ in range(15):
+        archived = glob.glob(f"{archive}/**/*.json", recursive=True)
+        if len(archived) >= 3:
+            break
+        time.sleep(1)
+    held = Counter(os.path.basename(p) for p in archived + glob.glob(f"{raw_dir}/*.json"))
+    assert held == Counter(blob_name(d) for d in range(4))
+    assert len(archived) == 3
+
+    _assert_batches_equal_batch_transform(spark, out, tmp_path, n_docs=4)
+
+
+def test_stream_sink_writes_do_not_shuffle(spark, tmp_path):
+    """Each blob is one micro-batch in one partition, so the sink's
+    keep-first aggregates plan no Exchange: every data batch runs
+    exactly three jobs (one CSV write per table) of one stage each."""
+    raw_dir = str(tmp_path / "raw")
+    write_json_dir(raw_dir, n_docs=2)
+    q = run_spotify_pipeline(spark, raw_dir, str(tmp_path / "out"), str(tmp_path / "ckpt"))
+    q.awaitTermination(240)
+    assert not q.isActive
+
+    sc = spark.sparkContext
+    # Job records arrive through the listener bus; drain it first.
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store, tracker = sc._jsc.sc().statusStore(), sc.statusTracker()
+    stages_by_batch = {}
+    for jid in tracker.getJobIdsForGroup(str(q.runId)):
+        batch = int(store.job(jid).description().get().rsplit("batch = ", 1)[1])
+        stages_by_batch.setdefault(batch, []).append(len(tracker.getJobInfo(jid).stageIds))
+    data_batches = [p["batchId"] for p in q.recentProgress if p["numInputRows"] > 0]
+    assert len(data_batches) == 2
+    assert stages_by_batch == {b: [1, 1, 1] for b in data_batches}
 
 
 def test_windowed_counts_match_batch(spark, sf_dir):
