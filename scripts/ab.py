@@ -6,7 +6,11 @@ Arms (``--arm NAME=SPEC``, repeatable). The implicit ``default`` arm is
 the committed session confs plus the registry builders.
   - conf arm: SPEC is ``k=v;k2=v2`` (the SPARK_GRAFT_EXTRA_CONFS
     grammar, ``session.parse_confs``), applied with ``spark.conf.set``
-    for the arm's runs;
+    for the arm's runs. A key the running session cannot change
+    (``spark.conf.isModifiable`` is false: static, core and Hadoop
+    confs, whose effect is fixed at boot) raises ValueError, since its
+    arm would silently measure the boot value; A/B such a key as separate
+    processes under SPARK_GRAFT_EXTRA_CONFS;
   - builder arm: SPEC is ``module:function``, a
     ``(spark, sf_dir) -> DataFrame`` builder that runs in place of the
     single ``--queries`` entry (a candidate implementation A/B'd without
@@ -91,6 +95,12 @@ def run_ab(spark, sf_dir: str, queries: list[str], arms: dict, reps: int) -> dic
         for n, a in arms.items()
     }
     touched = {k for a in arms.values() if isinstance(a, dict) for k in a}
+    for k in sorted(touched):
+        if not spark.conf.isModifiable(k):
+            raise ValueError(
+                f"conf arm key {k!r} cannot change in a running session; "
+                "compare it across processes with SPARK_GRAFT_EXTRA_CONFS"
+            )
     session = {k: spark.conf.get(k, None) for k in touched}
     sc = spark.sparkContext
 

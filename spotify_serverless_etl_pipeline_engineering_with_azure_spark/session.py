@@ -13,6 +13,22 @@ the largest expected shuffle and lets AQE coalesce small stages, with
 ``spark.sql.shuffle.partitions`` as the non-AQE floor (both through
 SPARK_GRAFT_EXTRA_CONFS, which overrides the cores-derived default).
 
+Local filesystem posture: without Hadoop's native library
+(``libhadoop``), the local filesystem forks a ``chmod`` for every file
+and directory it creates, and the FileContext checkpoint manager forks
+a ``readlink`` for each side of every rename. Every write's commit
+protocol and every streaming trigger's offset and commit logs pay
+those forks. A ``local`` master therefore gets Hadoop's raw local
+filesystem, which writes no ``.crc`` sidecar files and so halves the
+creates, and the FileSystem-based checkpoint manager, which still
+writes temp-file-then-rename but renames without a ``readlink``.
+Cluster masters keep Spark's filesystem defaults. Every master turns
+off PySpark's DataFrame call-site capture, which costs py4j round
+trips on every DataFrame call in plan building; the only loss is the
+"called from file:line" context in error messages, and
+``spark.python.sql.dataFrameDebugging.enabled=true`` in
+SPARK_GRAFT_EXTRA_CONFS brings it back for debugging.
+
 Checkpoint hygiene: the SparkContext checkpoint dir is the engine's
 one durability switch. Set it (``sc.setCheckpointDir`` or the
 ``spark.checkpoint.dir`` conf, e.g. through SPARK_GRAFT_EXTRA_CONFS)
@@ -61,12 +77,9 @@ def session_confs(
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
-        # 32g: local[32] runs driver AND all 32 executor threads in one
-        # JVM; at 12g the bench suite's steady-state allocation rate
-        # (Tungsten pages, broadcast builds, checkpointed index RDDs)
-        # GC-throttled long sessions ~10% (measured 14.8s -> 13.4s for
-        # the headline suite). The container has 128 GiB; heap is
-        # committed lazily.
+        # 32g: local[32] runs the driver AND all 32 executor threads in
+        # one JVM, and a smaller heap GC-throttles long bench sessions
+        # (OPTIMIZATION_r11.md). The heap is committed lazily.
         "spark.driver.memory": driver_memory or e.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
         "spark.ui.enabled": "false",
         "spark.sql.parquet.filterPushdown": "true",
@@ -75,7 +88,20 @@ def session_confs(
         # unix_micros/window/watermark apply uniformly. catalog.table()
         # re-pins this per call for driver-constructed sessions.
         "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+        # Call-site capture: py4j round trips per DataFrame call (module
+        # docstring).
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
     }
+    if master.startswith("local"):
+        # The fork-free local filesystem (module docstring).
+        confs.update({
+            "spark.hadoop.fs.file.impl": "org.apache.hadoop.fs.RawLocalFileSystem",
+            "spark.hadoop.fs.AbstractFileSystem.file.impl": "org.apache.hadoop.fs.local.RawLocalFs",
+            "spark.sql.streaming.checkpointFileManagerClass": (
+                "org.apache.spark.sql.execution.streaming.checkpointing."
+                "FileSystemBasedCheckpointFileManager"
+            ),
+        })
     # Applied LAST so explicit entries win over the local defaults above.
     confs.update(parse_confs(e.get("SPARK_GRAFT_EXTRA_CONFS", "")))
     return master, confs

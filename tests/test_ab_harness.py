@@ -8,6 +8,7 @@ from __future__ import annotations
 import importlib.util
 import json
 import os
+import re
 
 import pytest
 
@@ -116,6 +117,26 @@ def test_touched_confs_restored_after_an_arm_raises(spark, sf_dir, monkeypatch):
         ab.run_ab(spark, sf_dir, [QUERY], arms, 2)
     assert _confs(spark, keys) == before
     assert spark.sparkContext.getLocalProperty("spark.job.description") is None
+
+
+@pytest.mark.parametrize(
+    "key",
+    [
+        "spark.hadoop.fs.file.impl",
+        "spark.hadoop.fs.AbstractFileSystem.file.impl",
+        "spark.sql.streaming.checkpointFileManagerClass",
+        "spark.python.sql.dataFrameDebugging.enabled",
+    ],
+)
+def test_conf_arm_fixed_at_boot_is_refused(spark, sf_dir, monkeypatch, key):
+    """A conf the session fixed at boot would silently measure the
+    default under its arm, so run_ab refuses it before any run."""
+    monkeypatch.setattr(ab.registry, "queries", _recording_registry())
+    RUNS.clear()
+    arms = {"ok": {SMJ: "false"}, "boot": {key: "x"}}
+    with pytest.raises(ValueError, match=rf"{re.escape(key)}.*SPARK_GRAFT_EXTRA_CONFS"):
+        ab.run_ab(spark, sf_dir, [QUERY], arms, 1)
+    assert RUNS == []
 
 
 def test_builder_arm_needs_exactly_one_query(spark, sf_dir):

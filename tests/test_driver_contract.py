@@ -138,6 +138,33 @@ def test_o3_session_config_from_env():
     assert master == "local[8]"
     assert confs["spark.sql.shuffle.partitions"] == "200000"
 
+    # The fork-free local posture: a local master gets the raw local
+    # filesystem and the FileSystem-based checkpoint manager; every
+    # master drops PySpark's call-site capture; the passthrough
+    # overrides each entry.
+    debugging = {"spark.python.sql.dataFrameDebugging.enabled": "false"}
+    local_fs = {
+        "spark.hadoop.fs.file.impl": "org.apache.hadoop.fs.RawLocalFileSystem",
+        "spark.hadoop.fs.AbstractFileSystem.file.impl": "org.apache.hadoop.fs.local.RawLocalFs",
+        "spark.sql.streaming.checkpointFileManagerClass": (
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager"
+        ),
+    }
+    posture = {**debugging, **local_fs}
+    _, confs = session_confs(env={"SPARK_GRAFT_CPUS": "8"})
+    assert {k: confs.get(k) for k in posture} == posture
+    _, confs = session_confs(env={"SPARK_GRAFT_MASTER": "spark://host:7077"})
+    assert {k: confs.get(k) for k in posture} == {**debugging, **dict.fromkeys(local_fs)}
+    overrides = {k: f"override{i}" for i, k in enumerate(posture)}
+    _, confs = session_confs(
+        env={
+            "SPARK_GRAFT_CPUS": "8",
+            "SPARK_GRAFT_EXTRA_CONFS": ";".join(f"{k}={v}" for k, v in overrides.items()),
+        }
+    )
+    assert {k: confs[k] for k in posture} == overrides
+
     # A segment without '=' is a config error: silently setting the
     # conf to "" would fail session boot with a confusing Spark error
     # far from the cause (r10 ADVICE) — raise loud, name the segment.

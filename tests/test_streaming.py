@@ -5,8 +5,12 @@ from __future__ import annotations
 
 import glob
 import os
+import subprocess
+import sys
 from collections import Counter
 
+import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from spotify_serverless_etl_pipeline_engineering_with_azure_spark.operators.fixtures import (
@@ -19,6 +23,7 @@ from spotify_serverless_etl_pipeline_engineering_with_azure_spark.operators.spot
     read_raw_json,
     transform,
 )
+from spotify_serverless_etl_pipeline_engineering_with_azure_spark.streaming import pipeline
 from spotify_serverless_etl_pipeline_engineering_with_azure_spark.streaming.pipeline import (
     events_stream,
     run_spotify_pipeline,
@@ -268,3 +273,148 @@ def test_run_to_parquet_complete_mode_multi_batch_reads_last_only(spark, tmp_pat
     rows = {(r.user_id, r.n) for r in back.select("user_id", "n").collect()}
     assert rows == {(1, 2), (2, 1), (3, 1)}
     assert back.count() == 3  # glob-everything would see 3 + partial-batch rows
+
+
+def test_run_to_parquet_restart_resumes_without_repeats(spark, tmp_path, monkeypatch):
+    """Kill a run_to_parquet drain of a four-file stream in its third
+    batch, then drain again from the same checkpoint: the resumed query
+    replays the planned but uncommitted batch 2 and runs batch 3, no
+    batch id runs twice, and the rows, each with its batch id, equal an
+    uninterrupted drain's."""
+    src = str(tmp_path / "src")
+    spark.range(40).selectExpr("id", "id % 7 AS k").repartition(4).write.parquet(src)
+
+    def stream():
+        return (
+            spark.readStream.schema("id long, k long")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+
+    def data_batches(q):
+        return [p["batchId"] for p in q.recentProgress if p["numInputRows"] > 0]
+
+    def rows(df):
+        return Counter(tuple(r) for r in df.select("id", "k", "batch_id").collect())
+
+    want, q = run_to_parquet(stream(), "restart_ref", src)
+    assert data_batches(q) == [0, 1, 2, 3]
+
+    # Both drains below share one run dir, hence one checkpoint.
+    run = str(tmp_path / "run")
+    monkeypatch.setattr(pipeline, "sink_run_dir", lambda *_: run)
+    calls = []
+
+    def kill_in_third_batch(batch_df):
+        calls.append(None)
+        if len(calls) == 3:
+            raise RuntimeError("killed in the third batch")
+        return batch_df
+
+    with pytest.raises(StreamingQueryException, match="killed in the third batch"):
+        run_to_parquet(stream(), "restart", src, batch_transform=kill_in_third_batch)
+    committed = sorted(int(d.rsplit("=", 1)[1]) for d in glob.glob(f"{run}/data/batch_id=*"))
+    assert committed == [0, 1]
+
+    back, q = run_to_parquet(stream(), "restart", src)
+    assert committed + data_batches(q) == [0, 1, 2, 3]
+    assert rows(back) == rows(want)
+
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# A two-blob run_spotify_pipeline drain in a fresh session booted
+# through get_spark, so it runs under session_confs' local posture.
+_DRAIN = """
+import sys
+sys.path.insert(0, {repo!r})
+from spotify_serverless_etl_pipeline_engineering_with_azure_spark import get_spark
+from spotify_serverless_etl_pipeline_engineering_with_azure_spark.operators.fixtures import (
+    write_json_dir,
+)
+from spotify_serverless_etl_pipeline_engineering_with_azure_spark.streaming.pipeline import (
+    run_spotify_pipeline,
+)
+raw, out, ckpt = sys.argv[1:]
+spark = get_spark("sse_fork_guard")
+write_json_dir(raw, n_docs=2)
+q = run_spotify_pipeline(spark, raw, out, ckpt)
+q.awaitTermination(240)
+assert not q.isActive and q.exception() is None
+assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == 2
+spark.stop()
+print("DRAIN_OK")
+"""
+
+# Spark's own filesystem defaults, which the local posture replaces.
+_SPARK_FS_DEFAULTS = ";".join([
+    "spark.hadoop.fs.file.impl=org.apache.hadoop.fs.LocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl=org.apache.hadoop.fs.local.LocalFs",
+    "spark.sql.streaming.checkpointFileManagerClass="
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager",
+])
+
+
+def _drain_with_logged_forks(tmp_path, extra_confs: str = ""):
+    """Run _DRAIN in a fresh process with logging ``chmod`` and
+    ``readlink`` shims first on PATH (Hadoop's shell-out path resolves
+    them there). Returns each command's logged calls and the ``.crc``
+    files left under the output and checkpoint dirs."""
+    shims = tmp_path / "shims"
+    shims.mkdir()
+    for cmd in ("chmod", "readlink"):
+        shim = shims / cmd
+        shim.write_text(
+            f'#!/bin/sh\necho "$*" >> {tmp_path / (cmd + ".log")}\nexec /bin/{cmd} "$@"\n'
+        )
+        shim.chmod(0o755)
+    env = {k: v for k, v in os.environ.items() if not k.startswith("SPARK_GRAFT_")}
+    env.update(
+        PATH=f"{shims}:{env.get('PATH', '')}",
+        SPARK_GRAFT_CPUS="2",
+        SPARK_GRAFT_DRIVER_MEM="1g",
+        SPARK_GRAFT_EXTRA_CONFS=extra_confs,
+    )
+    dirs = [str(tmp_path / d) for d in ("raw", "out", "ckpt")]
+    proc = subprocess.run(
+        [sys.executable, "-c", _DRAIN.format(repo=_REPO), *dirs],
+        cwd=str(tmp_path),
+        capture_output=True,
+        text=True,
+        timeout=420,
+        env=env,
+    )
+    assert "DRAIN_OK" in proc.stdout, f"stdout:\n{proc.stdout[-2000:]}\nstderr:\n{proc.stderr[-4000:]}"
+
+    def calls(cmd):
+        log = tmp_path / f"{cmd}.log"
+        return log.read_text().splitlines() if log.exists() else []
+
+    crc = [
+        os.path.join(root, f)
+        for d in dirs[1:]
+        for root, _, files in os.walk(d)
+        for f in files
+        if f.endswith(".crc")
+    ]
+    return calls("chmod"), calls("readlink"), crc
+
+
+def test_local_posture_drain_forks_no_readlink_and_writes_no_crc(tmp_path):
+    """Without a native libhadoop every local create forks a chmod and
+    every FileContext rename a readlink per side. Under the local
+    posture a streaming drain renames without readlink and writes no
+    .crc sidecars (the remaining chmod forks are printed)."""
+    chmod, readlink, crc = _drain_with_logged_forks(tmp_path)
+    print(f"chmod forks: {len(chmod)}")
+    assert readlink == []
+    assert crc == []
+
+
+def test_fork_guard_fires_under_spark_filesystem_defaults(tmp_path):
+    """Negative fixture: the same drain under Spark's filesystem
+    defaults forks readlink and leaves .crc files."""
+    chmod, readlink, crc = _drain_with_logged_forks(tmp_path, _SPARK_FS_DEFAULTS)
+    print(f"chmod forks: {len(chmod)}, readlink forks: {len(readlink)}, crc files: {len(crc)}")
+    assert readlink
+    assert crc
