@@ -4,6 +4,19 @@ See /root/repo/TESTDATA.md. At cluster scale these would be external
 tables (partitioned parquet / Delta on object storage); the loader keeps
 all IO columnar and lets Catalyst push filters/projections into the
 parquet scan.
+
+Two primitives compute a frame once for several readers:
+- ``materialize(df)``: EAGER. Index builds and iterative-loop round
+  boundaries; the caller holds the result (``cached_index`` keeps an
+  index across calls).
+- ``share(df)``: LAZY. A frame that several consumers of one query
+  read; the first action computes it.
+Both are checkpoints, reliable under the SparkContext checkpoint dir
+and local without one, so both release by garbage collection: Spark's
+ContextCleaner frees a checkpoint's blocks once no driver reference
+remains. Neither is a ``persist()``: CacheManager entries outlive
+their frames until an explicit ``unpersist()``, so only the
+CC/PageRank round loops persist, and they ``release()`` each round.
 """
 
 from __future__ import annotations
@@ -80,15 +93,14 @@ def _session_uuid(spark: SparkSession) -> str:
 
 def dataset_cached(cache: dict, spark: SparkSession, sf_dir: str,
                    files: tuple[str, ...], build, params: tuple = (),
-                   max_entries: int | None = None, on_evict=None):
+                   max_entries: int | None = None):
     """Memoize a per-dataset artifact (a loaded table, a checkpointed
     index) and EVICT the superseded snapshot on regeneration.
 
     One identity scheme for every dataset-keyed cache in the engine
-    (loaded tables, raw schemas, persisted() frames and the
-    cached_index registry): identity = (sf_dir, files,
-    params, applicationId, sessionUUID), freshness = each file's
-    (mtime_ns, size).
+    (loaded tables, raw schemas and the cached_index registry):
+    identity = (sf_dir, files, params, applicationId, sessionUUID),
+    freshness = each file's (mtime_ns, size).
     A fresh stat → cache hit. A stale one → the old entry is DELETED
     before build() runs, so a long-lived session that regenerates its
     data repeatedly holds at most one artifact per identity — dropping
@@ -145,27 +157,12 @@ def dataset_cached(cache: dict, spark: SparkSession, sf_dir: str,
     for stale in [
         k for k in cache if (k[0] == ident and k != key) or k[0][3] != appid
     ]:
-        # on_evict (opt-in): persist()ed frames live in Spark's
-        # CacheManager, which never releases entries on driver GC —
-        # unlike checkpointed RDD blocks, dropping the dict reference
-        # is NOT enough, so such caches pass an explicit unpersist.
-        # DEAD-APPLICATION entries skip it: their CacheManager (and
-        # BlockManager) died with the old SparkContext, so there is
-        # nothing Spark-side to release — and calling unpersist() into
-        # the stopped context raises a Py4J NullPointerException, which
-        # would crash the FIRST query of every restarted session (the
-        # exact recovery path this purge exists to serve).
-        if on_evict is not None and stale[0][3] == appid:
-            on_evict(cache[stale])
         del cache[stale]
     val = build()
     cache[key] = val
     if max_entries is not None:
         while len(cache) > max_entries:
-            k0 = next(iter(cache))
-            if on_evict is not None:
-                on_evict(cache[k0])
-            del cache[k0]
+            del cache[next(iter(cache))]
     return val
 
 
@@ -188,54 +185,14 @@ def cached_index(spark: SparkSession, sf_dir: str, files: tuple[str, ...],
     )
 
 
-# Shared registry for persisted() — entries pin executor storage, so a
-# cap bounds a snapshot-sweeping driver without thrashing the many
-# (tag × dataset) combinations a test session holds live; a wrong
-# eviction only costs a rebuild.
-MAX_PERSISTED_ENTRIES = 64
-_PERSISTED_FRAMES: dict[tuple, DataFrame] = {}
-
-
-def persisted(spark: SparkSession, sf_dir: str, files: tuple[str, ...],
-              tag: str, build) -> DataFrame:
-    """persist() with dataset freshness and cross-call reuse, for
-    in-query aggregates consumed by multiple branches of one plan.
-
-    A bare ``df.persist()`` inside a query function has two traps this
-    helper exists to close:
-    - STALENESS: Spark's CacheManager keys entries by canonicalized
-      plan — root paths + schema, with NO data-freshness component —
-      so after an in-place dataset regeneration a rebuilt query plan
-      canonically equals the stale entry and silently serves the OLD
-      aggregate (the exact hole dataset_cached's (mtime_ns, size)
-      freshness keys close for checkpointed indexes).
-    - LIFETIME: CacheManager entries are never released by driver GC
-      (unlike checkpointed RDD blocks) — per-call persists accumulate
-      for the application's lifetime.
-    Same snapshot → the SAME persisted frame (cross-call reuse, the
-    index-cache discipline); superseded or cap-evicted → explicit
-    unpersist(), which is SAFE for persisted frames: lineage is
-    intact, so any still-held consumer frame recomputes instead of
-    breaking. Dead-app entries are dropped WITHOUT unpersist — their
-    CacheManager died with the old SparkContext, and unpersisting into
-    a stopped context is a hard Py4J error, not a release.
-    """
-    return dataset_cached(
-        _PERSISTED_FRAMES, spark, sf_dir, files,
-        lambda: build().persist(), params=(tag,),
-        max_entries=MAX_PERSISTED_ENTRIES,
-        on_evict=lambda df: df.unpersist(),
-    )
-
-
 def release(*frames: DataFrame | None) -> None:
     """Best-effort unpersist for ``finally`` blocks around iterative
     persist lifecycles (pointer-jumping components, PageRank rounds).
 
     CacheManager entries are never GC-released, so a mid-iteration
-    failure (executor loss, ANSI overflow) would leak every persisted
-    round frame for the application's lifetime unless the loop releases
-    them on the error path too. Already-unpersisted frames are a no-op;
+    failure (executor loss, ANSI overflow) would leak every round
+    frame's cache entry for the application's lifetime unless the loop
+    releases them on the error path too. A frame with no entry is a no-op;
     unpersist() itself raising (the failure that aborted the loop was
     the context dying) is swallowed so cleanup never masks the original
     error."""
@@ -250,8 +207,8 @@ def release(*frames: DataFrame | None) -> None:
 
 def materialize(df: DataFrame) -> DataFrame:
     """THE eager materializer: compute ``df`` once and truncate its
-    lineage. Every index build, iterative-loop round boundary and
-    shared in-query aggregate goes through here.
+    lineage. Every index build and iterative-loop round boundary goes
+    through here.
 
     The SparkContext checkpoint dir (``sc.setCheckpointDir`` or the
     ``spark.checkpoint.dir`` conf) is the engine's one durability
@@ -273,13 +230,15 @@ def materialize(df: DataFrame) -> DataFrame:
 
 
 def share(df: DataFrame) -> DataFrame:
-    """A frame that several actions read, computed once across them.
+    """THE way to read one frame from several consumers: the branches
+    of one query plan, or several actions over one result.
 
-    Spark shares no subplan across actions, so N writes over one frame
-    compute it N times. Under a checkpoint dir this is ``materialize``
-    (durable, one extra job). Without one it is a LAZY local
-    checkpoint: the first action computes and stores the blocks, the
-    later ones read them, and Spark's ContextCleaner frees them once
+    Spark shares no subplan, so N consumers of one frame compute it N
+    times. Under a checkpoint dir this is ``materialize`` (durable, one
+    extra job). Without one it is a LAZY local checkpoint: the first
+    action computes and stores the blocks, later reads reuse them. The
+    result is never cached across calls, so a rebuilt query reads the
+    data as it is now, and Spark's ContextCleaner frees the blocks once
     the frame is unreachable. ``persist()`` would not do: CacheManager
     entries are never released by driver GC, and callers of ``share``
     get no release hook."""

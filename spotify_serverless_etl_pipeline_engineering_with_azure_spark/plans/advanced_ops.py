@@ -25,7 +25,7 @@ from ..catalog import (
     cached_index,
     checkpoint_frame,
     materialize,
-    persisted,
+    share,
     table,
 )
 from ..functions.exact import dsum
@@ -787,22 +787,17 @@ def timeseries_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds (5 rows → array expansion), so its cost is O(days), not
     O(events).
 
-    ONE data-sized pass: daily is persisted() and the bounds derive
-    from IT (date_trunc is monotone, so min(day) = trunc(min(ts)) and
+    ONE data-sized pass: the bounds derive from the daily counts
+    (date_trunc is monotone, so min(day) = trunc(min(ts)) and
     max(day) = trunc(max(ts))) — the earlier form aggregated the raw
     events table twice, two full-corpus scans+shuffles for a min/max
-    the days-sized frame already contains. persisted(), not a bare
-    persist: daily is consumed by both the bounds aggregation and the
-    spine join, and Spark shares no subplans."""
+    the days-sized frame already contains."""
     ev = table(spark, sf_dir, "events")
-    daily = persisted(
-        spark,
-        sf_dir,
-        ("events.parquet",),
-        "gapfill_daily",
-        lambda: ev.groupBy(
-            "event_type", F.date_trunc("DAY", "ts").alias("day")
-        ).agg(F.count(F.lit(1)).alias("n")),
+    # shared by the bounds aggregation and the spine join
+    daily = share(
+        ev.groupBy("event_type", F.date_trunc("DAY", "ts").alias("day")).agg(
+            F.count(F.lit(1)).alias("n")
+        )
     )
     bounds = daily.groupBy("event_type").agg(
         F.min("day").alias("d0"),

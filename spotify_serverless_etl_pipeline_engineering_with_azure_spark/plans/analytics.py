@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import persisted, table
+from ..catalog import share, table
 from ..functions.exact import davg, dec, dsum, sql_davg, sql_dsum, roundk
 from ..registry import register
 
@@ -617,31 +617,17 @@ SELECT 'except' AS op, n_nationkey FROM (
     tags=("setop",),
 )
 def set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNION / INTERSECT / EXCEPT (distinct semantics), tagged.
-
-    The two filtered single-column projections are persisted(): each
-    feeds THREE branches of the one returned plan, and Spark shares no
-    subplans — uncached, six customer/supplier scans run instead of
-    two (customer is SF-scaled; the projections are a few bytes/row
-    cluster-wide, the doubled-subtree discipline's cheapest case).
-    Dataset-freshness-keyed with unpersist-on-supersession."""
-    cust = persisted(
-        spark,
-        sf_dir,
-        ("customer.parquet",),
-        "setops_cust",
-        lambda: table(spark, sf_dir, "customer")
+    """UNION / INTERSECT / EXCEPT (distinct semantics), tagged."""
+    # each projection is shared by the three set-operation branches
+    cust = share(
+        table(spark, sf_dir, "customer")
         .filter(F.col("c_acctbal") > 9000.0)
-        .select(F.col("c_nationkey").alias("n_nationkey")),
+        .select(F.col("c_nationkey").alias("n_nationkey"))
     )
-    supp = persisted(
-        spark,
-        sf_dir,
-        ("supplier.parquet",),
-        "setops_supp",
-        lambda: table(spark, sf_dir, "supplier")
+    supp = share(
+        table(spark, sf_dir, "supplier")
         .filter(F.col("s_acctbal") > 9000.0)
-        .select(F.col("s_nationkey").alias("n_nationkey")),
+        .select(F.col("s_nationkey").alias("n_nationkey"))
     )
     tagged = lambda op, df: df.select(F.lit(op).alias("op"), "n_nationkey")  # noqa: E731
     return (

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..catalog import materialize, persisted, table
+from ..catalog import materialize, share, table
 from ..functions.exact import dec, sql_dsum
 from ..registry import register
 
@@ -69,16 +69,6 @@ def events_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE plans the (shrinking) right sides as broadcasts at small scale.
     At 100 TB the per-step frames only ever carry (user_id, ts): the
     event payload never moves.
-
-    Each step frame is persisted(): every frame is consumed TWICE —
-    by the next step's join and by the counts union — and Spark shares
-    no subplans, so uncached the chain re-executes cumulatively (step 1
-    would run three times, step 2 twice: six fact-scale event scans and
-    six user-keyed shuffles instead of three, making the docstring's
-    "three shuffles" claim false in the executed plan). The helper
-    keys the cache by dataset freshness and unpersists superseded
-    frames (a bare persist would serve stale aggregates after in-place
-    regeneration and leak CacheManager entries per call).
     """
     ev = table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
 
@@ -92,14 +82,9 @@ def events_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     prev = None
     step_frames = []
-    for i, step_type in enumerate(_FUNNEL_STEPS):
-        prev = persisted(
-            spark,
-            sf_dir,
-            ("events.parquet",),
-            f"funnel_s{i}",
-            lambda st=step_type, pf=prev: step_frame(st, pf),
-        )
+    for step_type in _FUNNEL_STEPS:
+        # shared by the next step's join and the counts union
+        prev = share(step_frame(step_type, prev))
         step_frames.append(prev)
     counts = None
     for i, (name, frame) in enumerate(zip(_FUNNEL_STEPS, step_frames), start=1):
@@ -700,20 +685,9 @@ def events_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     and nothing downstream ever touches raw events again.
     """
     ev = table(spark, sf_dir, "events")
-    # persisted(): the distinct (day, user) reduction — the only
-    # fact-scale stage — feeds BOTH the observed-days list and the
-    # fan-out side; uncached, the raw-event scan + distinct shuffle
-    # execute twice and the "ONLY pass over raw events" claim above is
-    # false in the executed plan. Dataset-freshness-keyed (see
-    # events_funnel_conversion).
-    pairs = persisted(
-        spark,
-        sf_dir,
-        ("events.parquet",),
-        "rolling_pairs",
-        lambda: ev.select(
-            F.date_trunc("day", "ts").alias("day"), "user_id"
-        ).distinct(),
+    # shared by the observed-days list and the fan-out side
+    pairs = share(
+        ev.select(F.date_trunc("day", "ts").alias("day"), "user_id").distinct()
     )
     days = pairs.select("day").distinct().withColumnRenamed("day", "report_day")
     fanned = pairs.withColumn(

@@ -30,6 +30,7 @@ from ..catalog import (
     release,
     scatter,
     scratch_roots,
+    share,
     table,
 )
 from ..functions.hashing import (
@@ -1635,9 +1636,8 @@ def _pfj_index(
     """
 
     def build() -> tuple[DataFrame, DataFrame, DataFrame]:
-        toks = _shingles(table(spark, sf_dir, "documents")).localCheckpoint(
-            eager=False
-        )
+        # shared by the df aggregation and the prefix and profile joins
+        toks = share(_shingles(table(spark, sf_dir, "documents")))
         dfreq = toks.groupBy("sh").agg(F.count(F.lit(1)).alias("dfc"))
         vocab = checkpoint_frame(
             dfreq.withColumn("shid", F.monotonically_increasing_id())

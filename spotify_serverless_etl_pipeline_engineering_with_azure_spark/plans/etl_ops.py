@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import persisted, table
+from ..catalog import share, table
 from ..functions.exact import dec, dsum, roundk
 from ..registry import register
 
@@ -351,18 +351,11 @@ def top_parts_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     round; in_top20pct flags the Pareto head.
     """
     li = table(spark, sf_dir, "lineitem")
-    # persisted(): the per-part aggregate feeds BOTH the 1-row totals
-    # and the distributed top-100; uncached, the lineitem-wide revenue
-    # aggregation — the only fact-scale stage — executes twice.
-    # Dataset-freshness-keyed with unpersist-on-supersession.
-    per_part = persisted(
-        spark,
-        sf_dir,
-        ("lineitem.parquet",),
-        "pareto_per_part",
-        lambda: li.groupBy("l_partkey").agg(
+    # shared by the 1-row totals and the distributed top-100
+    per_part = share(
+        li.groupBy("l_partkey").agg(
             F.sum(dec(F.col("l_extendedprice"), 2)).cast("double").alias("revenue")
-        ),
+        )
     )
     tot = per_part.agg(
         F.sum("revenue").alias("total_revenue"),

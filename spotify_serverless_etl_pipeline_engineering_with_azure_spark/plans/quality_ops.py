@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import persisted, table
+from ..catalog import share, table
 from ..functions.exact import roundk
 from ..registry import register
 
@@ -255,18 +255,11 @@ def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = table(spark, sf_dir, "events")
     wide = "decimal(38,0)"
-    # persisted(): the daily matrix feeds BOTH the moment totals and
-    # the scored join's probe side; uncached, the raw-event aggregation
-    # — the only data-sized stage — executes twice (no subplan
-    # sharing). Dataset-freshness-keyed with unpersist-on-supersession.
-    daily = persisted(
-        spark,
-        sf_dir,
-        ("events.parquet",),
-        "zscore_daily",
-        lambda: ev.groupBy(
-            "event_type", F.date_trunc("day", "ts").alias("day")
-        ).agg(F.count(F.lit(1)).alias("n_events")),
+    # shared by the moment totals and the scored join's probe side
+    daily = share(
+        ev.groupBy("event_type", F.date_trunc("day", "ts").alias("day")).agg(
+            F.count(F.lit(1)).alias("n_events")
+        )
     )
     stats = daily.groupBy("event_type").agg(
         F.count(F.lit(1)).cast(wide).alias("n"),

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import persisted, table
+from ..catalog import share, table
 from ..functions.exact import dsum
 from ..registry import register
 
@@ -223,16 +223,8 @@ def fuzzy_match_part_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     in this repo whose candidate count is bounded by rare-token DF
     rather than by block width.
     """
-    # persisted(): both self-join sides consume the distinct-names
-    # frame; uncached, the part scan + distinct shuffle execute twice.
-    # Dataset-freshness-keyed with unpersist-on-supersession.
-    names = persisted(
-        spark,
-        sf_dir,
-        ("part.parquet",),
-        "fuzzy_names",
-        lambda: table(spark, sf_dir, "part").select("p_name").distinct(),
-    )
+    # shared by both self-join sides
+    names = share(table(spark, sf_dir, "part").select("p_name").distinct())
     a = names.select(
         F.col("p_name").alias("name_a"),
         F.substring("p_name", 1, 1).alias("blk_a"),
@@ -313,15 +305,9 @@ def bloom_filter_prune_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("c_custkey")
     )
     p0, p1 = positions(F.col("c_custkey"))
-    # persisted(): both per-hash broadcast probes consume the word
-    # table; uncached, the build-side scan + bit-fold execute twice.
-    # Dataset-freshness-keyed with unpersist-on-supersession.
-    words = persisted(
-        spark,
-        sf_dir,
-        ("customer.parquet",),
-        "bloom_words",
-        lambda: build.select(F.explode(F.array(p0, p1)).alias("pos"))
+    # shared by both per-hash broadcast probes
+    words = share(
+        build.select(F.explode(F.array(p0, p1)).alias("pos"))
         .select(
             F.shiftright("pos", 5).alias("widx"),
             F.expr(
@@ -329,7 +315,7 @@ def bloom_filter_prune_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("bit"),
         )
         .groupBy("widx")
-        .agg(F.bit_or("bit").alias("word")),
+        .agg(F.bit_or("bit").alias("word"))
     )
     o0, o1 = positions(F.col("o_custkey"))
     probed = (

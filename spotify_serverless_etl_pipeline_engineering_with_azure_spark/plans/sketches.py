@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import persisted, scatter, table
+from ..catalog import scatter, share, table
 from ..functions.exact import roundk
 from ..functions.hashing import md5_int48, sql_md5_int48
 from ..registry import register
@@ -202,17 +202,6 @@ GROUP BY p.term, p.true_count
 """
 
 
-def _cms_counts_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PRE-checkpoint plan of the exact token-count aggregate (the
-    corpus-dominant subtree of the count-min query) — exposed
-    separately because the query lazily checkpoints it, which truncates
-    it out of every explain-based check (same convention as
-    dedup._minhash_bands_frame)."""
-    docs = table(spark, sf_dir, "documents")
-    tok = scatter(docs).select(F.explode(F.split("text", " ")).alias("term"))
-    return tok.groupBy("term").agg(F.count(F.lit(1)).alias("cnt"))
-
-
 @register(
     "sketch_countmin_heavy_hitters",
     oracle=_cms_oracle(),
@@ -231,16 +220,10 @@ def sketch_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame
     exact groupBy — the operator exists so that, at 100 TB, frequency
     QUERIES don't.)
     """
-    # Lazily checkpointed: THREE subtrees of the one action consume the
-    # exact-count aggregate (cells, the top-k, the probe expansion) and
-    # Spark shares no subplans — measured on the executed plan, only
-    # one exchange gets reused and the corpus-dominant token groupBy
-    # runs multiple times without the truncation. The materialized
-    # frame is vocab-sized (distinct terms), far below the token
-    # stream it replaces re-scanning. The checkpoint hides the
-    # explode+groupBy subtree from this query's explain, so its build
-    # shape is exposed via _cms_counts_frame and pinned in plan tests.
-    counts = _cms_counts_frame(spark, sf_dir).localCheckpoint(eager=False)
+    docs = table(spark, sf_dir, "documents")
+    tok = scatter(docs).select(F.explode(F.split("text", " ")).alias("term"))
+    # shared by the cells, the top-k and the probe expansion
+    counts = share(tok.groupBy("term").agg(F.count(F.lit(1)).alias("cnt")))
 
     def pos(i: int) -> F.Column:
         return md5_int48(F.concat(F.lit(f"cms{i}|"), F.col("term"))) % CMS_WIDTH
@@ -337,17 +320,8 @@ def sketch_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank = F.when(F.col("w") == 0, F.lit(HLL_RANK_BITS + 1)).otherwise(
         F.lit(HLL_RANK_BITS + 1) - F.length(F.bin("w"))
     )
-    # persisted(): the per-sketch register table feeds BOTH the sketch
-    # count and the merge — uncached, the full event-hash scan +
-    # register shuffle below it execute twice. Dataset-freshness-keyed
-    # with unpersist-on-supersession.
-    regs = persisted(
-        spark,
-        sf_dir,
-        ("events.parquet",),
-        "hllm_regs",
-        lambda: split.groupBy("grp", "reg").agg(F.max(rank).alias("mx")),
-    )
+    # shared by the sketch count and the merge
+    regs = share(split.groupBy("grp", "reg").agg(F.max(rank).alias("mx")))
     n_sketches = regs.agg(F.count_distinct("grp").alias("n_sketches"))
     merged = regs.groupBy("reg").agg(F.max("mx").alias("mx"))
     term = F.expr(f"shiftleft(CAST(1 AS BIGINT), {HLL_RANK_BITS + 1} - mx)")

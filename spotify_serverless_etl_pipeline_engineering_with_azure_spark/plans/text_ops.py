@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import persisted, scatter, table
+from ..catalog import scatter, share, table
 from ..functions.exact import dec, roundk, sql_roundk
 from ..functions.hashing import md5_int48, sql_md5_int48
 from ..registry import register
@@ -377,22 +377,12 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(x, i) -> struct(x AS w1, element_at(split(text, ' '), i + 2) AS w2))"
     )
     bg = scatter(docs).select(F.explode(bigram).alias("b")).select("b.w1", "b.w2")
-    # persisted(): the unigram table is consumed by BOTH enrich joins
-    # (u1/u2 aliases) and Spark shares no subplans — without the cache
-    # the corpus-wide token explode + vocab shuffle executes twice in
-    # the one returned plan. The helper keys the cache by dataset
-    # freshness (a bare persist would serve a STALE aggregate after an
-    # in-place regeneration — CacheManager keys by plan, not data) and
-    # unpersists on supersession.
-    uni = persisted(
-        spark,
-        sf_dir,
-        ("documents.parquet",),
-        "pmi_uni",
-        lambda: scatter(docs)
+    # shared by both enrich joins (the u1/u2 aliases)
+    uni = share(
+        scatter(docs)
         .select(F.explode(toks).alias("w"))
         .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c")),
+        .agg(F.count(F.lit(1)).alias("c"))
     )
     n_uni = docs.select(F.sum(F.size(toks)).alias("n_uni"))
     pairs = (
@@ -468,19 +458,12 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums are exact integers; only the final share divides, 6dp.
     """
     docs = table(spark, sf_dir, "documents")
-    # persisted(): both the grand total and the top-k consume the vocab
-    # aggregate; uncached, the corpus-wide explode + vocab shuffle — the
-    # only data-sized stage here — executes twice (no subplan sharing).
-    # Dataset-freshness-keyed: see pmi_uni above.
-    uni = persisted(
-        spark,
-        sf_dir,
-        ("documents.parquet",),
-        "vocab_uni",
-        lambda: scatter(docs)
+    # shared by the grand total and the top-k
+    uni = share(
+        scatter(docs)
         .select(F.explode(_tokens()).alias("token"))
         .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("cnt")),
+        .agg(F.count(F.lit(1)).alias("cnt"))
     )
     tot = uni.agg(F.sum("cnt").alias("n_total"))
     top = uni.orderBy(F.desc("cnt"), F.asc("token")).limit(VOCAB_CURVE_N)
@@ -547,25 +530,14 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (doc_id) satisfies the tf aggregation's ClusteredDistribution
     # (doc_id, term) — subset rule — so the near-corpus-cardinality
     # (doc_id, term) exchange disappears; and when the df join
-    # broadcasts, the persisted tf's partitioning survives to the
+    # broadcasts, the shared tf's partitioning survives to the
     # per-doc top-k window, which then skips ITS exchange too
     # (measured 5 → 4 Exchanges, see OPTIMIZATION_r11.md).
     tok = scatter(docs, "doc_id").select(
         "doc_id", F.explode(_tokens()).alias("term")
     )
-    # persisted(): tf — the heaviest aggregation here, near-corpus
-    # cardinality — feeds BOTH the df derivation and the scoring join's
-    # probe side; uncached it executes twice (no subplan sharing). The
-    # production analogue materializes the TF table once per corpus
-    # snapshot for exactly this reason; dataset-freshness-keyed, see
-    # pmi_uni.
-    tf = persisted(
-        spark,
-        sf_dir,
-        ("documents.parquet",),
-        "tfidf_tf",
-        lambda: tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf")),
-    )
+    # shared by the df derivation and the scoring join's probe side
+    tf = share(tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf")))
     df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     score = roundk(
@@ -635,19 +607,11 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = scatter(docs, "doc_id").select(
         "doc_id", F.explode(_tokens()).alias("tok")
     )
-    # persisted(): the vocab aggregate feeds BOTH the grand total and
-    # the scoring join — uncached, its corpus-wide shuffle executes
-    # twice (dataset-freshness-keyed, see pmi_uni). The token STREAM
-    # (toks) is deliberately NOT cached: its second derivation is a
+    # shared by the grand total and the scoring join. The token STREAM
+    # (toks) is deliberately NOT shared: its second derivation is a
     # map-side scan+explode (no shuffle), far cheaper than
     # materializing a corpus-sized row stream.
-    vocab = persisted(
-        spark,
-        sf_dir,
-        ("documents.parquet",),
-        "logprob_vocab",
-        lambda: toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt")),
-    )
+    vocab = share(toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt")))
     total = vocab.agg(F.sum("cnt").alias("n_total"))
     # roundk on the raw log2 (the divergent cross-engine ROUND class;
     # the quantized k/10⁶ double then survives dec() exactly — see

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import persisted, table
+from ..catalog import share, table
 from ..functions.exact import (
     davg,
     dec,
@@ -412,18 +412,10 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hi, lo) partials, and the grand total re-sums those partials
     across parts — long partial sums are associative, so the rollup is
     bit-identical to a direct global dsum (which would otherwise scan
-    and aggregate the full fact a second time). The partial frame goes
-    through persisted() because both the threshold and the probe
-    consume it (dataset-freshness-keyed; a bare persist would serve a
-    stale aggregate after in-place regeneration)."""
+    and aggregate the full fact a second time)."""
     li = table(spark, sf_dir, "lineitem")
-    per = persisted(
-        spark,
-        sf_dir,
-        ("lineitem.parquet",),
-        "q11_parts",
-        lambda: li.groupBy("l_partkey").agg(*dsum_parts(_rev(), 6, "pv")),
-    )
+    # shared by the threshold and the probe
+    per = share(li.groupBy("l_partkey").agg(*dsum_parts(_rev(), 6, "pv")))
     per_part = per.select(
         "l_partkey",
         dsum_from_parts(F.col("pv_hi"), F.col("pv_lo"), 6).alias("part_value"),
@@ -530,24 +522,17 @@ WHERE total_revenue = (SELECT MAX(total_revenue) FROM revenue)
     tags=("subquery", "scalar", "join"),
 )
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Supplier(s) hitting the quarter's max revenue. The derived table
-    feeds both the probe and the scalar MAX — persisted(), because
-    Spark shares no subplans and the uncached frame would re-run the
-    quarter's lineitem aggregation once per consumer
-    (dataset-freshness-keyed with unpersist-on-supersession)."""
+    """Supplier(s) hitting the quarter's max revenue."""
     li = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= _ts("1997-01-01"))
         & (F.col("l_shipdate") < _ts("1997-04-01"))
     )
     supp = table(spark, sf_dir, "supplier")
-    revenue = persisted(
-        spark,
-        sf_dir,
-        ("lineitem.parquet",),
-        "q15_revenue",
-        lambda: li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
+    # shared by the probe and the scalar MAX
+    revenue = share(
+        li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
             dsum(_rev(), 6).alias("total_revenue")
-        ),
+        )
     )
     # Scalar MAX + equality join (the q2 pattern), NOT rank() over an
     # unpartitioned window: the per-supplier aggregate grows linearly

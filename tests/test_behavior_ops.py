@@ -11,6 +11,8 @@ from pyspark.sql import functions as F
 from spotify_serverless_etl_pipeline_engineering_with_azure_spark import registry
 from spotify_serverless_etl_pipeline_engineering_with_azure_spark.catalog import table
 
+from .test_plan_quality import unshared  # noqa: F401  (fixture)
+
 ALL = registry.load_all()
 
 
@@ -155,7 +157,7 @@ def test_salted_agg_has_two_aggregation_phases(spark, sf_dir):
     "name",
     ["events_funnel_conversion", "events_cohort_retention", "agg_salted_skew"],
 )
-def test_behavior_plans_have_no_cartesian(spark, sf_dir, name):
+def test_behavior_plans_have_no_cartesian(spark, unshared, sf_dir, name):
     plan = ALL[name].fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
 
@@ -240,9 +242,10 @@ def test_distributed_ntile_broadcast_offset_path(spark, monkeypatch):
 def test_checkpoint_dir_makes_eager_materializations_durable(spark, sf_dir, tmp_path):
     """The checkpoint dir is the one durability switch: with one set,
     _distributed_ntile's range-partitioned frame, agg_approx_sketches'
-    sketch aggregate and spotify.transform's shared items become
-    reliable checkpoints under it (rdd-* dirs), and each returns the
-    same rows as the local-checkpoint run."""
+    sketch aggregate, text_tfidf_top_terms' shared tf and
+    spotify.transform's shared items become reliable checkpoints under
+    it (rdd-* dirs), and each returns the same rows as the
+    local-checkpoint run."""
     import os
 
     from spotify_serverless_etl_pipeline_engineering_with_azure_spark.operators import spotify
@@ -267,6 +270,7 @@ def test_checkpoint_dir_makes_eager_materializations_durable(spark, sf_dir, tmp_
     runs = {
         "ntile": lambda: _distributed_ntile(df, order, 4, "score").collect(),
         "sketches": lambda: ALL["agg_approx_sketches"].fn(spark, sf_dir).collect(),
+        "tfidf": lambda: ALL["text_tfidf_top_terms"].fn(spark, sf_dir).collect(),
         "spotify_transform": lambda: [
             (table_name, *row)
             for table_name, out in spotify.transform(
@@ -284,3 +288,33 @@ def test_checkpoint_dir_makes_eager_materializations_durable(spark, sf_dir, tmp_
             f"{name}: no reliable checkpoint under the checkpoint dir: {entries}"
         )
         assert durable == local, name
+
+
+# The queries that read one aggregate from several consumers through
+# catalog.share.
+SHARING_QUERIES = (
+    "bloom_filter_prune_join",
+    "events_anomaly_zscore",
+    "events_funnel_conversion",
+    "events_rolling_active_users",
+    "fuzzy_match_part_names",
+    "q11_important_parts",
+    "q15_top_supplier",
+    "set_ops",
+    "sketch_hll_merge",
+    "text_pmi_collocations",
+    "text_tfidf_top_terms",
+    "text_unigram_logprob",
+    "text_vocab_coverage",
+    "timeseries_gap_fill",
+    "top_parts_pareto",
+)
+
+
+def test_no_cache_entry_outlives_a_query(spark, sf_dir):
+    """A shared aggregate is a checkpoint that ContextCleaner frees with
+    its frame, never a CacheManager entry, which would outlive the
+    query until someone unpersists it."""
+    for name in SHARING_QUERIES:
+        ALL[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

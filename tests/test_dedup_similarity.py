@@ -488,55 +488,14 @@ def test_dataset_cached_lru_cap_and_dead_app_purge(spark, tmp_path):
     assert dead_key not in cache, "dead-application entries must be purged"
 
 
-def test_dataset_cached_skips_on_evict_for_dead_app_entries(spark, tmp_path):
-    """Dead-application entries must be dropped WITHOUT on_evict: the
-    frame's CacheManager died with its SparkContext, so there is nothing
-    to unpersist — and on a real frame the call raises a Py4J NPE into
-    the stopped context, crashing the first persisted()-backed query of
-    every restarted session (reproduced in round 4's verdict). Same-app
-    supersession must still evict explicitly."""
-    from spotify_serverless_etl_pipeline_engineering_with_azure_spark.catalog import (
-        dataset_cached,
-    )
-
-    d = tmp_path / "ds"
-    d.mkdir()
-    (d / "x.parquet").write_bytes(b"stub")
-    ds = str(d)
-
-    evicted: list[str] = []
-
-    def boom_if_dead(val):
-        evicted.append(val)
-        if val == "dead-app-frame":
-            raise RuntimeError("unpersist() into a stopped SparkContext")
-
-    cache: dict = {}
-    dead_key = ((ds, ("x.parquet",), (), "app-dead-123"), ((0, 4),))
-    cache[dead_key] = "dead-app-frame"
-    # First miss after a "restart": must purge the dead entry silently.
-    got = dataset_cached(
-        cache, spark, ds, ("x.parquet",), lambda: "live-1", on_evict=boom_if_dead
-    )
-    assert got == "live-1" and dead_key not in cache
-    assert evicted == [], "dead-app purge must not call on_evict"
-    # Same-app supersession still releases Spark-side state explicitly.
-    (d / "x.parquet").write_bytes(b"regenerated!")
-    got = dataset_cached(
-        cache, spark, ds, ("x.parquet",), lambda: "live-2", on_evict=boom_if_dead
-    )
-    assert got == "live-2"
-    assert evicted == ["live-1"], "same-app supersession must on_evict"
-
-
 def test_persisted_survives_session_restart(tmp_path):
-    """TWO-SESSION regression for the round-4 crash: build a persisted()
-    frame, stop the session, open a new one in the same process (the
-    module-level registry still holds the old-app entry), and call
-    persisted() again — the dead-app purge must rebuild cleanly, not
-    raise Py4JError from unpersist() into the stopped context. Runs in a
-    subprocess so stopping a SparkContext can't poison the suite's
-    shared session."""
+    """TWO-SESSION regression: run a query that shares an aggregate
+    (q15_top_supplier, formerly a persisted() site), stop the session,
+    open a new one in the same process (the module-level table cache
+    still holds the old application's entries) and run it again — the
+    dead-app purge must rebuild cleanly and the rows must match. Runs
+    in a subprocess so stopping a SparkContext can't poison the
+    suite's shared session."""
     import os
     import subprocess
     import sys
@@ -550,15 +509,13 @@ def test_persisted_survives_session_restart(tmp_path):
         import sys
         sys.path.insert(0, {repo_root!r})
         from pyspark.sql import SparkSession
-        from spotify_serverless_etl_pipeline_engineering_with_azure_spark import catalog, get_spark
+        from spotify_serverless_etl_pipeline_engineering_with_azure_spark import get_spark, registry
 
         SF = {SF_SMOKE!r}
-        build = lambda s: lambda: (
-            s.read.parquet(SF + "/nation.parquet").groupBy("n_regionkey").count()
-        )
+        q15 = registry.queries()["q15_top_supplier"]
         s1 = get_spark("sse_restart_a", shuffle_partitions=2, driver_memory="2g")
-        f1 = catalog.persisted(s1, SF, ("nation.parquet",), "restart_probe", build(s1))
-        assert f1.count() > 0
+        r1 = sorted(map(tuple, q15(s1, SF).collect()))
+        assert r1
         s1.stop()
         s2 = (
             SparkSession.builder.master("local[2]")
@@ -567,8 +524,8 @@ def test_persisted_survives_session_restart(tmp_path):
             .config("spark.ui.enabled", "false")
             .getOrCreate()
         )
-        f2 = catalog.persisted(s2, SF, ("nation.parquet",), "restart_probe", build(s2))
-        assert f2.count() > 0
+        r2 = sorted(map(tuple, q15(s2, SF).collect()))
+        assert r2 == r1, (r1, r2)
         s2.stop()
         print("RESTART_OK")
         """
@@ -983,51 +940,35 @@ def test_durable_index_store_roundtrip_and_sweep(spark, sf_dir, tmp_path):
 
 
 def test_persisted_frames_refresh_on_dataset_regeneration(spark, sf_dir, tmp_path):
-    """catalog.persisted must serve the SAME cached frame for an
-    unchanged snapshot, REBUILD when the parquet is regenerated in
-    place (Spark's CacheManager keys by canonicalized plan with no
-    data-freshness component — a bare persist() would silently serve
-    the STALE aggregate), and unpersist the superseded frame (cache
-    entries are never released by driver GC)."""
+    """A query that shares an aggregate (text_vocab_coverage, formerly a
+    persisted() site) must follow its data: rerun after an in-place
+    regeneration, it returns what a fresh directory holding the new
+    file returns, not the old snapshot's rows (Spark's CacheManager
+    keys by canonicalized plan with no data-freshness component, so a
+    frame cached across calls would serve the stale aggregate)."""
     import shutil
 
     import duckdb
 
-    from spotify_serverless_etl_pipeline_engineering_with_azure_spark import catalog
+    from spotify_serverless_etl_pipeline_engineering_with_azure_spark import registry
 
+    query = registry.queries()["text_vocab_coverage"]
+    rows = lambda d: sorted(map(tuple, query(spark, str(d)).collect()))  # noqa: E731
     ds = tmp_path / "ds"
     ds.mkdir()
     shutil.copy(f"{sf_dir}/documents.parquet", ds / "documents.parquet")
-
-    def build():
-        return (
-            spark.read.parquet(str(ds / "documents.parquet"))
-            .groupBy("source")
-            .count()
-        )
-
-    f1 = catalog.persisted(spark, str(ds), ("documents.parquet",), "t", build)
-    assert catalog.persisted(spark, str(ds), ("documents.parquet",), "t", build) is f1
-    n1 = f1.agg(F.sum("count")).collect()[0][0]
+    before = rows(ds)
 
     duckdb.sql(
         f"COPY (SELECT * FROM read_parquet('{sf_dir}/documents.parquet') "
         f"WHERE doc_id % 2 = 0) TO '{ds}/documents.parquet' (FORMAT PARQUET)"
     )
-    f2 = catalog.persisted(spark, str(ds), ("documents.parquet",), "t", build)
-    assert f2 is not f1, "regenerated snapshot must rebuild"
-    n2 = f2.agg(F.sum("count")).collect()[0][0]
-    assert n2 < n1, "rebuilt frame must read the NEW data, not the stale cache"
-    # (f1.storageLevel is NOT probed here: the rebuilt plan is
-    # canonically equal to the stale one, so after f2's persist both
-    # handles report f2's cache entry — the meaningful invariants are
-    # the fresh VALUES above and that exactly one registry entry
-    # survives, the superseded one having been unpersisted on_evict.)
-    assert f2.storageLevel.useMemory or f2.storageLevel.useDisk
-    entries = [
-        k for k in catalog._PERSISTED_FRAMES if k[0][0] == str(ds) and k[0][2] == ("t",)
-    ]
-    assert len(entries) == 1, "superseded registry entry must be evicted"
+    fresh = tmp_path / "fresh"
+    fresh.mkdir()
+    shutil.copy(ds / "documents.parquet", fresh / "documents.parquet")
+    after = rows(ds)
+    assert after != before, "regenerated snapshot must change the result"
+    assert after == rows(fresh), "rerun must read the NEW data, not a stale cache"
 
 
 def test_dataset_caches_are_session_bound(spark, sf_dir):

@@ -4,7 +4,10 @@ package takes its settings in one place.
 
 Measurement scripts are not run by the suite, so a script left
 importing a deleted function would otherwise only fail when someone
-next runs it. Each file is parsed, never executed."""
+next runs it. Each file is parsed, never executed.
+
+The package also shares frames in one place: only catalog.py
+checkpoints, and only the CC/PageRank round loops persist."""
 
 from __future__ import annotations
 
@@ -175,3 +178,75 @@ def test_only_session_reads_settings():
             reads = [r for r in reads if r[1].startswith("spark.sse.")]
         bad += [f"{path}:{line}: {what}" for line, what in reads]
     assert not bad, f"settings read outside session.py: {bad}"
+
+
+def sharing_calls(source: str) -> list[tuple[int, str | None, str]]:
+    """(line, enclosing top-level function or None, method) for every
+    ``.localCheckpoint(``, ``.checkpoint(`` and ``.persist(`` call."""
+    found = []
+    for top in ast.parse(source).body:
+        func = top.name if isinstance(top, ast.FunctionDef) else None
+        found += [
+            (node.lineno, func, node.func.attr)
+            for node in ast.walk(top)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("localCheckpoint", "checkpoint", "persist")
+        ]
+    return sorted(found)
+
+
+# The CC and PageRank round loops: their persist()s are unpersisted each
+# round, and by release() on the error path.
+PERSIST_OWNERS = {f"{PACKAGE}/plans/dedup.py": {"_min_label_components", "_pagerank_on_pairs"}}
+
+
+def sharing_violations(path: str, source: str) -> list[str]:
+    """Checkpoints outside catalog.py, and persists outside a
+    PERSIST_OWNERS function that calls release()."""
+    owners = PERSIST_OWNERS.get(path, set())
+    releasing = {
+        top.name
+        for top in ast.parse(source).body
+        if isinstance(top, ast.FunctionDef)
+        and any(
+            isinstance(n, ast.Call) and isinstance(n.func, ast.Name) and n.func.id == "release"
+            for n in ast.walk(top)
+        )
+    }
+    bad = []
+    for line, func, method in sharing_calls(source):
+        if method == "persist":
+            ok = func in owners and func in releasing
+        else:
+            ok = path == f"{PACKAGE}/catalog.py"
+        if not ok:
+            bad.append(f"{path}:{line}: .{method}( in {func}")
+    return bad
+
+
+def test_only_catalog_checkpoints_and_only_round_loops_persist():
+    """catalog.materialize and catalog.share are the only checkpoints,
+    so the checkpoint dir governs every shared frame; a CacheManager
+    entry outlives its frame, so only the loops that release() it
+    persist."""
+    bad, persisting = [], set()
+    for path in PACKAGE_FILES:
+        with open(os.path.join(ROOT, path), encoding="utf-8") as f:
+            source = f.read()
+        bad += sharing_violations(path, source)
+        persisting |= {(path, func) for _, func, m in sharing_calls(source) if m == "persist"}
+    assert not bad, f"checkpoint or persist outside catalog.share/materialize: {bad}"
+    owners = {(path, func) for path, funcs in PERSIST_OWNERS.items() for func in funcs}
+    assert persisting == owners, "PERSIST_OWNERS names a function that no longer persists"
+
+
+def test_sharing_scan_flags_a_bare_local_checkpoint():
+    source = (
+        "def q(spark, df):\n"
+        "    return df.groupBy('k').count().localCheckpoint(eager=False)\n"
+    )
+    assert sharing_violations(f"{PACKAGE}/plans/dedup.py", source) == [
+        f"{PACKAGE}/plans/dedup.py:2: .localCheckpoint( in q"
+    ]
+    assert not sharing_violations(f"{PACKAGE}/catalog.py", source)
