@@ -22,7 +22,6 @@ CC/PageRank round loops persist, and they ``release()`` each round.
 from __future__ import annotations
 
 import uuid
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -55,15 +54,6 @@ ALWAYS_BROADCAST = {"region", "nation"}
 # Spark application id (a plan dies with its context).
 _TABLE_CACHE: dict[tuple, DataFrame] = {}
 
-# sessionUUID-fallback identities, memoized per live Python
-# SparkSession object; weak keys so a dead session's entry vanishes
-# with the session instead of pinning it (and its identity can never
-# be handed to an address-reusing successor — each new session object
-# draws a fresh uuid4).
-_FALLBACK_SESSION_IDS: "weakref.WeakKeyDictionary[SparkSession, str]" = (
-    weakref.WeakKeyDictionary()
-)
-
 # Entry cap of the index registry (cached_index), shared by every index
 # family: sized for many live test fixtures/SF dirs at once while
 # bounding a production driver that sweeps unbounded snapshot
@@ -77,18 +67,8 @@ _INDEX_CACHE: dict[tuple, object] = {}
 def _session_uuid(spark: SparkSession) -> str:
     """Identity of the concrete SparkSession (clones made with
     newSession() share an applicationId but have separate catalogs and
-    confs). Falls back to a uuid4 memoized on the Python session object
-    for builds without sessionUUID (e.g. Spark Connect, where even
-    ``_jsparkSession`` may not exist — the fallback must not touch it):
-    the previous ``id(jvm proxy)`` form could ALIAS two sessions,
-    because CPython reuses addresses after GC, handing a new session a
-    dead session's cache entries (the wrong-catalog/wrong-conf hazard
-    sessionUUID exists to prevent)."""
-    try:
-        return str(spark._jsparkSession.sessionUUID())
-    except Exception:
-        memo = _FALLBACK_SESSION_IDS.setdefault(spark, uuid.uuid4().hex)
-        return f"pyuuid-{memo}"
+    confs)."""
+    return str(spark._jsparkSession.sessionUUID())
 
 
 def dataset_cached(cache: dict, spark: SparkSession, sf_dir: str,
@@ -358,7 +338,6 @@ def sink_run_dir(spark: SparkSession, kind: str, sf_dir: str) -> str:
     """
     import hashlib
     import os
-    import uuid
 
     ds = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     return os.path.join(

@@ -131,7 +131,7 @@ def davg(col: Column, scale: int) -> Column:
     return (dsum(col, scale) / F.count(F.lit(1))).cast("double")
 
 
-def sql_dsum(expr: str, scale: int, alias: str, precision: int = 18) -> str:
+def sql_dsum(expr: str, scale: int, alias: str) -> str:
     """DuckDB oracle fragment mirroring :func:`dsum`.
 
     The decimal→double cast is routed through VARCHAR: DuckDB's direct
@@ -144,14 +144,14 @@ def sql_dsum(expr: str, scale: int, alias: str, precision: int = 18) -> str:
     BigDecimal.doubleValue on the identical exact decimal.
     """
     return (
-        f"CAST(CAST(SUM(CAST({expr} AS DECIMAL({precision},{scale})))"
+        f"CAST(CAST(SUM(CAST({expr} AS DECIMAL(18,{scale})))"
         f" AS VARCHAR) AS DOUBLE) AS {alias}"
     )
 
 
-def sql_davg(expr: str, scale: int, alias: str, precision: int = 18) -> str:
+def sql_davg(expr: str, scale: int, alias: str) -> str:
     return (
-        f"CAST(CAST(CAST(SUM(CAST({expr} AS DECIMAL({precision},{scale}))) AS VARCHAR) AS DOUBLE)"
+        f"CAST(CAST(CAST(SUM(CAST({expr} AS DECIMAL(18,{scale}))) AS VARCHAR) AS DOUBLE)"
         f" / COUNT(*) AS DOUBLE) AS {alias}"
     )
 

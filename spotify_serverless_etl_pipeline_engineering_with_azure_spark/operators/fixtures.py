@@ -102,10 +102,11 @@ def write_json_dir(out_dir: str, n_docs: int = 4, seed: int = 42) -> list[str]:
     return paths
 
 
-def fixture_df(spark: SparkSession, n_docs: int = 4, seed: int = 42) -> DataFrame:
-    """In-memory fixture DataFrame with an explicit doc_order column
-    (analogue of the file-name order for createDataFrame input)."""
-    docs = generate_docs(n_docs, seed)
+def fixture_df(spark: SparkSession) -> DataFrame:
+    """In-memory fixture DataFrame over ``generate_docs()`` with an
+    explicit doc_order column (analogue of the file-name order for
+    createDataFrame input)."""
+    docs = generate_docs()
     rows = [(f"doc_{d:04d}", doc["items"]) for d, doc in enumerate(docs)]
     schema = "doc_order string, items " + PLAYLIST_SCHEMA["items"].dataType.simpleString()
     df = spark.createDataFrame(rows, schema=schema)

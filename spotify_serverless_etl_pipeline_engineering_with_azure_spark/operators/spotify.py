@@ -105,23 +105,24 @@ def explode_items(raw: DataFrame) -> DataFrame:
     return raw.select("doc_order", F.posexplode("items").alias("pos", "item"))
 
 
-def _keep_first(df: DataFrame, key: str) -> DataFrame:
-    """D1/D2: deterministic keep-first dedup by natural key.
+def _keep_first(df: DataFrame, keys: list[str], order: list[str]) -> DataFrame:
+    """D1/D2: deterministic keep-first dedup by natural key: per
+    ``keys`` value, the row that sorts first by ``order``. Returns the
+    ``keys`` columns, then the others in input order.
 
-    Exact parity with pandas drop_duplicates(keep='first') under the
-    explicit (doc_order, pos) ordering. min_by over a struct ordering
-    key, NOT a row_number window: the aggregate keeps ONE buffered row
-    per key with map-side partial aggregation, while a window must
-    route and SORT every duplicate of a hot key (a viral album, a NULL
-    natural key) in a single task. One shuffle on the key either way.
+    Exact parity with pandas drop_duplicates(keep='first') under an
+    explicit ordering such as (doc_order, pos). min_by over a struct
+    ordering key, NOT a row_number window: the aggregate keeps ONE
+    buffered row per key with map-side partial aggregation, while a
+    window must route and SORT every duplicate of a hot key (a viral
+    album, a NULL natural key) in a single task. One shuffle on the
+    key either way.
     """
-    others = [c for c in df.columns if c != key]
+    others = [c for c in df.columns if c not in keys]
     return (
-        df.groupBy(key)
-        .agg(
-            F.min_by(F.struct(*others), F.struct("doc_order", "pos")).alias("_r")
-        )
-        .select(key, *[F.col(f"_r.{c}").alias(c) for c in others])
+        df.groupBy(*keys)
+        .agg(F.min_by(F.struct(*others), F.struct(*order)).alias("_r"))
+        .select(*keys, *[F.col(f"_r.{c}").alias(c) for c in others])
     )
 
 
@@ -136,7 +137,7 @@ def make_albums(items: DataFrame) -> DataFrame:
         F.col("item.track.album.total_tracks").alias("total_tracks"),
         F.col("item.track.album.external_urls.spotify").alias("url"),
     )
-    return _keep_first(proj, "album_id").select(
+    return _keep_first(proj, ["album_id"], ["doc_order", "pos"]).select(
         "album_id", "name", "release_date", "total_tracks", "url"
     )
 
@@ -153,7 +154,9 @@ def make_artists(items: DataFrame) -> DataFrame:
         head.getField("name").alias("name"),
         head.getField("external_urls").getField("spotify").alias("url"),
     )
-    return _keep_first(proj, "artist_id").select("artist_id", "name", "url")
+    return _keep_first(proj, ["artist_id"], ["doc_order", "pos"]).select(
+        "artist_id", "name", "url"
+    )
 
 
 def explode_artists(items: DataFrame) -> DataFrame:

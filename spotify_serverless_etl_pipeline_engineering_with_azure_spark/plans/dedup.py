@@ -1119,22 +1119,37 @@ def dedup_incremental_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Connected components over the LSH candidate graph (dedup clustering)
 # ---------------------------------------------------------------------------
-def _cc_oracle() -> str:
-    return f"""
-WITH RECURSIVE pairs AS (
+def _graph_ctes() -> str:
+    """The DuckDB CTEs every graph oracle starts from: the MinHash-LSH
+    candidate ``pairs`` and their undirected ``edges`` (a, b). Both are
+    MATERIALIZED (DuckDB ≥ 0.9): DuckDB otherwise inlines a CTE at every
+    reference, re-running the MinHash oracle once per use of ``edges``
+    and per step of a recursive ``reach``."""
+    return f"""pairs AS MATERIALIZED (
   SELECT doc_a, doc_b FROM ({_minhash_oracle()})
 ),
-edges AS (
+edges AS MATERIALIZED (
   SELECT doc_a AS a, doc_b AS b FROM pairs
   UNION
   SELECT doc_b AS a, doc_a AS b FROM pairs
-),
+)"""
+
+
+def _reach_ctes() -> str:
+    """``_graph_ctes`` plus ``reach`` (src, dst): every vertex with each
+    vertex reachable from it, for a WITH RECURSIVE clause."""
+    return f"""{_graph_ctes()},
 verts AS (SELECT DISTINCT a AS v FROM edges),
 reach(src, dst) AS (
   SELECT v, v FROM verts
   UNION
   SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a
-)
+)"""
+
+
+def _cc_oracle() -> str:
+    return f"""
+WITH RECURSIVE {_reach_ctes()}
 SELECT src AS doc_id, MIN(dst) AS component
 FROM reach GROUP BY src
 """
@@ -1361,20 +1376,7 @@ def _min_label_components(pairs: DataFrame, max_rounds: int = 200) -> DataFrame:
 @register(
     "dedup_filtered_corpus",
     oracle=f"""
-WITH RECURSIVE pairs AS (
-  SELECT doc_a, doc_b FROM ({_minhash_oracle()})
-),
-edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION
-  SELECT doc_b AS a, doc_a AS b FROM pairs
-),
-verts AS (SELECT DISTINCT a AS v FROM edges),
-reach(src, dst) AS (
-  SELECT v, v FROM verts
-  UNION
-  SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a
-),
+WITH RECURSIVE {_reach_ctes()},
 comp AS (SELECT src AS doc_id, MIN(dst) AS component FROM reach GROUP BY src),
 dropped AS (SELECT doc_id FROM comp WHERE doc_id <> component)
 SELECT (SELECT COUNT(*) FROM documents) AS n_total,
@@ -1445,14 +1447,7 @@ iter{k} AS (
         prev = f"iter{k}"
     its = ",".join(iters)
     return f"""
-WITH pairs AS (
-  SELECT doc_a, doc_b FROM ({_minhash_oracle()})
-),
-edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION
-  SELECT doc_b AS a, doc_a AS b FROM pairs
-),
+WITH {_graph_ctes()},
 deg AS (SELECT a AS v, COUNT(*) AS deg FROM edges GROUP BY a),
 n AS (SELECT COUNT(*) AS cnt FROM deg),
 r0 AS (

@@ -19,11 +19,12 @@ Mapping:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..functions.dates import SQL_PARSE_RELEASE_DATE, parse_release_date
+from ..operators.spotify import _keep_first
 from ..registry import register
 
 
@@ -166,14 +167,12 @@ def ref_d1_keepfirst_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference: ``drop_duplicates(subset='artist_id', keep='first')`` at
     /root/reference/spotifytransform.py:95,98. pandas "first" means file
     order; the distributed equivalent needs an explicit ordering — here
-    first-by-event_id via row_number()==1 (SURVEY.md §7 hard part #1).
+    first-by-event_id, through the pipeline's own keep-first dedup
+    (SURVEY.md §7 hard part #1).
     """
-    ev = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id", "event_type").orderBy("event_id")
-    return (
-        ev.select("event_id", "user_id", "event_type", "value", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
+    ev = table(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "value")
+    return _keep_first(ev, ["user_id", "event_type"], ["event_id"]).select(
+        "event_id", "user_id", "event_type", "value"
     )
 
 

@@ -51,12 +51,7 @@ import os
 from pyspark.sql import SparkSession
 
 
-def session_confs(
-    *,
-    shuffle_partitions: int | None = None,
-    driver_memory: str | None = None,
-    env: dict[str, str] | None = None,
-) -> tuple[str, dict[str, str]]:
+def session_confs(env: dict[str, str] | None = None) -> tuple[str, dict[str, str]]:
     """O3 (config from env, spotifyextract.py:15-20 os.environ reads):
     resolve (master, confs) from the environment. Pure — the
     driver-contract test asserts the mapping without booting a JVM.
@@ -71,7 +66,7 @@ def session_confs(
     cpus = e.get("SPARK_GRAFT_CPUS", "32")
     master = e.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     confs = {
-        "spark.sql.shuffle.partitions": str(shuffle_partitions or cpus),
+        "spark.sql.shuffle.partitions": cpus,
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -80,7 +75,7 @@ def session_confs(
         # 32g: local[32] runs the driver AND all 32 executor threads in
         # one JVM, and a smaller heap GC-throttles long bench sessions
         # (OPTIMIZATION_r11.md). The heap is committed lazily.
-        "spark.driver.memory": driver_memory or e.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
+        "spark.driver.memory": e.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
         "spark.ui.enabled": "false",
         "spark.sql.parquet.filterPushdown": "true",
         # Naive parquet timestamps (isAdjustedToUTC=false) are instants
@@ -126,16 +121,10 @@ def parse_confs(spec: str) -> dict[str, str]:
     return confs
 
 
-def get_spark(
-    app_name: str = "sse_spark",
-    *,
-    shuffle_partitions: int | None = None,
-    driver_memory: str | None = None,
-    extra: dict[str, str] | None = None,
-) -> SparkSession:
-    master, confs = session_confs(
-        shuffle_partitions=shuffle_partitions, driver_memory=driver_memory
-    )
+def get_spark(app_name: str = "sse_spark", *, extra: dict[str, str] | None = None) -> SparkSession:
+    """A session on the environment's master and confs (session_confs),
+    with ``extra`` confs applied last."""
+    master, confs = session_confs()
     builder = SparkSession.builder.master(master).appName(app_name)
     for k, v in {**confs, **(extra or {})}.items():
         builder = builder.config(k, v)

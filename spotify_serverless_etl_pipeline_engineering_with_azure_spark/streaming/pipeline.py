@@ -142,15 +142,14 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_events_ts(spark.readStream.schema(schema).parquet(src))
 
 
-def windowed_counts(
-    events: DataFrame, *, window: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
-    """Tumbling event-time window aggregate with late-data watermark."""
+def windowed_counts(events: DataFrame) -> DataFrame:
+    """Tumbling 1-hour event-time window aggregate with a 2-hour
+    late-data watermark."""
     from ..functions.exact import dsum
 
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"), dsum(F.col("value"), 2).alias("sum_value"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_value")
     )

@@ -25,10 +25,25 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
 
+def boot_test_session():
+    return get_spark(
+        "sse_tests",
+        extra={"spark.sql.shuffle.partitions": "8", "spark.driver.memory": "8g"},
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("sse_tests", shuffle_partitions=8, driver_memory="8g")
-    yield s
+    yield boot_test_session()
+
+
+@pytest.fixture(scope="session")
+def plan_records(spark):
+    """The plan record of every registered query and index build at
+    SF_SMOKE (tests/plan_digest.py), built once per session."""
+    from .plan_digest import digests
+
+    return digests(spark, SF_SMOKE)
 
 
 @pytest.fixture(scope="session")

@@ -11,7 +11,8 @@ from pyspark.sql import functions as F
 from spotify_serverless_etl_pipeline_engineering_with_azure_spark import registry
 from spotify_serverless_etl_pipeline_engineering_with_azure_spark.catalog import table
 
-from .test_plan_quality import unshared  # noqa: F401  (fixture)
+from .plan_digest import digest, fields
+from .test_plan_quality import no_cartesian
 
 ALL = registry.load_all()
 
@@ -143,23 +144,21 @@ def test_point_in_time_matches_range_join_form(spark, sf_dir):
             assert v is None
 
 
-def test_salted_agg_has_two_aggregation_phases(spark, sf_dir):
-    """The physical plan must contain the salted pre-aggregation (a
-    HashAggregate keyed on (l_returnflag, salt)) feeding the final
-    merge — i.e. 'salt' appears as a grouping key in the plan."""
-    df = ALL["agg_salted_skew"].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "salt" in plan
-    assert plan.count("HashAggregate") >= 4, "partial+final for both phases"
+def test_salted_agg_has_two_aggregation_phases(plan_records):
+    """The physical plan must contain the salted pre-aggregation, keyed
+    on (l_returnflag, salt), feeding the final merge, each phase with
+    its partial and final aggregate."""
+    p = fields(plan_records["agg_salted_skew"])
+    assert "hash(l_returnflag, salt)" in p["exchange"], p
+    assert p["agg"] >= 4, "partial+final for both phases"
 
 
 @pytest.mark.parametrize(
     "name",
     ["events_funnel_conversion", "events_cohort_retention", "agg_salted_skew"],
 )
-def test_behavior_plans_have_no_cartesian(spark, unshared, sf_dir, name):
-    plan = ALL[name].fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
+def test_behavior_plans_have_no_cartesian(plan_records, name):
+    assert no_cartesian(fields(plan_records[name])), plan_records[name]
 
 
 def test_rolling_active_users_bounds(spark, sf_dir):
@@ -226,9 +225,8 @@ def test_distributed_ntile_broadcast_offset_path(spark, monkeypatch):
     )
     order = [F.desc("metric"), F.asc("user_id")]
     out = behavior_ops._distributed_ntile(df, order, 4, "score")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
+    joins = fields(digest(out))["join"]
+    assert "BHJ" in joins and "SMJ" not in joins, joins
     got = {r["user_id"]: r["score"] for r in out.collect()}
     want = {
         r["user_id"]: r["t"]

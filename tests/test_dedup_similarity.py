@@ -513,7 +513,10 @@ def test_persisted_survives_session_restart(tmp_path):
 
         SF = {SF_SMOKE!r}
         q15 = registry.queries()["q15_top_supplier"]
-        s1 = get_spark("sse_restart_a", shuffle_partitions=2, driver_memory="2g")
+        s1 = get_spark(
+            "sse_restart_a",
+            extra={{"spark.sql.shuffle.partitions": "2", "spark.driver.memory": "2g"}},
+        )
         r1 = sorted(map(tuple, q15(s1, SF).collect()))
         assert r1
         s1.stop()
@@ -994,44 +997,6 @@ def test_dataset_caches_are_session_bound(spark, sf_dir):
         for cache in (catalog._TABLE_CACHE,):
             for k in [k for k in cache if k[0][4] == catalog._session_uuid(b)]:
                 del cache[k]
-
-
-def test_session_uuid_fallback_never_aliases_sequential_sessions():
-    """On builds without sessionUUID (e.g. Spark Connect) the fallback
-    identity must be (a) stable for one live session, (b) unique across
-    session objects even when CPython reuses a dead session's address —
-    the old id(jvm-proxy) form could hand a new session a dead
-    session's cache entries. Also: a session with NO _jsparkSession
-    attribute at all must degrade to the fallback, not raise from
-    inside the except handler."""
-    import gc
-
-    from spotify_serverless_etl_pipeline_engineering_with_azure_spark import catalog
-
-    class FakeSession:  # no _jsparkSession attr → AttributeError path
-        pass
-
-    # On sessionUUID-less builds, LIVE fixture sessions elsewhere in
-    # the process legitimately occupy the memo — assert against a
-    # snapshot, not global emptiness.
-    baseline = len(catalog._FALLBACK_SESSION_IDS)
-    a = FakeSession()
-    ida_1, ida_2 = catalog._session_uuid(a), catalog._session_uuid(a)
-    assert ida_1 == ida_2, "fallback identity must be stable per session"
-    assert ida_1.startswith("pyuuid-")
-
-    seen = {ida_1}
-    del a
-    for _ in range(50):  # many allocations: address reuse is likely
-        gc.collect()
-        s = FakeSession()
-        sid = catalog._session_uuid(s)
-        assert sid not in seen, "fallback identity aliased two sessions"
-        seen.add(sid)
-        del s
-    gc.collect()
-    # weak keys: dead sessions must not linger in the memo table
-    assert len(catalog._FALLBACK_SESSION_IDS) == baseline
 
 
 def test_cell_salts_derivation_math(spark):

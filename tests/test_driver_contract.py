@@ -107,8 +107,11 @@ def test_o3_session_config_from_env():
     assert confs["spark.driver.memory"] == "4g"
 
     master, confs = session_confs(
-        env={"SPARK_GRAFT_MASTER": "spark://host:7077", "SPARK_GRAFT_CPUS": "4"},
-        shuffle_partitions=256,
+        env={
+            "SPARK_GRAFT_MASTER": "spark://host:7077",
+            "SPARK_GRAFT_CPUS": "4",
+            "SPARK_GRAFT_EXTRA_CONFS": "spark.sql.shuffle.partitions=256",
+        }
     )
     assert master == "spark://host:7077"
     assert confs["spark.sql.shuffle.partitions"] == "256"

@@ -19,6 +19,8 @@ from spotify_serverless_etl_pipeline_engineering_with_azure_spark.operators.fixt
     write_json_dir,
 )
 
+from .plan_digest import digest, fields
+
 
 def _pad_date(s: str) -> dt.date:
     if len(s) == 4:
@@ -139,8 +141,7 @@ def test_transform_parses_raw_json_once(spark, tmp_path):
 
     def json_scans(tables):
         return sum(
-            "FileScan json" in df._jdf.queryExecution().executedPlan().toString()
-            for df in tables.values()
+            s[0] == "(json)" for df in tables.values() for s in fields(digest(df))["scan"]
         )
 
     shared = spotify.transform(raw)
