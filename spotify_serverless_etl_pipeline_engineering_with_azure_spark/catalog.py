@@ -14,9 +14,9 @@ Two primitives compute a frame once for several readers:
 Both are checkpoints, reliable under the SparkContext checkpoint dir
 and local without one, so both release by garbage collection: Spark's
 ContextCleaner frees a checkpoint's blocks once no driver reference
-remains. Neither is a ``persist()``: CacheManager entries outlive
-their frames until an explicit ``unpersist()``, so only the
-CC/PageRank round loops persist, and they ``release()`` each round.
+remains. That is the one lifetime rule for a shared frame. The engine
+never persists a frame: a CacheManager entry outlives its frame until
+it is unpersisted by hand, on every exit path.
 """
 
 from __future__ import annotations
@@ -165,26 +165,6 @@ def cached_index(spark: SparkSession, sf_dir: str, files: tuple[str, ...],
     )
 
 
-def release(*frames: DataFrame | None) -> None:
-    """Best-effort unpersist for ``finally`` blocks around iterative
-    persist lifecycles (pointer-jumping components, PageRank rounds).
-
-    CacheManager entries are never GC-released, so a mid-iteration
-    failure (executor loss, ANSI overflow) would leak every round
-    frame's cache entry for the application's lifetime unless the loop
-    releases them on the error path too. A frame with no entry is a no-op;
-    unpersist() itself raising (the failure that aborted the loop was
-    the context dying) is swallowed so cleanup never masks the original
-    error."""
-    for f in frames:
-        if f is None:
-            continue
-        try:
-            f.unpersist()
-        except Exception:
-            pass
-
-
 def materialize(df: DataFrame) -> DataFrame:
     """THE eager materializer: compute ``df`` once and truncate its
     lineage. Every index build and iterative-loop round boundary goes
@@ -219,7 +199,7 @@ def share(df: DataFrame) -> DataFrame:
     action computes and stores the blocks, later reads reuse them. The
     result is never cached across calls, so a rebuilt query reads the
     data as it is now, and Spark's ContextCleaner frees the blocks once
-    the frame is unreachable. ``persist()`` would not do: CacheManager
+    the frame is unreachable. A ``persist`` would not do: CacheManager
     entries are never released by driver GC, and callers of ``share``
     get no release hook."""
     if df.sparkSession.sparkContext.getCheckpointDir() is not None:
@@ -347,10 +327,10 @@ def sink_run_dir(spark: SparkSession, kind: str, sf_dir: str) -> str:
 
 
 def scratch_roots(
-    spark: SparkSession, prefix: str, n: int = 1
+    spark: SparkSession, prefix: str, n: int
 ) -> tuple[list[str], "Callable[[], None]"]:
     """``n`` call-unique scratch directories for engine-INTERNAL
-    parquet round-trips (the CC/PageRank stats re-roots), plus a
+    parquet round-trips (the CC stats re-roots), plus a
     ``cleanup()`` that best-effort removes them.
 
     The root is the SparkContext's checkpoint dir when set (the same

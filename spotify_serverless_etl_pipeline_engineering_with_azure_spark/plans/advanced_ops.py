@@ -273,13 +273,12 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> dict:
 
         # Hyperparameters are INDEX PROPERTIES: derive k/nprobe from
         # ONE corpus count at build time and carry them in the index
-        # dict — search (and the two frame builds) must never re-run
-        # the count job, exactly as a FAISS index stores its own
-        # nlist. (Previously each frame builder re-counted the store:
-        # two extra driver jobs per build, one per direct test call.)
+        # dict — search (and the two frame builds, which take them as
+        # arguments) must never re-run the count job, exactly as a
+        # FAISS index stores its own nlist.
         k = _ivf_k(vector_store(spark, sf_dir).count())
         nprobe = _ivf_nprobe(k)
-        cells = checkpoint_frame(_ivf_member_frame(spark, sf_dir, k))
+        cells = checkpoint_frame(_top1_cell_frame(spark, sf_dir, k))
         probes = checkpoint_frame(_ivf_probe_cells_frame(spark, sf_dir, k, nprobe))
         # The re-rank vector store is THE shared one (one checkpoint
         # for brute-force, SemDeDup, and IVF — not a private copy).
@@ -299,27 +298,24 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> dict:
     )
 
 
-def _ivf_member_frame(
-    spark: SparkSession, sf_dir: str, k: int | None = None
-) -> DataFrame:
-    """PRE-checkpoint plan of the posting-table build: (vec_id, cid) —
-    each corpus vector's TOP-1 cell. The K×dim codebook fold runs once
-    per vector at build time, never per query: the broadcast-codebook
-    join expands to N×K rows entirely map-side and the partial
-    min(struct(neg_sim, cid)) collapses each vector's K candidates
-    before the exchange, so the shuffle carries N rows no matter how
-    large K grows. Ranking matches the oracle's ROW_NUMBER() ORDER BY
-    sim DESC, cid via the lexicographic struct (−sim, cid). Exposed so
+def _top1_cell_frame(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
+    """PRE-checkpoint plan of a top-1 cell assignment over the first-k
+    codebook: (vec_id, cid), each corpus vector's nearest cell — the
+    IVF posting table and the SemDeDup cell membership. The K×dim
+    codebook fold runs once per vector at build time, never per query:
+    the broadcast-codebook join expands to N×K rows entirely map-side
+    and the partial min(struct(neg_sim, cid)) collapses each vector's K
+    candidates before the exchange, so the shuffle carries N rows no
+    matter how large K grows. Ranking matches the oracles' ROW_NUMBER()
+    ORDER BY sim DESC, cid via the lexicographic struct (−sim, cid), on
+    the SAME round6 cosine the whole family uses. Exposed so
     plan-quality tests can assert on the build pipeline (checkpointing
     truncates lineage)."""
     from .similarity import vector_store
 
-    store = vector_store(spark, sf_dir)
-    if k is None:  # direct (test) calls; _ivf_index passes its own k
-        k = _ivf_k(store.count())
-    cent = _broadcast_codebook(spark, sf_dir, k)
     return (
-        store.crossJoin(cent)
+        vector_store(spark, sf_dir)
+        .crossJoin(_broadcast_codebook(spark, sf_dir, k))
         .select("vec_id", (-_codebook_sim()).alias("neg_sim"), "cid")
         .groupBy("vec_id")
         .agg(F.min(F.struct("neg_sim", "cid")).alias("top"))
@@ -328,10 +324,7 @@ def _ivf_member_frame(
 
 
 def _ivf_probe_cells_frame(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int | None = None,
-    nprobe: int | None = None,
+    spark: SparkSession, sf_dir: str, k: int, nprobe: int
 ) -> DataFrame:
     """PRE-checkpoint plan of the probe assignment: (probe_id, cid) —
     each PROBE's nprobe nearest cells, one row per (probe, probed
@@ -342,15 +335,11 @@ def _ivf_probe_cells_frame(
     queue, so the window input scales with queries, not the corpus)."""
     from .similarity import vector_store
 
-    store = vector_store(spark, sf_dir)
-    if k is None:  # direct (test) calls; _ivf_index passes its own k
-        k = _ivf_k(store.count())
-    if nprobe is None:
-        nprobe = _ivf_nprobe(k)
     cent = _broadcast_codebook(spark, sf_dir, k)
     w = Window.partitionBy("probe_id").orderBy("neg_sim", "cid")
     return (
-        store.filter(F.col("vec_id") % _PROBE_MOD == 0)
+        vector_store(spark, sf_dir)
+        .filter(F.col("vec_id") % _PROBE_MOD == 0)
         .crossJoin(cent)
         .select(
             F.col("vec_id").alias("probe_id"),

@@ -27,7 +27,6 @@ from ..catalog import (
     cached_index,
     checkpoint_frame,
     materialize,
-    release,
     scatter,
     scratch_roots,
     share,
@@ -665,49 +664,31 @@ _SQL_SEMDEDUP_K = (
 
 def _semdedup_member(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, cluster): broadcast-codebook nearest-centroid
-    assignment. Materialized once per dataset (catalog.cached_index):
-    Spark does not share subplans, so the two consumers inside one
-    SemDeDup query (cell grouping and the per-vector verdict join) —
-    plus dedup_embedding_cosine's pair generation — would otherwise
-    each re-run the O(N·K) codebook fold over the corpus. At cluster
-    scale this is the materialized assignment table every SemDeDup
-    pipeline persists."""
+    assignment over the first K = √(N/2) store rows
+    (advanced_ops._top1_cell_frame, the IVF posting build at another
+    K). Materialized once per dataset (catalog.cached_index): Spark
+    does not share subplans, so the two consumers inside one SemDeDup
+    query (cell grouping and the per-vector verdict join) — plus
+    dedup_embedding_cosine's pair generation — would otherwise each
+    re-run the O(N·K) codebook fold over the corpus. At cluster scale
+    this is the materialized assignment table every SemDeDup pipeline
+    persists."""
+    from .advanced_ops import _top1_cell_frame
+    from .similarity import vector_store
+
+    def build() -> DataFrame:
+        k = _semdedup_k(vector_store(spark, sf_dir).count())
+        return checkpoint_frame(
+            _top1_cell_frame(spark, sf_dir, k).withColumnRenamed("cid", "cluster")
+        )
 
     return cached_index(
         spark,
         sf_dir,
         ("embeddings.parquet",),
         "semdedup_member",
-        lambda: checkpoint_frame(_semdedup_member_frame(spark, sf_dir)),
+        build,
         params=("ksqrt2",),  # K derived from corpus size inside the build
-    )
-
-
-def _semdedup_member_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PRE-checkpoint plan of the cell-assignment build (see
-    _minhash_bands_frame for why this is exposed).
-
-    The codebook (first K = √(N/2) store rows) is BROADCAST-JOINED
-    against the corpus (advanced_ops._broadcast_codebook — the shared
-    coarse-quantizer shape, with the K-literal-expression alternative
-    it replaced argued there) and reduced with a map-side-partial
-    min(struct(neg_sim, cid)): the partial aggregate collapses each
-    vector's K candidates before the shuffle, so the exchange carries
-    N rows no matter how large K grows. Ranking matches the oracle's
-    ROW_NUMBER() ORDER BY sim DESC, cid: min over the lexicographic
-    struct (−sim_quantized, cid), on the SAME round6 cosine the
-    whole family uses."""
-    from .advanced_ops import _broadcast_codebook, _codebook_sim
-    from .similarity import vector_store
-
-    store = vector_store(spark, sf_dir)
-    cent = _broadcast_codebook(spark, sf_dir, _semdedup_k(store.count()))
-    return (
-        store.crossJoin(cent)
-        .select("vec_id", (-_codebook_sim()).alias("neg_sim"), "cid")
-        .groupBy("vec_id")
-        .agg(F.min(F.struct("neg_sim", "cid")).alias("top"))
-        .select("vec_id", F.col("top").getField("cid").cast("long").alias("cluster"))
     )
 
 
@@ -1201,61 +1182,13 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 # BigInteger's 2^31-bit ceiling and Catalyst's stats visitor kills the
 # job with "BigInteger would overflow supported range" — on exactly
 # the slow-converging giant graphs the loop exists for. A parquet
-# round-trip resets stats to REAL file bytes; every 8 rounds bounds
-# the estimate at ~real_bits * 2^8 plus per-round join constants,
-# orders of magnitude under the ceiling, while paying the (tiny,
-# vertex-table-sized) write on 1 round in 8.
+# round-trip resets stats to REAL file bytes (a reliable checkpoint()
+# keeps the inflated originStats too, so catalog.materialize does NOT
+# subsume it); every 8 rounds bounds the estimate at ~real_bits * 2^8
+# plus per-round join constants, orders of magnitude under the
+# ceiling, while paying the (tiny, vertex-table-sized) write on 1
+# round in 8.
 _CC_REROOT_EVERY = 8
-
-
-def _stats_reroot(df: DataFrame, path: str) -> DataFrame:
-    """Materialize df to parquet and read it back: truncates lineage
-    AND resets Catalyst's sizeInBytes statistics to the file's real
-    bytes (both localCheckpoint and reliable checkpoint() keep the
-    inflated originStats — see _CC_REROOT_EVERY; measured on Spark
-    4.1.2 — so catalog.materialize does NOT subsume this). The path is
-    overwritten on reuse; callers alternate two paths so a frame still
-    lazily consumed is never clobbered."""
-    df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
-
-
-class _Reroots:
-    """The stats re-root guard the iterative loops (CC, PageRank) share.
-
-    ``round(df, n)`` re-roots round ``n``'s frame through parquet every
-    _CC_REROOT_EVERY rounds, alternating two catalog.scratch_roots dirs
-    (by the time a path is overwritten, 2·_CC_REROOT_EVERY rounds
-    later, every intervening round has been materialized, so nothing
-    lazily references it). The dirs are allocated LAZILY: most graphs
-    converge before the first boundary and pay no allocation or sweep.
-    ``detach(df)`` materializes the loop's final frame when it landed
-    on a re-root round — it is then a lazy read of a scratch dir the
-    exit sweep is about to delete; any other round's frame is already
-    materialized. Loops call ``sweep()`` in ``finally``: success has
-    detached, and on the error path no frame escapes the loop, so both
-    dirs are unreferenced on every path."""
-
-    def __init__(self, spark: SparkSession, prefix: str):
-        self.spark, self.prefix = spark, prefix
-        self.dirs: list[str] | None = None
-        self.cleanup = None
-        self.rooted = False
-
-    def round(self, df: DataFrame, round_no: int) -> DataFrame:
-        self.rooted = round_no % _CC_REROOT_EVERY == 0
-        if not self.rooted:
-            return df
-        if self.dirs is None:
-            self.dirs, self.cleanup = scratch_roots(self.spark, self.prefix, 2)
-        return _stats_reroot(df, self.dirs[(round_no // _CC_REROOT_EVERY) % 2])
-
-    def detach(self, df: DataFrame) -> DataFrame:
-        return materialize(df) if self.rooted else df
-
-    def sweep(self) -> None:
-        if self.cleanup is not None:
-            self.cleanup()
 
 
 def _undirected_edges(pairs: DataFrame) -> DataFrame:
@@ -1274,21 +1207,20 @@ def _min_label_components(pairs: DataFrame, max_rounds: int = 200) -> DataFrame:
     with synthetic graphs (a 300-link path proves the O(log diameter)
     round count — without the jump, that fixture needs 300 rounds).
     Returns (v, label) for every vertex incident to a pair."""
+    spark = pairs.sparkSession
     edges = _undirected_edges(pairs)
-    # persist(): the initial label table is consumed up to three times
-    # in round 1 (neighbor-min join, hook join, convergence count)
-    # before the first materialized new_labels replaces it; released
-    # explicitly at the end of round 1 (CacheManager entries outlive
-    # driver GC, and this plan is rooted in the per-call edges
-    # checkpoint, so it would leak one vertex-table entry per call).
-    init_labels = labels = (
-        edges.select(F.col("a").alias("v"))
-        .distinct()
-        .withColumn("label", F.col("v"))
-        .persist()
+    # share(): round 1 reads the initial label table three times
+    # (neighbor-min join, hook join, convergence count).
+    labels = share(
+        edges.select(F.col("a").alias("v")).distinct().withColumn("label", F.col("v"))
     )
-    hooked = None
-    reroots = _Reroots(pairs.sparkSession, "cc_labels_reroot")
+    # The two re-root scratch dirs, allocated on the first re-root
+    # round (most graphs converge before it) and alternated, so a dir
+    # is overwritten only 2·_CC_REROOT_EVERY rounds after its write,
+    # when every intervening round has been materialized and nothing
+    # lazily reads it. The finally sweeps them on every path.
+    dirs = cleanup = None
+    rooted = False
     # Loop to the FIXPOINT (changed == 0), not a fixed round cap:
     # returning unconverged labels would silently disagree with the
     # oracle's recursive-CTE fixpoint. The hard ceiling only guards
@@ -1296,13 +1228,6 @@ def _min_label_components(pairs: DataFrame, max_rounds: int = 200) -> DataFrame:
     # pointer jumping, the default 200 rounds allows components of
     # astronomically large diameter (reach doubles per round), not
     # merely 200 hops.
-    #
-    # try/finally: the happy path releases each round's persists inline
-    # (below), but a mid-round failure — executor loss, ANSI overflow,
-    # the convergence count dying — would otherwise leak the round's
-    # CacheManager entries (never GC-released) for the application's
-    # lifetime; `release` re-unpersisting an already-released frame is
-    # a no-op, so the finally only matters on the error path.
     try:
         for round_no in range(1, max_rounds + 1):
             neighbor_min = (
@@ -1310,55 +1235,39 @@ def _min_label_components(pairs: DataFrame, max_rounds: int = 200) -> DataFrame:
                 .groupBy(F.col("b").alias("nv"))
                 .agg(F.min("label").alias("nlabel"))
             )
-            # persist(): both sides of the jump self-join consume hooked,
-            # and Spark shares no subplans — without caching, the hook
-            # subtree (edge join + neighbor-min shuffle) executes twice per
-            # round, which at web-scale edge sets doubles the round's
-            # dominant cost. persist, NOT materialize: it is explicitly
-            # unpersist()ed at the end of the round (a per-round checkpoint
-            # would pin one vertex-sized block set per round, released only
-            # at GC's leisure), it keeps lineage (executor loss recomputes
-            # instead of aborting the loop), and plan growth is not a
-            # concern because new_labels' materialize below re-roots
-            # every round's plan.
-            hooked = (
-                labels.join(neighbor_min, labels.v == F.col("nv"), "left")
-                .select(
-                    "v",
-                    F.least(
-                        F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
-                    ).alias("label"),
-                )
-                .persist()
+            # Both sides of the jump self-join read hooked, and it stays
+            # a plain frame: AQE reuses its inner exchanges (the edge
+            # join's shuffles and the neighbor-min aggregate) across the
+            # two sides, so the hook subtree runs once per round.
+            hooked = labels.join(neighbor_min, labels.v == F.col("nv"), "left").select(
+                "v",
+                F.least(F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))).alias(
+                    "label"
+                ),
             )
             # Pointer jump: label(v) <- label(label(v)). Every label IS a
             # vertex id present in the label table (initial labels are the
             # vertices themselves; mins of labels stay labels), so the
             # lookup always resolves; coalesce is belt-and-braces.
             jump = hooked.select(F.col("v").alias("jv"), F.col("label").alias("jlabel"))
-            new_labels = reroots.round(
-                materialize(
-                    hooked.join(jump, hooked.label == F.col("jv"), "left")
-                    .select(
-                        "v",
-                        F.coalesce(F.col("jlabel"), F.col("label")).alias("label"),
-                    )
-                ),
-                round_no,
+            new_labels = materialize(
+                hooked.join(jump, hooked.label == F.col("jv"), "left").select(
+                    "v", F.coalesce(F.col("jlabel"), F.col("label")).alias("label")
+                )
             )
+            rooted = round_no % _CC_REROOT_EVERY == 0
+            if rooted:
+                if dirs is None:
+                    dirs, cleanup = scratch_roots(spark, "cc_labels_reroot", 2)
+                path = dirs[(round_no // _CC_REROOT_EVERY) % 2]
+                new_labels.write.mode("overwrite").parquet(path)
+                new_labels = spark.read.parquet(path)
             changed = (
                 new_labels.alias("n")
                 .join(labels.alias("o"), F.col("n.v") == F.col("o.v"))
                 .filter(F.col("n.label") != F.col("o.label"))
                 .count()
             )
-            # new_labels is materialized and the round's convergence
-            # count is done — release hooked's blocks now instead of
-            # waiting for driver GC (and the initial label cache after
-            # round 1, its last consumer).
-            hooked.unpersist()
-            if round_no == 1:
-                init_labels.unpersist()
             labels = new_labels
             if changed == 0:
                 break
@@ -1366,10 +1275,13 @@ def _min_label_components(pairs: DataFrame, max_rounds: int = 200) -> DataFrame:
             raise RuntimeError(
                 f"connected components did not converge in {max_rounds} rounds"
             )
-        labels = reroots.detach(labels)
+        # Labels from a re-root round are a lazy read of a scratch dir
+        # the sweep deletes: detach them first.
+        if rooted:
+            labels = materialize(labels)
     finally:
-        release(hooked, init_labels)
-        reroots.sweep()
+        if cleanup is not None:
+            cleanup()
     return labels
 
 
@@ -1483,87 +1395,57 @@ def graph_pagerank_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pagerank_on_pairs(pairs)
 
 
-def _pagerank_on_pairs(pairs: DataFrame, iters: int = PR_ITERS) -> DataFrame:
+def _pagerank_on_pairs(pairs: DataFrame) -> DataFrame:
     """PageRank loop behind graph_pagerank_neardup, exposed on a raw
     (doc_a, doc_b) pair frame so tests can drive it with synthetic
-    graphs (the injected-failure test proves the persist lifecycle is
-    exception-safe; the bounded-stats test drives ``iters`` past the
-    re-root boundary). Returns (doc_id, pagerank).
+    graphs. Returns (doc_id, pagerank).
 
-    The per-iteration checkpoint sits in the SAME stats-compounding
-    family the CC loop diagnosed (_CC_REROOT_EVERY: originStats bit
-    length doubles per round, BigInteger overflow kills the job near
-    round 24). PR_ITERS=3 is safely clear today, but nothing else
-    pins that — so the loop carries the identical parquet re-root
-    guard: any future convergence-driven iteration count stays
-    bounded instead of walking into the overflow."""
+    The per-iteration checkpoint compounds the stats estimate like the
+    CC loop's (_CC_REROOT_EVERY), but PR_ITERS rounds stay below the
+    first re-root boundary, so the loop needs no re-root."""
     edges = _undirected_edges(pairs)
-    # persist(): deg is consumed by the n count, the rank init, AND the
-    # contribution join in EVERY iteration — uncached, the degree
+    # share(): deg is read by the n count, the rank init, AND the
+    # contribution join in EVERY iteration — unshared, the degree
     # shuffle over the edge set re-executes once per PageRank round.
-    deg = (
-        edges.groupBy(F.col("a").alias("v"))
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .persist()
-    )
-    # try/finally: ranks is checkpoint-rooted, so nothing in the
-    # returned plan needs deg — and CacheManager entries are never
-    # GC-released, so the per-call cache (rooted in this call's fresh
-    # edges checkpoint, never deduped across calls) must be released
-    # explicitly on BOTH paths: a failure mid-iteration (executor loss,
-    # ANSI overflow) would otherwise leak deg's entry for the
-    # application's lifetime.
-    reroots = _Reroots(pairs.sparkSession, "pr_ranks_reroot")
-    try:
-        n = deg.count()
-        if n == 0:
-            # An empty edge set has no vertices to rank; without this
-            # guard the teleport base below divides by zero. The select
-            # keeps the (doc_id, pagerank) contract on an empty frame.
-            return deg.select(
-                F.col("v").alias("doc_id"), F.lit(0.0).alias("pagerank")
+    deg = share(edges.groupBy(F.col("a").alias("v")).agg(F.count(F.lit(1)).alias("deg")))
+    n = deg.count()
+    if n == 0:
+        # An empty edge set has no vertices to rank; without this
+        # guard the teleport base below divides by zero. The select
+        # keeps the (doc_id, pagerank) contract on an empty frame.
+        return deg.select(F.col("v").alias("doc_id"), F.lit(0.0).alias("pagerank"))
+    # ROUND(x·1e6)/1e6, not ROUND(x, 6) — see _PR_QUANT: the raw-
+    # double ROUND diverges across engines within 1 ulp of a 6dp
+    # half boundary; scaling first makes both engines round the
+    # same IEEE product double.
+    quant = lambda c: F.round(c * 1000000.0) / 1000000.0  # noqa: E731
+    ranks = deg.select("v", quant(F.lit(1.0) / F.lit(float(n))).alias("r"))
+    # Same IEEE op sequence as the oracle's (1.0 − 0.85)/n in DOUBLE:
+    # DuckDB's bare `1 - 0.85` is DECIMAL subtraction (0.1499999…944 as
+    # a double), Python's is double subtraction (0.1500000…002) — a
+    # ~1e-17 teleport drift that can flip a 6dp rounding boundary, so
+    # the oracle now casts to DOUBLE first and both engines compute the
+    # identical base.
+    base = (1.0 - PR_DAMPING) / float(n)
+    for _ in range(PR_ITERS):
+        contribs = (
+            edges.join(ranks.withColumnRenamed("v", "rv"), F.col("rv") == F.col("a"))
+            .join(deg.select(F.col("v").alias("dv"), "deg"), F.col("dv") == F.col("a"))
+            .select(
+                "b",
+                (F.round(F.col("r") / F.col("deg") * 1000000000.0) / 1000000000.0)
+                .cast("decimal(28,12)")
+                .alias("c"),
             )
-        # ROUND(x·1e6)/1e6, not ROUND(x, 6) — see _PR_QUANT: the raw-
-        # double ROUND diverges across engines within 1 ulp of a 6dp
-        # half boundary; scaling first makes both engines round the
-        # same IEEE product double.
-        quant = lambda c: F.round(c * 1000000.0) / 1000000.0  # noqa: E731
-        ranks = deg.select("v", quant(F.lit(1.0) / F.lit(float(n))).alias("r"))
-        # Same IEEE op sequence as the oracle's (1.0 − 0.85)/n in DOUBLE:
-        # DuckDB's bare `1 - 0.85` is DECIMAL subtraction (0.1499999…944 as
-        # a double), Python's is double subtraction (0.1500000…002) — a
-        # ~1e-17 teleport drift that can flip a 6dp rounding boundary, so
-        # the oracle now casts to DOUBLE first and both engines compute the
-        # identical base.
-        base = (1.0 - PR_DAMPING) / float(n)
-        for it in range(1, iters + 1):
-            contribs = (
-                edges.join(ranks.withColumnRenamed("v", "rv"), F.col("rv") == F.col("a"))
-                .join(deg.select(F.col("v").alias("dv"), "deg"), F.col("dv") == F.col("a"))
-                .select(
-                    "b",
-                    (F.round(F.col("r") / F.col("deg") * 1000000000.0) / 1000000000.0)
-                    .cast("decimal(28,12)")
-                    .alias("c"),
-                )
-                .groupBy("b")
-                .agg(F.sum("c").alias("contrib"))
+            .groupBy("b")
+            .agg(F.sum("c").alias("contrib"))
+        )
+        ranks = materialize(
+            contribs.select(
+                F.col("b").alias("v"),
+                quant(F.lit(base) + PR_DAMPING * F.col("contrib").cast("double")).alias("r"),
             )
-            ranks = reroots.round(
-                materialize(
-                    contribs.select(
-                        F.col("b").alias("v"),
-                        quant(
-                            F.lit(base) + PR_DAMPING * F.col("contrib").cast("double")
-                        ).alias("r"),
-                    )
-                ),
-                it,
-            )
-        ranks = reroots.detach(ranks)
-    finally:
-        release(deg)
-        reroots.sweep()
+        )
     return ranks.select(F.col("v").alias("doc_id"), F.col("r").alias("pagerank"))
 
 

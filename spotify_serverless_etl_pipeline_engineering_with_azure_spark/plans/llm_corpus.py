@@ -186,10 +186,10 @@ def corpus_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "text_repetition_signals",
-    oracle="""
-WITH tok AS (
+# Per-document unigram stats (doc_id, n_tokens, n_unique, top_count):
+# the oracle CTEs and the Spark aggregate the repetition signals and
+# the quality filter both read.
+_SQL_UNIGRAM_STATS = """tok AS (
   SELECT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS t FROM documents
 ),
 uni AS (
@@ -198,7 +198,29 @@ uni AS (
          CAST(MAX(c) AS BIGINT) AS top_count
   FROM (SELECT doc_id, t, COUNT(*) AS c FROM tok GROUP BY doc_id, t)
   GROUP BY doc_id
-),
+)"""
+
+
+def _unigram_stats(docs: DataFrame) -> DataFrame:
+    """One keyed aggregation over (doc, token), map-side combined,
+    then per doc: token count, distinct tokens, top token count."""
+    return (
+        docs.select("doc_id", F.explode(F.split("text", " ")).alias("t"))
+        .groupBy("doc_id", "t")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .groupBy("doc_id")
+        .agg(
+            F.sum("c").cast("long").alias("n_tokens"),
+            F.count(F.lit(1)).alias("n_unique"),
+            F.max("c").cast("long").alias("top_count"),
+        )
+    )
+
+
+@register(
+    "text_repetition_signals",
+    oracle=f"""
+WITH {_SQL_UNIGRAM_STATS},
 big AS (
   SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_bigrams,
          CAST(MAX(c) AS BIGINT) AS top_bigram_count
@@ -234,17 +256,7 @@ def text_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers, so the doubles are bit-identical across engines.
     """
     docs = table(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("t"))
-    uni = (
-        tok.groupBy("doc_id", "t")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("c").cast("long").alias("n_tokens"),
-            F.count(F.lit(1)).alias("n_unique"),
-            F.max("c").cast("long").alias("top_count"),
-        )
-    )
+    uni = _unigram_stats(docs)
     toks = F.split("text", " ")
     bigrams = docs.select(
         "doc_id",
@@ -436,15 +448,7 @@ QF_MAX_TOP_FRAC = 0.15
 @register(
     "corpus_quality_filter",
     oracle=f"""
-WITH tok AS (
-  SELECT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS t FROM documents
-),
-uni AS (
-  SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_tokens,
-         COUNT(*) AS n_unique, CAST(MAX(c) AS BIGINT) AS top_count
-  FROM (SELECT doc_id, t, COUNT(*) AS c FROM tok GROUP BY doc_id, t)
-  GROUP BY doc_id
-)
+WITH {_SQL_UNIGRAM_STATS}
 SELECT doc_id, n_tokens,
        CAST(1.0 - CAST(n_unique AS DOUBLE) / n_tokens AS DOUBLE) AS dup_token_frac,
        CAST(top_count AS DOUBLE) / n_tokens AS top_token_frac,
@@ -471,18 +475,7 @@ def corpus_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-local rule evaluation — the decision layer adds nothing to the
     shuffle footprint of the signals it reads.
     """
-    docs = table(spark, sf_dir, "documents")
-    uni = (
-        docs.select("doc_id", F.explode(F.split("text", " ")).alias("t"))
-        .groupBy("doc_id", "t")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("c").cast("long").alias("n_tokens"),
-            F.count(F.lit(1)).alias("n_unique"),
-            F.max("c").cast("long").alias("top_count"),
-        )
-    )
+    uni = _unigram_stats(table(spark, sf_dir, "documents"))
     dup = F.lit(1.0) - F.col("n_unique").cast("double") / F.col("n_tokens")
     top = F.col("top_count").cast("double") / F.col("n_tokens")
     reason = (

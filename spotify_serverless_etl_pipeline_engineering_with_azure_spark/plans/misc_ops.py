@@ -71,8 +71,8 @@ def ref_x2_runid_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's spotify_raw_<ts> naming, spotifyextract.py:92 /
     spotifytransform.py:101-105) names a run-scoped output directory
     via run_output_dir; the aggregate is written there, read back
-    through the run_id=* partition glob, and the recovered partition
-    value is validated against the 14-digit pattern INSIDE the hashed
+    as a run_id partition, and the recovered partition value is
+    validated against the 14-digit pattern INSIDE the hashed
     result. The timestamp itself can't be in a deterministic oracle —
     its shape and the data round-trip are.
     """
@@ -85,8 +85,7 @@ def ref_x2_runid_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rmtree would destroy files backing previously returned frames),
     # and — unlike the old bare-uuid /tmp dirs, which nothing ever
     # reclaimed — nested under the swept app root so a long-lived
-    # driver's leftovers are bounded and dead apps' are collected. The
-    # run-unique base also keeps the run_id=* glob scoped to this run.
+    # driver's leftovers are bounded and dead apps' are collected.
     base = sink_run_dir(spark, "runid", sf_dir)
     out = run_output_dir(base, "orders", run_id)
     agg = (
@@ -95,9 +94,10 @@ def ref_x2_runid_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
     )
     agg.write.mode("overwrite").parquet(out)
-    back = spark.read.option("basePath", f"{base}/transformed_data/orders_data").parquet(
-        f"{base}/transformed_data/orders_data/run_id=*"
-    )
+    # The run dir itself, not a run_id=* glob: the basePath still
+    # recovers run_id as a partition column, and Spark logs a
+    # FileNotFoundException warning for every glob read-back.
+    back = spark.read.option("basePath", f"{base}/transformed_data/orders_data").parquet(out)
     rid = F.col("run_id").cast("string")
     return back.select(
         "o_orderpriority",

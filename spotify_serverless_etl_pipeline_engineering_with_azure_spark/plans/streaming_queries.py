@@ -321,6 +321,8 @@ def streaming_csv_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     failing leaves 0 files archived after the 60 s bounded poll and
     flips the row red.
     """
+    import glob
+
     from ..catalog import sink_run_dir, table
     from ..functions.exact import dsum
     from ..operators.sinks import write_csv
@@ -363,11 +365,12 @@ def streaming_csv_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def read_back(name: str, value_field: str) -> DataFrame:
+        # The batch dirs, not a glob (see run_to_parquet's read-back).
         df = (
             spark.read.schema(f"event_id long, event_type string, {value_field}")
             .option("header", True)
             .option("basePath", f"{out}/{name}")
-            .csv(f"{out}/{name}/batch_id=*")
+            .csv(glob.glob(f"{out}/{name}/batch_id=*"))
         )
         return df.drop("batch_id")
 
@@ -390,12 +393,11 @@ def streaming_csv_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the cleaner thread is asynchronous; 60 s is insurance against a
     # loaded host, paid only on the failure path because the poll exits
     # the moment the threshold is met).
-    import glob as _glob
     import time as _time
 
     n_archived = 0
     for _ in range(60):
-        n_archived = len(_glob.glob(f"{archive}/**/*.parquet", recursive=True))
+        n_archived = len(glob.glob(f"{archive}/**/*.parquet", recursive=True))
         if n_archived >= 2:
             break
         _time.sleep(1)

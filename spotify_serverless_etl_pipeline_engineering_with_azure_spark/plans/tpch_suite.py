@@ -33,12 +33,9 @@ from ..functions.exact import (
     sql_dsum,
 )
 from ..registry import register
+from .analytics import _revenue_col
 
 REVENUE = "l_extendedprice * (1 - l_discount)"  # exact at 4 dp
-
-
-def _rev() -> F.Column:
-    return F.col("l_extendedprice") * (1 - F.col("l_discount"))
 
 
 def _ts(s: str) -> F.Column:
@@ -210,7 +207,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             "supp_nation",
             "cust_nation",
             F.year("l_shipdate").alias("l_year"),
-            _rev().alias("volume"),
+            _revenue_col().alias("volume"),
         )
         .groupBy("supp_nation", "cust_nation", "l_year")
         .agg(dsum(F.col("volume"), 6).alias("revenue"))
@@ -286,7 +283,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(ord2, F.col("o_orderkey") == F.col("l_orderkey"))
         .select(
             F.year("o_orderdate").alias("o_year"),
-            _rev().alias("volume"),
+            _revenue_col().alias("volume"),
             "nation",
         )
     )
@@ -329,7 +326,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = table(spark, sf_dir, "supplier")
     orders = table(spark, sf_dir, "orders")
     nation = table(spark, sf_dir, "nation")
-    amount = _rev() - F.col("p_retailprice") * F.col("l_quantity") * 0.1
+    amount = _revenue_col() - F.col("p_retailprice") * F.col("l_quantity") * 0.1
     return (
         li.join(part, F.col("p_partkey") == F.col("l_partkey"))
         .join(supp, F.col("s_suppkey") == F.col("l_suppkey"))
@@ -378,7 +375,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(cust, F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(dsum(_rev(), 6).alias("revenue"))
+        .agg(dsum(_revenue_col(), 6).alias("revenue"))
         .select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name")
         .orderBy(F.desc("revenue"), F.asc("c_custkey"))
         .limit(20)
@@ -415,7 +412,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     and aggregate the full fact a second time)."""
     li = table(spark, sf_dir, "lineitem")
     # shared by the threshold and the probe
-    per = share(li.groupBy("l_partkey").agg(*dsum_parts(_rev(), 6, "pv")))
+    per = share(li.groupBy("l_partkey").agg(*dsum_parts(_revenue_col(), 6, "pv")))
     per_part = per.select(
         "l_partkey",
         dsum_from_parts(F.col("pv_hi"), F.col("pv_lo"), 6).alias("part_value"),
@@ -492,11 +489,11 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     part = table(spark, sf_dir, "part")
     num = F.sum(
-        F.when(F.col("p_type") == "PROMO", dec(_rev(), 6)).otherwise(
+        F.when(F.col("p_type") == "PROMO", dec(_revenue_col(), 6)).otherwise(
             F.lit(0).cast("decimal(18,6)")
         )
     ).cast("double")
-    den = F.sum(dec(_rev(), 6)).cast("double")
+    den = F.sum(dec(_revenue_col(), 6)).cast("double")
     return (
         li.join(part, F.col("l_partkey") == F.col("p_partkey"))
         .agg((F.lit(100.0) * num / den).alias("promo_revenue"))
@@ -531,7 +528,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shared by the probe and the scalar MAX
     revenue = share(
         li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-            dsum(_rev(), 6).alias("total_revenue")
+            dsum(_revenue_col(), 6).alias("total_revenue")
         )
     )
     # Scalar MAX + equality join (the q2 pattern), NOT rank() over an
@@ -738,7 +735,7 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(part, F.col("p_partkey") == F.col("l_partkey"))
         .filter(branch)
-        .agg(dsum(_rev(), 6).alias("revenue"))
+        .agg(dsum(_revenue_col(), 6).alias("revenue"))
     )
 
 

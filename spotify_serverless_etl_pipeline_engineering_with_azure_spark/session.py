@@ -32,16 +32,17 @@ SPARK_GRAFT_EXTRA_CONFS brings it back for debugging.
 Checkpoint hygiene: the SparkContext checkpoint dir is the engine's
 one durability switch. Set it (``sc.setCheckpointDir`` or the
 ``spark.checkpoint.dir`` conf, e.g. through SPARK_GRAFT_EXTRA_CONFS)
-and every eager materialization — index builds, iterative-loop round
-boundaries, shared in-query aggregates (catalog.materialize) — becomes
-a reliable checkpoint on that shared storage, and the CC/PageRank
-stats re-roots land under it too (catalog.scratch_roots). A cluster
-deployment that sets it must also set
-``spark.cleaner.referenceTracking.cleanCheckpoints=true`` so Spark
-reclaims superseded ``rdd-*`` dirs; it is off by default, and without
-it CC/PageRank accumulate O(rounds) vertex-sized dirs per invocation.
-Local mode (no checkpoint dir) uses executor-local checkpoints and
-writes none.
+and every shared frame — index builds, iterative-loop round
+boundaries and the frames a query reads twice (catalog.materialize,
+catalog.share) — becomes a reliable checkpoint on that shared
+storage, and the CC stats re-roots land under it too
+(catalog.scratch_roots). A cluster deployment that sets it must also
+set ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` so
+Spark reclaims superseded ``rdd-*`` dirs; it is off by default, and
+without it CC/PageRank accumulate O(rounds) vertex-sized dirs per
+invocation. Local mode (no checkpoint dir) uses executor-local
+checkpoints and writes none; either way ContextCleaner frees a
+shared frame's blocks once it is unreachable.
 """
 
 from __future__ import annotations

@@ -269,6 +269,8 @@ def run_to_parquet(
         # append emits disjoint per-trigger deltas, so the union of all
         # batch dirs is the stream's full output; update re-emits a
         # group in every trigger that changes it, so update-mode
-        # callers assert a single data batch.
-        back = reader.parquet(f"{run}/data/batch_id=*")
+        # callers assert a single data batch. The listed dirs, not a
+        # glob: Spark probes a glob path for a file-sink metadata dir
+        # and logs a FileNotFoundException warning per read-back.
+        back = reader.parquet(*batches)
     return back, q

@@ -200,10 +200,17 @@ INDEX_BUILD_FRAMES = {
     # hides it from minhash_pairs' plan.
     "minhash_stats": lambda s, sf: _dedup._minhash_stats_frame(_dedup._minhash_index(s, sf)[0]),
     "ngram_index": lambda s, sf: _dedup._ngram_index_frame(s, sf),
-    "semdedup_member": lambda s, sf: _dedup._semdedup_member_frame(s, sf),
+    "semdedup_member": lambda s, sf: _advanced_ops._top1_cell_frame(
+        s, sf, _dedup._semdedup_k(_similarity.vector_store(s, sf).count())
+    ),
     "lsh_index": lambda s, sf: _similarity._lsh_index_frame(s, sf),
-    "ivf_member": lambda s, sf: _advanced_ops._ivf_member_frame(s, sf),
-    "ivf_probe_cells": lambda s, sf: _advanced_ops._ivf_probe_cells_frame(s, sf),
+    # k and nprobe are the IVF index's own (its build derives them).
+    "ivf_member": lambda s, sf: _advanced_ops._top1_cell_frame(
+        s, sf, _advanced_ops._ivf_index(s, sf)["k"]
+    ),
+    "ivf_probe_cells": lambda s, sf: _advanced_ops._ivf_probe_cells_frame(
+        s, sf, _advanced_ops._ivf_index(s, sf)["k"], _advanced_ops._ivf_index(s, sf)["nprobe"]
+    ),
     "vector_store": lambda s, sf: _similarity._vector_store_frame(s, sf),
 }
 

@@ -644,45 +644,6 @@ def test_connected_components_stats_stay_bounded_across_rounds(spark):
     assert set(pdf.label) == {0}
 
 
-def test_pagerank_stats_stay_bounded_across_iterations(spark):
-    """PageRank's per-iteration checkpoint sits in the SAME
-    stats-compounding family the CC loop diagnosed (originStats bit
-    length doubles per round; java BigInteger overflow kills the job
-    near round 24). PR_ITERS=3 is clear today but nothing pinned it —
-    the loop now carries the identical _CC_REROOT_EVERY parquet
-    re-root guard. Drive 18 iterations (two re-root boundaries, both
-    alternating scratch paths) and require a FILE-sized final
-    estimate, exact row coverage, and total rank mass ~1 — and that
-    the post-loop scratch sweep left the returned frame readable."""
-    import glob
-    import tempfile
-
-    from spotify_serverless_etl_pipeline_engineering_with_azure_spark.plans.dedup import (
-        _CC_REROOT_EVERY,
-        _pagerank_on_pairs,
-    )
-
-    assert _CC_REROOT_EVERY <= 9  # 18 iterations must cross >= 2 boundaries
-    n = 20
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(n)], "doc_a long, doc_b long"
-    )
-    # tempfile.gettempdir(), not a literal /tmp: mkdtemp honors
-    # TMPDIR, and a hardcoded /tmp would make both snapshots empty
-    # under a non-default TMPDIR — the leak check passing vacuously.
-    tmp = tempfile.gettempdir()
-    before = set(glob.glob(f"{tmp}/pr_ranks_reroot_*"))
-    out = _pagerank_on_pairs(pairs, iters=18)
-    bits = int(
-        out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    ).bit_length()
-    assert bits < 1000, f"stats estimate escaped the re-root cap: {bits} bits"
-    pdf = out.toPandas()  # FileNotFound here = sweep ran before detach
-    assert len(pdf) == n + 1
-    assert abs(pdf.pagerank.sum() - 1.0) < 1e-3
-    assert set(glob.glob(f"{tmp}/pr_ranks_reroot_*")) == before, "scratch dirs leaked"
-
-
 def test_cc_converging_on_reroot_boundary_detaches_before_sweep(spark, monkeypatch):
     """The post-fixpoint sweep deletes both scratch parquet dirs —
     if convergence lands exactly on a re-root round, the final label
@@ -791,55 +752,6 @@ def test_scratch_roots_resolution_and_cleanup(spark, tmp_path):
     spark.range(5).write.mode("overwrite").parquet(paths[1])
     cleanup()
     assert not any(os.path.exists(p) for p in local)
-
-
-def test_iterative_persist_lifecycles_are_exception_safe(spark, monkeypatch):
-    """A failure mid-iteration (executor loss, ANSI overflow — the
-    events the durable-index work anticipates) must not leak
-    CacheManager entries: entries are never GC-released, so without a
-    try/finally every aborted loop pins its round's persisted frames
-    for the application's lifetime. Inject a failure at the first
-    action each loop runs after persisting (the convergence/degree
-    count) and assert every frame the loop persisted was unpersisted."""
-    import pytest
-
-    from spotify_serverless_etl_pipeline_engineering_with_azure_spark.plans.dedup import (
-        _min_label_components,
-        _pagerank_on_pairs,
-    )
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(20)], "doc_a long, doc_b long"
-    )
-    # Patch the CONCRETE class: pyspark 4's classic DataFrame subclass
-    # overrides count/persist, so patching pyspark.sql.DataFrame (the
-    # abstract parent) would never intercept the loop's calls.
-    DataFrame = type(pairs)
-
-    for loop_fn in (_min_label_components, _pagerank_on_pairs):
-        persisted_frames: list = []
-        orig_persist = DataFrame.persist
-
-        def recording_persist(self, *a, **k):
-            out = orig_persist(self, *a, **k)
-            persisted_frames.append(out)
-            return out
-
-        def failing_count(self):
-            raise RuntimeError("injected mid-iteration failure")
-
-        with pytest.MonkeyPatch.context() as mp:
-            mp.setattr(DataFrame, "persist", recording_persist)
-            mp.setattr(DataFrame, "count", failing_count)
-            with pytest.raises(RuntimeError, match="injected"):
-                loop_fn(pairs)
-        assert persisted_frames, f"{loop_fn.__name__} persisted nothing?"
-        for f in persisted_frames:
-            lvl = f.storageLevel
-            assert not (lvl.useMemory or lvl.useDisk), (
-                f"{loop_fn.__name__} leaked a CacheManager entry on the "
-                f"error path: {lvl}"
-            )
 
 
 def test_checkpoint_frame_search_parallelism_floor(spark, tmp_path, monkeypatch):

@@ -406,7 +406,7 @@ def test_ivf_inverted_lists_are_a_posting_table(spark):
         t.startswith("array") for t in cells.values()
     ), f"IVF cells regressed away from the (cid, vec_id) posting table: {cells}"
     plan = (
-        _advanced_ops._ivf_member_frame(spark, SF_SMOKE)
+        _advanced_ops._top1_cell_frame(spark, SF_SMOKE, idx["k"])
         ._jdf.queryExecution()
         .optimizedPlan()
         .toString()

@@ -7,7 +7,7 @@ importing a deleted function would otherwise only fail when someone
 next runs it. Each file is parsed, never executed.
 
 The package also shares frames in one place: only catalog.py
-checkpoints, and only the CC/PageRank round loops persist."""
+checkpoints, and nothing persists."""
 
 from __future__ import annotations
 
@@ -196,49 +196,25 @@ def sharing_calls(source: str) -> list[tuple[int, str | None, str]]:
     return sorted(found)
 
 
-# The CC and PageRank round loops: their persist()s are unpersisted each
-# round, and by release() on the error path.
-PERSIST_OWNERS = {f"{PACKAGE}/plans/dedup.py": {"_min_label_components", "_pagerank_on_pairs"}}
-
-
 def sharing_violations(path: str, source: str) -> list[str]:
-    """Checkpoints outside catalog.py, and persists outside a
-    PERSIST_OWNERS function that calls release()."""
-    owners = PERSIST_OWNERS.get(path, set())
-    releasing = {
-        top.name
-        for top in ast.parse(source).body
-        if isinstance(top, ast.FunctionDef)
-        and any(
-            isinstance(n, ast.Call) and isinstance(n.func, ast.Name) and n.func.id == "release"
-            for n in ast.walk(top)
-        )
-    }
-    bad = []
-    for line, func, method in sharing_calls(source):
-        if method == "persist":
-            ok = func in owners and func in releasing
-        else:
-            ok = path == f"{PACKAGE}/catalog.py"
-        if not ok:
-            bad.append(f"{path}:{line}: .{method}( in {func}")
-    return bad
+    """Checkpoints outside catalog.py, and every persist."""
+    return [
+        f"{path}:{line}: .{method}( in {func}"
+        for line, func, method in sharing_calls(source)
+        if method == "persist" or path != f"{PACKAGE}/catalog.py"
+    ]
 
 
-def test_only_catalog_checkpoints_and_only_round_loops_persist():
+def test_only_catalog_checkpoints_and_nothing_persists():
     """catalog.materialize and catalog.share are the only checkpoints,
-    so the checkpoint dir governs every shared frame; a CacheManager
-    entry outlives its frame, so only the loops that release() it
-    persist."""
-    bad, persisting = [], set()
+    so the checkpoint dir governs every shared frame, and ContextCleaner
+    frees each one once it is unreachable; a CacheManager entry
+    outlives its frame, so nothing persists."""
+    bad = []
     for path in PACKAGE_FILES:
         with open(os.path.join(ROOT, path), encoding="utf-8") as f:
-            source = f.read()
-        bad += sharing_violations(path, source)
-        persisting |= {(path, func) for _, func, m in sharing_calls(source) if m == "persist"}
-    assert not bad, f"checkpoint or persist outside catalog.share/materialize: {bad}"
-    owners = {(path, func) for path, funcs in PERSIST_OWNERS.items() for func in funcs}
-    assert persisting == owners, "PERSIST_OWNERS names a function that no longer persists"
+            bad += sharing_violations(path, f.read())
+    assert not bad, f"checkpoint outside catalog.share/materialize, or a persist: {bad}"
 
 
 def test_sharing_scan_flags_a_bare_local_checkpoint():
@@ -250,3 +226,6 @@ def test_sharing_scan_flags_a_bare_local_checkpoint():
         f"{PACKAGE}/plans/dedup.py:2: .localCheckpoint( in q"
     ]
     assert not sharing_violations(f"{PACKAGE}/catalog.py", source)
+    persisting = "def q(spark, df):\n    return df.groupBy('k').count().persist()\n"
+    for path in (f"{PACKAGE}/plans/dedup.py", f"{PACKAGE}/catalog.py"):
+        assert sharing_violations(path, persisting) == [f"{path}:2: .persist( in q"]

@@ -28,6 +28,8 @@ from verify_scale import (  # noqa: E402
 )
 
 from spotify_serverless_etl_pipeline_engineering_with_azure_spark.plans.dedup import (  # noqa: E402
+    _CC_REROOT_EVERY,
+    PR_ITERS,
     _min_label_components,
     _pagerank_on_pairs,
 )
@@ -120,6 +122,9 @@ def test_pagerank_reference_matches_engine_on_irregular_graph(spark):
     # A hub-and-spokes star (irregular degrees, so ranks do NOT
     # converge to uniform), a triangle, and a long path — the mirror's
     # quantized iterations must be bit-identical to the engine's.
+    # The loop has no stats re-root: it must end before the round at
+    # which the CC loop needs one.
+    assert PR_ITERS < _CC_REROOT_EVERY
     edges = (
         [(1, k) for k in range(2, 12)]
         + [(20, 21), (21, 22), (20, 22)]
