@@ -9,8 +9,10 @@ Two primitives compute a frame once for several readers:
 - ``materialize(df)``: EAGER. Index builds and iterative-loop round
   boundaries; the caller holds the result (``cached_index`` keeps an
   index across calls).
-- ``share(df)``: LAZY. A frame that several consumers of one query
-  read; the first action computes it.
+- ``share(df)``: a frame that several consumers of one query read.
+  Without a checkpoint dir it is lazy only for a narrow frame: a
+  frame with a shuffle runs its shuffle-map stages at ``share()``,
+  and the first action computes the rest.
 Both are checkpoints, reliable under the SparkContext checkpoint dir
 and local without one, so both release by garbage collection: Spark's
 ContextCleaner frees a checkpoint's blocks once no driver reference
@@ -37,12 +39,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-# Dimensions small enough to broadcast at ANY scale factor (bounded
-# cardinality): always broadcast these in joins. Larger dims are left to
-# AQE / autoBroadcastJoinThreshold.
-ALWAYS_BROADCAST = {"region", "nation"}
-
 
 # Loaded-table cache: spark.read.parquet costs a ~60 ms py4j round
 # trip (file listing + footer/schema read) per call, and a query plan
@@ -195,13 +191,17 @@ def share(df: DataFrame) -> DataFrame:
 
     Spark shares no subplan, so N consumers of one frame compute it N
     times. Under a checkpoint dir this is ``materialize`` (durable, one
-    extra job). Without one it is a LAZY local checkpoint: the first
-    action computes and stores the blocks, later reads reuse them. The
-    result is never cached across calls, so a rebuilt query reads the
-    data as it is now, and Spark's ContextCleaner frees the blocks once
-    the frame is unreachable. A ``persist`` would not do: CacheManager
-    entries are never released by driver GC, and callers of ``share``
-    get no release hook."""
+    extra job). Without one it is a local checkpoint with
+    ``eager=False``: the first action computes and stores the blocks,
+    later reads reuse them. That is lazy only for a narrow frame (no
+    shuffle): for a frame with a shuffle, turning the adaptive plan
+    into an RDD runs its shuffle-map stages at ``share()``, one job
+    per exchange, before any action. The result is never cached
+    across calls, so a rebuilt query reads the data as it is now, and
+    Spark's ContextCleaner frees the blocks once the frame is
+    unreachable. A ``persist`` would not do: CacheManager entries are
+    never released by driver GC, and callers of ``share`` get no
+    release hook."""
     if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return materialize(df)
     return df.localCheckpoint(eager=False)

@@ -71,6 +71,13 @@ def round6(col: Column) -> Column:
     return roundk(col, 6)
 
 
+def cosine6(a: str, b: str, na: str, nb: str) -> Column:
+    """``round6`` cosine of vector columns ``a`` and ``b`` over their
+    precomputed norm columns ``na`` and ``nb``: the Spark twin of
+    :func:`sql_cosine6`, one dot fold per pair."""
+    return round6(dot(F.col(a), F.col(b)) / (F.col(na) * F.col(nb)))
+
+
 def sql_dot(a: str, b: str) -> str:
     """DuckDB fragment mirroring :func:`dot` BIT-FOR-BIT: elementwise
     double products folded left-to-right. Replaces

@@ -28,8 +28,8 @@ from ..catalog import (
     share,
     table,
 )
-from ..functions.exact import dsum
 from ..registry import register
+from .behavior_ops import SQL_FUNNEL_STEPS
 
 
 # ---------------------------------------------------------------------------
@@ -241,11 +241,9 @@ def _codebook_sim():
     """round6 cosine of the row vector against a joined codebook row —
     the SAME quantized left-to-right folds as the oracle's
     sql_cosine6, so assignment ranks identically on both engines."""
-    from ..functions.vectors import dot, round6
+    from ..functions.vectors import cosine6
 
-    return round6(
-        dot(F.col("embedding"), F.col("cemb")) / (F.col("nrm") * F.col("cnrm"))
-    )
+    return cosine6("embedding", "cemb", "nrm", "cnrm")
 
 
 def _ivf_index(spark: SparkSession, sf_dir: str) -> dict:
@@ -369,10 +367,8 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     changes recall, not the plan shape. SIZING: K = √N and nprobe = √K,
     both derived from the corpus and mirrored in the oracle as
     subqueries (_ivf_k/_ivf_nprobe) — per-query cost is nprobe·N/K ≈
-    N/√K, sublinear in the corpus. The fixed K=8 this replaced made
-    every query scan 3N/8: round 6's 100x probe expanded ~0.5 billion
-    vector-carrying candidate rows and filled the host's disk with
-    shuffle spill.
+    N/√K, sublinear in the corpus; a fixed K would make every query
+    scan a fixed fraction of the corpus.
 
     Scale posture: candidate generation is a keyed join of the
     probe→cell map against the posting-table inverted lists — and BOTH
@@ -381,16 +377,17 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream is born inside the cid join carrying everything its cosine
     needs and is reduced map-side by WindowGroupLimit's partial top-k
     before its only exchange. Attaching vectors AFTER candidate
-    expansion (the previous shape) shuffles O(candidates) rows ~550
-    bytes wide — quadratic bytes under a fixed K. A hot cell is the
-    skew case; the cid join is left un-hinted and AQE's skew-join
-    splits it (the probe side is a fixed 1/29 corpus slice here, a
-    request-queue-bounded batch in serving, so no forced broadcast:
-    past the 8 GB bound it would die). Pairs need no dedup: each
-    neighbor lives in exactly one cell and each (probe, cell) edge is
-    distinct.
+    expansion would shuffle O(candidates) rows ~550 bytes wide. A hot
+    cell is the skew case; the cid join is left un-hinted and AQE's
+    skew-join splits it (the probe side is a fixed 1/29 corpus slice
+    here, a request-queue-bounded batch in serving, so no forced
+    broadcast: past the 8 GB bound it would die). Pairs need no
+    dedup: each neighbor lives in exactly one cell and each (probe,
+    cell) edge is distinct.
     """
-    from ..functions.vectors import dot, round6
+    from ..functions.vectors import cosine6
+
+    from .similarity import probe_top_k
 
     idx = _ivf_index(spark, sf_dir)
     nb = idx["cells"].join(idx["vectors"], "vec_id").select(
@@ -407,19 +404,13 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "probe_id",
     )
-    pair_sim = round6(
-        dot(F.col("a_emb"), F.col("b_emb")) / (F.col("a_nrm") * F.col("b_nrm"))
-    )
-    w_rank = Window.partitionBy("probe_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
+    pair_sim = cosine6("a_emb", "b_emb", "a_nrm", "b_nrm")
+    scored = (
         nb.join(pr, "cid")
         .filter(F.col("neighbor_id") != F.col("probe_id"))
         .select("probe_id", "neighbor_id", pair_sim.alias("cos_sim"))
-        .withColumn("rk", F.row_number().over(w_rank))
-        .filter(F.col("rk") <= _TOPK)
     )
+    return probe_top_k(scored, _TOPK, "rk")
 
 
 # ---------------------------------------------------------------------------
@@ -816,22 +807,8 @@ def timeseries_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "streaming_stateful_funnel",
-    oracle="""
-WITH s1 AS (
-  SELECT user_id, MIN(ts) AS t1 FROM events WHERE event_type = 'view' GROUP BY user_id
-),
-s2 AS (
-  SELECT e.user_id, MIN(e.ts) AS t2
-  FROM events e JOIN s1 ON e.user_id = s1.user_id
-  WHERE e.event_type = 'click' AND e.ts > s1.t1
-  GROUP BY e.user_id
-),
-s3 AS (
-  SELECT e.user_id, MIN(e.ts) AS t3
-  FROM events e JOIN s2 ON e.user_id = s2.user_id
-  WHERE e.event_type = 'purchase' AND e.ts > s2.t2
-  GROUP BY e.user_id
-)
+    oracle=f"""
+WITH {SQL_FUNNEL_STEPS}
 SELECT 1 AS step, 'view' AS step_name, COUNT(*) AS n_users FROM s1
 UNION ALL
 SELECT 2, 'click', COUNT(*) FROM s2

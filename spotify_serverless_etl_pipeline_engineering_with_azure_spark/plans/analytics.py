@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from ..catalog import share, table
 from ..functions.exact import davg, dec, dsum, sql_davg, sql_dsum, roundk
 from ..registry import register
+from ..streaming.pipeline import SQL_SESSIONS, WINDOWED_COUNTS_SQL, windowed_counts
 
 REVENUE = "l_extendedprice * (1 - l_discount)"  # true precision: 4 dp
 CHARGE = "l_extendedprice * (1 - l_discount) * (1 + l_tax)"  # 6 dp
@@ -365,8 +366,8 @@ def join_broadcast_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a forced hint would OOM executors once a dim outgrows memory): at
     test SF AQE broadcasts both and the fact never shuffles; at the
     100 TB posture the planner degrades honestly to shuffle joins on
-    l_partkey/l_suppkey — the bounded-dim always-broadcast policy
-    (catalog.ALWAYS_BROADCAST) deliberately covers region/nation only.
+    l_partkey/l_suppkey. Only the bounded region/nation dimensions get
+    hand-written ``F.broadcast`` hints.
     The deterministic exchange is the 25-group aggregation.
     """
     li = table(spark, sf_dir, "lineitem")
@@ -825,44 +826,18 @@ def array_ops_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Event-time windows (batch shadows of the streaming ops)
 # ---------------------------------------------------------------------------
-@register(
-    "events_tumbling_window",
-    oracle="""
-SELECT TIME_BUCKET(INTERVAL '1 hour', CAST(ts AS TIMESTAMP)) AS window_start,
-       event_type,
-       COUNT(*) AS n_events,
-       CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS sum_value
-FROM events
-GROUP BY 1, 2
-""",
-    tags=("window", "event-time"),
-)
+@register("events_tumbling_window", oracle=WINDOWED_COUNTS_SQL, tags=("window", "event-time"))
 def events_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling event-time window aggregation (batch form of S3's stream)."""
-    ev = table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"), dsum(F.col("value"), 2).alias("sum_value"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_value")
-    )
+    """Tumbling event-time window aggregation: S3's streaming
+    windowed_counts run as a batch query (a batch plan drops the
+    watermark)."""
+    return windowed_counts(table(spark, sf_dir, "events"))
 
 
 @register(
     "events_sessionization",
-    oracle="""
-WITH flagged AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN EPOCH_US(CAST(ts AS TIMESTAMP)) - EPOCH_US(CAST(LAG(ts) OVER w AS TIMESTAMP)) > 1800000000
-              OR LAG(ts) OVER w IS NULL THEN 1 ELSE 0 END AS new_session
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-sessions AS (
-  SELECT user_id, ts, event_id,
-         CAST(SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq
-  FROM flagged
-)
+    oracle=f"""
+WITH {SQL_SESSIONS}
 SELECT user_id, session_seq, COUNT(*) AS n_events,
        CAST(MIN(ts) AS TIMESTAMP) AS session_start,
        CAST(MAX(ts) AS TIMESTAMP) AS session_end

@@ -15,7 +15,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from pyspark.sql.window import Window, WindowSpec
 
 from ..catalog import materialize, share, table
 from ..functions.exact import dec, sql_dsum
@@ -26,11 +26,9 @@ from ..registry import register
 # occurrence — the standard strict-ordering funnel).
 _FUNNEL_STEPS = ("view", "click", "purchase")
 
-
-@register(
-    "events_funnel_conversion",
-    oracle="""
-WITH s1 AS (
+# The funnel's DuckDB step CTEs: s1..s3 hold each user's first time at
+# that step, strictly after the previous step's first time.
+SQL_FUNNEL_STEPS = """s1 AS (
   SELECT user_id, MIN(ts) AS t1 FROM events WHERE event_type = 'view' GROUP BY user_id
 ),
 s2 AS (
@@ -44,7 +42,23 @@ s3 AS (
   FROM events e JOIN s2 ON e.user_id = s2.user_id
   WHERE e.event_type = 'purchase' AND e.ts > s2.t2
   GROUP BY e.user_id
-),
+)"""
+
+
+def _running_per_user() -> WindowSpec:
+    """Each user's events in (ts, event_id) order, framed from the
+    first event up to the current one."""
+    return (
+        Window.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+
+
+@register(
+    "events_funnel_conversion",
+    oracle=f"""
+WITH {SQL_FUNNEL_STEPS},
 steps AS (
   SELECT 1 AS step, 'view' AS step_name, COUNT(*) AS n_users FROM s1
   UNION ALL
@@ -268,11 +282,7 @@ def events_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame
         .filter(F.col("event_type").isin("click", "purchase"))
         .select("user_id", "ts", "event_id", "event_type")
     )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    w = _running_per_user()
     last_click = F.max(
         F.when(F.col("event_type") == "click", F.col("ts"))
     ).over(w)
@@ -565,11 +575,7 @@ def events_point_in_time_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("event_type") == "signup", F.col("value")).alias("dim_value"),
         )
     )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    w = _running_per_user()
     carried = ev.withColumn(
         "dim_value_at", F.last("dim_value", ignorenulls=True).over(w)
     )

@@ -767,19 +767,17 @@ def _cell_pair_cosines(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Each side CARRIES its vector and norm through the cell join, and
     the cosine is computed in the join's output pipeline — the
-    quadratic pair stream is never exchanged. Round 6's 100x probe
-    killed the previous shape (join bare (va, vb) ids, then attach
-    vectors via two vec_id equi-joins against the store): those
-    attach joins hash-partition their PROBE side, so O(Σ cell²) rows
-    ~550 bytes wide went through two full shuffles — quadratic bytes
-    on the wire, 78 GB of spill at 200k vectors. Carrying vectors
-    makes the shuffled volume corpus-sized (N·(1+salts) store rows);
-    consumers reduce the pair stream map-side (filter ≥ τ, or partial
-    max per vb) before anything else is exchanged.
+    quadratic pair stream is never exchanged. Joining bare (va, vb)
+    ids and attaching vectors afterwards would hash-partition the
+    O(Σ cell²) pair rows, ~550 bytes wide, through two shuffles.
+    Carrying vectors makes the shuffled volume corpus-sized
+    (N·(1+salts) store rows); consumers reduce the pair stream
+    map-side (filter ≥ τ, or partial max per vb) before anything else
+    is exchanged.
 
     Hot cells get the join_salted treatment, implemented here with a
-    fan-out DERIVED from each cell's measured width (never a constant —
-    the round-6 probe's lesson): a broadcast (cluster, salts) table
+    fan-out DERIVED from each cell's measured width (never a
+    constant): a broadcast (cluster, salts) table
     (_cell_salt_plan) joins both sides map-side; the left row carries
     salt = vec_id % salts_c, the right row replicates ×salts_c via an
     exploded sequence, and the pair join keys on (cluster, salt). Every
@@ -790,21 +788,18 @@ def _cell_pair_cosines(spark: SparkSession, sf_dir: str) -> DataFrame:
     funnel most of the corpus into one cell — spreads its ~w²/2 pairs
     across ⌈w²/2·budget⌉ reduce tasks instead of serializing on one.
     """
-    from ..functions.vectors import dot, round6
+    from ..functions.vectors import cosine6
 
     from .similarity import vector_store
 
     member = _semdedup_member(spark, sf_dir)
     store = vector_store(spark, sf_dir)
     salts = _cell_salt_plan(member)
-    # Deliberately UNPERSISTED although both pair sides consume it (the
-    # doubled-subtree rule's measure-first clause): the two sides
-    # project differently so no ReusedExchange forms, but caching this
-    # corpus-sized, vector-wide frame costs more than evaluating the
-    # attach join twice — measured at sf1 (r8, interleaved 3 reps):
-    # recompute 7.7 s vs persist 24.7 s end-to-end on
-    # dedup_embedding_cosine; materializing N · ~550 B rows into the
-    # block store dwarfs the second broadcast-salt + store hash join.
+    # Deliberately NOT shared although both pair sides consume it: the
+    # two sides project differently so no ReusedExchange forms, but
+    # storing this corpus-sized, vector-wide frame costs more than
+    # evaluating the attach join twice (OPTIMIZATION_r11.md, "Numbers
+    # moved out of docstrings").
     attached = member.join(store, "vec_id").join(salts, "cluster")
     a = attached.select(
         F.col("cluster").alias("ca"),
@@ -822,9 +817,7 @@ def _cell_pair_cosines(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sequence(F.lit(0), (F.col("salts") - 1).cast("int"))
         ).alias("sb"),
     )
-    cs = round6(
-        dot(F.col("emb_a"), F.col("emb_b")) / (F.col("nrm_a") * F.col("nrm_b"))
-    )
+    cs = cosine6("emb_a", "emb_b", "nrm_a", "nrm_b")
     return a.join(
         b,
         (F.col("ca") == F.col("cb"))

@@ -15,6 +15,7 @@ from pyspark.sql import types as T
 from ..catalog import register_views, sink_run_dir, table
 from ..functions.exact import dsum
 from ..registry import register
+from ..streaming.pipeline import SESSION_COUNTS_SQL, session_counts
 
 
 @register(
@@ -140,66 +141,34 @@ def orc_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "sql_grouping_sets",
-    oracle="""
+# One SQL text, run verbatim by Spark and by the DuckDB oracle.
+_GROUPING_SETS_SQL = """
 SELECT r_name, n_name, COUNT(*) AS n_customers
 FROM customer JOIN nation ON c_nationkey = n_nationkey
               JOIN region ON n_regionkey = r_regionkey
 GROUP BY GROUPING SETS ((r_name), (r_name, n_name), ())
-""",
-    tags=("agg", "sql-api"),
-)
+"""
+
+
+@register("sql_grouping_sets", oracle=_GROUPING_SETS_SQL, tags=("agg", "sql-api"))
 def sql_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS through the SQL API (temp views + spark.sql) —
     same Catalyst plan as the DataFrame form, exercised as SQL."""
     register_views(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT r_name, n_name, COUNT(*) AS n_customers
-        FROM customer JOIN nation ON c_nationkey = n_nationkey
-                      JOIN region ON n_regionkey = r_regionkey
-        GROUP BY GROUPING SETS ((r_name), (r_name, n_name), ())
-        """
-    )
+    return spark.sql(_GROUPING_SETS_SQL)
 
 
 @register(
     "events_session_window_builtin",
-    oracle="""
-WITH flagged AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN EPOCH_US(CAST(ts AS TIMESTAMP)) - EPOCH_US(CAST(LAG(ts) OVER w AS TIMESTAMP)) > 1800000000
-              OR LAG(ts) OVER w IS NULL THEN 1 ELSE 0 END AS new_session
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-sessions AS (
-  SELECT user_id, ts,
-         CAST(SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq
-  FROM flagged
-)
-SELECT user_id, CAST(MIN(ts) AS TIMESTAMP) AS session_start, COUNT(*) AS n_events
-FROM sessions
-GROUP BY user_id, session_seq
-""",
+    oracle=SESSION_COUNTS_SQL,
     tags=("window", "session"),
 )
 def events_session_window_builtin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark's native session_window (30-min gap) — must agree with the
     gaps-and-islands formulation (events_sessionization) row-for-row.
-
-    Note the boundary semantic: session_window merges when the gap is
-    ≤ 30 min; the islands oracle splits strictly on > 1800 s — same
-    rule.
-    """
-    ev = table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select("user_id", F.col("w.start").alias("session_start"), "n_events")
-    )
+    The streaming session_counts run as a batch query (a batch plan
+    drops the watermark)."""
+    return session_counts(table(spark, sf_dir, "events"))
 
 
 @register(

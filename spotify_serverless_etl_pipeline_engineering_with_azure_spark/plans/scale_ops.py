@@ -361,12 +361,17 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-sized files so later scans pay per-file open/footer cost 12×
     less often.
 
-    The compaction read uses coalesce(4), NOT repartition: coalesce
-    narrows partitions without a shuffle, so the rewrite is pure
-    read+write I/O. The returned audit row carries the REAL before/after
-    file counts listed from disk plus content control totals; the oracle
-    pins the expected counts as literals and recomputes the totals from
-    the source table, proving the rewrite is lossless.
+    The compaction rewrite uses repartition(4), not coalesce(4):
+    coalesce only merges the read's partitions, and the file source
+    packs 48 small files into as few partitions as its split sizing
+    and core count allow (2 under spark.sql.files.minPartitionNum=1),
+    so coalesce would write that many files. repartition's round-robin
+    shuffle fills all 4 partitions from any input of 4 rows or more,
+    so the file count does not depend on the cores. The returned audit
+    row carries the REAL before/after file counts listed from disk plus
+    content control totals; the oracle pins the expected counts as
+    literals and recomputes the totals from the source table, proving
+    the rewrite is lossless.
 
     SIZING CONTRACT: 48→4 is the demo shape pinned in the oracle's
     literals, valid only while 4 target files are "full-sized"
@@ -374,21 +379,21 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     through one writer, so a production compaction derives
     n_after ≈ table_bytes / target_file_size and runs PER PARTITION
     of a date/tenant-partitioned table (bounding any one job's
-    rewrite), never one 4-way coalesce over the whole table — at 10¹¹
+    rewrite), never one 4-way rewrite of the whole table — at 10¹¹
     orders that would be 4 tasks of ~25 TB each.
     """
     import os
 
     from ..catalog import sink_run_dir
 
-    # Run-unique, app-scoped, swept (sink_run_dir's contract): the old
-    # fixed per-dataset dir meant a second build's overwrite raced any
-    # previously returned frame's lazy read of the same files.
+    # Run-unique, app-scoped, swept (sink_run_dir's contract), so a
+    # second build's overwrite never races a previously returned
+    # frame's lazy read of the same files.
     base = sink_run_dir(spark, "compact", sf_dir)
     frag, compacted = f"{base}/frag", f"{base}/compact"
     orders = table(spark, sf_dir, "orders")
     orders.repartition(48).write.mode("overwrite").parquet(frag)
-    spark.read.parquet(frag).coalesce(4).write.mode("overwrite").parquet(compacted)
+    spark.read.parquet(frag).repartition(4).write.mode("overwrite").parquet(compacted)
 
     def _n_parquet(path: str) -> int:
         return sum(1 for f in os.listdir(path) if f.endswith(".parquet"))

@@ -18,10 +18,9 @@ from pyspark.sql import functions as F
 from ..catalog import cached_index, checkpoint_frame, scatter, table
 from ..functions.vectors import (
     LSH_TABLES,
-    dot,
+    cosine6,
     lsh_bucket,
     norm,
-    round6,
     sql_cosine6,
     sql_lsh_bucket,
 )
@@ -42,6 +41,25 @@ N_PROBES = 10
 # product-constant change cannot silently drift the verifier.
 LSH_PROBE_LIMIT = 20
 LSH_TOPK = 3
+
+
+def probe_top_k(scored: DataFrame, k: int, rank: str) -> DataFrame:
+    """Each probe's ``k`` nearest rows of ``scored`` (probe_id,
+    neighbor_id, cos_sim), numbered 1..k in column ``rank`` by cosine
+    descending, ties to the lower neighbor_id."""
+    w = Window.partitionBy("probe_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
+    return scored.select(
+        "probe_id", "neighbor_id", "cos_sim", F.row_number().over(w).alias(rank)
+    ).filter(F.col(rank) <= k)
+
+
+def _sql_probe_top_k(k: int) -> str:
+    """DuckDB twin of :func:`probe_top_k` over a ``scored`` CTE."""
+    return f"""SELECT probe_id, neighbor_id, cos_sim, CAST(rank AS INTEGER) AS rank FROM (
+  SELECT probe_id, neighbor_id, cos_sim,
+         ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY cos_sim DESC, neighbor_id) AS rank
+  FROM scored
+) WHERE rank <= {k}"""
 
 
 def vector_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -79,11 +97,7 @@ scored AS (
          {_COS6_PE_E} AS cos_sim
   FROM probes JOIN embeddings e ON e.vec_id <> probe_id
 )
-SELECT probe_id, neighbor_id, cos_sim, CAST(rank AS INTEGER) AS rank FROM (
-  SELECT probe_id, neighbor_id, cos_sim,
-         ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY cos_sim DESC, neighbor_id) AS rank
-  FROM scored
-) WHERE rank <= {TOPK}
+{_sql_probe_top_k(TOPK)}
 """,
     tags=("similarity", "ann"),
 )
@@ -108,16 +122,10 @@ def sim_cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "probe_id",
             F.col("vec_id").alias("neighbor_id"),
-            round6(
-                dot(F.col("pe"), F.col("embedding")) / (F.col("pnrm") * F.col("nrm"))
-            ).alias("cos_sim"),
+            cosine6("pe", "embedding", "pnrm", "nrm").alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.select("probe_id", "neighbor_id", "cos_sim", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= TOPK)
-    )
+    return probe_top_k(scored, TOPK, "rank")
 
 
 def _lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -183,11 +191,7 @@ WITH scored AS (
     {_lsh_scored_sql(1)}
   ) GROUP BY probe_id, neighbor_id
 )
-SELECT probe_id, neighbor_id, cos_sim, CAST(rank AS INTEGER) AS rank FROM (
-  SELECT probe_id, neighbor_id, cos_sim,
-         ROW_NUMBER() OVER (PARTITION BY probe_id ORDER BY cos_sim DESC, neighbor_id) AS rank
-  FROM scored
-) WHERE rank <= {LSH_TOPK}
+{_sql_probe_top_k(LSH_TOPK)}
 """,
     tags=("similarity", "ann", "lsh"),
 )
@@ -222,18 +226,12 @@ def sim_ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "probe_id",
             F.col("vec_id").alias("neighbor_id"),
-            round6(
-                dot(F.col("pe"), F.col("embedding")) / (F.col("pnrm") * F.col("nrm"))
-            ).alias("cos_sim"),
+            cosine6("pe", "embedding", "pnrm", "nrm").alias("cos_sim"),
         )
         .groupBy("probe_id", "neighbor_id")
         .agg(F.max("cos_sim").alias("cos_sim"))
     )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.select("probe_id", "neighbor_id", "cos_sim", F.row_number().over(w).alias("rank"))
-        .filter(F.col("rank") <= LSH_TOPK)
-    )
+    return probe_top_k(scored, LSH_TOPK, "rank")
 
 
 # ---------------------------------------------------------------------------

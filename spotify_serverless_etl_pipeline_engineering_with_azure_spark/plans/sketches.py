@@ -22,7 +22,7 @@ Scale posture (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import scatter, share, table
@@ -44,66 +44,16 @@ HLL_NUMER = HLL_ALPHA * HLL_M * HLL_M * float(1 << (HLL_RANK_BITS + 1))
 HLL_SMALL_RANGE = 2.5 * HLL_M
 
 
-def _hll_oracle() -> str:
-    h = sql_md5_int48("CAST(o_custkey AS VARCHAR)")
-    # rank = leading zeros in the 40 rank bits + 1 = 41 - bit_length(w);
-    # BIN() gives the minimal binary string on both engines, so
-    # LENGTH(BIN(w)) is bit_length(w) for w > 0.
-    rank = f"CASE WHEN w = 0 THEN {HLL_RANK_BITS + 1} ELSE {HLL_RANK_BITS + 1} - LENGTH(BIN(w)) END"
-    return f"""
-WITH hashed AS (
-  SELECT o_orderpriority AS grp, {h} AS h FROM orders
-),
-split AS (
-  SELECT grp, h % {HLL_M} AS reg, h // {HLL_M} AS w FROM hashed
-),
-regs AS (
-  SELECT grp, reg, MAX({rank}) AS mx FROM split GROUP BY grp, reg
-),
-folded AS (
-  SELECT grp,
-         SUM(CAST(1 AS BIGINT) << ({HLL_RANK_BITS + 1} - mx))
-           + ({HLL_M} - COUNT(*)) * (CAST(1 AS BIGINT) << {HLL_RANK_BITS + 1})
-           AS s_scaled,
-         {HLL_M} - COUNT(*) AS empty_registers
-  FROM regs GROUP BY grp
-),
-est AS (
-  SELECT grp, empty_registers,
-         {HLL_NUMER!r} / CAST(s_scaled AS DOUBLE) AS e_raw
-  FROM folded
-),
-truth AS (
-  SELECT o_orderpriority AS grp, COUNT(DISTINCT o_custkey) AS exact_distinct
-  FROM orders GROUP BY grp
-)
-SELECT est.grp AS o_orderpriority,
-       (ROUND((CASE WHEN e_raw <= {HLL_SMALL_RANGE!r} AND empty_registers > 0
-                  THEN {float(HLL_M)!r} * LN({float(HLL_M)!r} / empty_registers)
-                  ELSE e_raw END) * 1000000.0) / 1000000.0) AS hll_estimate,
-       empty_registers,
-       exact_distinct
-FROM est JOIN truth ON est.grp = truth.grp
-"""
+def _hll_registers(df: DataFrame, grp: str, key: str) -> DataFrame:
+    """One HLL sketch of ``key`` per value of ``grp``: (grp, reg, mx),
+    the max rank per register.
 
-
-@register("sketch_hll_distinct", oracle=_hll_oracle(), tags=("sketch", "hll", "agg"))
-def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic HyperLogLog distinct-count (p=8, md5-derived hash)
-    next to the exact count, per order priority.
-
-    The 48-bit hash splits into 8 register bits + 40 rank bits; the
-    harmonic mean is computed in EXACT integer arithmetic — each
-    register contributes 2^(41-rank) to a scaled sum (< 2^50, exact in
-    int64 AND as a double), so the only floating-point steps are one
-    division by an inlined constant and the small-range LN correction,
-    both rounded to 6dp on both engines. Duplicates are free (MAX over
-    identical hashes), which is the whole point of the sketch.
-    """
-    orders = table(spark, sf_dir, "orders")
-    hashed = orders.select(
-        F.col("o_orderpriority").alias("grp"),
-        md5_int48(F.col("o_custkey").cast("string")).alias("h"),
+    The 48-bit md5 hash splits into HLL_P register bits and
+    HLL_RANK_BITS rank bits; rank = leading zeros of the rank bits + 1.
+    Duplicates are free (MAX over identical hashes)."""
+    hashed = df.select(
+        F.col(grp).alias("grp"),
+        md5_int48(F.col(key).cast("string")).alias("h"),
     )
     split = hashed.select(
         "grp",
@@ -113,11 +63,23 @@ def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank = F.when(F.col("w") == 0, F.lit(HLL_RANK_BITS + 1)).otherwise(
         F.lit(HLL_RANK_BITS + 1) - F.length(F.bin("w"))
     )
-    regs = split.groupBy("grp", "reg").agg(F.max(rank).alias("mx"))
+    return split.groupBy("grp", "reg").agg(F.max(rank).alias("mx"))
+
+
+def _hll_estimate(regs: DataFrame, *keys: str) -> tuple[DataFrame, Column]:
+    """Fold (keys…, reg, mx) registers into one sketch per ``keys``
+    value: the frame (keys…, s_scaled, empty_registers) and the 6dp
+    distinct-count estimate as a Column over it.
+
+    The harmonic mean is EXACT integer arithmetic: each register adds
+    2^(HLL_RANK_BITS+1-rank) to a scaled sum (< 2^50, exact in int64
+    and as a double), so the only floating-point steps are one
+    division by the inlined HLL_NUMER and the small-range LN
+    correction, both rounded 6dp like the oracle's."""
     # shiftleft with a COLUMN shift count needs the SQL form — the
     # pyspark wrapper only accepts a literal int numBits.
     term = F.expr(f"shiftleft(CAST(1 AS BIGINT), {HLL_RANK_BITS + 1} - mx)")
-    folded = regs.groupBy("grp").agg(
+    folded = regs.groupBy(*keys).agg(
         (
             F.sum(term)
             + (HLL_M - F.count(F.lit(1)))
@@ -134,6 +96,77 @@ def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(float(HLL_M)) * F.log(F.lit(float(HLL_M)) / F.col("empty_registers")),
         ).otherwise(e_raw),
         6,
+    )
+    return folded, estimate
+
+
+def _sql_hll_registers(source: str, grp: str, key: str) -> str:
+    """DuckDB twin of _hll_registers: CTEs hashed, split and regs
+    (grp, reg, mx) over table ``source``."""
+    h = sql_md5_int48(f"CAST({key} AS VARCHAR)")
+    # rank = leading zeros in the 40 rank bits + 1 = 41 - bit_length(w);
+    # BIN() gives the minimal binary string on both engines, so
+    # LENGTH(BIN(w)) is bit_length(w) for w > 0.
+    rank = f"CASE WHEN w = 0 THEN {HLL_RANK_BITS + 1} ELSE {HLL_RANK_BITS + 1} - LENGTH(BIN(w)) END"
+    return f"""hashed AS (
+  SELECT {grp} AS grp, {h} AS h FROM {source}
+),
+split AS (
+  SELECT grp, h % {HLL_M} AS reg, h // {HLL_M} AS w FROM hashed
+),
+regs AS (
+  SELECT grp, reg, MAX({rank}) AS mx FROM split GROUP BY grp, reg
+)"""
+
+
+def _sql_hll_fold(regs: str, *keys: str) -> str:
+    """DuckDB twin of _hll_estimate's fold: CTEs folded and est
+    (keys…, empty_registers, e_raw) over register CTE ``regs``;
+    _SQL_HLL_ESTIMATE is the rounded estimate over est."""
+    by = "".join(f"{k}, " for k in keys)
+    group = f" GROUP BY {', '.join(keys)}" if keys else ""
+    return f"""folded AS (
+  SELECT {by}SUM(CAST(1 AS BIGINT) << ({HLL_RANK_BITS + 1} - mx))
+           + ({HLL_M} - COUNT(*)) * (CAST(1 AS BIGINT) << {HLL_RANK_BITS + 1})
+           AS s_scaled,
+         {HLL_M} - COUNT(*) AS empty_registers
+  FROM {regs}{group}
+),
+est AS (
+  SELECT {by}empty_registers,
+         {HLL_NUMER!r} / CAST(s_scaled AS DOUBLE) AS e_raw
+  FROM folded
+)"""
+
+
+_SQL_HLL_ESTIMATE = f"""(ROUND((CASE WHEN e_raw <= {HLL_SMALL_RANGE!r} AND empty_registers > 0
+                  THEN {float(HLL_M)!r} * LN({float(HLL_M)!r} / empty_registers)
+                  ELSE e_raw END) * 1000000.0) / 1000000.0)"""
+
+
+@register(
+    "sketch_hll_distinct",
+    oracle=f"""
+WITH {_sql_hll_registers("orders", "o_orderpriority", "o_custkey")},
+{_sql_hll_fold("regs", "grp")},
+truth AS (
+  SELECT o_orderpriority AS grp, COUNT(DISTINCT o_custkey) AS exact_distinct
+  FROM orders GROUP BY grp
+)
+SELECT est.grp AS o_orderpriority,
+       {_SQL_HLL_ESTIMATE} AS hll_estimate,
+       empty_registers,
+       exact_distinct
+FROM est JOIN truth ON est.grp = truth.grp
+""",
+    tags=("sketch", "hll", "agg"),
+)
+def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic HyperLogLog distinct-count (p=8, md5-derived hash)
+    of customers next to the exact count, per order priority."""
+    orders = table(spark, sf_dir, "orders")
+    folded, estimate = _hll_estimate(
+        _hll_registers(orders, "o_orderpriority", "o_custkey"), "grp"
     )
     truth = orders.groupBy(F.col("o_orderpriority").alias("grp")).agg(
         F.count_distinct("o_custkey").alias("exact_distinct")
@@ -254,44 +287,22 @@ def sketch_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-def _hll_merge_oracle() -> str:
-    h = sql_md5_int48("CAST(user_id AS VARCHAR)")
-    rank = f"CASE WHEN w = 0 THEN {HLL_RANK_BITS + 1} ELSE {HLL_RANK_BITS + 1} - LENGTH(BIN(w)) END"
-    return f"""
-WITH hashed AS (
-  SELECT event_type AS grp, {h} AS h FROM events
-),
-split AS (
-  SELECT grp, h % {HLL_M} AS reg, h // {HLL_M} AS w FROM hashed
-),
-regs AS (
-  SELECT grp, reg, MAX({rank}) AS mx FROM split GROUP BY grp, reg
-),
+@register(
+    "sketch_hll_merge",
+    oracle=f"""
+WITH {_sql_hll_registers("events", "event_type", "user_id")},
 merged AS (
   SELECT reg, MAX(mx) AS mx FROM regs GROUP BY reg
 ),
-folded AS (
-  SELECT SUM(CAST(1 AS BIGINT) << ({HLL_RANK_BITS + 1} - mx))
-           + ({HLL_M} - COUNT(*)) * (CAST(1 AS BIGINT) << {HLL_RANK_BITS + 1})
-           AS s_scaled,
-         {HLL_M} - COUNT(*) AS empty_registers
-  FROM merged
-),
-est AS (
-  SELECT empty_registers, {HLL_NUMER!r} / CAST(s_scaled AS DOUBLE) AS e_raw
-  FROM folded
-)
+{_sql_hll_fold("merged")}
 SELECT (SELECT CAST(COUNT(DISTINCT grp) AS BIGINT) FROM regs) AS n_sketches,
-       (ROUND((CASE WHEN e_raw <= {HLL_SMALL_RANGE!r} AND empty_registers > 0
-                  THEN {float(HLL_M)!r} * LN({float(HLL_M)!r} / empty_registers)
-                  ELSE e_raw END) * 1000000.0) / 1000000.0) AS hll_estimate,
+       {_SQL_HLL_ESTIMATE} AS hll_estimate,
        empty_registers,
        (SELECT COUNT(DISTINCT user_id) FROM events) AS exact_distinct
 FROM est
-"""
-
-
-@register("sketch_hll_merge", oracle=_hll_merge_oracle(), tags=("sketch", "hll", "merge"))
+""",
+    tags=("sketch", "hll", "merge"),
+)
 def sketch_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch MERGEABILITY: per-event-type HLL sketches of user_id,
     merged into one global sketch by register-wise MAX, estimating the
@@ -308,41 +319,11 @@ def sketch_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded 6dp, identical in both engines).
     """
     ev = table(spark, sf_dir, "events")
-    hashed = ev.select(
-        F.col("event_type").alias("grp"),
-        md5_int48(F.col("user_id").cast("string")).alias("h"),
-    )
-    split = hashed.select(
-        "grp",
-        (F.col("h") % HLL_M).alias("reg"),
-        F.shiftright("h", HLL_P).alias("w"),
-    )
-    rank = F.when(F.col("w") == 0, F.lit(HLL_RANK_BITS + 1)).otherwise(
-        F.lit(HLL_RANK_BITS + 1) - F.length(F.bin("w"))
-    )
     # shared by the sketch count and the merge
-    regs = share(split.groupBy("grp", "reg").agg(F.max(rank).alias("mx")))
+    regs = share(_hll_registers(ev, "event_type", "user_id"))
     n_sketches = regs.agg(F.count_distinct("grp").alias("n_sketches"))
     merged = regs.groupBy("reg").agg(F.max("mx").alias("mx"))
-    term = F.expr(f"shiftleft(CAST(1 AS BIGINT), {HLL_RANK_BITS + 1} - mx)")
-    folded = merged.agg(
-        (
-            F.sum(term)
-            + (HLL_M - F.count(F.lit(1)))
-            * F.lit(1 << (HLL_RANK_BITS + 1)).cast("long")
-        ).alias("s_scaled"),
-        (HLL_M - F.count(F.lit(1))).alias("empty_registers"),
-    )
-    e_raw = F.lit(HLL_NUMER) / F.col("s_scaled").cast("double")
-    # roundk: the estimate is a raw computed double (division / LN) —
-    # the divergent cross-engine ROUND class (functions/exact.roundk).
-    estimate = roundk(
-        F.when(
-            (e_raw <= F.lit(HLL_SMALL_RANGE)) & (F.col("empty_registers") > 0),
-            F.lit(float(HLL_M)) * F.log(F.lit(float(HLL_M)) / F.col("empty_registers")),
-        ).otherwise(e_raw),
-        6,
-    )
+    folded, estimate = _hll_estimate(merged)
     truth = ev.agg(F.count_distinct("user_id").alias("exact_distinct"))
     return (
         folded.crossJoin(F.broadcast(n_sketches))

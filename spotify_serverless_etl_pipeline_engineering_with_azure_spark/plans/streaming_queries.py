@@ -17,9 +17,12 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..streaming.pipeline import (
+    SESSION_COUNTS_SQL,
+    WINDOWED_COUNTS_SQL,
     _foreach_batch_drain,
     events_stream,
     run_to_parquet,
+    session_counts,
     windowed_counts,
 )
 
@@ -44,18 +47,7 @@ def _assert_single_data_batch(q, name: str) -> None:
     )
 
 
-@register(
-    "streaming_tumbling_window",
-    oracle="""
-SELECT TIME_BUCKET(INTERVAL '1 hour', CAST(ts AS TIMESTAMP)) AS window_start,
-       event_type,
-       COUNT(*) AS n_events,
-       CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS sum_value
-FROM events
-GROUP BY 1, 2
-""",
-    tags=("streaming", "window"),
-)
+@register("streaming_tumbling_window", oracle=WINDOWED_COUNTS_SQL, tags=("streaming", "window"))
 def streaming_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S3 generalized: watermarked tumbling-window counts, executed as a
     real streaming query (file source → availableNow → run_to_parquet).
@@ -327,10 +319,10 @@ def streaming_csv_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.exact import dsum
     from ..operators.sinks import write_csv
 
-    # Run-unique, app-scoped, swept (sink_run_dir's contract) — the
-    # old fixed dir was rmtree'd per build, destroying prior frames'
-    # files; the staged src/archive/ckpt/out quartet now lives and
-    # dies together inside one run dir.
+    # Run-unique, app-scoped, swept (sink_run_dir's contract): the
+    # staged src/archive/ckpt/out quartet lives and dies together
+    # inside one run dir, so a rebuild never deletes a prior frame's
+    # files.
     base = sink_run_dir(spark, "stream_csv", sf_dir)
     src, archive, ckpt, out = (f"{base}/{d}" for d in ("src", "archive", "ckpt", "out"))
 
@@ -360,9 +352,7 @@ def streaming_csv_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         for name, df in branches.items():
             write_csv(df, f"{out}/{name}/batch_id={batch_id}")
 
-    _foreach_batch_drain(
-        stream, sink, ckpt, "stream_csv", output_mode="append", timeout_s=300
-    )
+    _foreach_batch_drain(stream, sink, ckpt, "stream_csv", output_mode="append")
 
     def read_back(name: str, value_field: str) -> DataFrame:
         # The batch dirs, not a glob (see run_to_parquet's read-back).
@@ -411,24 +401,7 @@ def streaming_csv_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "streaming_session_window",
-    oracle="""
-WITH flagged AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN EPOCH_US(CAST(ts AS TIMESTAMP)) - EPOCH_US(CAST(LAG(ts) OVER w AS TIMESTAMP)) > 1800000000
-              OR LAG(ts) OVER w IS NULL THEN 1 ELSE 0 END AS new_session
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-sessions AS (
-  SELECT user_id, ts,
-         CAST(SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq
-  FROM flagged
-)
-SELECT user_id, CAST(MIN(ts) AS TIMESTAMP) AS session_start, COUNT(*) AS n_events
-FROM sessions
-GROUP BY user_id, session_seq
-""",
+    oracle=SESSION_COUNTS_SQL,
     tags=("streaming", "session-window"),
 )
 def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -442,8 +415,7 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     (STREAMING_OUTPUT_MODE.UNSUPPORTED_OPERATION), and append mode
     withholds every session whose end lies inside the watermark delay —
     on the bounded fixture that silently drops the trailing 24 h of
-    sessions (measured: 906 of 946), so the oracle equality would be
-    vacuously broken. In complete mode watermark eviction is disabled
+    sessions, so the oracle equality would break. In complete mode watermark eviction is disabled
     by definition, so this exact shape must NOT run 24/7: a production
     sessionization runs append mode (each session emitted exactly once
     after its close passes the watermark; state evicted with it) and
@@ -456,12 +428,7 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert pins the oracle-equality contract (all input in one batch →
     nothing late).
     """
-    ev = events_stream(spark, sf_dir).withWatermark("ts", "24 hours")
-    agg = (
-        ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select("user_id", F.col("w.start").alias("session_start"), "n_events")
-    )
+    agg = session_counts(events_stream(spark, sf_dir))
     back, q = run_to_parquet(agg, "sesswin", sf_dir, output_mode="complete")
     _assert_single_data_batch(q, "streaming_session_window")
     return back.select("user_id", "session_start", "n_events")

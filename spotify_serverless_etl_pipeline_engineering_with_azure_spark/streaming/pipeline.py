@@ -155,6 +155,58 @@ def windowed_counts(events: DataFrame) -> DataFrame:
     )
 
 
+# DuckDB oracle of windowed_counts over the whole events table.
+WINDOWED_COUNTS_SQL = """
+SELECT TIME_BUCKET(INTERVAL '1 hour', CAST(ts AS TIMESTAMP)) AS window_start,
+       event_type,
+       COUNT(*) AS n_events,
+       CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS sum_value
+FROM events
+GROUP BY 1, 2
+"""
+
+
+def session_counts(events: DataFrame) -> DataFrame:
+    """Per-user session_window (30-minute gap) event counts with a
+    24-hour late-data watermark: (user_id, session_start, n_events).
+
+    session_window merges two events when their gap is <= 30 minutes;
+    SQL_SESSIONS splits strictly on a gap > 1800 s, the same rule."""
+    return (
+        events.withWatermark("ts", "24 hours")
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select("user_id", F.col("w.start").alias("session_start"), "n_events")
+    )
+
+
+# Gaps-and-islands sessions as DuckDB CTEs: ``flagged`` marks each
+# event that opens a session (its user's first, or more than 30 minutes
+# after the previous one, compared in microseconds), ``sessions``
+# numbers the sessions per user.
+SQL_SESSIONS = """flagged AS (
+  SELECT user_id, ts, event_id,
+         CASE WHEN EPOCH_US(CAST(ts AS TIMESTAMP)) - EPOCH_US(CAST(LAG(ts) OVER w AS TIMESTAMP)) > 1800000000
+              OR LAG(ts) OVER w IS NULL THEN 1 ELSE 0 END AS new_session
+  FROM events
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+),
+sessions AS (
+  SELECT user_id, ts,
+         CAST(SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
+              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq
+  FROM flagged
+)"""
+
+# DuckDB oracle of session_counts over the whole events table.
+SESSION_COUNTS_SQL = f"""
+WITH {SQL_SESSIONS}
+SELECT user_id, CAST(MIN(ts) AS TIMESTAMP) AS session_start, COUNT(*) AS n_events
+FROM sessions
+GROUP BY user_id, session_seq
+"""
+
+
 # State-store partition count for the bounded test streams. Stateful
 # streaming parallelism should track STATE SIZE, not the batch session's
 # core count: every shuffle partition materializes a state store
@@ -180,12 +232,16 @@ def narrow_state_partitions(spark: SparkSession):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+# Seconds a bounded availableNow drain may run before it is stopped.
+DRAIN_TIMEOUT_S = 300
+
+
 def _foreach_batch_drain(
-    df: DataFrame, sink, checkpoint: str, name: str, *, output_mode: str, timeout_s: int
+    df: DataFrame, sink, checkpoint: str, name: str, *, output_mode: str
 ) -> StreamingQuery:
     """Start ``df`` → foreachBatch(``sink``) with availableNow under
-    narrow_state_partitions and block until drained; on timeout stop
-    the query and raise TimeoutError."""
+    narrow_state_partitions and block until drained; after
+    DRAIN_TIMEOUT_S stop the query and raise TimeoutError."""
     with narrow_state_partitions(df.sparkSession):
         q = (
             df.writeStream.foreachBatch(sink)
@@ -194,10 +250,10 @@ def _foreach_batch_drain(
             .trigger(availableNow=True)
             .start()
         )
-    q.awaitTermination(timeout_s)
+    q.awaitTermination(DRAIN_TIMEOUT_S)
     if q.isActive:
         q.stop()
-        raise TimeoutError(f"stream {name} did not drain in {timeout_s}s")
+        raise TimeoutError(f"stream {name} did not drain in {DRAIN_TIMEOUT_S}s")
     return q
 
 
@@ -208,7 +264,6 @@ def run_to_parquet(
     *,
     output_mode: str = "append",
     batch_transform=None,
-    timeout_s: int = 300,
 ):
     """Drive a (bounded) stream through foreachBatch into per-batch
     parquet and return (read-back DataFrame, finished StreamingQuery).
@@ -232,9 +287,7 @@ def run_to_parquet(
         out = batch_transform(batch_df) if batch_transform else batch_df
         out.write.mode("overwrite").parquet(f"{run}/data/batch_id={batch_id}")
 
-    q = _foreach_batch_drain(
-        df, sink, f"{run}/_ckpt", prefix, output_mode=output_mode, timeout_s=timeout_s
-    )
+    q = _foreach_batch_drain(df, sink, f"{run}/_ckpt", prefix, output_mode=output_mode)
     # The read-back's shape: batch_transform (it may change the schema)
     # over an empty frame. Handing its schema to the reader spares the
     # footer-inference job a schema-less parquet read runs.

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from spotify_serverless_etl_pipeline_engineering_with_azure_spark import registry
-from spotify_serverless_etl_pipeline_engineering_with_azure_spark.catalog import table
+from spotify_serverless_etl_pipeline_engineering_with_azure_spark.catalog import share, table
 
 from .plan_digest import digest, fields
 from .test_plan_quality import no_cartesian
@@ -316,3 +316,32 @@ def test_no_cache_entry_outlives_a_query(spark, sf_dir):
     for name in SHARING_QUERIES:
         ALL[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_share_is_lazy_only_for_a_narrow_frame(spark):
+    """Without a checkpoint dir, ``share`` of a narrow frame runs no job
+    until an action (so spotify.transform adds no job per trigger),
+    while ``share`` of an aggregate runs its shuffle-map stage at once:
+    one job for its one exchange."""
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
+
+    def jobs_at_share(df, group):
+        sc.setJobGroup(group, "share laziness probe")
+        try:
+            shared = share(df)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # Job records arrive through the listener bus; drain it first.
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group)), shared
+
+    narrow = spark.range(1000).select((F.col("id") * 2).alias("x"))
+    n_jobs, shared = jobs_at_share(narrow, "share_probe_narrow")
+    assert n_jobs == 0
+    assert shared.count() == 1000
+
+    wide = spark.range(1000).groupBy((F.col("id") % 97).alias("k")).count()
+    n_jobs, shared = jobs_at_share(wide, "share_probe_wide")
+    assert n_jobs == 1
+    assert shared.count() == 97

@@ -280,3 +280,26 @@ def test_o4_checkpoint_kill_and_resume(spark, tmp_path):
     got = back.agg(F.sum("value")).first()[0]
     want = ev.agg(F.sum("value")).first()[0]
     assert abs(got - want) < 1e-6
+
+
+def test_compaction_file_count_does_not_depend_on_read_partitions(spark, sf_dir):
+    """compact_small_files writes 4 files however the file source packs
+    its 48 fragments. Under spark.sql.files.minPartitionNum=1 the split
+    size no longer shrinks with the core count, and at the smoke scale
+    they read as 2 partitions, so a coalesce(4) rewrite would write 2
+    files where the oracle pins 4."""
+    from spotify_serverless_etl_pipeline_engineering_with_azure_spark.plans.scale_ops import (
+        compact_small_files,
+    )
+
+    key = "spark.sql.files.minPartitionNum"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "1")
+    try:
+        row = compact_small_files(spark, sf_dir).collect()[0]
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    assert (row["n_files_before"], row["n_files_after"]) == (48, 4)

@@ -7,7 +7,8 @@ importing a deleted function would otherwise only fail when someone
 next runs it. Each file is parsed, never executed.
 
 The package also shares frames in one place: only catalog.py
-checkpoints, and nothing persists."""
+checkpoints, and nothing persists. And it writes each operator once:
+no run of CLONE_RUN code lines appears twice."""
 
 from __future__ import annotations
 
@@ -15,7 +16,9 @@ import ast
 import glob
 import importlib
 import importlib.util
+import io
 import os
+import tokenize
 
 import pytest
 
@@ -229,3 +232,106 @@ def test_sharing_scan_flags_a_bare_local_checkpoint():
     persisting = "def q(spark, df):\n    return df.groupBy('k').count().persist()\n"
     for path in (f"{PACKAGE}/plans/dedup.py", f"{PACKAGE}/catalog.py"):
         assert sharing_violations(path, persisting) == [f"{path}:2: .persist( in q"]
+
+
+# Consecutive code lines that make a copied block.
+CLONE_RUN = 6
+
+
+def code_lines(source: str) -> list[tuple[int, str]]:
+    """(line number, whitespace-normalised text) of every code line of
+    ``source``: blank lines, comments, docstrings and import statements
+    are left out; lines inside other strings (oracle SQL) are code."""
+    skip = set()
+    for node in ast.walk(ast.parse(source)):
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            skip.update(range(node.lineno, node.end_lineno + 1))
+        elif (
+            isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
+            and ast.get_docstring(node, clean=False) is not None
+        ):
+            skip.update(range(node.body[0].lineno, node.body[0].end_lineno + 1))
+    comment_at = {
+        tok.start[0]: tok.start[1]
+        for tok in tokenize.generate_tokens(io.StringIO(source).readline)
+        if tok.type == tokenize.COMMENT
+    }
+    found = []
+    for n, line in enumerate(source.splitlines(), 1):
+        text = " ".join(line[: comment_at.get(n)].split())
+        if text and n not in skip:
+            found.append((n, text))
+    return found
+
+
+def repeated_blocks(sources: dict[str, str]) -> list[list[str]]:
+    """Groups of copied blocks, each block as "path:first-last" source
+    lines: a run of CLONE_RUN code lines found at two places joins
+    them, and overlapping runs grow one block."""
+    lines = {path: code_lines(src) for path, src in sources.items()}
+    where: dict[tuple[str, ...], list[tuple[str, int]]] = {}
+    for path, ls in lines.items():
+        for i in range(len(ls) - CLONE_RUN + 1):
+            where.setdefault(tuple(t for _, t in ls[i : i + CLONE_RUN]), []).append((path, i))
+    parent: dict[tuple[str, int], tuple[str, int]] = {}
+
+    def root(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for places in where.values():
+        if len(places) > 1:
+            for other in places[1:]:
+                parent[root(other)] = root(places[0])
+    for path, i in list(parent):
+        for k in range(1, CLONE_RUN):
+            if (path, i + k) in parent:
+                parent[root((path, i + k))] = root((path, i))
+    groups: dict[tuple[str, int], list[tuple[str, int]]] = {}
+    for start in parent:
+        groups.setdefault(root(start), []).append(start)
+    found = []
+    for starts in groups.values():
+        spans = []
+        for path, i in sorted(starts):
+            first, last = lines[path][i][0], lines[path][i + CLONE_RUN - 1][0]
+            if spans and spans[-1][0] == path and first <= spans[-1][2]:
+                spans[-1][2] = max(spans[-1][2], last)
+            else:
+                spans.append([path, first, last])
+        found.append([f"{path}:{first}-{last}" for path, first, last in spans])
+    return sorted(found)
+
+
+def test_no_code_block_is_written_twice():
+    """Each operator is written once and called from every query that
+    runs it: a copied run of CLONE_RUN code lines (oracle SQL included)
+    becomes one helper or one shared SQL text."""
+    sources = {}
+    for path in PACKAGE_FILES:
+        with open(os.path.join(ROOT, path), encoding="utf-8") as f:
+            sources[path] = f.read()
+    blocks = repeated_blocks(sources)
+    assert not blocks, f"code blocks written more than once: {blocks}"
+
+
+def test_clone_scan_flags_a_copied_block():
+    steps = [f"x{i} = f(x{i - 1}, {i})" for i in range(1, CLONE_RUN + 1)]
+    original = "def a(x0):\n" + "".join(f"    {s}\n" for s in steps) + "    return x6\n"
+    copied = (
+        "import os\n"
+        "def b(x0):\n"
+        '    """A docstring and a comment do not hide the copy."""\n'
+        "    if x0:\n"
+        "        # re-indented and commented\n"
+        + "".join(f"        {s}  # step\n" for s in steps)
+    )
+    assert repeated_blocks({"a.py": original, "b.py": copied}) == [["a.py:2-7", "b.py:6-11"]]
+    # One changed line breaks every run, and text in a docstring or a
+    # comment is not code.
+    edited = original.replace(steps[2], "x3 = g(x2, 3)")
+    quoted = 'def c():\n    """\n' + "".join(f"    {s}\n" for s in steps) + '    """\n'
+    commented = "".join(f"# {s}\n" for s in steps)
+    assert repeated_blocks({"a.py": original, "e.py": edited}) == []
+    assert repeated_blocks({"a.py": original, "c.py": quoted, "d.py": commented}) == []
