@@ -27,6 +27,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .session import pin_reads
+
 TABLES = (
     "region",
     "nation",
@@ -47,15 +49,16 @@ TABLES = (
 # frame is reusable across queries; caching it is what a metastore-
 # backed catalog does (schema resolved once, not re-inferred per
 # query). Keyed by parquet identity (regenerated data rebuilds) and
-# Spark application id (a plan dies with its context).
+# Spark application id (a plan dies with its context). It holds each
+# table as its file stores it; table() normalizes events on top.
 _TABLE_CACHE: dict[tuple, DataFrame] = {}
 
 # Entry cap of the index registry (cached_index), shared by every index
 # family: sized for many live test fixtures/SF dirs at once while
 # bounding a production driver that sweeps unbounded snapshot
-# directories. The lazy-plan caches (_TABLE_CACHE, _RAW_SCHEMA_CACHE)
-# deliberately do NOT use it — their entries cost kilobytes and their
-# hit rate is the whole point.
+# directories. The lazy-plan cache, _TABLE_CACHE, deliberately does NOT
+# use it — its entries cost kilobytes and its hit rate is the whole
+# point.
 MAX_CHECKPOINT_ENTRIES = 64
 _INDEX_CACHE: dict[tuple, object] = {}
 
@@ -73,8 +76,8 @@ def dataset_cached(cache: dict, spark: SparkSession, sf_dir: str,
     """Memoize a per-dataset artifact (a loaded table, a checkpointed
     index) and EVICT the superseded snapshot on regeneration.
 
-    One identity scheme for every dataset-keyed cache in the engine
-    (loaded tables, raw schemas and the cached_index registry):
+    One identity scheme for both dataset-keyed caches in the engine
+    (loaded tables and the cached_index registry):
     identity = (sf_dir, files, params, applicationId, sessionUUID),
     freshness = each file's (mtime_ns, size).
     A fresh stat → cache hit. A stale one → the old entry is DELETED
@@ -119,7 +122,7 @@ def dataset_cached(cache: dict, spark: SparkSession, sf_dir: str,
     # frame cached by session A and served to concurrent session B
     # registers temp views into A's catalog (TABLE_OR_VIEW_NOT_FOUND in
     # B, or silently the wrong dataset) and executes under A's conf
-    # (A's timezone, not the UTC pin B's caller re-applied). Verified
+    # (A's timezone, not the UTC pin B's build re-applied). Verified
     # on 4.1.2; invisible to the single-session driver gate.
     ident = (sf_dir, files, params, appid, _session_uuid(spark))
     key = (ident, stats)
@@ -424,31 +427,26 @@ def _sweep_dead_app_dirs(root: str) -> None:
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Test table ``name`` of the dataset in ``sf_dir``, events ts
+    normalized (normalize_events_ts). Sets the read pins
+    (session.pin_reads) on every call, cache hits included, for callers
+    outside a registered query build."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    # Timestamp semantics are defined in UTC (TESTDATA timestamps are
-    # instants; the DuckDB oracle renders them naive/UTC). Pin the
-    # session so results don't depend on the caller's local timezone,
-    # and read naive parquet timestamps (isAdjustedToUTC=false) as
-    # instants (TIMESTAMP_LTZ) rather than TIMESTAMP_NTZ so the whole
-    # timestamp function surface (unix_micros, window, watermarks)
-    # applies uniformly regardless of how the driver generated the data.
-    # Pinned on EVERY call (including cache hits): execution reads the
-    # session conf at action time, so a caller who flipped the timezone
-    # between two table() calls must still get UTC semantics.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    if name == "events":
-        # Re-pinned on cache hits too: the scan re-reads this conf at
-        # planning time of every query built on the cached frame.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    pin_reads(spark)
+    df = stored(spark, sf_dir, name)
+    return normalize_events_ts(df) if name == "events" else df
 
-    def build() -> DataFrame:
-        if name == "events":
-            return _events(spark, sf_dir)
-        return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
-    return dataset_cached(_TABLE_CACHE, spark, sf_dir, (f"{name}.parquet",), build)
+def stored(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """``name`` as its parquet file stores it, before normalization:
+    the one loaded-table cache (_TABLE_CACHE). The events stream takes
+    its file schema from here. Needs the read pins set: Spark rejects
+    a TIMESTAMP(NANOS) column unless nanosAsLong is on."""
+    return dataset_cached(
+        _TABLE_CACHE, spark, sf_dir, (f"{name}.parquet",),
+        lambda: spark.read.parquet(f"{sf_dir}/{name}.parquet"),
+    )
 
 
 def scatter(df: DataFrame, *keys: str) -> DataFrame:
@@ -488,7 +486,7 @@ def scatter(df: DataFrame, *keys: str) -> DataFrame:
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:
     """The ONE ts-normalization rule for events, shared by the batch
-    loader (_events) and the streaming source (streaming.pipeline.
+    loader (table) and the streaming source (streaming.pipeline.
     events_stream): events.ts arrives in one of two driver-generated
     encodings — TIMESTAMP(NANOS), which Spark 4's reader rejects
     outright, so it is read as a long (legacy nanosAsLong conf) and
@@ -504,29 +502,6 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     if dict(df.dtypes)["ts"] == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
-
-
-_RAW_SCHEMA_CACHE: dict[tuple, object] = {}
-
-
-def raw_schema(spark: SparkSession, sf_dir: str, name: str):
-    """The file's on-disk schema (pre-normalization), cached per dataset
-    identity — readStream needs an explicit schema and the batch footer
-    read behind it costs the same ~60 ms round trip _TABLE_CACHE
-    amortizes for loaded tables."""
-    return dataset_cached(
-        _RAW_SCHEMA_CACHE,
-        spark,
-        sf_dir,
-        (f"{name}.parquet",),
-        lambda: spark.read.parquet(f"{sf_dir}/{name}.parquet").schema,
-    )
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch events loader: raw read + the shared ts normalization."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return normalize_events_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -123,8 +123,9 @@ FROM ({_DS_ITEMS}) u
 def spotify_songs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4+S5+P3+P4+C1: songs fact table from nested playlist docs
     (spotifytransform.py:50-64,91-92). added_at carries an explicit Z
-    offset, so the parsed instant is session-timezone-independent on
-    both engines."""
+    offset, so the parsed instant does not depend on the session
+    timezone; its rendering does, and the registry's read pins render
+    it in UTC, as the oracle does."""
     return spotify.make_songs(_items(spark))
 
 

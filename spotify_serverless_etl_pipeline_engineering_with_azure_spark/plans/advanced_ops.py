@@ -889,10 +889,10 @@ def streaming_stateful_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     back, q = run_to_parquet(tracked, "funnel", sf_dir, output_mode="update")
     # Oracle equality DEPENDS on the whole bounded stream draining in
     # ONE data micro-batch: the monotone machine drops out-of-order
-    # transitions, so a multi-batch drain (multi-file staging, a
+    # transitions, so a multi-batch drain (a multi-file source, a
     # maxFilesPerTrigger) could fall below the batch funnel with no
-    # error. _staged_dir stages a single symlinked file and no trigger
-    # limit is set — assert that contract instead of trusting it.
+    # error. events_stream matches a single file and no trigger limit
+    # is set — assert that contract instead of trusting it.
     data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
     assert len(data_batches) == 1, (
         f"stateful funnel expects a single-batch drain, got "

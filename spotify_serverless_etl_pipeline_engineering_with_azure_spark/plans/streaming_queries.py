@@ -31,9 +31,9 @@ def _assert_single_data_batch(q, name: str) -> None:
     """UPDATE-mode drains APPEND each trigger's emitted rows: if
     the bounded drain ever split into 2+ micro-batches, a group updated
     in both would land twice (stale + final) and the read-back would
-    carry duplicate rows — silently. The single-file staging makes the
-    drain one data batch; assert that contract instead of trusting it
-    (the stateful-funnel discipline). ZERO data batches is also
+    carry duplicate rows — silently. events_stream's single-file source
+    makes the drain one data batch; assert that contract instead of
+    trusting it (the stateful-funnel discipline). ZERO data batches is also
     consistent: a genuinely empty source emits nothing, run_to_parquet
     returns its empty frame, and the oracle over the empty table
     agrees — so the assert accepts 0 or 1, never 2+. (Complete-mode
@@ -84,7 +84,7 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     key whose duplicates sit more than 24 h apart is re-emitted (two
     rows vs the oracle's one DISTINCT row). Within one batch the
     watermark never advances, so the read-back equals DISTINCT exactly
-    — that contract held silently before; now a multi-file staging or
+    — that contract held silently before; now a multi-file source or
     a maxFilesPerTrigger regression trips the assert instead of
     shipping duplicate keys.
     """

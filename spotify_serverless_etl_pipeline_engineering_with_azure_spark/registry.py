@@ -17,6 +17,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .session import pin_reads
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
@@ -125,9 +127,13 @@ def _package_zip() -> str:
 
 
 def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
+    """Register ``fn`` as query ``name``. Each build first ships the
+    package to the workers and sets the read pins (session.pin_reads),
+    whatever the caller set since boot."""
     def deco(fn: QueryFn) -> QueryFn:
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             _ensure_workers_can_import(spark)
+            pin_reads(spark)
             return fn(spark, sf_dir)
 
         wrapped.__name__ = fn.__name__

@@ -1,8 +1,16 @@
-"""SparkSession factory.
+"""SparkSession factory, and the read pins every query result depends on.
+
+Read pins (READ_PINS): timestamps are instants rendered in UTC, naive
+parquet timestamps read as instants, and TIMESTAMP(NANOS) columns read
+as longs that catalog.normalize_events_ts converts. They are session
+confs, and a caller may change any of them between queries, so
+pin_reads sets them at boot (through session_confs) and again before
+every registered query build (registry.register) and every
+catalog.table call. Nothing else sets them.
 
 Local test posture: ``local[$SPARK_GRAFT_CPUS]`` single JVM, shuffle
 partitions = cores (every test shuffle fits). Cluster posture: AQE,
-skew-join handling, Arrow, and the UTC pins carry over unchanged — but
+skew-join handling, Arrow, and the read pins carry over unchanged — but
 shuffle-partition SIZING does not: partition count must track shuffle
 BYTES (~128–200 MB per reduce partition → ~10⁵–10⁶ partitions for a
 100 TB shuffle), never core count, and AQE's coalescePartitions only
@@ -51,6 +59,25 @@ import os
 
 from pyspark.sql import SparkSession
 
+# The read contract (module docstring). UTC: the oracles render every
+# timestamp as a naive UTC instant. inferTimestampNTZ off: a naive
+# parquet timestamp (isAdjustedToUTC=false) reads as TIMESTAMP_LTZ, so
+# unix_micros/window/watermark apply to it. nanosAsLong: Spark 4
+# rejects TIMESTAMP(NANOS) unless it reads it as a long.
+READ_PINS = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
+
+def pin_reads(spark: SparkSession) -> None:
+    """Set READ_PINS on ``spark``. Execution reads these confs when a
+    plan is analyzed and run, not when a frame is cached, so a caller
+    that changed one since boot gets the contract back here."""
+    for key, value in READ_PINS.items():
+        spark.conf.set(key, value)
+
 
 def session_confs(env: dict[str, str] | None = None) -> tuple[str, dict[str, str]]:
     """O3 (config from env, spotifyextract.py:15-20 os.environ reads):
@@ -71,7 +98,6 @@ def session_confs(env: dict[str, str] | None = None) -> tuple[str, dict[str, str
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.session.timeZone": "UTC",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         # 32g: local[32] runs the driver AND all 32 executor threads in
         # one JVM, and a smaller heap GC-throttles long bench sessions
@@ -79,11 +105,10 @@ def session_confs(env: dict[str, str] | None = None) -> tuple[str, dict[str, str
         "spark.driver.memory": e.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
         "spark.ui.enabled": "false",
         "spark.sql.parquet.filterPushdown": "true",
-        # Naive parquet timestamps (isAdjustedToUTC=false) are instants
-        # in this data model — read them as TIMESTAMP_LTZ, not NTZ, so
-        # unix_micros/window/watermark apply uniformly. catalog.table()
-        # re-pins this per call for driver-constructed sessions.
-        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+        # At boot too, not only per query build: the ETL entry points
+        # (spotify.transform, run_spotify_pipeline) go through neither
+        # the registry nor catalog.table, and their CSV dates are UTC.
+        **READ_PINS,
         # Call-site capture: py4j round trips per DataFrame call (module
         # docstring).
         "spark.python.sql.dataFrameDebugging.enabled": "false",

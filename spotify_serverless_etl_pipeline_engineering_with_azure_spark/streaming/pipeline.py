@@ -98,48 +98,28 @@ def run_spotify_pipeline(
     )
 
 
-def _staged_dir(sf_dir: str, name: str) -> str:
-    """The streaming file source wants a DIRECTORY; the test tables are
-    single files. Stage a symlink dir under /tmp (no data copy).
+def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events parquet as a (bounded) stream, read in place: a file
+    source over ``sf_dir`` that keeps only ``events.parquet``, with the
+    file schema from the catalog's loaded-table cache, then the SAME ts
+    normalization as the batch path (catalog.normalize_events_ts), so
+    the two can never diverge on the TIMESTAMP(NANOS)-vs-micros rule
+    every oracle-parity test depends on. Reads under the session's
+    read pins, which every registered query build sets.
 
     CONTRACT: exactly ONE file, so an availableNow drain with no
     maxFilesPerTrigger is a single micro-batch. streaming_stateful_funnel's
     oracle equality (monotone state machine vs batch SQL) relies on
-    this and asserts it; staging multiple files here would silently
-    under-count funnels that span batches out of order."""
-    import hashlib
-    import os
+    this and asserts it; a source that matched several files would
+    silently under-count funnels that span batches out of order."""
+    from ..catalog import normalize_events_ts, stored
 
-    d = f"/tmp/sse_stream_src_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}/{name}"
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, f"{name}.parquet")
-    # lexists, not exists: exists() follows the link, so a DANGLING link
-    # (dataset deleted/regenerated) reads as absent and the symlink call
-    # below raises FileExistsError forever after. A stale-but-present
-    # link is re-pointed; the target is absolutized so a relative sf_dir
-    # can't produce a link that resolves relative to /tmp.
-    target = os.path.abspath(f"{sf_dir}/{name}.parquet")
-    if os.path.lexists(link):
-        if os.path.realpath(link) == os.path.realpath(target):
-            return d
-        os.remove(link)
-    os.symlink(target, link)
-    return d
-
-
-def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The events parquet as a (bounded) stream — raw file schema (from
-    the catalog's cached footer read), file source underneath, then the
-    SAME ts normalization as the batch path (catalog.normalize_events_ts)
-    so the two can never diverge on the TIMESTAMP(NANOS)-vs-micros
-    encoding rule every oracle-parity test depends on."""
-    from ..catalog import normalize_events_ts, raw_schema
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    src = _staged_dir(sf_dir, "events")
-    schema = raw_schema(spark, sf_dir, "events")
-    return normalize_events_ts(spark.readStream.schema(schema).parquet(src))
+    schema = stored(spark, sf_dir, "events").schema
+    return normalize_events_ts(
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
+    )
 
 
 def windowed_counts(events: DataFrame) -> DataFrame:
@@ -211,10 +191,9 @@ GROUP BY user_id, session_seq
 # streaming parallelism should track STATE SIZE, not the batch session's
 # core count: every shuffle partition materializes a state store
 # (directory, provider, commit per micro-batch), so 32 stores for a few
-# thousand keys is pure fixed overhead — measured 2× end-to-end (1.21 s
-# → 0.62 s for the tumbling window at sf0.1). A production job sizes
-# this to keys×bytes/store-budget; it is fixed at the FIRST run of a
-# checkpoint and must not change across restarts.
+# thousand keys is pure fixed overhead (OPTIMIZATION_r11.md, appendix).
+# A production job sizes this to keys×bytes/store-budget; it is fixed at
+# the FIRST run of a checkpoint and must not change across restarts.
 STREAM_STATE_PARTITIONS = 8
 
 

@@ -46,29 +46,36 @@ def test_queries_run_from_foreign_cwd():
 
 
 def test_timestamp_queries_survive_non_utc_session():
-    """The driver may run with any session timezone; catalog.table pins
-    UTC per call, so timestamp-output queries must match the UTC oracle
-    even when the session starts in America/New_York (a regression here
-    shifts every window/session boundary by the offset)."""
+    """The driver may run with any session timezone, and may change it
+    between queries. Every registered query build pins the read
+    contract (UTC among it), so timestamp-output queries must match
+    the UTC oracle even when the session is reset to America/New_York
+    before EACH query: a query that skips the pin renders its
+    timestamps shifted by the offset, whatever ran before it."""
     script = f"""
 import sys; sys.path.insert(0, {REPO!r})
 from pyspark.sql import SparkSession
 spark = (SparkSession.builder.master("local[4]")
          .config("spark.sql.shuffle.partitions", "4")
-         .config("spark.sql.session.timeZone", "America/New_York")
          .config("spark.ui.enabled", "false").getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
 import __spark_entry__ as e
 from tests.oracle_mirror import duckdb_conn, compare
 qs, osql = e.queries(), e.oracle_sql()
 con = duckdb_conn("/root/testdata/sf0.001")
+bad = []
 for name in ("events_tumbling_window", "ref_c1_timestamp_cast",
              "events_sessionization", "streaming_tumbling_window",
+             "streaming_sliding_window", "streaming_session_window",
+             "spotify_songs",
              "events_cohort_retention", "events_attribution_last_touch",
              "events_point_in_time_enrich", "events_anomaly_zscore"):
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     p = compare(qs[name](spark, "/root/testdata/sf0.001").toPandas(),
                 con.execute(osql[name]).fetchdf())
-    assert not p, f"{{name}}: {{p}}"
+    if p:
+        bad.append((name, p))
+assert not bad, bad
 print("TZ_CONTRACT_OK")
 """
     proc = subprocess.run(

@@ -182,6 +182,47 @@ def test_windowed_counts_match_batch(spark, sf_dir):
     assert streamed == {tuple(r) for r in batch.collect()}
 
 
+def test_nanos_events_read_like_micros(spark, tmp_path):
+    """events.ts stored as TIMESTAMP(NANOS) reads as the same instants
+    as a TIMESTAMP(MICROS) copy, through catalog.table and through
+    events_stream drained by run_to_parquet. The values sit above 2^53
+    ns, where a floating division would round them."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from spotify_serverless_etl_pipeline_engineering_with_azure_spark.catalog import table
+
+    base = 1_704_067_200_000_000  # 2024-01-01 00:00 UTC, in microseconds
+    micros = [base + i * 1_234_567_891 + i for i in range(40)]
+    dirs = {}
+    for unit, scale in (("us", 1), ("ns", 1000)):
+        d = tmp_path / unit
+        d.mkdir()
+        pq.write_table(
+            pa.table({
+                "event_id": pa.array(range(40), pa.int64()),
+                "ts": pa.array([m * scale for m in micros], pa.timestamp(unit)),
+            }),
+            d / "events.parquet",
+        )
+        assert pq.read_schema(d / "events.parquet").field("ts").type == pa.timestamp(unit)
+        dirs[unit] = str(d)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select("event_id", "ts").collect())
+
+    epoch = datetime.datetime(1970, 1, 1)
+    expected = [(i, epoch + datetime.timedelta(microseconds=m)) for i, m in enumerate(micros)]
+    assert rows(table(spark, dirs["us"], "events")) == expected
+    assert rows(table(spark, dirs["ns"], "events")) == expected
+    back, _ = run_to_parquet(
+        events_stream(spark, dirs["ns"]).select("event_id", "ts"), "t_nanos", dirs["ns"]
+    )
+    assert rows(back) == expected
+
+
 def test_stream_checkpoint_no_reprocess(spark, tmp_path):
     """Restarting over the same checkpoint must not re-emit batches
     (the reference's at-least-once copy+delete, made exactly-once)."""

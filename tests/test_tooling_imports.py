@@ -7,8 +7,9 @@ importing a deleted function would otherwise only fail when someone
 next runs it. Each file is parsed, never executed.
 
 The package also shares frames in one place: only catalog.py
-checkpoints, and nothing persists. And it writes each operator once:
-no run of CLONE_RUN code lines appears twice."""
+checkpoints, and nothing persists. It writes the read pins once:
+session.READ_PINS. And it writes each operator once: no run of
+CLONE_RUN code lines appears twice."""
 
 from __future__ import annotations
 
@@ -232,6 +233,86 @@ def test_sharing_scan_flags_a_bare_local_checkpoint():
     persisting = "def q(spark, df):\n    return df.groupBy('k').count().persist()\n"
     for path in (f"{PACKAGE}/plans/dedup.py", f"{PACKAGE}/catalog.py"):
         assert sharing_violations(path, persisting) == [f"{path}:2: .persist( in q"]
+
+
+# The session confs every query result depends on (session.READ_PINS).
+PIN_KEYS = {
+    "spark.sql.session.timeZone",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+}
+PIN_HOME = f"{PACKAGE}/session.py"
+
+
+def is_pin_definition(node: ast.stmt) -> bool:
+    return (
+        isinstance(node, ast.Assign)
+        and [t.id for t in node.targets if isinstance(t, ast.Name)] == ["READ_PINS"]
+    )
+
+
+def pin_violations(path: str, source: str) -> list[str]:
+    """A pin key written as code anywhere but the READ_PINS definition
+    in session.py (a ``conf.set``, a builder ``config``, a conf dict
+    entry), and any use of READ_PINS outside session.py, where
+    pin_reads and session_confs apply it. Docstrings and comments may
+    name the keys."""
+    found = []
+    for top in ast.parse(source).body:
+        if path == PIN_HOME and is_pin_definition(top):
+            continue
+        for node in ast.walk(top):
+            if isinstance(node, ast.Constant) and node.value in PIN_KEYS:
+                found.append(f"{path}:{node.lineno}: {node.value}")
+            elif path != PIN_HOME and "READ_PINS" in (
+                getattr(node, "id", None), getattr(node, "attr", None)
+            ):
+                found.append(f"{path}:{node.lineno}: READ_PINS")
+    return found
+
+
+def test_read_pins_are_written_once():
+    """The timezone, inferTimestampNTZ and nanosAsLong pins are one
+    constant, session.READ_PINS, set only by session.pin_reads and the
+    boot confs; a second copy would drift from it, as the per-module
+    partial sets once did."""
+    with open(os.path.join(ROOT, PIN_HOME), encoding="utf-8") as f:
+        home = ast.parse(f.read())
+    (definition,) = [node for node in home.body if is_pin_definition(node)]
+    assert {k.value for k in definition.value.keys} == PIN_KEYS
+    bad = []
+    for path in PACKAGE_FILES + TOOL_FILES + ["__spark_entry__.py"]:
+        with open(os.path.join(ROOT, path), encoding="utf-8") as f:
+            bad += pin_violations(path, f.read())
+    assert not bad, f"read pins written outside session.READ_PINS: {bad}"
+
+
+def test_pin_scan_flags_a_second_copy():
+    definition = 'READ_PINS = {"spark.sql.session.timeZone": "UTC"}\n'
+    assert not pin_violations(PIN_HOME, definition)
+    resetting = (
+        "def events_stream(spark, sf_dir):\n"
+        '    """Sets spark.sql.legacy.parquet.nanosAsLong first."""\n'
+        '    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")\n'
+    )
+    path = f"{PACKAGE}/streaming/pipeline.py"
+    assert pin_violations(path, resetting) == [
+        f"{path}:3: spark.sql.legacy.parquet.nanosAsLong"
+    ]
+    boot_copy = definition + 'CONFS = {"spark.sql.session.timeZone": "UTC"}\n'
+    assert pin_violations(PIN_HOME, boot_copy) == [f"{PIN_HOME}:2: spark.sql.session.timeZone"]
+    looping = (
+        "from .session import READ_PINS\n"
+        "def table(spark):\n"
+        "    for k, v in READ_PINS.items():\n"
+        "        spark.conf.set(k, v)\n"
+    )
+    path = f"{PACKAGE}/catalog.py"
+    assert pin_violations(path, looping) == [f"{path}:3: READ_PINS"]
+    # The definition itself is a copy anywhere but session.py.
+    assert pin_violations(path, definition) == [
+        f"{path}:1: READ_PINS", f"{path}:1: spark.sql.session.timeZone"
+    ]
 
 
 # Consecutive code lines that make a copied block.
