@@ -14,17 +14,14 @@ expressions, fully codegen'd.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
-
-def parse_release_date(col: Column) -> Column:
-    padded = (
-        F.when(F.length(col) == 4, F.concat(col, F.lit("-01-01")))
-        .when(F.length(col) == 7, F.concat(col, F.lit("-01")))
-        .otherwise(col)
+def parse_release_date(c: str) -> str:
+    """Spark SQL fragment: the release date in SQL expression ``c`` as a
+    DATE."""
+    return (
+        f"to_date(CASE length({c}) WHEN 4 THEN concat({c}, '-01-01') "
+        f"WHEN 7 THEN concat({c}, '-01') ELSE {c} END, 'yyyy-MM-dd')"
     )
-    return F.to_date(padded, "yyyy-MM-dd")
 
 
 # DuckDB oracle fragment with identical padding semantics.

@@ -4,18 +4,22 @@ three projection branches → casts → keep-first dedup → star schema.
 Operator parity (SURVEY.md §2.1, citations into /root/reference/):
   S4 JSON parse      → spark.read.json with explicit schema (no inference)
   S5 explode items   → posexplode (position kept for keep-first order)
-  P1 albums project  → nested-field select (spotifytransform.py:26-37)
-  P2 artists[0] head → F.get(track.artists, 0) (spotifytransform.py:39-48)
-  P3 songs project   → 3-level nested select (spotifytransform.py:50-64)
-  P4 schema attach   → .alias per column (spotifytransform.py:91,94,97)
+  P1 albums project  → nested-field SELECT (spotifytransform.py:26-37)
+  P2 artists[0] head → get(item.track.artists, 0), NULL on an empty
+                       array (spotifytransform.py:39-48)
+  P3 songs project   → 3-level nested SELECT (spotifytransform.py:50-64)
+  P4 schema attach   → AS per column in the STAR_SQL texts
+                       (spotifytransform.py:91,94,97)
   C1 ts cast         → to_timestamp (spotifytransform.py:92)
-  C2 mixed dates     → parse_release_date (spotifytransform.py:99)
-  D1/D2 dedup        → min_by over a (doc_order, pos) struct key
-                       (spotifytransform.py:95,98 — pandas keep='first';
-                       distributed "first" is made explicit as
-                       file-order × item-position, SURVEY.md §7)
+  C2 mixed dates     → parse_release_date: a CASE on length inside
+                       to_date (spotifytransform.py:99)
+  D1/D2 dedup        → keep_first: min_by over a (doc_order, pos)
+                       struct key (spotifytransform.py:95,98 — pandas
+                       keep='first'; distributed "first" is made
+                       explicit as file-order × item-position,
+                       SURVEY.md §7)
 
-Scale posture: one wide `select` per branch — Catalyst prunes the
+Scale posture: one SELECT text per table — Catalyst prunes the
 nested schema down to the accessed fields (the reference does this
 pruning by hand); dedup is a keep-first aggregate over the natural
 key, which shuffles once on the key unless the input already sits in
@@ -105,10 +109,12 @@ def explode_items(raw: DataFrame) -> DataFrame:
     return raw.select("doc_order", F.posexplode("items").alias("pos", "item"))
 
 
-def _keep_first(df: DataFrame, keys: list[str], order: list[str]) -> DataFrame:
-    """D1/D2: deterministic keep-first dedup by natural key: per
-    ``keys`` value, the row that sorts first by ``order``. Returns the
-    ``keys`` columns, then the others in input order.
+def keep_first(rows: str, key: str, values: str, order: str) -> str:
+    """D1/D2: Spark SQL text of a deterministic keep-first dedup by
+    natural key: per ``key`` value of the ``rows`` query, the
+    ``values`` of the row that sorts first by ``order`` (each a comma
+    list of column names). Returns the ``key`` columns, then
+    ``values``.
 
     Exact parity with pandas drop_duplicates(keep='first') under an
     explicit ordering such as (doc_order, pos). min_by over a struct
@@ -118,45 +124,48 @@ def _keep_first(df: DataFrame, keys: list[str], order: list[str]) -> DataFrame:
     album, a NULL natural key) in a single task. One shuffle on the
     key either way.
     """
-    others = [c for c in df.columns if c not in keys]
     return (
-        df.groupBy(*keys)
-        .agg(F.min_by(F.struct(*others), F.struct(*order)).alias("_r"))
-        .select(*keys, *[F.col(f"_r.{c}").alias(c) for c in others])
+        f"SELECT {key}, _r.* FROM (SELECT {key}, min_by(struct({values}), "
+        f"struct({order})) AS _r FROM ({rows}) GROUP BY {key})"
     )
 
 
-def make_albums(items: DataFrame) -> DataFrame:
-    """P1 + C2 + D2: albums dimension (spotifytransform.py:26-37,97-99)."""
-    proj = items.select(
-        "doc_order",
-        "pos",
-        F.col("item.track.album.id").alias("album_id"),
-        F.col("item.track.album.name").alias("name"),
-        parse_release_date(F.col("item.track.album.release_date")).alias("release_date"),
-        F.col("item.track.album.total_tracks").alias("total_tracks"),
-        F.col("item.track.album.external_urls.spotify").alias("url"),
-    )
-    return _keep_first(proj, ["album_id"], ["doc_order", "pos"]).select(
-        "album_id", "name", "release_date", "total_tracks", "url"
-    )
+# P2: artists[0] ONLY, the reference's lossy array head
+# (spotifytransform.py:43-45); explode_artists is the generalized form.
+# get(), not [0]: under ANSI an index past the end raises, get is NULL.
+_HEAD = "get(item.track.artists, 0)"
+_ALBUM = "item.track.album"
 
-
-def make_artists(items: DataFrame) -> DataFrame:
-    """P2 + D1: artists dimension from artists[0] ONLY — the reference's
-    lossy array-head projection (spotifytransform.py:43-45). The
-    generalized explode-all-artists form is explode_artists()."""
-    head = F.get(F.col("item.track.artists"), 0)
-    proj = items.select(
-        "doc_order",
-        "pos",
-        head.getField("id").alias("artist_id"),
-        head.getField("name").alias("name"),
-        head.getField("external_urls").getField("spotify").alias("url"),
-    )
-    return _keep_first(proj, ["artist_id"], ["doc_order", "pos"]).select(
-        "artist_id", "name", "url"
-    )
+# The star schema as one Spark SQL text per table over the exploded
+# items, bound as ``{items}``. A text is parsed in the JVM, so a
+# table's build is a handful of py4j round trips, not one per column.
+STAR_SQL = {
+    # P3 + C1: songs fact table (spotifytransform.py:50-64,91-92).
+    "songs": (
+        "SELECT item.track.id AS song_id, item.track.name AS name, "
+        "item.track.duration_ms AS duration_ms, item.track.external_urls.spotify AS url, "
+        "item.track.popularity AS popularity, to_timestamp(item.added_at) AS added_date, "
+        f"{_ALBUM}.id AS album_id, {_HEAD}.id AS artist_id FROM {{items}}"
+    ),
+    # P2 + D1: artists dimension (spotifytransform.py:39-48,95).
+    "artists": keep_first(
+        f"SELECT doc_order, pos, {_HEAD}.id AS artist_id, {_HEAD}.name AS name, "
+        f"{_HEAD}.external_urls.spotify AS url FROM {{items}}",
+        "artist_id",
+        "name, url",
+        "doc_order, pos",
+    ),
+    # P1 + C2 + D2: albums dimension (spotifytransform.py:26-37,97-99).
+    "albums": keep_first(
+        f"SELECT doc_order, pos, {_ALBUM}.id AS album_id, {_ALBUM}.name AS name, "
+        f"{parse_release_date(_ALBUM + '.release_date')} AS release_date, "
+        f"{_ALBUM}.total_tracks AS total_tracks, {_ALBUM}.external_urls.spotify AS url "
+        "FROM {items}",
+        "album_id",
+        "name, release_date, total_tracks, url",
+        "doc_order, pos",
+    ),
+}
 
 
 def explode_artists(items: DataFrame) -> DataFrame:
@@ -175,28 +184,12 @@ def explode_artists(items: DataFrame) -> DataFrame:
     )
 
 
-def make_songs(items: DataFrame) -> DataFrame:
-    """P3 + C1: songs fact table (spotifytransform.py:50-64,91-92)."""
-    return items.select(
-        F.col("item.track.id").alias("song_id"),
-        F.col("item.track.name").alias("name"),
-        F.col("item.track.duration_ms").alias("duration_ms"),
-        F.col("item.track.external_urls.spotify").alias("url"),
-        F.col("item.track.popularity").alias("popularity"),
-        F.to_timestamp(F.col("item.added_at")).alias("added_date"),
-        F.col("item.track.album.id").alias("album_id"),
-        F.get(F.col("item.track.artists"), 0).getField("id").alias("artist_id"),
-    )
-
-
 def star_tables(items: DataFrame) -> dict[str, DataFrame]:
     """The star schema over exploded items: songs fact plus the
-    keep-first artists and albums dimensions."""
-    return {
-        "songs": make_songs(items),
-        "artists": make_artists(items),
-        "albums": make_albums(items),
-    }
+    keep-first artists and albums dimensions, each one ``STAR_SQL``
+    text with ``items`` bound as a query-scoped view."""
+    spark = items.sparkSession
+    return {name: spark.sql(text, items=items) for name, text in STAR_SQL.items()}
 
 
 def transform(raw: DataFrame) -> dict[str, DataFrame]:

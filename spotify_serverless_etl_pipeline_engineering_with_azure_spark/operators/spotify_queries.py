@@ -126,7 +126,7 @@ def spotify_songs(spark: SparkSession, sf_dir: str) -> DataFrame:
     offset, so the parsed instant does not depend on the session
     timezone; its rendering does, and the registry's read pins render
     it in UTC, as the oracle does."""
-    return spotify.make_songs(_items(spark))
+    return spotify.star_tables(_items(spark))["songs"]
 
 
 _ARTISTS_ORACLE = f"""
@@ -148,7 +148,7 @@ WHERE rn = 1
 def spotify_artists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P2+D1: artists dim — artists[0] head projection (the reference's
     lossy array-head, spotifytransform.py:43-45), keep-first dedup."""
-    return spotify.make_artists(_items(spark))
+    return spotify.star_tables(_items(spark))["artists"]
 
 
 _ALBUMS_ORACLE = f"""
@@ -175,8 +175,8 @@ def spotify_albums(spark: SparkSession, sf_dir: str) -> DataFrame:
     (spotifytransform.py:26-37,97-99), keep-first dedup. release_date is
     rendered 'yyyy-MM-dd' on both engines (the ref_c2 convention —
     pandas collapses DuckDB DATE to datetime64, so a raw date column
-    cannot canonicalize identically); make_albums keeps the date type."""
-    return spotify.make_albums(_items(spark)).withColumn(
+    cannot canonicalize identically); star_tables keeps the date type."""
+    return spotify.star_tables(_items(spark))["albums"].withColumn(
         "release_date", F.date_format("release_date", "yyyy-MM-dd")
     )
 

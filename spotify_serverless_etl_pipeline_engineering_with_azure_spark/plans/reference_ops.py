@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..functions.dates import SQL_PARSE_RELEASE_DATE, parse_release_date
-from ..operators.spotify import _keep_first
+from ..operators.spotify import keep_first
 from ..registry import register
 
 
@@ -142,7 +142,7 @@ def ref_c2_mixed_granularity_dates(spark: SparkSession, sf_dir: str) -> DataFram
     return raw.select(
         "o_orderkey",
         "release_date",
-        F.date_format(parse_release_date(F.col("release_date")), "yyyy-MM-dd").alias(
+        F.date_format(F.expr(parse_release_date("release_date")), "yyyy-MM-dd").alias(
             "parsed_date"
         ),
     )
@@ -170,8 +170,13 @@ def ref_d1_keepfirst_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-by-event_id, through the pipeline's own keep-first dedup
     (SURVEY.md §7 hard part #1).
     """
-    ev = table(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "value")
-    return _keep_first(ev, ["user_id", "event_type"], ["event_id"]).select(
+    first = keep_first(
+        "SELECT event_id, user_id, event_type, value FROM {events}",
+        "user_id, event_type",
+        "event_id, value",
+        "event_id",
+    )
+    return spark.sql(first, events=table(spark, sf_dir, "events")).select(
         "event_id", "user_id", "event_type", "value"
     )
 

@@ -85,7 +85,8 @@ def run_spotify_pipeline(
         # so coalesce(1) moves no data; it tells Catalyst the input is
         # one partition, which already satisfies keep-first's
         # distribution, so no Exchange is planned. Keep-first orders on
-        # (doc_order, pos), so the result holds for any batch.
+        # (doc_order, pos), so the result holds for any batch
+        # (test_keep_first_across_blobs_in_one_partition).
         for name, df in spotify.transform(batch_df.coalesce(1)).items():
             write_csv(df, f"{output_base}/{name}_data/batch_id={batch_id}")
 

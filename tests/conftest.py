@@ -64,3 +64,31 @@ def checkpoint_dir(spark, path):
         yield sc.getCheckpointDir().replace("file:", "")
     finally:
         getattr(sc._jsc.sc(), "checkpointDir_$eq")(spark._jvm.scala.Option.apply(None))
+
+
+@contextlib.contextmanager
+def py4j_round_trips():
+    """Count the commands the calling thread sends to the JVM inside
+    the block: every call on a Java object and every JVM attribute
+    lookup is one py4j round trip. Releases of dead Java references
+    run on py4j's own thread, whenever it gets to them, and are not
+    counted. Yields a namespace whose ``n`` is the count so far."""
+    import threading
+    from types import SimpleNamespace
+
+    from pyspark import SparkContext
+
+    client = SparkContext._gateway._gateway_client
+    send = client.send_command
+    caller = threading.get_ident()
+    sent = SimpleNamespace(n=0)
+
+    def counted(*args, **kwargs):
+        sent.n += threading.get_ident() == caller
+        return send(*args, **kwargs)
+
+    client.send_command = counted
+    try:
+        yield sent
+    finally:
+        del client.send_command

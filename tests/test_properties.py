@@ -17,8 +17,6 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from pyspark.sql import functions as F
-
 from spotify_serverless_etl_pipeline_engineering_with_azure_spark.functions.dates import (
     parse_release_date,
 )
@@ -80,9 +78,7 @@ def test_release_date_padding_matches_pandas(spark, specs):
     df = spark.createDataFrame([(s,) for s in raw], "release_date: string")
     got = [
         r.parsed.isoformat() if r.parsed else None
-        for r in df.select(
-            parse_release_date(F.col("release_date")).alias("parsed")
-        ).collect()
+        for r in df.selectExpr(f"{parse_release_date('release_date')} AS parsed").collect()
     ]
     expected = [ts.date().isoformat() for ts in pd.to_datetime(raw, format="mixed")]
     assert got == expected

@@ -12,6 +12,12 @@ import datetime as dt
 
 import pytest
 
+from pyspark.sql import functions as F
+
+from spotify_serverless_etl_pipeline_engineering_with_azure_spark.catalog import share
+from spotify_serverless_etl_pipeline_engineering_with_azure_spark.functions.dates import (
+    parse_release_date,
+)
 from spotify_serverless_etl_pipeline_engineering_with_azure_spark.operators import spotify
 from spotify_serverless_etl_pipeline_engineering_with_azure_spark.operators.fixtures import (
     fixture_df,
@@ -19,6 +25,7 @@ from spotify_serverless_etl_pipeline_engineering_with_azure_spark.operators.fixt
     write_json_dir,
 )
 
+from .conftest import py4j_round_trips
 from .plan_digest import digest, fields
 
 
@@ -113,7 +120,7 @@ def test_array_head_is_lossy_and_explode_generalizes(spark, docs):
     exploded = spotify.explode_artists(items)
     assert exploded.count() == n_all_artists
     # the head projection sees strictly fewer artist ids than explode
-    head_ids = {r.artist_id for r in spotify.make_artists(items).collect()}
+    head_ids = {r.artist_id for r in spotify.star_tables(items)["artists"].collect()}
     all_ids = {r.artist_id for r in exploded.collect()}
     assert head_ids <= all_ids and len(head_ids) < len(all_ids)
 
@@ -149,6 +156,88 @@ def test_transform_parses_raw_json_once(spark, tmp_path):
         df.collect()
     assert json_scans(shared) == 0
     assert json_scans(spotify.star_tables(spotify.explode_items(raw))) == 3
+
+
+def test_keep_first_across_blobs_in_one_partition(spark, tmp_path):
+    """Keep-first picks its winner by (doc_order, pos), not by the order
+    rows reach the aggregate. Twelve blobs read into ONE partition (the
+    file scan packs files by size, not by name, and names cross the
+    ...0009/...0010 boundary) give the reference's file-order winners:
+    a stream batch holding several blobs and a backfill agree."""
+    write_json_dir(str(tmp_path / "raw"), n_docs=12)
+    raw = spotify.read_raw_json(spark, str(tmp_path / "raw")).coalesce(1)
+    got = spotify.transform(raw)
+    for name, want in zip(("songs", "artists", "albums"), expected_tables(generate_docs(12))):
+        assert sorted(tuple(r) for r in got[name].collect()) == sorted(want), name
+
+
+# py4j round trips of one transform build over a one-blob frame: 48
+# measured (Spark 4.1, py4j 0.10.9.9); 295 for _column_star_tables.
+TRANSFORM_ROUND_TRIPS = 60
+
+
+def _column_star_tables(items):
+    """The star schema built column by column with the DataFrame API,
+    each F.col(...).alias(...) one or more py4j round trips."""
+    head = F.get(F.col("item.track.artists"), 0)
+
+    def keep_first(key, cols):
+        proj = items.select("doc_order", "pos", *[c.alias(n) for n, c in cols.items()])
+        others = [n for n in cols if n != key]
+        first = F.min_by(F.struct(*others), F.struct("doc_order", "pos")).alias("_r")
+        return proj.groupBy(key).agg(first).select(
+            key, *[F.col(f"_r.{n}").alias(n) for n in others]
+        )
+
+    return {
+        "songs": items.select(
+            F.col("item.track.id").alias("song_id"),
+            F.col("item.track.name").alias("name"),
+            F.col("item.track.duration_ms").alias("duration_ms"),
+            F.col("item.track.external_urls.spotify").alias("url"),
+            F.col("item.track.popularity").alias("popularity"),
+            F.to_timestamp(F.col("item.added_at")).alias("added_date"),
+            F.col("item.track.album.id").alias("album_id"),
+            head.getField("id").alias("artist_id"),
+        ),
+        "artists": keep_first(
+            "artist_id",
+            {
+                "artist_id": head.getField("id"),
+                "name": head.getField("name"),
+                "url": head.getField("external_urls").getField("spotify"),
+            },
+        ),
+        "albums": keep_first(
+            "album_id",
+            {
+                "album_id": F.col("item.track.album.id"),
+                "name": F.col("item.track.album.name"),
+                "release_date": F.expr(parse_release_date("item.track.album.release_date")),
+                "total_tracks": F.col("item.track.album.total_tracks"),
+                "url": F.col("item.track.album.external_urls.spotify"),
+            },
+        ),
+    }
+
+
+def test_transform_build_round_trips_are_bounded(spark, tmp_path):
+    """The fixed per-trigger cost of the blob stream: one transform
+    build over a one-blob frame, as sink_batch runs it, stays within
+    TRANSFORM_ROUND_TRIPS py4j round trips. The same tables built
+    column by column (the negative fixture) give the same rows and
+    schemas and exceed the bound."""
+    write_json_dir(str(tmp_path / "raw"), n_docs=1)
+    raw = spotify.read_raw_json(spark, str(tmp_path / "raw")).coalesce(1)
+    spotify.transform(raw)  # the first build resolves classes once per session
+    with py4j_round_trips() as sql_build:
+        tables = spotify.transform(raw)
+    with py4j_round_trips() as column_build:
+        by_column = _column_star_tables(share(spotify.explode_items(raw)))
+    assert sql_build.n <= TRANSFORM_ROUND_TRIPS < column_build.n, (sql_build.n, column_build.n)
+    for name, df in tables.items():
+        assert df.schema == by_column[name].schema, name
+        assert sorted(df.collect()) == sorted(by_column[name].collect()), name
 
 
 def test_datasource_tolerates_explicit_nulls(tmp_path):
