@@ -29,9 +29,10 @@ one partition. For set-semantics dedup (row choice irrelevant) use
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamReader
 
 from ..catalog import share
 from ..functions.dates import parse_release_date
@@ -79,14 +80,24 @@ ITEM_SCHEMA = T.StructType(
 PLAYLIST_SCHEMA = T.StructType([T.StructField("items", T.ArrayType(ITEM_SCHEMA))])
 
 
-def read_raw_json(spark: SparkSession, path: str) -> DataFrame:
-    """S4: read a directory of raw playlist JSON blobs (multiline docs).
+def read_playlists(reader: DataFrameReader | DataStreamReader, path: str) -> DataFrame:
+    """S4: the raw playlist JSON blobs (multiline docs) at ``path``
+    through ``reader``, a batch or a stream reader with its own options
+    already set. Reference: json.loads at spotifytransform.py:79.
 
-    Reference: json.loads at spotifytransform.py:79. Document order is
-    the file name (the reference's timestamped blob names sort by run).
+    doc_order is the source file URI: the reference's timestamped blob
+    names sort by run, so file order is document order. keep-first
+    orders by (doc_order, pos) and pos restarts at 0 per file, so a
+    constant here would break cross-file ties arbitrarily whenever one
+    frame (a backfill, a micro-batch) holds more than one file.
     """
-    df = spark.read.schema(PLAYLIST_SCHEMA).option("multiLine", True).json(path)
+    df = reader.schema(PLAYLIST_SCHEMA).option("multiLine", True).json(path)
     return df.withColumn("doc_order", F.input_file_name())
+
+
+def read_raw_json(spark: SparkSession, path: str) -> DataFrame:
+    """S4 as a batch: a directory of raw playlist JSON blobs."""
+    return read_playlists(spark.read, path)
 
 
 def explode_items(raw: DataFrame) -> DataFrame:
@@ -97,8 +108,8 @@ def explode_items(raw: DataFrame) -> DataFrame:
     would make (doc_order, pos) tie across documents and keep-first
     dedup pick an arbitrary winner per run — the exact
     nondeterminism this column exists to prevent. Callers attach it
-    from the file name (read_raw_json, the streaming source) or the
-    fixture's explicit order.
+    from the file name (read_playlists), the page name or the fixture's
+    explicit order.
     """
     if "doc_order" not in raw.columns:
         raise ValueError(
@@ -127,6 +138,16 @@ def keep_first(rows: str, key: str, values: str, order: str) -> str:
     return (
         f"SELECT {key}, _r.* FROM (SELECT {key}, min_by(struct({values}), "
         f"struct({order})) AS _r FROM ({rows}) GROUP BY {key})"
+    )
+
+
+def sql_keep_first(rows: str, key: str, values: str, order: str) -> str:
+    """DuckDB twin of ``keep_first`` for the oracles, same arguments and
+    output columns: the textbook ROW_NUMBER window, an engine and a
+    formulation independent of the Spark side."""
+    return (
+        f"SELECT {key}, {values} FROM (SELECT *, ROW_NUMBER() OVER "
+        f"(PARTITION BY {key} ORDER BY {order}) AS _rn FROM ({rows})) WHERE _rn = 1"
     )
 
 

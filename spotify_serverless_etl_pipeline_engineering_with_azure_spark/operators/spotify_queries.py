@@ -5,7 +5,11 @@ seed-42 raw-zone JSON pages (the reference's S2 blob shape) and the
 DuckDB oracle ``read_json``s the IDENTICAL bytes, so the driver's
 value-hash compare covers the full pipeline — S4 parse, S5 explode,
 P1/P2/P3 projections, C1/C2 casts, D1/D2 keep-first dedup
-(/root/reference/spotifytransform.py:26-99). Golden-value tests live in
+(/root/reference/spotifytransform.py:26-99). The S1 source and the
+blob-triggered stream with its CSV sinks and archival (S3/K2/M1) run
+the same operators: ``rest_datasource_playlist`` parses and explodes
+the DataSource's pages with them, and ``streaming_csv_sink_roundtrip``
+drains ``run_spotify_pipeline`` itself. Golden-value tests live in
 tests/test_spotify_pipeline.py; the four star-schema queries are
 additionally digest-certified via ``reference_pipeline_suite``.
 """
@@ -18,6 +22,7 @@ from pyspark.sql import functions as F
 from ..functions.dates import SQL_PARSE_RELEASE_DATE
 from ..registry import register
 from . import spotify
+from .spotify import sql_keep_first
 
 _DS_FIXTURE_DIR = "/tmp/sse_playlist_pages_v1"
 
@@ -43,6 +48,10 @@ _DS_ITEMS = f"""
     columns={_DS_COLUMNS})
 """
 
+# DuckDB paths of the artists[0] head and the album of a _DS_ITEMS row.
+_HEAD = "u.item.track.artists[1]"
+_ALBUM = "u.item.track.album"
+
 _DS_ORACLE = f"""
 SELECT REGEXP_EXTRACT(u.filename, '([^/]+)$', 1) AS page,
        u.item.added_at AS added_at,
@@ -50,12 +59,12 @@ SELECT REGEXP_EXTRACT(u.filename, '([^/]+)$', 1) AS page,
        u.item.track.name AS track_name,
        u.item.track.duration_ms AS duration_ms,
        u.item.track.popularity AS popularity,
-       u.item.track.artists[1].id AS artist_id,
-       u.item.track.artists[1].name AS artist_name,
-       u.item.track.album.id AS album_id,
-       u.item.track.album.name AS album_name,
-       u.item.track.album.release_date AS release_date,
-       u.item.track.album.total_tracks AS total_tracks
+       {_HEAD}.id AS artist_id,
+       {_HEAD}.name AS artist_name,
+       {_ALBUM}.id AS album_id,
+       {_ALBUM}.name AS album_name,
+       {_ALBUM}.release_date AS release_date,
+       {_ALBUM}.total_tracks AS total_tracks
 FROM ({_DS_ITEMS}) u
 """
 
@@ -106,15 +115,32 @@ def _items(spark: SparkSession) -> DataFrame:
     return spotify.explode_items(spotify.read_raw_json(spark, _ensure_ds_fixture()))
 
 
-_SONGS_ORACLE = f"""
-SELECT u.item.track.id AS song_id,
+# The DuckDB star schema's columns over a _DS_ITEMS row ``u``.
+_SONG_COLUMNS = f"""u.item.track.id AS song_id,
        u.item.track.name AS name,
        u.item.track.duration_ms AS duration_ms,
        u.item.track.external_urls.spotify AS url,
        u.item.track.popularity AS popularity,
        CAST(u.item.added_at AS TIMESTAMP) AS added_date,
-       u.item.track.album.id AS album_id,
-       u.item.track.artists[1].id AS artist_id
+       {_ALBUM}.id AS album_id,
+       {_HEAD}.id AS artist_id"""
+_ARTIST_COLUMNS = (
+    f"{_HEAD}.id AS artist_id, {_HEAD}.name AS name, {_HEAD}.external_urls.spotify AS url"
+)
+_ALBUM_COLUMNS = f"""{_ALBUM}.id AS album_id, {_ALBUM}.name AS name,
+       STRFTIME({SQL_PARSE_RELEASE_DATE.format(c=_ALBUM + ".release_date")},
+                '%Y-%m-%d') AS release_date,
+       {_ALBUM}.total_tracks AS total_tracks, {_ALBUM}.external_urls.spotify AS url"""
+
+
+def _item_rows(columns: str, blob: str = "u.filename") -> str:
+    """The staged items as ``columns``, each row with its file and
+    position (keep-first's order) and its micro-batch ``blob``."""
+    return f"SELECT {blob} AS blob, u.filename, u.pos, {columns} FROM ({_DS_ITEMS}) u"
+
+
+_SONGS_ORACLE = f"""
+SELECT {_SONG_COLUMNS}
 FROM ({_DS_ITEMS}) u
 """
 
@@ -129,19 +155,9 @@ def spotify_songs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spotify.star_tables(_items(spark))["songs"]
 
 
-_ARTISTS_ORACLE = f"""
-SELECT artist_id, name, url
-FROM (
-  SELECT u.item.track.artists[1].id AS artist_id,
-         u.item.track.artists[1].name AS name,
-         u.item.track.artists[1].external_urls.spotify AS url,
-         ROW_NUMBER() OVER (
-           PARTITION BY u.item.track.artists[1].id
-           ORDER BY u.filename, u.pos) AS rn
-  FROM ({_DS_ITEMS}) u
-) d
-WHERE rn = 1
-"""
+_ARTISTS_ORACLE = sql_keep_first(
+    _item_rows(_ARTIST_COLUMNS), "artist_id", "name, url", "filename, pos"
+)
 
 
 @register("spotify_artists", oracle=_ARTISTS_ORACLE, tags=("reference", "spotify"))
@@ -151,22 +167,12 @@ def spotify_artists(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spotify.star_tables(_items(spark))["artists"]
 
 
-_ALBUMS_ORACLE = f"""
-SELECT album_id, name, release_date, total_tracks, url
-FROM (
-  SELECT u.item.track.album.id AS album_id,
-         u.item.track.album.name AS name,
-         STRFTIME({SQL_PARSE_RELEASE_DATE.format(c="u.item.track.album.release_date")},
-                  '%Y-%m-%d') AS release_date,
-         u.item.track.album.total_tracks AS total_tracks,
-         u.item.track.album.external_urls.spotify AS url,
-         ROW_NUMBER() OVER (
-           PARTITION BY u.item.track.album.id
-           ORDER BY u.filename, u.pos) AS rn
-  FROM ({_DS_ITEMS}) u
-) d
-WHERE rn = 1
-"""
+_ALBUMS_ORACLE = sql_keep_first(
+    _item_rows(_ALBUM_COLUMNS),
+    "album_id",
+    "name, release_date, total_tracks, url",
+    "filename, pos",
+)
 
 
 @register("spotify_albums", oracle=_ALBUMS_ORACLE, tags=("reference", "spotify"))
@@ -216,12 +222,25 @@ def spotify_artists_exploded(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("rest_datasource_playlist", oracle=_DS_ORACLE, tags=("source", "datasource", "rest"))
-def rest_datasource_playlist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S1 via the PySpark 4 Python DataSource API: page files =
-    InputPartitions, parsed executor-side in parallel
-    (sources/playlist_datasource.py). Hash-checked against DuckDB
-    reading the identical raw-zone JSON."""
+# S1's page rows: one select over the exploded items, on the same
+# artists[0] head and album paths as the star schema.
+_PAGE_ROWS_SQL = (
+    "SELECT doc_order AS page, item.added_at AS added_at, item.track.id AS track_id, "
+    "item.track.name AS track_name, item.track.duration_ms AS duration_ms, "
+    f"item.track.popularity AS popularity, {spotify._HEAD}.id AS artist_id, "
+    f"{spotify._HEAD}.name AS artist_name, {spotify._ALBUM}.id AS album_id, "
+    f"{spotify._ALBUM}.name AS album_name, {spotify._ALBUM}.release_date AS release_date, "
+    f"{spotify._ALBUM}.total_tracks AS total_tracks FROM {{items}}"
+)
+
+
+def read_playlist_pages(spark: SparkSession, path: str) -> DataFrame:
+    """S1 end to end: the page files under ``path`` fetched through the
+    ``spotify_playlist`` DataSource (sources/playlist_datasource.py),
+    each body parsed with PLAYLIST_SCHEMA (S4) and exploded (S5) on the
+    frame, one row per playlist item. The page name is the doc_order.
+    Explicit nulls ("items": null, a null track or artists[0]) give
+    no rows or NULL columns, never an error."""
     from ..sources.playlist_datasource import SpotifyPlaylistDataSource
 
     try:
@@ -235,5 +254,115 @@ def rest_datasource_playlist(spark: SparkSession, sf_dir: str) -> DataFrame:
         msg = str(e).lower()
         if "already exist" not in msg and "already registered" not in msg:
             raise
-    path = _ensure_ds_fixture()
-    return spark.read.format("spotify_playlist").option("path", path).load()
+    pages = spark.read.format("spotify_playlist").option("path", path).load()
+    # FAILFAST: a torn or non-JSON page fails the read rather than
+    # vanishing as a NULL document.
+    doc = F.from_json("body", spotify.PLAYLIST_SCHEMA, {"mode": "FAILFAST"})
+    raw = pages.select(F.col("page").alias("doc_order"), doc["items"].alias("items"))
+    return spark.sql(_PAGE_ROWS_SQL, items=spotify.explode_items(raw))
+
+
+@register("rest_datasource_playlist", oracle=_DS_ORACLE, tags=("source", "datasource", "rest"))
+def rest_datasource_playlist(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """S1 via the PySpark 4 Python DataSource API: page files =
+    InputPartitions, fetched executor-side in parallel, then the
+    pipeline's own parse and explode. Hash-checked against DuckDB
+    reading the identical raw-zone JSON."""
+    return read_playlist_pages(spark, _ensure_ds_fixture())
+
+
+def _star_join(songs: str, artists: str, albums: str, blob: str) -> str:
+    """SQL text, for Spark and DuckDB alike, of the star join: each song
+    with its artist and album rows from the same micro-batch, the
+    ``blob`` column of all three tables."""
+    return f"""
+SELECT s.song_id, s.name, s.duration_ms, s.url, s.popularity, s.added_date,
+       s.album_id, s.artist_id, a.name AS artist_name, a.url AS artist_url,
+       al.name AS album_name, CAST(al.release_date AS STRING) AS release_date,
+       al.total_tracks, al.url AS album_url
+FROM {songs} s
+JOIN {artists} a ON s.{blob} = a.{blob} AND s.artist_id = a.artist_id
+JOIN {albums} al ON s.{blob} = al.{blob} AND s.album_id = al.album_id
+"""
+
+
+def _stream_oracle(blob: str) -> str:
+    """DuckDB star schema over the staged pages with keep-first and the
+    join per micro-batch ``blob`` (an expression over a _DS_ITEMS row):
+    ``u.filename`` is one batch per blob, the reference's one
+    invocation per blob."""
+    songs = _item_rows(_SONG_COLUMNS, blob)
+    artists = sql_keep_first(
+        _item_rows(_ARTIST_COLUMNS, blob), "blob, artist_id", "name, url", "filename, pos"
+    )
+    albums = sql_keep_first(
+        _item_rows(_ALBUM_COLUMNS, blob),
+        "blob, album_id",
+        "name, release_date, total_tracks, url",
+        "filename, pos",
+    )
+    star = _star_join(f"({songs})", f"({artists})", f"({albums})", "blob")
+    return f"SELECT *, TRUE AS archival_ok FROM ({star})"
+
+
+@register(
+    "streaming_csv_sink_roundtrip",
+    oracle=_stream_oracle("u.filename"),
+    tags=("streaming", "sink", "csv", "reference", "archival"),
+)
+def streaming_csv_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """S3+K2+M1 end to end, oracle-checked: ``run_spotify_pipeline``
+    drains a copy of the staged blobs, one blob per micro-batch, into
+    its three CSV sinks (spotifytransform.py:101-130) and archives each
+    processed blob (cleanSource=archive replacing the copy+delete at
+    spotifytransform.py:137-155). The sinks are read back and joined
+    into the star schema within each batch, so every column of every
+    table reaches the hash; the oracle keeps first per blob.
+
+    M1 sits inside the hash as archival_ok: Spark's cleaner archives a
+    batch's blob when the next batch plans, asynchronously, so every
+    blob but the last is archived after the drain; whether the last
+    one trails is engine timing, so the verdict is "all but the last",
+    polled for up to 60 s (exiting as soon as it holds). Archival
+    failing leaves the blobs in place and flips the row red.
+    """
+    import glob
+    import os
+    import shutil
+    import time
+
+    from ..catalog import sink_run_dir
+    from ..streaming.pipeline import await_drain, run_spotify_pipeline
+
+    # Run-unique (sink_run_dir's contract): the archival consumes the
+    # source copy, so every build stages its own.
+    base = sink_run_dir(spark, "stream_csv", sf_dir)
+    src, archive, out = (f"{base}/{d}" for d in ("src", "archive", "out"))
+    os.makedirs(src)
+    blobs = sorted(glob.glob(f"{_ensure_ds_fixture()}/*.json"))
+    for blob in blobs:
+        shutil.copy(blob, src)
+    star = spotify.star_tables(spotify.explode_items(spotify.read_raw_json(spark, src)))
+    schemas = {name: df.schema for name, df in star.items()}
+
+    q = run_spotify_pipeline(spark, src, out, f"{base}/ckpt", archive_dir=archive)
+    await_drain(q, "stream_csv")
+    batches = [p["batchId"] for p in q.recentProgress if p["numInputRows"] > 0]
+    assert len(batches) == len(blobs), f"one data batch per blob expected, got {batches}"
+
+    tables = {
+        # The batch dirs, not a glob (see run_to_parquet's read-back).
+        name: spark.read.schema(schema)
+        .option("header", True)
+        .option("basePath", f"{out}/{name}_data")
+        .csv(glob.glob(f"{out}/{name}_data/batch_id=*"))
+        for name, schema in schemas.items()
+    }
+    n_archived = 0
+    for _ in range(60):
+        n_archived = len(glob.glob(f"{archive}/**/*.json", recursive=True))
+        if n_archived >= len(blobs) - 1:
+            break
+        time.sleep(1)
+    joined = spark.sql(_star_join("{songs}", "{artists}", "{albums}", "batch_id"), **tables)
+    return joined.withColumn("archival_ok", F.lit(n_archived >= len(blobs) - 1))

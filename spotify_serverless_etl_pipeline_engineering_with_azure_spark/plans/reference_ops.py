@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..functions.dates import SQL_PARSE_RELEASE_DATE, parse_release_date
-from ..operators.spotify import keep_first
+from ..operators.spotify import keep_first, sql_keep_first
 from ..registry import register
 
 
@@ -148,17 +148,16 @@ def ref_c2_mixed_granularity_dates(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
+# D1 over events: per (user_id, event_type), the row of the lowest
+# event_id; the rows text and the keep_first arguments of both engines.
+_D1_ROWS = "SELECT event_id, user_id, event_type, value FROM {events}"
+_D1_KEEP = ("user_id, event_type", "event_id, value", "event_id")
+
+
 @register(
     "ref_d1_keepfirst_dedup",
-    oracle="""
-SELECT event_id, user_id, event_type, value
-FROM (
-  SELECT event_id, user_id, event_type, value,
-         ROW_NUMBER() OVER (PARTITION BY user_id, event_type ORDER BY event_id) AS rn
-  FROM events
-)
-WHERE rn = 1
-""",
+    oracle="SELECT event_id, user_id, event_type, value FROM ("
+    f"{sql_keep_first(_D1_ROWS.format(events='events'), *_D1_KEEP)})",
     tags=("reference", "dedup"),
 )
 def ref_d1_keepfirst_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -170,12 +169,7 @@ def ref_d1_keepfirst_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-by-event_id, through the pipeline's own keep-first dedup
     (SURVEY.md §7 hard part #1).
     """
-    first = keep_first(
-        "SELECT event_id, user_id, event_type, value FROM {events}",
-        "user_id, event_type",
-        "event_id, value",
-        "event_id",
-    )
+    first = keep_first(_D1_ROWS, *_D1_KEEP)
     return spark.sql(first, events=table(spark, sf_dir, "events")).select(
         "event_id", "user_id", "event_type", "value"
     )

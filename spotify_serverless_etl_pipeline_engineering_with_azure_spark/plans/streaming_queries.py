@@ -19,7 +19,6 @@ from ..registry import register
 from ..streaming.pipeline import (
     SESSION_COUNTS_SQL,
     WINDOWED_COUNTS_SQL,
-    _foreach_batch_drain,
     events_stream,
     run_to_parquet,
     session_counts,
@@ -270,132 +269,6 @@ def streaming_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"), dsum(F.col("value"), 2).alias("sum_value")
-    )
-
-
-@register(
-    "streaming_csv_sink_roundtrip",
-    oracle="""
-SELECT event_type,
-       COUNT(*) AS n_events,
-       CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS sum_value,
-       COUNT(DISTINCT user_id) AS n_users,
-       COUNT(DISTINCT DATE_TRUNC('hour', CAST(ts AS TIMESTAMP))) AS n_hours,
-       TRUE AS archival_ok
-FROM events
-GROUP BY event_type
-""",
-    tags=("streaming", "sink", "csv", "reference", "archival"),
-)
-def streaming_csv_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K2+M1 end-to-end, oracle-checked: a multi-file stream drains
-    through foreachBatch into THREE header-CSV sinks (the reference's
-    song/artist/album triple-write, spotifytransform.py:101-130), with
-    the SOURCE files archived by the engine (cleanSource=archive +
-    sourceArchiveDir replacing the reference's non-atomic copy+delete,
-    spotifytransform.py:137-155). The three sinks are read back and
-    joined; the aggregate must equal aggregating the source directly.
-
-    Staging is re-created fresh per run (the previous run ARCHIVED the
-    source files — that's the point), checkpoint included, so the query
-    is idempotent. maxFilesPerTrigger=1 over a 3-file source forces
-    real multi-batch behavior: earlier batches' sources are archived
-    while the stream is still running.
-
-    M1 sits INSIDE the driver hash: archival_ok is true iff the engine
-    moved ≥2 of the 3 source files to sourceArchiveDir by poll timeout.
-    Spark's cleaner archives batch N's file as batch N+1 runs (and
-    asynchronously), so with 3 single-file batches at least 2 are
-    archived by drain; whether the LAST file trails or not is
-    engine-internal timing, so the hashed value is the ≥2 verdict, not
-    an exact count (an exact pin would flip red on cleaner-thread
-    behavior changes with no correctness defect). Archival silently
-    failing leaves 0 files archived after the 60 s bounded poll and
-    flips the row red.
-    """
-    import glob
-
-    from ..catalog import sink_run_dir, table
-    from ..functions.exact import dsum
-    from ..operators.sinks import write_csv
-
-    # Run-unique, app-scoped, swept (sink_run_dir's contract): the
-    # staged src/archive/ckpt/out quartet lives and dies together
-    # inside one run dir, so a rebuild never deletes a prior frame's
-    # files.
-    base = sink_run_dir(spark, "stream_csv", sf_dir)
-    src, archive, ckpt, out = (f"{base}/{d}" for d in ("src", "archive", "ckpt", "out"))
-
-    ev = table(spark, sf_dir, "events").select(
-        "event_id", "event_type", "user_id", "ts", "value"
-    )
-    ev.repartition(3).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("cleanSource", "archive")
-        .option("sourceArchiveDir", archive)
-        .parquet(src)
-    )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # K2: one micro-batch fans out to three typed CSV tables, each
-        # under an idempotent batch_id directory (rerun = overwrite).
-        branches = {
-            "typed": batch_df.select("event_id", "event_type", "value"),
-            "users": batch_df.select("event_id", "event_type", "user_id"),
-            "times": batch_df.select(
-                "event_id", "event_type", F.unix_micros("ts").alias("ts_us")
-            ),
-        }
-        for name, df in branches.items():
-            write_csv(df, f"{out}/{name}/batch_id={batch_id}")
-
-    _foreach_batch_drain(stream, sink, ckpt, "stream_csv", output_mode="append")
-
-    def read_back(name: str, value_field: str) -> DataFrame:
-        # The batch dirs, not a glob (see run_to_parquet's read-back).
-        df = (
-            spark.read.schema(f"event_id long, event_type string, {value_field}")
-            .option("header", True)
-            .option("basePath", f"{out}/{name}")
-            .csv(glob.glob(f"{out}/{name}/batch_id=*"))
-        )
-        return df.drop("batch_id")
-
-    typed = read_back("typed", "value double")
-    users = read_back("users", "user_id long")
-    times = read_back("times", "ts_us long")
-    agg_typed = typed.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"), dsum(F.col("value"), 2).alias("sum_value")
-    )
-    agg_users = users.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("n_users")
-    )
-    # hour bucket = floor-div of epoch-us (positive for all test data),
-    # bijective with DATE_TRUNC('hour') so the distinct counts agree.
-    agg_times = times.groupBy("event_type").agg(
-        F.countDistinct(F.expr("ts_us div 3600000000")).alias("n_hours")
-    )
-
-    # M1 evidence: ≥2 of the 3 source files archived (bounded poll —
-    # the cleaner thread is asynchronous; 60 s is insurance against a
-    # loaded host, paid only on the failure path because the poll exits
-    # the moment the threshold is met).
-    import time as _time
-
-    n_archived = 0
-    for _ in range(60):
-        n_archived = len(glob.glob(f"{archive}/**/*.parquet", recursive=True))
-        if n_archived >= 2:
-            break
-        _time.sleep(1)
-
-    return (
-        agg_typed.join(agg_users, "event_type")
-        .join(agg_times, "event_type")
-        .withColumn("archival_ok", F.lit(n_archived >= 2))
     )
 
 

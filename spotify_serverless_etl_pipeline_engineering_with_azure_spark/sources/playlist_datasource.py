@@ -3,14 +3,17 @@
 The reference fetches playlist pages driver-side inside an Azure
 Function (/root/reference/spotifyextract.py:61-74). The idiomatic
 Spark-4 form is a custom ``DataSource``: each REST page becomes an
-``InputPartition``, so page fetch + JSON flatten run ON EXECUTORS in
-parallel — the scale path when "one playlist" becomes "ten million
-catalog pages". This implementation reads raw-zone JSON page files
-(the reference's own landing format, spotifyextract.py:92-101); a
-real deployment swaps `_load_page` for an HTTP GET with the same
-pagination contract.
+``InputPartition``, so page fetch runs ON EXECUTORS in parallel — the
+scale path when "one playlist" becomes "ten million catalog pages".
+This implementation reads raw-zone JSON page files (the reference's
+own landing format, spotifyextract.py:92-101); a real deployment swaps
+the file read in ``read`` for an HTTP GET with the same pagination
+contract.
 
-Registered under format name ``spotify_playlist``:
+Registered under format name ``spotify_playlist``, one
+``(page, body)`` row per page; the body is parsed and flattened on the
+frame by the pipeline's own operators
+(``spotify_queries.read_playlist_pages``):
 
     spark.dataSource.register(SpotifyPlaylistDataSource)
     spark.read.format("spotify_playlist").option("path", dir).load()
@@ -19,20 +22,10 @@ Registered under format name ``spotify_playlist``:
 from __future__ import annotations
 
 import glob
-import json
 import os
 from collections.abc import Iterator
-from typing import Any
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
-SCHEMA = (
-    "page string, added_at string, track_id string, track_name string, "
-    "duration_ms bigint, popularity bigint, artist_id string, "
-    "artist_name string, album_id string, album_name string, "
-    "release_date string, total_tracks bigint"
-)
-
 
 # Scheduler-task ceiling: beyond this many page files, partitions PACK
 # multiple files each (what Spark's native file sources do via
@@ -50,11 +43,6 @@ MAX_PARTITIONS = 4096
 class _PagePartition(InputPartition):
     def __init__(self, paths: tuple[str, ...]) -> None:
         self.paths = paths
-
-
-def _load_page(path: str) -> dict[str, Any]:
-    with open(path, encoding="utf-8") as f:
-        return json.load(f)
 
 
 class SpotifyPlaylistReader(DataSourceReader):
@@ -90,36 +78,11 @@ class SpotifyPlaylistReader(DataSourceReader):
         ]
 
     def read(self, partition: _PagePartition) -> Iterator[tuple]:
+        # The page body as fetched: parsing and flattening are the
+        # pipeline's own S4/S5 operators, run on the frame.
         for path in partition.paths:
-            yield from self._read_page(path)
-
-    def _read_page(self, path: str) -> Iterator[tuple]:
-        doc = _load_page(path)
-        page = os.path.basename(path)
-        # `or` fallbacks, not .get defaults: the API emits EXPLICIT
-        # nulls ("items": null on an empty page, "track": null for
-        # removed/local tracks), which .get(k, default) passes through
-        # — iterating or .get-ing None would crash the executor.
-        for raw_item in doc.get("items") or []:
-            item = raw_item or {}
-            track = item.get("track") or {}
-            artists = track.get("artists") or []
-            head = (artists[0] or {}) if artists else {}
-            album = track.get("album") or {}
-            yield (
-                page,
-                item.get("added_at"),
-                track.get("id"),
-                track.get("name"),
-                track.get("duration_ms"),
-                track.get("popularity"),
-                head.get("id"),
-                head.get("name"),
-                album.get("id"),
-                album.get("name"),
-                album.get("release_date"),
-                album.get("total_tracks"),
-            )
+            with open(path, encoding="utf-8") as f:
+                yield os.path.basename(path), f.read()
 
 
 class SpotifyPlaylistDataSource(DataSource):
@@ -128,7 +91,7 @@ class SpotifyPlaylistDataSource(DataSource):
         return "spotify_playlist"
 
     def schema(self) -> str:
-        return SCHEMA
+        return "page string, body string"
 
     def reader(self, schema) -> SpotifyPlaylistReader:
         return SpotifyPlaylistReader(dict(self.options))

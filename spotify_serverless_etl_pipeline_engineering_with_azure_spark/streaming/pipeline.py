@@ -38,23 +38,13 @@ def spotify_file_stream(
     """S3: the raw-zone directory as an unbounded file stream, one blob
     per micro-batch — the reference's one-invocation-per-blob
     semantics."""
-    reader = (
-        spark.readStream.schema(spotify.PLAYLIST_SCHEMA)
-        .option("multiLine", True)
-        .option("maxFilesPerTrigger", 1)
-    )
+    reader = spark.readStream.option("maxFilesPerTrigger", 1)
     if archive_dir:
         # M1: move-after-process, engine-managed and atomic per batch.
         reader = reader.option("cleanSource", "archive").option(
             "sourceArchiveDir", archive_dir
         )
-    # doc_order = source file URI, exactly as the batch path
-    # (spotify.read_raw_json): keep-first dedup orders by (doc_order,
-    # pos) and pos restarts at 0 per file, so a CONSTANT here would
-    # leave cross-file ties broken arbitrarily whenever a micro-batch
-    # carries more than one file — silently diverging from pandas
-    # keep='first'.
-    return reader.json(input_dir).withColumn("doc_order", F.input_file_name())
+    return spotify.read_playlists(reader, input_dir)
 
 
 def run_spotify_pipeline(
@@ -220,8 +210,7 @@ def _foreach_batch_drain(
     df: DataFrame, sink, checkpoint: str, name: str, *, output_mode: str
 ) -> StreamingQuery:
     """Start ``df`` → foreachBatch(``sink``) with availableNow under
-    narrow_state_partitions and block until drained; after
-    DRAIN_TIMEOUT_S stop the query and raise TimeoutError."""
+    narrow_state_partitions and block until drained (``await_drain``)."""
     with narrow_state_partitions(df.sparkSession):
         q = (
             df.writeStream.foreachBatch(sink)
@@ -230,6 +219,12 @@ def _foreach_batch_drain(
             .trigger(availableNow=True)
             .start()
         )
+    return await_drain(q, name)
+
+
+def await_drain(q: StreamingQuery, name: str) -> StreamingQuery:
+    """Block until the availableNow query ``q`` has drained; after
+    DRAIN_TIMEOUT_S stop it and raise TimeoutError."""
     q.awaitTermination(DRAIN_TIMEOUT_S)
     if q.isActive:
         q.stop()

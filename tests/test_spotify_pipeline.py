@@ -240,20 +240,20 @@ def test_transform_build_round_trips_are_bounded(spark, tmp_path):
         assert sorted(df.collect()) == sorted(by_column[name].collect()), name
 
 
-def test_datasource_tolerates_explicit_nulls(tmp_path):
+def test_datasource_tolerates_explicit_nulls(spark, tmp_path):
     """The Spotify API emits EXPLICIT nulls ('items': null on an empty
-    page, 'track': null for removed/local tracks); the reader must skip
-    them, not crash the executor (dict.get defaults only cover MISSING
-    keys, never null values)."""
+    page, 'track': null for removed/local tracks); reading such pages
+    through the spotify_playlist source must skip them or give NULL
+    columns, not fail the task."""
     import json
 
-    from spotify_serverless_etl_pipeline_engineering_with_azure_spark.sources.playlist_datasource import (
-        SpotifyPlaylistReader,
-        _PagePartition,
+    from spotify_serverless_etl_pipeline_engineering_with_azure_spark.operators.spotify_queries import (
+        read_playlist_pages,
     )
 
-    p = tmp_path / "spotify_raw_20230101000000.json"
-    p.write_text(json.dumps({
+    pages = tmp_path / "pages"
+    pages.mkdir()
+    (pages / "spotify_raw_20230101000000.json").write_text(json.dumps({
         "items": [
             None,
             {"added_at": "2023-01-01T00:00:00Z", "track": None},
@@ -265,14 +265,44 @@ def test_datasource_tolerates_explicit_nulls(tmp_path):
                        "album": {"id": "al1"}}},
         ],
     }))
-    rows = list(SpotifyPlaylistReader({"path": str(tmp_path)}).read(_PagePartition((str(p),))))
+    rows = read_playlist_pages(spark, str(pages)).collect()
     assert len(rows) == 4  # every item yields a row, nulls become NULL columns
-    assert rows[2][2] == "t1" and rows[2][6] is None  # artists null -> artist_id NULL
-    assert rows[3][8] == "al1"  # album survives a null artists[0]
+    by_track = {r.track_id: r for r in rows}
+    assert by_track["t1"].artist_id is None  # artists null -> artist_id NULL
+    assert by_track["t2"].album_id == "al1"  # album survives a null artists[0]
 
-    empty = tmp_path / "spotify_raw_20230101000001.json"
-    empty.write_text(json.dumps({"items": None}))
-    assert list(SpotifyPlaylistReader({"path": str(tmp_path)}).read(_PagePartition((str(empty),)))) == []
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    (empty / "spotify_raw_20230101000001.json").write_text(json.dumps({"items": None}))
+    assert read_playlist_pages(spark, str(empty)).count() == 0
+
+    # A torn page is an error, not an empty page.
+    (empty / "spotify_raw_20230101000002.json").write_text('{"items": [')
+    with pytest.raises(Exception, match="MALFORMED_RECORD"):
+        read_playlist_pages(spark, str(empty)).count()
+
+
+def test_stream_oracle_tells_blobs_from_one_merged_batch():
+    """streaming_csv_sink_roundtrip's oracle keeps first per blob, one
+    micro-batch per blob as the reference runs. A stream that merged
+    the blobs into one batch would keep first across all of them; on
+    the seed-42 pages that gives other rows, so the hash check catches
+    it."""
+    import duckdb
+
+    from spotify_serverless_etl_pipeline_engineering_with_azure_spark import registry
+    from spotify_serverless_etl_pipeline_engineering_with_azure_spark.operators.spotify_queries import (
+        _stream_oracle,
+    )
+
+    from .oracle_mirror import compare
+
+    per_blob_sql = _stream_oracle("u.filename")
+    assert registry.load_all()["streaming_csv_sink_roundtrip"].oracle == per_blob_sql
+    per_blob = duckdb.sql(per_blob_sql).df()
+    merged = duckdb.sql(_stream_oracle("'one batch'")).df()
+    assert len(per_blob) == len(merged) == 290  # one row per song either way
+    assert compare(per_blob, merged)
 
 
 def test_datasource_packs_files_beyond_partition_ceiling(tmp_path, monkeypatch):
