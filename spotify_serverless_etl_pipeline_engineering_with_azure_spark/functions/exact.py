@@ -131,29 +131,31 @@ def davg(col: Column, scale: int) -> Column:
     return (dsum(col, scale) / F.count(F.lit(1))).cast("double")
 
 
-def sql_dsum(expr: str, scale: int, alias: str) -> str:
-    """DuckDB oracle fragment mirroring :func:`dsum`.
-
-    The decimal→double cast is routed through VARCHAR: DuckDB's direct
-    DECIMAL→DOUBLE cast divides the scaled integer by 10^scale in
-    float arithmetic (two roundings), which lands 1 ulp off the
-    correctly-rounded value once the sum exceeds ~2^53 units — found by
-    the sf1 sweep on q1's sum_charge (19 significant digits), invisible
-    at sf0.01 where sums still fit a double exactly. The VARCHAR parse
+def sql_double(decimal: str) -> str:
+    """SQL fragment, for DuckDB and Spark alike, of the one
+    decimal→double cast: routed through STRING. DuckDB's direct
+    DECIMAL→DOUBLE cast divides the scaled integer by 10^scale in float
+    arithmetic (two roundings), which lands 1 ulp off the correctly
+    rounded value once the value exceeds ~2^53 units — found by the sf1
+    sweep on q1's sum_charge (19 significant digits), invisible at
+    sf0.01 where sums still fit a double exactly. The string parse
     (strtod) is correctly rounded, matching Spark's
-    BigDecimal.doubleValue on the identical exact decimal.
-    """
-    return (
-        f"CAST(CAST(SUM(CAST({expr} AS DECIMAL(18,{scale})))"
-        f" AS VARCHAR) AS DOUBLE) AS {alias}"
-    )
+    BigDecimal.doubleValue on the identical exact decimal. STRING, not
+    VARCHAR: DuckDB reads it as VARCHAR's alias, and Spark's parser
+    rejects a bare VARCHAR, so texts that both engines run splice the
+    same fragment."""
+    return f"CAST(CAST({decimal} AS STRING) AS DOUBLE)"
 
 
-def sql_davg(expr: str, scale: int, alias: str) -> str:
-    return (
-        f"CAST(CAST(CAST(SUM(CAST({expr} AS DECIMAL(18,{scale}))) AS VARCHAR) AS DOUBLE)"
-        f" / COUNT(*) AS DOUBLE) AS {alias}"
-    )
+def sql_dsum(expr: str, scale: int) -> str:
+    """SQL twin of :func:`dsum`: the exact decimal SUM of ``expr`` at
+    ``scale``, as one correctly rounded double."""
+    return sql_double(f"SUM(CAST({expr} AS DECIMAL(18,{scale})))")
+
+
+def sql_davg(expr: str, scale: int) -> str:
+    """SQL twin of :func:`davg`."""
+    return f"CAST({sql_dsum(expr, scale)} / COUNT(*) AS DOUBLE)"
 
 
 def roundk(col: Column, k: int) -> Column:
@@ -178,6 +180,7 @@ def roundk(col: Column, k: int) -> Column:
 
 
 def sql_roundk(expr: str, k: int) -> str:
-    """DuckDB oracle fragment bit-identical to :func:`roundk`."""
+    """SQL fragment, for DuckDB and Spark alike, bit-identical to
+    :func:`roundk`."""
     scale = float(10**k)
     return f"(ROUND(({expr}) * {scale!r}) / {scale!r})"

@@ -14,7 +14,7 @@ import random
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .exact import roundk
+from .exact import roundk, sql_roundk
 
 EMB_DIM = 64
 
@@ -57,25 +57,14 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def round6(col: Column) -> Column:
-    """Engine-deterministic 6dp quantization: ROUND(x·10⁶)/10⁶, NOT
-    ROUND(x, 6). Rounding a raw double at 6dp diverges across engines
-    for values within 1 ulp of a half boundary (Spark's ROUND is
-    HALF_UP on the exact binary expansion, DuckDB's is float
-    arithmetic) — and similarity/jaccard value pools GROW with the
-    corpus, so at 10¹¹-pair volume boundary hits are expected, not
-    rare. Multiplying first makes both engines round the SAME IEEE
-    product double with the same half-away-from-zero tie rule.
-    Delegates to :func:`.exact.roundk` — ONE implementation of the
-    quantization discipline."""
-    return roundk(col, 6)
-
-
 def cosine6(a: str, b: str, na: str, nb: str) -> Column:
-    """``round6`` cosine of vector columns ``a`` and ``b`` over their
-    precomputed norm columns ``na`` and ``nb``: the Spark twin of
-    :func:`sql_cosine6`, one dot fold per pair."""
-    return round6(dot(F.col(a), F.col(b)) / (F.col(na) * F.col(nb)))
+    """6dp cosine (:func:`.exact.roundk`) of vector columns ``a`` and
+    ``b`` over their precomputed norm columns ``na`` and ``nb``: the
+    Spark twin of :func:`sql_cosine6`, one dot fold per pair. The
+    similarity value pools grow with the corpus, so at 10¹¹-pair volume
+    6dp half-boundary hits are expected, not rare — the multiply-form
+    rounding keeps both engines on the same IEEE product double."""
+    return roundk(dot(F.col(a), F.col(b)) / (F.col(na) * F.col(nb)), 6)
 
 
 def sql_dot(a: str, b: str) -> str:
@@ -94,13 +83,10 @@ def sql_dot(a: str, b: str) -> str:
 
 
 def sql_cosine6(a: str, b: str) -> str:
-    """DuckDB fragment bit-identical to ``round6(cosine(a, b))``: the
-    same left-to-right folds, the same norm/divide sequence, the same
+    """DuckDB fragment bit-identical to :func:`cosine6`: the same
+    left-to-right folds, the same norm/divide sequence, the same
     multiply-then-round quantization."""
-    return (
-        f"(ROUND(({sql_dot(a, b)}) / "
-        f"(SQRT({sql_dot(a, a)}) * SQRT({sql_dot(b, b)})) * 1000000.0) / 1000000.0)"
-    )
+    return sql_roundk(f"({sql_dot(a, b)}) / (SQRT({sql_dot(a, a)}) * SQRT({sql_dot(b, b)}))", 6)
 
 
 # Multi-table OR-construction: L tables of k bits each. Calibrated on

@@ -29,7 +29,7 @@ one partition. For set-semantics dedup (row choice irrelevant) use
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, DataFrameReader, SparkSession
+from pyspark.sql import Column, DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamReader
@@ -117,7 +117,13 @@ def explode_items(raw: DataFrame) -> DataFrame:
             "explicit document order); without it keep-first dedup is "
             "nondeterministic across documents"
         )
-    return raw.select("doc_order", F.posexplode("items").alias("pos", "item"))
+    return raw.select("doc_order", item_rows("items"))
+
+
+def item_rows(items: Column | str) -> Column:
+    """S5's generator: one (pos, item) row per element of the playlist
+    ``items`` array, pos kept for the keep-first order."""
+    return F.posexplode(items).alias("pos", "item")
 
 
 def keep_first(rows: str, key: str, values: str, order: str) -> str:

@@ -243,23 +243,16 @@ def read_playlist_pages(spark: SparkSession, path: str) -> DataFrame:
     no rows or NULL columns, never an error."""
     from ..sources.playlist_datasource import SpotifyPlaylistDataSource
 
-    try:
-        spark.dataSource.register(SpotifyPlaylistDataSource)
-    except Exception as e:
-        # Only the already-registered case is benign; anything else
-        # (pickling failure, missing DataSource API) would otherwise
-        # resurface downstream as an unrelated "data source not found".
-        # Match the specific message shape — a bare "exist" substring
-        # would also swallow unrelated "path does not exist" failures.
-        msg = str(e).lower()
-        if "already exist" not in msg and "already registered" not in msg:
-            raise
+    # Registering a name again replaces the source.
+    spark.dataSource.register(SpotifyPlaylistDataSource)
     pages = spark.read.format("spotify_playlist").option("path", path).load()
     # FAILFAST: a torn or non-JSON page fails the read rather than
-    # vanishing as a NULL document.
+    # vanishing as a NULL document. The parse and the explode share one
+    # select: over a computed items column the optimizer would infer a
+    # non-empty filter and push it below the parse as two more from_json.
     doc = F.from_json("body", spotify.PLAYLIST_SCHEMA, {"mode": "FAILFAST"})
-    raw = pages.select(F.col("page").alias("doc_order"), doc["items"].alias("items"))
-    return spark.sql(_PAGE_ROWS_SQL, items=spotify.explode_items(raw))
+    items = pages.select(F.col("page").alias("doc_order"), spotify.item_rows(doc["items"]))
+    return spark.sql(_PAGE_ROWS_SQL, items=items)
 
 
 @register("rest_datasource_playlist", oracle=_DS_ORACLE, tags=("source", "datasource", "rest"))

@@ -28,6 +28,7 @@ from ..catalog import (
     share,
     table,
 )
+from ..functions.exact import sql_dsum
 from ..registry import register
 from .behavior_ops import SQL_FUNNEL_STEPS
 
@@ -238,7 +239,7 @@ def _broadcast_codebook(spark: SparkSession, sf_dir: str, k: int):
 
 
 def _codebook_sim():
-    """round6 cosine of the row vector against a joined codebook row —
+    """cosine6 of the row vector against a joined codebook row —
     the SAME quantized left-to-right folds as the oracle's
     sql_cosine6, so assignment ranks identically on both engines."""
     from ..functions.vectors import cosine6
@@ -306,7 +307,7 @@ def _top1_cell_frame(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     candidates before the exchange, so the shuffle carries N rows no
     matter how large K grows. Ranking matches the oracles' ROW_NUMBER()
     ORDER BY sim DESC, cid via the lexicographic struct (−sim, cid), on
-    the SAME round6 cosine the whole family uses. Exposed so
+    the SAME cosine6 the whole family uses. Exposed so
     plan-quality tests can assert on the build pipeline (checkpointing
     truncates lineage)."""
     from .similarity import vector_store
@@ -418,9 +419,9 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "streaming_stateful_user_totals",
-    oracle="""
+    oracle=f"""
 SELECT user_id, COUNT(*) AS n_events,
-       CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS sum_value
+       {sql_dsum("value", 2)} AS sum_value
 FROM events
 GROUP BY user_id
 """,
@@ -608,11 +609,11 @@ def unpivot_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "events_multires_rollup",
-    oracle="""
+    oracle=f"""
 SELECT CAST(GROUPING(d) + 2 * GROUPING(h) AS INTEGER) AS gid,
        d AS day, h AS hour, event_type,
        COUNT(*) AS n_events,
-       CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS sum_value
+       {sql_dsum("value", 2)} AS sum_value
 FROM (SELECT DATE_TRUNC('DAY', CAST(ts AS TIMESTAMP)) AS d,
              DATE_TRUNC('HOUR', CAST(ts AS TIMESTAMP)) AS h,
              event_type, value
@@ -635,11 +636,11 @@ def events_multires_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ev.createOrReplaceTempView("_events_rollup_src")
     return ev.sparkSession.sql(
-        """
+        f"""
         SELECT CAST(GROUPING(d) + 2 * GROUPING(h) AS INT) AS gid,
                d AS day, h AS hour, event_type,
                COUNT(*) AS n_events,
-               CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS STRING) AS DOUBLE) AS sum_value
+               {sql_dsum("value", 2)} AS sum_value
         FROM _events_rollup_src
         GROUP BY GROUPING SETS ((d, h, event_type), (d, event_type), (event_type))
         """

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import share, table
-from ..functions.exact import davg, dec, dsum, sql_davg, sql_dsum, roundk
+from ..functions.exact import davg, dec, dsum, roundk, sql_davg, sql_double, sql_dsum, sql_roundk
 from ..registry import register
 from ..streaming.pipeline import SQL_SESSIONS, WINDOWED_COUNTS_SQL, windowed_counts
 
@@ -40,13 +40,13 @@ def _revenue_col() -> F.Column:
     "q1_pricing_summary",
     oracle=f"""
 SELECT l_returnflag, l_linestatus,
-       {sql_dsum("l_quantity", 2, "sum_qty")},
-       {sql_dsum("l_extendedprice", 2, "sum_base_price")},
-       {sql_dsum(REVENUE, 6, "sum_disc_price")},
-       {sql_dsum(CHARGE, 8, "sum_charge")},
-       {sql_davg("l_quantity", 2, "avg_qty")},
-       {sql_davg("l_extendedprice", 2, "avg_price")},
-       {sql_davg("l_discount", 2, "avg_disc")},
+       {sql_dsum("l_quantity", 2)} AS sum_qty,
+       {sql_dsum("l_extendedprice", 2)} AS sum_base_price,
+       {sql_dsum(REVENUE, 6)} AS sum_disc_price,
+       {sql_dsum(CHARGE, 8)} AS sum_charge,
+       {sql_davg("l_quantity", 2)} AS avg_qty,
+       {sql_davg("l_extendedprice", 2)} AS avg_price,
+       {sql_davg("l_discount", 2)} AS avg_disc,
        COUNT(*) AS count_order
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02'
@@ -85,7 +85,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q3_shipping_priority",
     oracle=f"""
 SELECT l_orderkey,
-       {sql_dsum(REVENUE, 6, "revenue")},
+       {sql_dsum(REVENUE, 6)} AS revenue,
        STRFTIME(o_orderdate, '%Y-%m-%d') AS orderdate,
        o_orderpriority
 FROM customer
@@ -141,7 +141,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q5_local_supplier_volume",
     oracle=f"""
-SELECT n_name, {sql_dsum(REVENUE, 6, "revenue")}
+SELECT n_name, {sql_dsum(REVENUE, 6)} AS revenue
 FROM customer
 JOIN orders ON c_custkey = o_custkey
 JOIN lineitem ON l_orderkey = o_orderkey
@@ -207,7 +207,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "top_customers_by_revenue",
     oracle=f"""
-SELECT c_custkey, c_name, n_name, {sql_dsum(REVENUE, 6, "revenue")}
+SELECT c_custkey, c_name, n_name, {sql_dsum(REVENUE, 6)} AS revenue
 FROM region
 JOIN nation ON n_regionkey = r_regionkey
 JOIN customer ON c_nationkey = n_nationkey
@@ -287,10 +287,10 @@ def filter_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "join_left_outer",
-    oracle="""
+    oracle=f"""
 SELECT c_custkey,
        COUNT(o_orderkey) AS n_orders,
-       CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS total_spent
+       {sql_dsum("o_totalprice", 2)} AS total_spent
 FROM customer
 LEFT JOIN orders ON o_custkey = c_custkey
 GROUP BY c_custkey
@@ -350,7 +350,7 @@ def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "join_broadcast_enrich",
     oracle=f"""
-SELECT p_brand, COUNT(*) AS n_items, {sql_dsum(REVENUE, 6, "revenue")}
+SELECT p_brand, COUNT(*) AS n_items, {sql_dsum(REVENUE, 6)} AS revenue
 FROM lineitem
 JOIN part ON l_partkey = p_partkey
 JOIN supplier ON l_suppkey = s_suppkey
@@ -393,8 +393,8 @@ def join_broadcast_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT c_mktsegment,
        COUNT(*) AS n_customers,
        COUNT(DISTINCT c_nationkey) AS n_nations,
-       {sql_dsum("c_acctbal", 2, "sum_bal")},
-       {sql_davg("c_acctbal", 2, "avg_bal")},
+       {sql_dsum("c_acctbal", 2)} AS sum_bal,
+       {sql_davg("c_acctbal", 2)} AS avg_bal,
        MIN(c_acctbal) AS min_bal,
        MAX(c_acctbal) AS max_bal
 FROM customer
@@ -418,7 +418,7 @@ def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "agg_rollup",
     oracle=f"""
-SELECT r_name, n_name, COUNT(*) AS n_customers, {sql_dsum("c_acctbal", 2, "sum_bal")}
+SELECT r_name, n_name, COUNT(*) AS n_customers, {sql_dsum("c_acctbal", 2)} AS sum_bal
 FROM customer
 JOIN nation ON c_nationkey = n_nationkey
 JOIN region ON n_regionkey = r_regionkey
@@ -446,7 +446,7 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "agg_cube",
     oracle=f"""
 SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders,
-       {sql_dsum("o_totalprice", 2, "total")}
+       {sql_dsum("o_totalprice", 2)} AS total
 FROM orders
 GROUP BY CUBE (o_orderstatus, o_orderpriority)
 """,
@@ -485,11 +485,11 @@ def agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "pivot_returnflag",
-    oracle="""
+    oracle=f"""
 SELECT l_linestatus,
-       CAST(CAST(SUM(CASE WHEN l_returnflag = 'A' THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS VARCHAR) AS DOUBLE) AS A,
-       CAST(CAST(SUM(CASE WHEN l_returnflag = 'N' THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS VARCHAR) AS DOUBLE) AS N,
-       CAST(CAST(SUM(CASE WHEN l_returnflag = 'R' THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS VARCHAR) AS DOUBLE) AS R
+       {sql_dsum("CASE WHEN l_returnflag = 'A' THEN l_quantity END", 2)} AS A,
+       {sql_dsum("CASE WHEN l_returnflag = 'N' THEN l_quantity END", 2)} AS N,
+       {sql_dsum("CASE WHEN l_returnflag = 'R' THEN l_quantity END", 2)} AS R
 FROM lineitem
 GROUP BY l_linestatus
 """,
@@ -544,11 +544,11 @@ def window_rank_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "window_running_lag",
-    oracle="""
+    oracle=f"""
 SELECT o_orderkey, o_custkey,
-       CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
+       {sql_double('''SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
             PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS VARCHAR) AS DOUBLE) AS running_spend,
+            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)''')} AS running_spend,
        LAG(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS prev_price,
        CAST(DATEDIFF('day', CAST(LAG(o_orderdate) OVER (
             PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS DATE),
@@ -770,10 +770,10 @@ def scalar_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "json_extract_events",
-    oracle="""
+    oracle=f"""
 SELECT CAST(JSON_EXTRACT_STRING(props, '$.k') AS INTEGER) AS k_val,
        COUNT(*) AS n,
-       CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS sum_value
+       {sql_dsum("value", 2)} AS sum_value
 FROM events
 GROUP BY 1
 """,
@@ -793,13 +793,13 @@ def json_extract_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "array_ops_embeddings",
-    oracle="""
+    oracle=f"""
 SELECT vec_id,
        CAST(LEN(embedding) AS INTEGER) AS dim,
        CAST(embedding[1] AS DOUBLE) AS first_component,
-       (ROUND(SQRT(LIST_REDUCE(LIST_PREPEND(CAST(0.0 AS DOUBLE),
+       {sql_roundk('''SQRT(LIST_REDUCE(LIST_PREPEND(CAST(0.0 AS DOUBLE),
              LIST_TRANSFORM(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))),
-             (a, b) -> a + b)) * 1000000.0) / 1000000.0) AS l2_norm
+             (a, b) -> a + b))''', 6)} AS l2_norm
 FROM embeddings
 WHERE vec_id % 5 = 0
 """,

@@ -444,13 +444,13 @@ def _distributed_ntile(
     return ranked.select("user_id", tile_col.cast("int").alias(score_name))
 
 
-_RFM_ORACLE = """
+_RFM_ORACLE = f"""
 WITH anchor AS (SELECT CAST(MAX(ts) AS DATE) AS anchor_day FROM events),
 purchases AS (
   SELECT user_id,
          CAST(DATEDIFF('day', CAST(MAX(ts) AS DATE), (SELECT anchor_day FROM anchor)) AS BIGINT) AS recency_days,
          COUNT(*) AS frequency,
-         CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS monetary
+         {sql_dsum("value", 2)} AS monetary
   FROM events WHERE event_type = 'purchase'
   GROUP BY user_id
 )
@@ -613,7 +613,7 @@ def _agg_salts(spark: SparkSession) -> int:
     "agg_salted_skew",
     oracle=f"""
 SELECT l_returnflag, COUNT(*) AS n_rows,
-       {sql_dsum("l_extendedprice", 2, "sum_price")}
+       {sql_dsum("l_extendedprice", 2)} AS sum_price
 FROM lineitem
 GROUP BY l_returnflag
 """,

@@ -32,6 +32,7 @@ from ..catalog import (
     share,
     table,
 )
+from ..functions.exact import roundk, sql_double, sql_roundk
 from ..functions.hashing import (
     MINHASH_N_BANDS as N_BANDS,
     MINHASH_PARAMS,
@@ -1327,8 +1328,8 @@ PR_DAMPING = 0.85
 # caught systematically in the digest layer). Multiplying FIRST makes
 # both engines round the SAME IEEE product double with the same
 # half-away-from-zero tie rule, and the final division by the same
-# power of ten is one more shared correctly-rounded IEEE op.
-_PR_QUANT = "(ROUND(({x}) * 1000000.0) / 1000000.0)"
+# power of ten is one more shared correctly-rounded IEEE op
+# (functions/exact.roundk and sql_roundk).
 
 
 def _pagerank_oracle() -> str:
@@ -1338,9 +1339,9 @@ def _pagerank_oracle() -> str:
         iters.append(f"""
 iter{k} AS (
   SELECT d.v,
-         {_PR_QUANT.format(x=f"(CAST(1 AS DOUBLE) - CAST({PR_DAMPING} AS DOUBLE)) / CAST(n.cnt AS DOUBLE) + {PR_DAMPING} * CAST(s.contrib AS DOUBLE)")} AS r
+         {sql_roundk(f"(CAST(1 AS DOUBLE) - CAST({PR_DAMPING} AS DOUBLE)) / CAST(n.cnt AS DOUBLE) + {PR_DAMPING} * {sql_double('s.contrib')}", 6)} AS r
   FROM (
-    SELECT e.b AS v, SUM(CAST(ROUND(p.r / d2.deg * 1000000000.0) / 1000000000.0 AS DECIMAL(28,12))) AS contrib
+    SELECT e.b AS v, SUM(CAST({sql_roundk("p.r / d2.deg", 9)} AS DECIMAL(28,12))) AS contrib
     FROM edges e
     JOIN {prev} p ON p.v = e.a
     JOIN deg d2 ON d2.v = e.a
@@ -1356,7 +1357,7 @@ WITH {_graph_ctes()},
 deg AS (SELECT a AS v, COUNT(*) AS deg FROM edges GROUP BY a),
 n AS (SELECT COUNT(*) AS cnt FROM deg),
 r0 AS (
-  SELECT v, {_PR_QUANT.format(x="1.0 / n.cnt")} AS r FROM deg CROSS JOIN n
+  SELECT v, {sql_roundk("1.0 / n.cnt", 6)} AS r FROM deg CROSS JOIN n
 ),{its}
 SELECT v AS doc_id, r AS pagerank FROM {prev}
 """
@@ -1407,12 +1408,7 @@ def _pagerank_on_pairs(pairs: DataFrame) -> DataFrame:
         # guard the teleport base below divides by zero. The select
         # keeps the (doc_id, pagerank) contract on an empty frame.
         return deg.select(F.col("v").alias("doc_id"), F.lit(0.0).alias("pagerank"))
-    # ROUND(x·1e6)/1e6, not ROUND(x, 6) — see _PR_QUANT: the raw-
-    # double ROUND diverges across engines within 1 ulp of a 6dp
-    # half boundary; scaling first makes both engines round the
-    # same IEEE product double.
-    quant = lambda c: F.round(c * 1000000.0) / 1000000.0  # noqa: E731
-    ranks = deg.select("v", quant(F.lit(1.0) / F.lit(float(n))).alias("r"))
+    ranks = deg.select("v", roundk(F.lit(1.0) / F.lit(float(n)), 6).alias("r"))
     # Same IEEE op sequence as the oracle's (1.0 − 0.85)/n in DOUBLE:
     # DuckDB's bare `1 - 0.85` is DECIMAL subtraction (0.1499999…944 as
     # a double), Python's is double subtraction (0.1500000…002) — a
@@ -1426,9 +1422,7 @@ def _pagerank_on_pairs(pairs: DataFrame) -> DataFrame:
             .join(deg.select(F.col("v").alias("dv"), "deg"), F.col("dv") == F.col("a"))
             .select(
                 "b",
-                (F.round(F.col("r") / F.col("deg") * 1000000000.0) / 1000000000.0)
-                .cast("decimal(28,12)")
-                .alias("c"),
+                roundk(F.col("r") / F.col("deg"), 9).cast("decimal(28,12)").alias("c"),
             )
             .groupBy("b")
             .agg(F.sum("c").alias("contrib"))
@@ -1436,7 +1430,7 @@ def _pagerank_on_pairs(pairs: DataFrame) -> DataFrame:
         ranks = materialize(
             contribs.select(
                 F.col("b").alias("v"),
-                quant(F.lit(base) + PR_DAMPING * F.col("contrib").cast("double")).alias("r"),
+                roundk(F.lit(base) + PR_DAMPING * F.col("contrib").cast("double"), 6).alias("r"),
             )
         )
     return ranks.select(F.col("v").alias("doc_id"), F.col("r").alias("pagerank"))
@@ -1776,7 +1770,7 @@ inter AS (
 )
 SELECT i.doc_a, i.doc_b, i.n_common,
        sa.m + sb.m - i.n_common AS n_union,
-       (ROUND(CAST(i.n_common AS DOUBLE) / (sa.m + sb.m - i.n_common) * 1000000.0) / 1000000.0) AS jaccard
+       {sql_roundk("CAST(i.n_common AS DOUBLE) / (sa.m + sb.m - i.n_common)", 6)} AS jaccard
 FROM inter i
 JOIN sizes sa ON sa.doc_id = i.doc_a
 JOIN sizes sb ON sb.doc_id = i.doc_b
@@ -1856,11 +1850,7 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         passing
         .withColumn("n_union", F.col("ma") + F.col("mb") - F.col("n_common"))
-        .withColumn(
-            "jaccard",
-            F.round(F.col("n_common").cast("double") / F.col("n_union") * 1000000.0)
-            / 1000000.0,
-        )
+        .withColumn("jaccard", roundk(F.col("n_common").cast("double") / F.col("n_union"), 6))
         .select("doc_a", "doc_b", "n_common", "n_union", "jaccard")
         .distinct()
     )

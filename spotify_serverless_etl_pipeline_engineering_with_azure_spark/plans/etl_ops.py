@@ -15,13 +15,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import share, table
-from ..functions.exact import dec, dsum, roundk
+from ..functions.exact import dec, dsum, roundk, sql_dsum, sql_roundk
 from ..registry import register
 
 
 @register(
     "merge_upsert_orders",
-    oracle="""
+    oracle=f"""
 WITH changes AS (
   SELECT o_orderkey, o_custkey, o_orderstatus,
          o_totalprice + 100.0 AS o_totalprice,
@@ -39,7 +39,7 @@ merged AS (
   FROM orders t FULL OUTER JOIN changes c ON t.o_orderkey = c.o_orderkey
 )
 SELECT o_orderstatus, COUNT(*) AS n_orders,
-       CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS total
+       {sql_dsum("o_totalprice", 2)} AS total
 FROM merged GROUP BY o_orderstatus
 """,
     tags=("merge", "upsert", "etl"),
@@ -119,11 +119,11 @@ def scd2_user_value_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "observe_pipeline_metrics",
-    oracle="""
+    oracle=f"""
 SELECT COUNT(*) AS n_rows,
        CAST(SUM(CASE WHEN o_orderpriority IS NULL THEN 1 ELSE 0 END) AS BIGINT)
          AS n_null_priority,
-       CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS total_price,
+       {sql_dsum("o_totalprice", 2)} AS total_price,
        MIN(o_orderkey) AS min_key, MAX(o_orderkey) AS max_key
 FROM orders
 """,
@@ -176,7 +176,7 @@ def observe_pipeline_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "table_diff_snapshot",
-    oracle="""
+    oracle=f"""
 WITH new_snap AS (
   SELECT o_orderkey,
          CASE WHEN o_orderkey % 10 = 0 THEN o_totalprice + 100.0 ELSE o_totalprice END AS o_totalprice
@@ -193,8 +193,8 @@ diff AS (
   FROM orders o FULL OUTER JOIN new_snap n ON o.o_orderkey = n.o_orderkey
 )
 SELECT status, COUNT(*) AS n_rows,
-       CAST(CAST(SUM(CAST(COALESCE(old_price, 0) AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS sum_old,
-       CAST(CAST(SUM(CAST(COALESCE(new_price, 0) AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS sum_new
+       {sql_dsum("COALESCE(old_price, 0)", 2)} AS sum_old,
+       {sql_dsum("COALESCE(new_price, 0)", 2)} AS sum_new
 FROM diff GROUP BY status
 """,
     tags=("cdc", "diff", "etl"),
@@ -252,18 +252,18 @@ def table_diff_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "orders_seasonality_mom_yoy",
-    oracle="""
+    oracle=f"""
 WITH monthly AS (
   SELECT CAST(DATE_TRUNC('month', CAST(o_orderdate AS DATE)) AS TIMESTAMP) AS month,
          COUNT(*) AS n_orders,
-         CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS revenue
+         {sql_dsum("o_totalprice", 2)} AS revenue
   FROM orders GROUP BY 1
 )
 SELECT month, n_orders, revenue,
        MAX(revenue) OVER wm AS prev_month_revenue,
        MAX(revenue) OVER wy AS prev_year_revenue,
-       (ROUND((revenue / MAX(revenue) OVER wm - 1.0) * 1000000.0) / 1000000.0) AS mom_growth,
-       (ROUND((revenue / MAX(revenue) OVER wy - 1.0) * 1000000.0) / 1000000.0) AS yoy_growth
+       {sql_roundk("revenue / MAX(revenue) OVER wm - 1.0", 6)} AS mom_growth,
+       {sql_roundk("revenue / MAX(revenue) OVER wy - 1.0", 6)} AS yoy_growth
 FROM (SELECT *, YEAR(month) * 12 + MONTH(month) AS month_num FROM monthly)
 WINDOW wm AS (ORDER BY month_num RANGE BETWEEN 1 PRECEDING AND 1 PRECEDING),
        wy AS (ORDER BY month_num RANGE BETWEEN 12 PRECEDING AND 12 PRECEDING)
@@ -311,9 +311,9 @@ def orders_seasonality_mom_yoy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "top_parts_pareto",
-    oracle="""
+    oracle=f"""
 WITH per_part AS (
-  SELECT l_partkey, CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS revenue
+  SELECT l_partkey, {sql_dsum("l_extendedprice", 2)} AS revenue
   FROM lineitem GROUP BY l_partkey
 ),
 tot AS (
@@ -330,7 +330,7 @@ ranked AS (
   WINDOW w AS (ORDER BY revenue DESC, l_partkey)
 )
 SELECT rnk, l_partkey, revenue,
-       (ROUND((cum_revenue / total_revenue) * 1000000.0) / 1000000.0) AS cum_share,
+       {sql_roundk("cum_revenue / total_revenue", 6)} AS cum_share,
        CAST(rnk AS DOUBLE) / n_parts <= 0.2 AS in_top20pct
 FROM ranked CROSS JOIN tot
 """,

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..functions.exact import dec, dsum, roundk
+from ..functions.exact import dec, dsum, roundk, sql_double, sql_dsum, sql_roundk
 from ..registry import register
 
 
@@ -71,10 +71,10 @@ def window_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "window_time_range_trailing",
-    oracle="""
+    oracle=f"""
 SELECT user_id, event_id,
        CAST(COUNT(*) OVER w AS BIGINT) AS n_last7d,
-       CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER w AS VARCHAR) AS DOUBLE) AS sum_last7d
+       {sql_double("SUM(CAST(value AS DECIMAL(18,2))) OVER w")} AS sum_last7d
 FROM events
 WHERE user_id % 7 = 0
 WINDOW w AS (PARTITION BY user_id ORDER BY EPOCH_US(ts)
@@ -112,10 +112,10 @@ def window_time_range_trailing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "agg_percentiles",
-    oracle="""
+    oracle=f"""
 SELECT c_mktsegment,
-       (ROUND(MEDIAN(c_acctbal) * 10000.0) / 10000.0) AS median_bal,
-       (ROUND(QUANTILE_CONT(c_acctbal, 0.9) * 10000.0) / 10000.0) AS p90_bal,
+       {sql_roundk("MEDIAN(c_acctbal)", 4)} AS median_bal,
+       {sql_roundk("QUANTILE_CONT(c_acctbal, 0.9)", 4)} AS p90_bal,
        MIN(c_acctbal) AS min_bal,
        MAX(c_acctbal) AS max_bal
 FROM customer
@@ -249,14 +249,14 @@ def scalar_regexp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "scalar_math_transcendental",
-    oracle="""
+    oracle=f"""
 SELECT l_orderkey, l_linenumber,
-       (ROUND(EXP(l_discount) * 1000000.0) / 1000000.0) AS disc_exp,
-       (ROUND(LN(l_extendedprice) * 1000000.0) / 1000000.0) AS price_ln,
-       (ROUND(LOG10(l_extendedprice) * 1000000.0) / 1000000.0) AS price_log10,
-       (ROUND(SIN(l_discount) * 1000000.0) / 1000000.0) AS disc_sin,
-       (ROUND(ATAN(l_tax) * 1000000.0) / 1000000.0) AS tax_atan,
-       (ROUND(POW(1.0 + l_discount, 3.0) * 1000000.0) / 1000000.0) AS growth
+       {sql_roundk("EXP(l_discount)", 6)} AS disc_exp,
+       {sql_roundk("LN(l_extendedprice)", 6)} AS price_ln,
+       {sql_roundk("LOG10(l_extendedprice)", 6)} AS price_log10,
+       {sql_roundk("SIN(l_discount)", 6)} AS disc_sin,
+       {sql_roundk("ATAN(l_tax)", 6)} AS tax_atan,
+       {sql_roundk("POW(1.0 + l_discount, 3.0)", 6)} AS growth
 FROM lineitem
 WHERE l_orderkey % 251 = 0
 """,
@@ -349,9 +349,9 @@ def array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "parquet_partitioned_roundtrip",
-    oracle="""
+    oracle=f"""
 SELECT o_orderpriority, COUNT(*) AS n,
-       CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS total
+       {sql_dsum("o_totalprice", 2)} AS total
 FROM orders
 WHERE o_orderstatus = 'O'
 GROUP BY o_orderpriority
@@ -391,9 +391,9 @@ def parquet_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "join_salted",
-    oracle="""
+    oracle=f"""
 SELECT n_name, COUNT(*) AS n_customers,
-       CAST(CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS total_bal
+       {sql_dsum("c_acctbal", 2)} AS total_bal
 FROM customer JOIN nation ON c_nationkey = n_nationkey
 GROUP BY n_name
 """,
@@ -440,12 +440,12 @@ def join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "agg_statistical_moments",
-    oracle="""
+    oracle=f"""
 SELECT c_mktsegment,
-       (ROUND(STDDEV_SAMP(c_acctbal) * 10000.0) / 10000.0) AS std_bal,
-       (ROUND(VAR_SAMP(c_acctbal) * 10000.0) / 10000.0) AS var_bal,
-       (ROUND(CORR(c_acctbal, CAST(c_custkey AS DOUBLE)) * 1000000.0) / 1000000.0) AS corr_bal_key,
-       (ROUND(COVAR_SAMP(c_acctbal, CAST(c_nationkey AS DOUBLE)) * 10000.0) / 10000.0) AS covar_bal_nation
+       {sql_roundk("STDDEV_SAMP(c_acctbal)", 4)} AS std_bal,
+       {sql_roundk("VAR_SAMP(c_acctbal)", 4)} AS var_bal,
+       {sql_roundk("CORR(c_acctbal, CAST(c_custkey AS DOUBLE))", 6)} AS corr_bal_key,
+       {sql_roundk("COVAR_SAMP(c_acctbal, CAST(c_nationkey AS DOUBLE))", 4)} AS covar_bal_nation
 FROM customer
 GROUP BY c_mktsegment
 """,

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import scatter, table
+from ..functions.exact import sql_double
 from ..functions.hashing import md5_int48, sql_md5_int48
 from ..registry import register
 
@@ -135,7 +136,7 @@ SELECT CAST(shard AS BIGINT) AS shard,
        CAST(bin AS BIGINT) AS bin,
        COUNT(*) AS n_docs,
        CAST(SUM(n_tok) AS BIGINT) AS n_tokens_packed,
-       CAST(CAST(SUM(n_tok) AS VARCHAR) AS DOUBLE) / {PACK_BUDGET} AS fill_ratio
+       {sql_double("SUM(n_tok)")} / {PACK_BUDGET} AS fill_ratio
 FROM placed
 GROUP BY shard, bin
 """,

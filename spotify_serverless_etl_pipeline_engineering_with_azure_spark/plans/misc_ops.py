@@ -13,16 +13,16 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import register_views, sink_run_dir, table
-from ..functions.exact import dsum
+from ..functions.exact import dsum, sql_dsum
 from ..registry import register
 from ..streaming.pipeline import SESSION_COUNTS_SQL, session_counts
 
 
 @register(
     "csv_sink_roundtrip",
-    oracle="""
+    oracle=f"""
 SELECT o_orderstatus, COUNT(*) AS n,
-       CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS total
+       {sql_dsum("o_totalprice", 2)} AS total
 FROM orders
 GROUP BY o_orderstatus
 """,
@@ -110,9 +110,9 @@ def ref_x2_runid_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "orc_sink_roundtrip",
-    oracle="""
+    oracle=f"""
 SELECT l_returnflag, COUNT(*) AS n,
-       CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS total
+       {sql_dsum("l_extendedprice", 2)} AS total
 FROM lineitem
 WHERE l_shipdate >= DATE '1995-01-01'
 GROUP BY l_returnflag
@@ -173,9 +173,9 @@ def events_session_window_builtin(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "json_sink_roundtrip",
-    oracle="""
+    oracle=f"""
 SELECT event_type, COUNT(*) AS n,
-       CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS total,
+       {sql_dsum("value", 2)} AS total,
        MIN(event_id) AS min_id, MAX(event_id) AS max_id
 FROM events
 GROUP BY event_type
@@ -212,17 +212,11 @@ def json_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # One SQL text, two engines: the query below parses and evaluates
 # identically in Spark SQL and DuckDB (shared ANSI subset — joins,
 # YEAR(), CASE, decimal casts), so the oracle IS the implementation.
-# The sum→double cast routes through STRING (a VARCHAR alias in DuckDB,
-# the native string type in Spark — bare VARCHAR needs a length in
-# Spark's parser): the string parse is correctly rounded in both
-# engines, where DuckDB's direct DECIMAL→DOUBLE cast is 1 ulp off once
-# the sum exceeds ~2^53 units.
-_SHARED_DIALECT_SQL = """
+_SHARED_DIALECT_SQL = f"""
 SELECT n_name AS nation,
        CAST(YEAR(o_orderdate) AS INTEGER) AS o_year,
        COUNT(*) AS n_lineitems,
-       CAST(CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6)))
-            AS STRING) AS DOUBLE) AS revenue,
+       {sql_dsum("l_extendedprice * (1 - l_discount)", 6)} AS revenue,
        CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT)
          AS n_returned
 FROM lineitem

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import share, table
-from ..functions.exact import roundk
+from ..functions.exact import roundk, sql_roundk
 from ..registry import register
 
 # (relationship label, child table, child FK, parent table, parent key)
@@ -207,7 +207,7 @@ def agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_anomaly_zscore",
-    oracle="""
+    oracle=f"""
 WITH daily AS (
   SELECT event_type, DATE_TRUNC('day', ts) AS day, COUNT(*) AS n_events
   FROM events GROUP BY 1, 2
@@ -227,8 +227,8 @@ scored AS (
 )
 SELECT event_type, CAST(day AS TIMESTAMP) AS day, n_events,
        CASE WHEN n > 1 AND n * ss - s * s > 0 THEN
-         (ROUND(CAST(nx_minus_s AS DOUBLE) * SQRT(CAST(n - 1 AS DOUBLE))
-               / SQRT(CAST(n AS DOUBLE) * CAST(n * ss - s * s AS DOUBLE)) * 1000000.0) / 1000000.0)
+         {sql_roundk('''CAST(nx_minus_s AS DOUBLE) * SQRT(CAST(n - 1 AS DOUBLE))
+               / SQRT(CAST(n AS DOUBLE) * CAST(n * ss - s * s AS DOUBLE))''', 6)}
        END AS zscore,
        (n - 1) * nx_minus_s * nx_minus_s > 4 * n * (n * ss - s * s) AS is_anomaly
 FROM scored
@@ -342,7 +342,7 @@ def part_name_fingerprint_clusters(spark: SparkSession, sf_dir: str) -> DataFram
 
 @register(
     "events_error_budget_sli",
-    oracle="""
+    oracle=f"""
 WITH daily AS (
   SELECT DATE_TRUNC('day', ts) AS day,
          COUNT(*) AS n_total,
@@ -358,8 +358,8 @@ rolled AS (
                RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)
 )
 SELECT CAST(day AS TIMESTAMP) AS day, n_total, n_errors,
-       (ROUND((CAST(n_errors AS DOUBLE) / n_total) * 1000000.0) / 1000000.0) AS error_rate,
-       (ROUND((CAST(n_errors_7d AS DOUBLE) / n_total_7d) * 1000000.0) / 1000000.0) AS error_rate_7d,
+       {sql_roundk("CAST(n_errors AS DOUBLE) / n_total", 6)} AS error_rate,
+       {sql_roundk("CAST(n_errors_7d AS DOUBLE) / n_total_7d", 6)} AS error_rate_7d,
        CAST(n_errors_7d AS DOUBLE) / n_total_7d > 0.25 AS budget_burned
 FROM rolled
 """,

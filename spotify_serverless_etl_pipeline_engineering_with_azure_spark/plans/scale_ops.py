@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import share, table
-from ..functions.exact import dsum
+from ..functions.exact import dsum, sql_dsum
 from ..registry import register
 
 import threading
@@ -85,9 +85,9 @@ def range_join_close_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "bucketed_join_colocated",
-    oracle="""
+    oracle=f"""
 SELECT o_orderpriority, COUNT(*) AS n,
-       CAST(CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE)
+       {sql_dsum("l_extendedprice * (1 - l_discount)", 6)}
          AS revenue
 FROM lineitem JOIN orders ON l_orderkey = o_orderkey
 GROUP BY o_orderpriority
@@ -266,9 +266,9 @@ _BF_WORD_BITS = 32
 
 @register(
     "bloom_filter_prune_join",
-    oracle="""
+    oracle=f"""
 SELECT o_orderpriority, COUNT(*) AS n_orders,
-       CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS revenue
+       {sql_dsum("o_totalprice", 2)} AS revenue
 FROM orders
 WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
 GROUP BY o_orderpriority
@@ -345,11 +345,11 @@ def bloom_filter_prune_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "compact_small_files",
-    oracle="""
+    oracle=f"""
 SELECT CAST(48 AS BIGINT) AS n_files_before,
        CAST(4 AS BIGINT) AS n_files_after,
        COUNT(*) AS n_rows,
-       CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS total_price
+       {sql_dsum("o_totalprice", 2)} AS total_price
 FROM orders
 """,
     tags=("layout", "compaction", "maintenance"),

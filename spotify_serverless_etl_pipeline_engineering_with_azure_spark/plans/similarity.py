@@ -24,10 +24,10 @@ from ..functions.vectors import (
     sql_cosine6,
     sql_lsh_bucket,
 )
-from ..functions.exact import roundk
+from ..functions.exact import roundk, sql_double, sql_roundk
 from ..registry import register
 
-# Oracle-side cosine fragments bit-identical to round6(cosine(...)) —
+# Oracle-side cosine fragments bit-identical to cosine6 —
 # see functions/vectors.sql_cosine6 for why LIST_COSINE_SIMILARITY +
 # ROUND(x, 6) is NOT engine-deterministic.
 _COS6_PE_E = sql_cosine6("pe", "e.embedding")
@@ -263,6 +263,13 @@ KMEANS_ITERS = 3
 # DuckDB's sequential folds can never diverge between iterations.
 
 
+def _sql_centroid_mean(val: str) -> str:
+    """Oracle centroid component: ``val`` quantized to 9dp, summed
+    exactly in DECIMAL(28,12), divided by the count, quantized to 6dp."""
+    total = sql_double(f"SUM(CAST({sql_roundk(val, 9)} AS DECIMAL(28,12)))")
+    return sql_roundk(f"{total} / COUNT(*)", 6)
+
+
 def _kmeans_oracle() -> str:
     parts = [
         f"""
@@ -276,7 +283,7 @@ exp AS (
   )
 ),
 c0 AS (
-  SELECT CAST(vec_id AS INTEGER) AS cid, pos, (ROUND(val * 1000000.0) / 1000000.0) AS cval FROM exp
+  SELECT CAST(vec_id AS INTEGER) AS cid, pos, {sql_roundk("val", 6)} AS cval FROM exp
   WHERE vec_id < {KMEANS_K}
 )"""
     ]
@@ -285,7 +292,7 @@ c0 AS (
         parts.append(f"""
 d{k} AS (
   SELECT e.vec_id, c.cid,
-         (ROUND(SUM((e.val - c.cval) * (e.val - c.cval)) * 1000000.0) / 1000000.0) AS dist_sq
+         {sql_roundk("SUM((e.val - c.cval) * (e.val - c.cval))", 6)} AS dist_sq
   FROM exp e JOIN {prev} c ON c.pos = e.pos
   GROUP BY e.vec_id, c.cid
 ),
@@ -300,8 +307,7 @@ c{k} AS (
   SELECT p.cid, p.pos, COALESCE(u.cval, p.cval) AS cval
   FROM {prev} p LEFT JOIN (
     SELECT a.cid, e.pos,
-           (ROUND(CAST(CAST(SUM(CAST((ROUND(e.val * 1000000000.0) / 1000000000.0) AS DECIMAL(28,12))) AS VARCHAR) AS DOUBLE)
-                 / COUNT(*) * 1000000.0) / 1000000.0) AS cval
+           {_sql_centroid_mean("e.val")} AS cval
     FROM a{k} a JOIN exp e ON e.vec_id = a.vec_id
     GROUP BY a.cid, e.pos
   ) u ON u.cid = p.cid AND u.pos = p.pos
@@ -418,20 +424,19 @@ def cluster_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "embedding_centroids",
-    oracle="""
+    oracle=f"""
 WITH expanded AS (
   SELECT label, u.i AS pos, u.v AS val
   FROM (
     SELECT label,
            UNNEST(LIST_TRANSFORM(RANGE(1, LEN(embedding) + 1),
-                  i -> {'i': CAST(i - 1 AS INTEGER),
-                        'v': CAST(embedding[i] AS DOUBLE)})) AS u
+                  i -> {{'i': CAST(i - 1 AS INTEGER),
+                        'v': CAST(embedding[i] AS DOUBLE)}})) AS u
     FROM embeddings
   )
 )
 SELECT label, pos,
-       (ROUND(CAST(CAST(SUM(CAST((ROUND(val * 1000000000.0) / 1000000000.0) AS DECIMAL(28,12))) AS VARCHAR) AS DOUBLE)
-              / COUNT(*) * 1000000.0) / 1000000.0) AS centroid_val,
+       {_sql_centroid_mean("val")} AS centroid_val,
        COUNT(*) AS n_vectors
 FROM expanded
 WHERE pos < 8

@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import scatter, share, table
-from ..functions.exact import roundk
+from ..functions.exact import roundk, sql_roundk
 from ..functions.hashing import md5_int48, sql_md5_int48
 from ..registry import register
 
@@ -139,9 +139,12 @@ est AS (
 )"""
 
 
-_SQL_HLL_ESTIMATE = f"""(ROUND((CASE WHEN e_raw <= {HLL_SMALL_RANGE!r} AND empty_registers > 0
+_SQL_HLL_ESTIMATE = sql_roundk(
+    f"""CASE WHEN e_raw <= {HLL_SMALL_RANGE!r} AND empty_registers > 0
                   THEN {float(HLL_M)!r} * LN({float(HLL_M)!r} / empty_registers)
-                  ELSE e_raw END) * 1000000.0) / 1000000.0)"""
+                  ELSE e_raw END""",
+    6,
+)
 
 
 @register(

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.exact import dsum, sql_dsum
 from ..registry import register
 from ..streaming.pipeline import (
     SESSION_COUNTS_SQL,
@@ -100,9 +101,9 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "streaming_static_enrich_join",
-    oracle="""
+    oracle=f"""
 SELECT c_mktsegment, COUNT(*) AS n_events,
-       CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS sum_value
+       {sql_dsum("value", 2)} AS sum_value
 FROM events JOIN customer ON user_id = c_custkey
 GROUP BY c_mktsegment
 """,
@@ -115,8 +116,6 @@ def streaming_static_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     form of the reference's FK design: dims stay a lookup, facts flow.
     """
     from ..catalog import table as static_table
-    from ..functions.exact import dsum
-
     cust = static_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     ev = events_stream(spark, sf_dir)
     agg = (
@@ -205,7 +204,7 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "streaming_sliding_window",
-    oracle="""
+    oracle=f"""
 WITH starts AS (
   SELECT TIME_BUCKET(INTERVAL '30 minutes', CAST(ts AS TIMESTAMP)) AS b, event_id, value, ts
   FROM events
@@ -216,7 +215,7 @@ expanded AS (
   SELECT b - INTERVAL '30 minutes' AS window_start, event_id, value FROM starts
 )
 SELECT window_start, COUNT(*) AS n_events,
-       CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS sum_value
+       {sql_dsum("value", 2)} AS sum_value
 FROM expanded
 GROUP BY window_start
 """,
@@ -229,8 +228,6 @@ def streaming_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     ever seen — unbounded on a 24/7 stream); identical rows over the
     bounded single-batch drain (see streaming_tumbling_window)."""
     ev = events_stream(spark, sf_dir)
-    from ..functions.exact import dsum
-
     agg = (
         ev.withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
@@ -244,9 +241,9 @@ def streaming_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "streaming_foreach_batch_sink",
-    oracle="""
+    oracle=f"""
 SELECT event_type, COUNT(*) AS n_events,
-       CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS sum_value
+       {sql_dsum("value", 2)} AS sum_value
 FROM events
 GROUP BY event_type
 """,
@@ -260,8 +257,6 @@ def streaming_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint + deterministic paths, spotifytransform.py:101-158).
     Reading the landed files back and aggregating must equal
     aggregating the source directly."""
-    from ..functions.exact import dsum
-
     back, _ = run_to_parquet(
         events_stream(spark, sf_dir).select("event_id", "event_type", "value"),
         "feb",

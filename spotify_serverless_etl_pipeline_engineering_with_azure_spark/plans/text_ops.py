@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import scatter, share, table
-from ..functions.exact import dec, roundk, sql_roundk
+from ..functions.exact import dec, roundk, sql_davg, sql_roundk
 from ..functions.hashing import md5_int48, sql_md5_int48
 from ..registry import register
 
@@ -423,21 +423,21 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_vocab_coverage",
-    oracle="""
+    oracle=f"""
 WITH uni AS (
   SELECT t AS token, COUNT(*) AS cnt FROM (
     SELECT UNNEST(STRING_SPLIT(text, ' ')) AS t FROM documents
   ) GROUP BY t
 ),
 tot AS (SELECT SUM(cnt) AS n_total FROM uni),
-top AS (SELECT token, cnt FROM uni ORDER BY cnt DESC, token LIMIT {n})
+top AS (SELECT token, cnt FROM uni ORDER BY cnt DESC, token LIMIT {VOCAB_CURVE_N})
 SELECT CAST(ROW_NUMBER() OVER (ORDER BY cnt DESC, token) AS INTEGER) AS rank,
        token, cnt,
-       (ROUND((CAST(CAST(SUM(cnt) OVER (ORDER BY cnt DESC, token
+       {sql_roundk('''CAST(CAST(SUM(cnt) OVER (ORDER BY cnt DESC, token
                                         ROWS UNBOUNDED PRECEDING) AS BIGINT) AS DOUBLE)
-               / n_total) * 1000000.0) / 1000000.0) AS cum_share
+               / n_total''', 6)} AS cum_share
 FROM top CROSS JOIN tot
-""".format(n=VOCAB_CURVE_N),
+""",
     tags=("text", "vocab"),
 )
 def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -560,7 +560,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_unigram_logprob",
-    oracle="""
+    oracle=f"""
 WITH toks AS (
   SELECT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS tok FROM documents
 ),
@@ -568,12 +568,11 @@ vocab AS (SELECT tok, COUNT(*) AS cnt FROM toks GROUP BY tok),
 tot AS (SELECT SUM(cnt) AS n_total FROM vocab),
 scored AS (
   SELECT t.doc_id,
-         (ROUND(LOG2(CAST(v.cnt AS DOUBLE) / CAST(n_total AS DOUBLE)) * 1000000.0) / 1000000.0) AS lp
+         {sql_roundk("LOG2(CAST(v.cnt AS DOUBLE) / CAST(n_total AS DOUBLE))", 6)} AS lp
   FROM toks t JOIN vocab v USING (tok) CROSS JOIN tot
 )
 SELECT doc_id, COUNT(*) AS n_tokens,
-       (ROUND(-(CAST(CAST(SUM(CAST(lp AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) / COUNT(*)) * 1000000.0) / 1000000.0)
-         AS h_bits
+       {sql_roundk("-" + sql_davg("lp", 6), 6)} AS h_bits
 FROM scored GROUP BY doc_id
 """,
     tags=("text", "quality", "language-model"),

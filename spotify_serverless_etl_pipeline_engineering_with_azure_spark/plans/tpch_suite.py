@@ -116,7 +116,7 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q6_forecast_revenue",
     oracle=f"""
-SELECT {sql_dsum("l_extendedprice * l_discount", 4, "revenue")}
+SELECT {sql_dsum("l_extendedprice * l_discount", 4)} AS revenue
 FROM lineitem
 WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
   AND l_discount BETWEEN 0.05 AND 0.07
@@ -144,7 +144,7 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q7_volume_shipping",
     oracle=f"""
-SELECT supp_nation, cust_nation, l_year, {sql_dsum("volume", 6, "revenue")}
+SELECT supp_nation, cust_nation, l_year, {sql_dsum("volume", 6)} AS revenue
 FROM (
   SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
          CAST(YEAR(l_shipdate) AS INTEGER) AS l_year, {REVENUE} AS volume
@@ -221,9 +221,8 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q8_market_share",
     oracle=f"""
 SELECT o_year,
-       CAST(CAST(SUM(CASE WHEN nation = 'NATION_2'
-                THEN CAST(volume AS DECIMAL(18,6)) ELSE 0 END) AS VARCHAR) AS DOUBLE)
-       / CAST(CAST(SUM(CAST(volume AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS mkt_share
+       {sql_dsum("CASE WHEN nation = 'NATION_2' THEN volume ELSE 0 END", 6)}
+       / {sql_dsum("volume", 6)} AS mkt_share
 FROM (
   SELECT CAST(YEAR(o_orderdate) AS INTEGER) AS o_year, {REVENUE} AS volume,
          n2.n_name AS nation
@@ -302,7 +301,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q9_product_profit",
     oracle=f"""
-SELECT nation, o_year, {sql_dsum("amount", 4, "sum_profit")}
+SELECT nation, o_year, {sql_dsum("amount", 4)} AS sum_profit
 FROM (
   SELECT n_name AS nation, CAST(YEAR(o_orderdate) AS INTEGER) AS o_year,
          {REVENUE} - p_retailprice * l_quantity * 0.1 AS amount
@@ -348,7 +347,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q10_returned_items",
     oracle=f"""
-SELECT c_custkey, c_name, {sql_dsum(REVENUE, 6, "revenue")}, c_acctbal, n_name
+SELECT c_custkey, c_name, {sql_dsum(REVENUE, 6)} AS revenue, c_acctbal, n_name
 FROM customer JOIN orders ON c_custkey = o_custkey
 JOIN lineitem ON l_orderkey = o_orderkey
 JOIN nation ON c_nationkey = n_nationkey
@@ -389,13 +388,12 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q11_important_parts",
     oracle=f"""
 WITH value_per_part AS (
-  SELECT l_partkey, {sql_dsum(REVENUE, 6, "part_value")}
+  SELECT l_partkey, {sql_dsum(REVENUE, 6)} AS part_value
   FROM lineitem GROUP BY l_partkey
 )
 SELECT l_partkey, part_value
 FROM value_per_part
-WHERE part_value > (SELECT CAST(CAST(SUM(CAST({REVENUE} AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE)
-                    FROM lineitem) * 0.0006
+WHERE part_value > (SELECT {sql_dsum(REVENUE, 6)} FROM lineitem) * 0.0006
 """,
     tags=("subquery", "scalar", "having"),
 )
@@ -472,9 +470,8 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q14_promo_revenue",
     oracle=f"""
-SELECT 100.0 * CAST(CAST(SUM(CASE WHEN p_type = 'PROMO'
-                        THEN CAST({REVENUE} AS DECIMAL(18,6)) ELSE 0 END) AS VARCHAR) AS DOUBLE)
-       / CAST(CAST(SUM(CAST({REVENUE} AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS promo_revenue
+SELECT 100.0 * {sql_dsum(f"CASE WHEN p_type = 'PROMO' THEN {REVENUE} ELSE 0 END", 6)}
+       / {sql_dsum(REVENUE, 6)} AS promo_revenue
 FROM lineitem JOIN part ON l_partkey = p_partkey
 WHERE l_shipdate >= TIMESTAMP '1997-09-01' AND l_shipdate < TIMESTAMP '1997-10-01'
 """,
@@ -507,7 +504,7 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q15_top_supplier",
     oracle=f"""
 WITH revenue AS (
-  SELECT l_suppkey AS supplier_no, {sql_dsum(REVENUE, 6, "total_revenue")}
+  SELECT l_suppkey AS supplier_no, {sql_dsum(REVENUE, 6)} AS total_revenue
   FROM lineitem
   WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1997-04-01'
   GROUP BY l_suppkey
@@ -596,12 +593,10 @@ def q16_parts_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q17_small_quantity_revenue",
     oracle=f"""
-SELECT CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) / 7.0
-       AS avg_yearly
+SELECT {sql_dsum("l_extendedprice", 2)} / 7.0 AS avg_yearly
 FROM lineitem JOIN part ON p_partkey = l_partkey
 WHERE p_brand = 'Brand#3'
-  AND l_quantity < (SELECT 0.2 * (CAST(CAST(SUM(CAST(l2.l_quantity AS DECIMAL(18,2)))
-                                       AS VARCHAR) AS DOUBLE) / COUNT(*))
+  AND l_quantity < (SELECT 0.2 * {sql_davg("l2.l_quantity", 2)}
                     FROM lineitem l2 WHERE l2.l_partkey = lineitem.l_partkey)
 """,
     tags=("subquery", "correlated-scalar", "agg"),
@@ -652,7 +647,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 SELECT c_custkey, c_name, o_orderkey,
        STRFTIME(o_orderdate, '%Y-%m-%d') AS orderdate,
-       o_totalprice, {sql_dsum("l_quantity", 2, "total_qty")}
+       o_totalprice, {sql_dsum("l_quantity", 2)} AS total_qty
 FROM customer JOIN orders ON c_custkey = o_custkey
 JOIN lineitem ON o_orderkey = l_orderkey
 WHERE o_orderkey IN (SELECT l_orderkey FROM lineitem
@@ -701,7 +696,7 @@ def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q19_disjunctive_revenue",
     oracle=f"""
-SELECT {sql_dsum(REVENUE, 6, "revenue")}
+SELECT {sql_dsum(REVENUE, 6)} AS revenue
 FROM lineitem JOIN part ON p_partkey = l_partkey
 WHERE (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 15
        AND l_quantity >= 1.0 AND l_quantity <= 11.0)
@@ -744,12 +739,11 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q22_dormant_customers",
-    oracle="""
+    oracle=f"""
 SELECT c_nationkey, COUNT(*) AS numcust,
-       CAST(CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS totacctbal
+       {sql_dsum("c_acctbal", 2)} AS totacctbal
 FROM customer c
-WHERE c_acctbal > (SELECT CAST(CAST(SUM(CAST(c2.c_acctbal AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE)
-                          / COUNT(*)
+WHERE c_acctbal > (SELECT {sql_davg("c2.c_acctbal", 2)}
                    FROM customer c2 WHERE c2.c_acctbal > 0.0)
   AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey
                   AND o.o_orderdate >= TIMESTAMP '2001-01-01')

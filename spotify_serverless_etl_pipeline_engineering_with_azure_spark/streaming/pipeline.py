@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..catalog import sink_run_dir
+from ..functions.exact import dsum, sql_dsum
 from ..operators import spotify
 from ..operators.sinks import write_csv
 
@@ -116,8 +117,6 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def windowed_counts(events: DataFrame) -> DataFrame:
     """Tumbling 1-hour event-time window aggregate with a 2-hour
     late-data watermark."""
-    from ..functions.exact import dsum
-
     return (
         events.withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -127,11 +126,11 @@ def windowed_counts(events: DataFrame) -> DataFrame:
 
 
 # DuckDB oracle of windowed_counts over the whole events table.
-WINDOWED_COUNTS_SQL = """
+WINDOWED_COUNTS_SQL = f"""
 SELECT TIME_BUCKET(INTERVAL '1 hour', CAST(ts AS TIMESTAMP)) AS window_start,
        event_type,
        COUNT(*) AS n_events,
-       CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS sum_value
+       {sql_dsum("value", 2)} AS sum_value
 FROM events
 GROUP BY 1, 2
 """

@@ -18,7 +18,8 @@ it back with every field present:
 - ``window``, ``generate``: Window and Generate nodes;
 - ``group_limit``: WindowGroupLimit nodes by mode (Partial, Final);
 - ``python``: Python-boundary nodes by name;
-- ``scan``: per file scan, ``[table, ReadSchema columns, PushedFilters]``;
+- ``scan``: per file scan, ``[table, ReadSchema columns, PushedFilters]``,
+  and per Python DataSource scan, ``[source name, read columns, []]``;
 - ``window_fed_by_exchange``: Windows whose input, directly or through
   a Sort, is an ENSURE_REQUIREMENTS hash exchange — a rank filter
   without a map-side group limit funnels every row of a group there;
@@ -101,6 +102,13 @@ def _scan(node) -> list:
     return [table, cols, [str(f.toString()) for f in _seq(node.pushedDownFilters())]]
 
 
+def _batch_scan(node) -> list:
+    """[source name, columns, []] of a DataSource V2 scan — in this
+    package only a Python DataSource (``BatchScan ... (Python)``), whose
+    scan exposes no pushed filters."""
+    return [str(node.table().name()), list(node.scan().readSchema().fieldNames()), []]
+
+
 def _is_hash_requirement(node) -> bool:
     return (
         _cls(node) == "ShuffleExchangeExec"
@@ -143,6 +151,8 @@ def _walk(node, rec: dict) -> None:
         )
     elif kind == "FileSourceScanExec":
         rec["scan"].append(_scan(node))
+    elif kind == "BatchScanExec":
+        rec["scan"].append(_batch_scan(node))
     elif kind == "InMemoryTableScanExec":
         children.append(node.relation().cachedPlan())
     if str(node.nodeName()) in PYTHON:

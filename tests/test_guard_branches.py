@@ -13,6 +13,9 @@ fails loudly here.
 
 from __future__ import annotations
 
+import glob
+import re
+
 import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -362,20 +365,45 @@ def test_prefix_filter_hot_cluster_streams_all_pairs(spark, boilerplate_dir):
 
 
 # ---------------------------------------------------------------------------
-# (g) quantization discipline: every ROUND is the multiply form
+# (g) numeric contract: every ROUND is the multiply form, and every
+#     exact sum and k-dp rounding comes from functions/exact.py
 # ---------------------------------------------------------------------------
+PACKAGE = "spotify_serverless_etl_pipeline_engineering_with_azure_spark"
+NUMERIC_HOME = f"{PACKAGE}/functions/exact.py"
+# A hand-written copy of the numeric rule: the decimal→double cast
+# routed through a string, and the ROUND(x·10^k)/10^k quantization.
+NUMERIC_COPIES = (
+    re.compile(r"AS\s+(VARCHAR|STRING)\)\s+AS\s+DOUBLE"),
+    re.compile(r"\*\s*1(0)+\.0\)?\s*/\s*1(0)+\.0"),
+)
+
+
+def numeric_rule_copies(path: str, source: str) -> list[str]:
+    """Every hand-written copy of the numeric rule in ``source`` outside
+    functions/exact.py, whose twins (sql_double, sql_dsum, sql_davg,
+    sql_roundk; dsum, roundk) are its one definition."""
+    if path == NUMERIC_HOME:
+        return []
+    found = []
+    for pattern in NUMERIC_COPIES:
+        for m in pattern.finditer(source):
+            line = source.count("\n", 0, m.start()) + 1
+            found.append(f"{path}:{line}: {' '.join(m.group(0).split())}")
+    return sorted(found)
+
+
 def test_all_rounds_use_engine_deterministic_multiply_form():
     """ROUND(x, k) on a raw computed double is NOT cross-engine
     deterministic (Spark: HALF_UP on the exact binary expansion;
-    DuckDB: float arithmetic) — round 6 converted every site to
-    ROUND(x·10^k)/10^k via roundk/sql_roundk, and the multiply form is
-    hand-inlined in plain-string oracles. This guard keeps any future
-    ROUND on either side honest: (a) no plan module may call F.round
-    directly (roundk/round6 only); (b) every ROUND( in every
-    registered oracle must have its inner expression end with a
-    power-of-ten multiplier."""
+    DuckDB: float arithmetic), so every k-dp quantization is
+    ROUND(x·10^k)/10^k and every exact sum reaches a double through a
+    correctly rounded string parse. This guard keeps both rules honest:
+    (a) no plan module may call F.round with a scale argument; (b)
+    every ROUND( in every registered oracle must have its inner
+    expression end with a power-of-ten multiplier; (c) no file of the
+    package outside functions/exact.py writes either rule out by hand,
+    so a change to DuckDB's cast or rounding is made in one place."""
     import os
-    import re
 
     import spotify_serverless_etl_pipeline_engineering_with_azure_spark.plans as plans_pkg
 
@@ -386,10 +414,9 @@ def test_all_rounds_use_engine_deterministic_multiply_form():
             continue
         src = open(os.path.join(plans_dir, fn)).read()
         for m in re.finditer(r"F\.round\(", src):
-            # the multiply form inline (F.round(x * 10^k)) is the same
-            # discipline as roundk; only a SCALE-ARGUMENT round
-            # (F.round(x, k), raw-double rounding) is the divergent
-            # class.
+            # only a SCALE-ARGUMENT round (F.round(x, k), raw-double
+            # rounding) is the divergent class; the suite digest's
+            # integer F.round(x * 10^6) is not.
             depth, i = 1, m.end()
             while depth and i < len(src):
                 if src[i] == "(":
@@ -428,3 +455,37 @@ def test_all_rounds_use_engine_deterministic_multiply_form():
         "oracle ROUND without the multiply form (cross-engine divergent):\n"
         + "\n".join(bad)
     )
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    copies = []
+    for full in sorted(glob.glob(os.path.join(root, PACKAGE, "**", "*.py"), recursive=True)):
+        with open(full, encoding="utf-8") as f:
+            copies += numeric_rule_copies(os.path.relpath(full, root), f.read())
+    assert not copies, f"numeric rule written outside functions/exact.py: {copies}"
+
+
+def test_numeric_scan_flags_a_hand_copy():
+    """Both shapes are caught, across a line break too, in any file but
+    exact.py; integer cents and the suite digest's ROUND(x·10^6)
+    integer are not copies of the rule."""
+    path = f"{PACKAGE}/plans/q.py"
+    source = (
+        'ORACLE = """\n'
+        "SELECT CAST(CAST(SUM(CAST(v AS DECIMAL(18,2))) AS STRING)\n"
+        "            AS DOUBLE) AS total,\n"
+        "       (ROUND(x * 1000000.0) / 1000000.0) AS share\n"
+        '"""\n'
+        'ranks = F.round(F.col("r") * 1000000000.0) / 1000000000.0\n'
+    )
+    assert numeric_rule_copies(path, source) == [
+        f"{path}:2: AS STRING) AS DOUBLE",
+        f"{path}:4: * 1000000.0) / 1000000.0",
+        f"{path}:6: * 1000000000.0) / 1000000000.0",
+    ]
+    assert not numeric_rule_copies(NUMERIC_HOME, source)
+    kept = (
+        "CENTS = 'CAST(ROUND(o_totalprice * 100) AS BIGINT)'\n"
+        "prod = F.round(col * 1000000.0)\n"
+        "hi = F.floor(prod / 4294967296.0)\n"
+    )
+    assert not numeric_rule_copies(path, kept)

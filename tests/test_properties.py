@@ -3,12 +3,16 @@
 The oracle-parity suite proves the registry queries on one fixed
 dataset; these properties prove the underlying primitives on arbitrary
 inputs — the hash fold really is engine-independent, the pair expansion
-really is C(n,2), the date padding really matches pandas' coercion.
+really is C(n,2), the date padding really matches pandas' coercion, and
+each functions/exact.py twin agrees bit for bit with its Spark builder.
 """
 
 from __future__ import annotations
 
 import hashlib
+import math
+import random
+from fractions import Fraction
 from itertools import combinations
 
 import duckdb
@@ -16,9 +20,16 @@ import pandas as pd
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from spotify_serverless_etl_pipeline_engineering_with_azure_spark.functions.dates import (
     parse_release_date,
+)
+from spotify_serverless_etl_pipeline_engineering_with_azure_spark.functions.exact import (
+    dsum,
+    roundk,
+    sql_dsum,
+    sql_roundk,
 )
 from spotify_serverless_etl_pipeline_engineering_with_azure_spark.functions.hashing import (
     HEX_CHARS,
@@ -82,3 +93,56 @@ def test_release_date_padding_matches_pandas(spark, specs):
     ]
     expected = [ts.date().isoformat() for ts in pd.to_datetime(raw, format="mixed")]
     assert got == expected
+
+
+
+def _on_both_engines(spark, values):
+    """A Spark frame and a DuckDB table ``t`` over the same (g, x) rows."""
+    con = duckdb.connect()
+    con.register("t", pd.DataFrame(values, columns=["g", "x"]))
+    return spark.createDataFrame(values, "g int, x double"), con
+
+
+def _bits(rows) -> list[str]:
+    return [y.hex() for (y,) in rows]
+
+
+def test_roundk_twins_agree_at_half_boundaries(spark):
+    """roundk and sql_roundk round the doubles 1 ulp either side of every
+    6dp half boundary k/1280 (the cume_dist class) identically; the
+    scale-argument ROUND(x, 6) of the two engines does not, so the
+    inputs discriminate."""
+    halves = [Fraction(k, 1280) * 2 * 10**6 for k in range(1, 1280)]
+    edges = [float(h / (2 * 10**6)) for h in halves if h.denominator == 1 and h.numerator % 2]
+    xs = [y for x in edges for y in (math.nextafter(x, 0.0), x, math.nextafter(x, 1.0))]
+    df, con = _on_both_engines(spark, list(enumerate(xs)))
+
+    def both(col, sql):
+        return (
+            _bits(df.orderBy("g").select(col).collect()),
+            _bits(con.execute(f"SELECT {sql} FROM t ORDER BY g").fetchall()),
+        )
+
+    twin_spark, twin_duckdb = both(roundk(F.col("x"), 6), sql_roundk("x", 6))
+    assert twin_spark == twin_duckdb
+    raw_spark, raw_duckdb = both(F.round("x", 6), "ROUND(x, 6)")
+    assert raw_spark != raw_duckdb
+
+
+def test_dsum_twins_agree_past_2_53_units(spark):
+    """dsum and sql_dsum give the same double for exact 2dp sums past
+    2^53 units (the sf1 q1 sum_charge case); DuckDB's direct
+    DECIMAL→DOUBLE cast of the same sums does not, so the inputs
+    discriminate."""
+    rng = random.Random(7)
+    values = [(g, rng.randrange(5 * 10**14, 10**15) / 100) for g in range(40) for _ in range(20)]
+    df, con = _on_both_engines(spark, values)
+    per_group = " FROM t GROUP BY g ORDER BY g"
+    twin_duckdb = _bits(con.execute(f"SELECT {sql_dsum('x', 2)}{per_group}").fetchall())
+    twin_spark = _bits(
+        df.groupBy("g").agg(dsum(F.col("x"), 2).alias("s")).orderBy("g").select("s").collect()
+    )
+    assert twin_spark == twin_duckdb
+    assert min(float.fromhex(y) for y in twin_duckdb) * 100 > 2**53
+    direct = _bits(con.execute(f"SELECT CAST(SUM(CAST(x AS DECIMAL(18,2))) AS DOUBLE){per_group}").fetchall())
+    assert direct != twin_duckdb

@@ -282,6 +282,21 @@ def test_datasource_tolerates_explicit_nulls(spark, tmp_path):
         read_playlist_pages(spark, str(empty)).count()
 
 
+def test_datasource_parses_each_page_once(spark):
+    """S1 parses each page body once: the optimized plan of
+    rest_datasource_playlist holds one from_json. Exploding a computed
+    items column instead lets the optimizer infer a non-empty filter
+    and push it below the parse with the parse substituted in: three."""
+    from spotify_serverless_etl_pipeline_engineering_with_azure_spark.operators.spotify_queries import (
+        _ensure_ds_fixture,
+        read_playlist_pages,
+    )
+
+    df = read_playlist_pages(spark, _ensure_ds_fixture())
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("from_json(") == 1, plan
+
+
 def test_stream_oracle_tells_blobs_from_one_merged_batch():
     """streaming_csv_sink_roundtrip's oracle keeps first per blob, one
     micro-batch per blob as the reference runs. A stream that merged
