@@ -26,14 +26,21 @@ Local filesystem posture: without Hadoop's native library
 and directory it creates, and the FileContext checkpoint manager forks
 a ``readlink`` for each side of every rename. Every write's commit
 protocol and every streaming trigger's offset and commit logs pay
-those forks. A ``local`` master therefore gets Hadoop's raw local
-filesystem, which writes no ``.crc`` sidecar files and so halves the
-creates, and the FileSystem-based checkpoint manager, which still
-writes temp-file-then-rename but renames without a ``readlink``.
-Cluster masters keep Spark's filesystem defaults. Every master turns
-off PySpark's DataFrame call-site capture, which costs py4j round
-trips on every DataFrame call in plan building; the only loss is the
-"called from file:line" context in error messages, and
+those forks. A ``local`` master therefore gets a raw local filesystem,
+which writes no ``.crc`` sidecar files and so halves the creates, and
+the FileSystem-based checkpoint manager, which still writes
+temp-file-then-rename but renames without a ``readlink``. The raw
+filesystem is ``jvm/NioLocalFileSystem.java``, which sets rwx modes
+with one system call instead of a ``chmod`` fork: local_fs_classes
+compiles it with ``javac`` before the JVM starts, once per source into
+a user cache dir, and session_confs puts it on the driver classpath.
+Without ``javac`` or Hadoop's jar, or in a process whose JVM is
+already up without the class, the posture falls back to Hadoop's
+``RawLocalFileSystem`` and its forks. Cluster masters keep Spark's
+filesystem defaults. Every master turns off PySpark's DataFrame
+call-site capture, which costs py4j round trips on every DataFrame
+call in plan building; the only loss is the "called from file:line"
+context in error messages, and
 ``spark.python.sql.dataFrameDebugging.enabled=true`` in
 SPARK_GRAFT_EXTRA_CONFS brings it back for debugging.
 
@@ -55,8 +62,16 @@ shared frame's blocks once it is unreachable.
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
 
+import pyspark
+from py4j.protocol import Py4JError
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # The read contract (module docstring). UTC: the oracles render every
@@ -79,7 +94,69 @@ def pin_reads(spark: SparkSession) -> None:
         spark.conf.set(key, value)
 
 
-def session_confs(env: dict[str, str] | None = None) -> tuple[str, dict[str, str]]:
+# The local filesystem that sets file modes without forking (module
+# docstring), and its source.
+NIO_LOCAL_FS = "sparkgraft.NioLocalFileSystem"
+_NIO_SOURCE = os.path.join(os.path.dirname(__file__), "jvm", "NioLocalFileSystem.java")
+
+
+def local_fs_classes() -> str | None:
+    """The classes dir holding NIO_LOCAL_FS, compiled on first use; None
+    when there is no Hadoop client jar in the Spark distribution, no
+    ``javac`` (under $JAVA_HOME or on PATH) to compile a missing dir,
+    or the compile fails. The dir is named by a hash of the source and
+    the jar, under $XDG_CACHE_HOME (or ~/.cache), so it outlives every
+    run's temp dirs. ``javac`` writes into a temp dir that is renamed
+    into place, so concurrent boots never load a half-written dir."""
+    spark_home = os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__)
+    jars = sorted(glob.glob(os.path.join(spark_home, "jars", "hadoop-client-api-*.jar")))
+    if not jars:
+        return None
+    with open(_NIO_SOURCE, "rb") as f:
+        key = hashlib.sha256(f.read() + os.path.basename(jars[0]).encode()).hexdigest()[:16]
+    cache_home = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
+    cache = os.path.join(cache_home, "spark-graft")
+    classes = os.path.join(cache, key)
+    if os.path.isdir(classes):
+        return classes
+    java_bin = [os.path.join(os.environ["JAVA_HOME"], "bin")] if os.environ.get("JAVA_HOME") else []
+    javac = shutil.which("javac", path=os.pathsep.join([*java_bin, os.environ.get("PATH", "")]))
+    if javac is None:
+        return None
+    try:
+        os.makedirs(cache, exist_ok=True)
+        tmp = tempfile.mkdtemp(dir=cache)
+    except OSError:
+        return None
+    try:
+        cmd = [javac, "--release", "17", "-cp", jars[0], "-d", tmp, _NIO_SOURCE]
+        if subprocess.run(cmd, capture_output=True, timeout=300).returncode == 0:
+            os.replace(tmp, classes)
+    except (OSError, subprocess.SubprocessError):
+        pass  # a failed compile, or a concurrent boot renamed its dir first
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return classes if os.path.isdir(classes) else None
+
+
+def _driver_fs_classes() -> str | None:
+    """local_fs_classes, if the driver JVM can load NIO_LOCAL_FS from
+    it. A JVM this process already runs (a session was started and
+    stopped earlier) keeps the classpath it started with, so there the
+    class must load already."""
+    classes = local_fs_classes()
+    if classes is None or SparkContext._jvm is None:
+        return classes
+    try:
+        SparkContext._jvm.java.lang.Class.forName(NIO_LOCAL_FS)
+    except Py4JError:
+        return None
+    return classes
+
+
+def session_confs(
+    env: dict[str, str] | None = None, fs_classes: str | None = None
+) -> tuple[str, dict[str, str]]:
     """O3 (config from env, spotifyextract.py:15-20 os.environ reads):
     resolve (master, confs) from the environment. Pure — the
     driver-contract test asserts the mapping without booting a JVM.
@@ -88,7 +165,9 @@ def session_confs(env: dict[str, str] | None = None) -> tuple[str, dict[str, str
     partitions; SPARK_GRAFT_MASTER overrides the master URL (cluster
     posture); SPARK_GRAFT_DRIVER_MEM sizes the driver heap;
     SPARK_GRAFT_EXTRA_CONFS (``parse_confs`` grammar) adds or overrides
-    any conf.
+    any conf. ``fs_classes`` is local_fs_classes' dir: a local master
+    with it gets NIO_LOCAL_FS, one without it Hadoop's
+    RawLocalFileSystem.
     """
     e = os.environ if env is None else env
     cpus = e.get("SPARK_GRAFT_CPUS", "32")
@@ -113,10 +192,13 @@ def session_confs(env: dict[str, str] | None = None) -> tuple[str, dict[str, str
         # docstring).
         "spark.python.sql.dataFrameDebugging.enabled": "false",
     }
-    if master.startswith("local"):
+    local = master.startswith("local")
+    if local:
         # The fork-free local filesystem (module docstring).
         confs.update({
-            "spark.hadoop.fs.file.impl": "org.apache.hadoop.fs.RawLocalFileSystem",
+            "spark.hadoop.fs.file.impl": (
+                NIO_LOCAL_FS if fs_classes else "org.apache.hadoop.fs.RawLocalFileSystem"
+            ),
             "spark.hadoop.fs.AbstractFileSystem.file.impl": "org.apache.hadoop.fs.local.RawLocalFs",
             "spark.sql.streaming.checkpointFileManagerClass": (
                 "org.apache.spark.sql.execution.streaming.checkpointing."
@@ -124,7 +206,15 @@ def session_confs(env: dict[str, str] | None = None) -> tuple[str, dict[str, str
             ),
         })
     # Applied LAST so explicit entries win over the local defaults above.
-    confs.update(parse_confs(e.get("SPARK_GRAFT_EXTRA_CONFS", "")))
+    extra = parse_confs(e.get("SPARK_GRAFT_EXTRA_CONFS", ""))
+    confs.update(extra)
+    if local and fs_classes:
+        # Joined, not replaced: a caller's classpath would otherwise
+        # leave fs.file.impl naming a class the JVM cannot load.
+        user_path = extra.get("spark.driver.extraClassPath")
+        confs["spark.driver.extraClassPath"] = (
+            f"{user_path}{os.pathsep}{fs_classes}" if user_path else fs_classes
+        )
     return master, confs
 
 
@@ -150,7 +240,7 @@ def parse_confs(spec: str) -> dict[str, str]:
 def get_spark(app_name: str = "sse_spark", *, extra: dict[str, str] | None = None) -> SparkSession:
     """A session on the environment's master and confs (session_confs),
     with ``extra`` confs applied last."""
-    master, confs = session_confs()
+    master, confs = session_confs(fs_classes=_driver_fs_classes())
     builder = SparkSession.builder.master(master).appName(app_name)
     for k, v in {**confs, **(extra or {})}.items():
         builder = builder.config(k, v)

@@ -126,6 +126,7 @@ def test_touched_confs_restored_after_an_arm_raises(spark, sf_dir, monkeypatch):
         "spark.hadoop.fs.AbstractFileSystem.file.impl",
         "spark.sql.streaming.checkpointFileManagerClass",
         "spark.python.sql.dataFrameDebugging.enabled",
+        "spark.driver.extraClassPath",
     ],
 )
 def test_conf_arm_fixed_at_boot_is_refused(spark, sf_dir, monkeypatch, key):

@@ -175,6 +175,23 @@ def test_o3_session_config_from_env():
     )
     assert {k: confs[k] for k in posture} == overrides
 
+    # With the compiled classes dir (session.local_fs_classes), a local
+    # master gets the in-process-chmod filesystem on its driver
+    # classpath; without it, the mapping above. Cluster masters get the
+    # same confs either way.
+    from spotify_serverless_etl_pipeline_engineering_with_azure_spark.session import NIO_LOCAL_FS
+
+    _, confs = session_confs(env={"SPARK_GRAFT_CPUS": "8"}, fs_classes="/cache/classes")
+    assert {k: confs.get(k) for k in posture} == {
+        **posture, "spark.hadoop.fs.file.impl": NIO_LOCAL_FS
+    }
+    assert confs["spark.driver.extraClassPath"] == "/cache/classes"
+    _, confs = session_confs(env={"SPARK_GRAFT_CPUS": "8"}, fs_classes=None)
+    assert {k: confs.get(k) for k in posture} == posture
+    assert "spark.driver.extraClassPath" not in confs
+    cluster = {"SPARK_GRAFT_MASTER": "spark://host:7077"}
+    assert session_confs(env=cluster, fs_classes="/cache/classes") == session_confs(env=cluster)
+
     # A segment without '=' is a config error: silently setting the
     # conf to "" would fail session boot with a confusing Spark error
     # far from the cause (r10 ADVICE) — raise loud, name the segment.

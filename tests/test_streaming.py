@@ -364,14 +364,21 @@ def test_run_to_parquet_restart_resumes_without_repeats(spark, tmp_path, monkeyp
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# A two-blob run_spotify_pipeline drain in a fresh session booted
-# through get_spark, so it runs under session_confs' local posture.
+# A one-backfill read_raw_json -> transform -> write_csv x3 run and a
+# two-blob run_spotify_pipeline drain in a fresh session booted through
+# get_spark, so both run under session_confs' local posture.
 _DRAIN = """
+import os
 import sys
 sys.path.insert(0, {repo!r})
 from spotify_serverless_etl_pipeline_engineering_with_azure_spark import get_spark
 from spotify_serverless_etl_pipeline_engineering_with_azure_spark.operators.fixtures import (
     write_json_dir,
+)
+from spotify_serverless_etl_pipeline_engineering_with_azure_spark.operators.sinks import write_csv
+from spotify_serverless_etl_pipeline_engineering_with_azure_spark.operators.spotify import (
+    read_raw_json,
+    transform,
 )
 from spotify_serverless_etl_pipeline_engineering_with_azure_spark.streaming.pipeline import (
     run_spotify_pipeline,
@@ -379,6 +386,8 @@ from spotify_serverless_etl_pipeline_engineering_with_azure_spark.streaming.pipe
 raw, out, ckpt = sys.argv[1:]
 spark = get_spark("sse_fork_guard")
 write_json_dir(raw, n_docs=2)
+for name, df in transform(read_raw_json(spark, raw)).items():
+    write_csv(df, os.path.join(out, "backfill", name))
 q = run_spotify_pipeline(spark, raw, out, ckpt)
 q.awaitTermination(240)
 assert not q.isActive and q.exception() is None
@@ -444,12 +453,24 @@ def _drain_with_logged_forks(tmp_path, extra_confs: str = ""):
 def test_local_posture_drain_forks_no_readlink_and_writes_no_crc(tmp_path):
     """Without a native libhadoop every local create forks a chmod and
     every FileContext rename a readlink per side. Under the local
-    posture a streaming drain renames without readlink and writes no
-    .crc sidecars (the remaining chmod forks are printed)."""
+    posture a backfill and a streaming drain fork neither (file modes
+    are set in-process by session.NIO_LOCAL_FS) and write no .crc
+    sidecars."""
     chmod, readlink, crc = _drain_with_logged_forks(tmp_path)
-    print(f"chmod forks: {len(chmod)}")
+    assert chmod == []
     assert readlink == []
     assert crc == []
+
+
+def test_chmod_guard_fires_under_raw_local_filesystem(tmp_path):
+    """Negative fixture: the same run on Hadoop's RawLocalFileSystem
+    forks a chmod per created file or directory."""
+    chmod, readlink, crc = _drain_with_logged_forks(
+        tmp_path, "spark.hadoop.fs.file.impl=org.apache.hadoop.fs.RawLocalFileSystem"
+    )
+    print(f"chmod forks: {len(chmod)}")
+    assert chmod
+    assert readlink == []
 
 
 def test_fork_guard_fires_under_spark_filesystem_defaults(tmp_path):
