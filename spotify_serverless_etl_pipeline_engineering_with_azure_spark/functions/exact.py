@@ -12,28 +12,23 @@ exact fixed-point number; the aggregate over those is then
 order-independent, and the final cast to DOUBLE is one correctly-rounded
 conversion on both engines.
 
-CAVEAT (round-6 finding): Spark's double→decimal cast rounds the
-SHORTEST decimal representation of the double (BigDecimal.valueOf),
-while DuckDB rounds the EXACT binary value — the two can disagree when
-a scale-boundary lies between those two readings of the same double.
-That never happens under the discipline above (a double encoding an
-exact ≤scale-dp decimal has its boundary-free shortest repr equal to
-that decimal), but it means ``dec()`` must NOT be fed raw computed
-doubles (logs, ratios, products of irrationals) — quantize them first
-with :func:`roundk`, whose output k/10^k doubles are again
-shortest-repr-exact at the cast scale.
+Input contract: Spark's double→decimal cast rounds the SHORTEST
+decimal representation of the double (BigDecimal.valueOf), while DuckDB
+rounds the EXACT binary value — the two disagree when a scale boundary
+lies between those two readings of the same double. A double encoding
+an exact ≤scale-dp decimal has no such boundary, so the sums below take
+only such doubles: a raw computed double (a log, a ratio, a product of
+irrationals) is quantized with :func:`roundk` first, whose k/10^k
+outputs are again shortest-repr-exact at any scale ≥ k.
 
-Implementation note (the split accumulator): Spark's SUM over
-DECIMAL(p,s) carries a p+10-digit buffer; above 18 digits that leaves
-the compact-long fast path and every row update pays BigDecimal
-arithmetic — measured ~1.7× the whole-aggregation cost of q1 at sf0.1.
-Instead the exact decimal row value is converted to integer "units"
-(value·10^scale, a long), and summed as TWO long partials
-(hi = units div 10^6, lo = units mod 10^6) that are recombined in
-decimal AFTER the aggregate — per-group, not per-row. Every hot-path
-operation is codegen'd long arithmetic; the result is bit-identical to
-the decimal SUM (asserted against the unchanged decimal-SUM oracle SQL
-for every registered query).
+The split accumulator: Spark's SUM over DECIMAL(p,s) carries a
+p+10-digit buffer, which above 18 digits leaves the compact-long fast
+path for BigDecimal arithmetic on every row update. The exact decimal
+row value is instead converted to integer "units" (value·10^scale, a
+long) and summed as TWO long partials (hi = units div 10^6, lo = units
+mod 10^6), recombined in decimal AFTER the aggregate — per group, not
+per row. Every hot-path operation is codegen'd long arithmetic, and the
+result is bit-identical to the decimal SUM that the SQL twins compute.
 
 Capacity, designed for 100 TB rather than the test SF:
 - row values must fit DECIMAL(15,s) (|value| < 10^(15-s)); ANSI mode
@@ -58,7 +53,7 @@ Capacity, designed for 100 TB rather than the test SF:
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, WindowSpec
 from pyspark.sql import functions as F
 
 # hi/lo split base for the long partial sums.
@@ -67,11 +62,6 @@ _LIM = 10**6
 # decimal division's result scale (max(6, scale+2)) to stay ≥ scale and
 # the combined precision ≤ 38.
 _MAX_SCALE = 10
-
-
-def dec(col: Column, scale: int, precision: int = 18) -> Column:
-    """Row-level cast to an exact decimal with guard digits."""
-    return col.cast(f"decimal({precision},{scale})")
 
 
 def _unit_sums(col: Column, scale: int) -> tuple[Column, Column]:
@@ -86,7 +76,7 @@ def _unit_sums(col: Column, scale: int) -> tuple[Column, Column]:
     """
     if scale > _MAX_SCALE:
         raise ValueError(f"dsum/davg support scale <= {_MAX_SCALE}, got {scale}")
-    units = (dec(col, scale, precision=15) * (10**scale)).cast("long")
+    units = (col.cast(f"decimal(15,{scale})") * (10**scale)).cast("long")
     hi = F.sum((units / _LIM).cast("long"))
     lo = F.sum(units % _LIM)
     return hi, lo
@@ -100,6 +90,16 @@ def dsum(col: Column, scale: int) -> Column:
     """
     hi, lo = _unit_sums(col, scale)
     return dsum_from_parts(hi, lo, scale)
+
+
+def dsum_over(col: Column, scale: int, window: WindowSpec) -> Column:
+    """Windowed :func:`dsum`: every frame, ROWS or RANGE, gets the exact
+    decimal sum of its rows as one correctly rounded double; a frame
+    with no non-NULL row gives NULL. A window emits a value per ROW, so
+    the split accumulator's decimal recombination would run per row
+    too: the frame sums the row-level DECIMAL(15,s) values directly (a
+    DECIMAL(25,s) sum, under the same row cap)."""
+    return F.sum(col.cast(f"decimal(15,{scale})")).over(window).cast("double")
 
 
 def dsum_parts(col: Column, scale: int, prefix: str) -> list[Column]:
@@ -151,6 +151,12 @@ def sql_dsum(expr: str, scale: int) -> str:
     """SQL twin of :func:`dsum`: the exact decimal SUM of ``expr`` at
     ``scale``, as one correctly rounded double."""
     return sql_double(f"SUM(CAST({expr} AS DECIMAL(18,{scale})))")
+
+
+def sql_dsum_over(expr: str, scale: int, window: str) -> str:
+    """SQL twin of :func:`dsum_over`; ``window`` is the text after
+    OVER: a window name or a parenthesized specification."""
+    return sql_double(f"SUM(CAST({expr} AS DECIMAL(18,{scale}))) OVER {window}")
 
 
 def sql_davg(expr: str, scale: int) -> str:

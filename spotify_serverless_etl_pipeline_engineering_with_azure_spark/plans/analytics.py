@@ -21,7 +21,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import share, table
-from ..functions.exact import davg, dec, dsum, roundk, sql_davg, sql_double, sql_dsum, sql_roundk
+from ..functions.exact import (
+    davg, dsum, dsum_over, roundk, sql_davg, sql_dsum, sql_dsum_over, sql_roundk,
+)
 from ..registry import register
 from ..streaming.pipeline import SQL_SESSIONS, WINDOWED_COUNTS_SQL, windowed_counts
 
@@ -501,7 +503,7 @@ def pivot_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.groupBy("l_linestatus")
         .pivot("l_returnflag", ["A", "N", "R"])
-        .agg(F.sum(dec(F.col("l_quantity"), 2)).cast("double"))
+        .agg(dsum(F.col("l_quantity"), 2))
     )
 
 
@@ -546,7 +548,7 @@ def window_rank_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     "window_running_lag",
     oracle=f"""
 SELECT o_orderkey, o_custkey,
-       {sql_double('''SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
+       {sql_dsum_over("o_totalprice", 2, '''(
             PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)''')} AS running_spend,
        LAG(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS prev_price,
@@ -565,7 +567,7 @@ def window_running_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     return orders.select(
         "o_orderkey",
         "o_custkey",
-        F.sum(dec(F.col("o_totalprice"), 2)).over(run).cast("double").alias("running_spend"),
+        dsum_over(F.col("o_totalprice"), 2, run).alias("running_spend"),
         F.lag("o_totalprice").over(w).alias("prev_price"),
         F.datediff(
             F.col("o_orderdate").cast("date"),

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window, WindowSpec
 
 from ..catalog import materialize, share, table
-from ..functions.exact import dec, sql_dsum
+from ..functions.exact import dsum, dsum_from_parts, dsum_parts, sql_dsum
 from ..registry import register
 
 # Funnel step definitions: ordered event types a user must hit in
@@ -493,7 +493,7 @@ def events_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.to_date(F.max("ts")).alias("last_day"),
             F.count(F.lit(1)).alias("frequency"),
-            F.sum(dec(F.col("value"), 2)).cast("double").alias("monetary"),
+            dsum(F.col("value"), 2).alias("monetary"),
         )
         .crossJoin(F.broadcast(anchor))
         .select(
@@ -603,7 +603,7 @@ def _agg_salts(spark: SparkSession) -> int:
     then shrinks as the cluster grows, exactly like map tasks). Salting
     an aggregation — unlike the cell-pair JOIN salts in plans/dedup.py
     — cannot change results at any value: phase-1 partials are exact
-    DECIMAL sums and counts, and their phase-2 merge is
+    long partial sums and counts, and their phase-2 merge is
     order-independent, so the salt count is pure fan-out, derivable
     with no oracle mirror."""
     return max(_AGG_SALT_MIN, spark.sparkContext.defaultParallelism)
@@ -627,10 +627,10 @@ def agg_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     on (key, salt) where salt = pmod(l_orderkey, _agg_salts(spark))
     (deterministic — no rand(), results reproducible), spreading each
     hot key over one sub-key per session core (parallelism-derived, see
-    _agg_salts); phase 2 merges the 3·salts partial rows. Partial sums stay
-    DECIMAL until the final cast, so the result is bit-identical to the
-    oracle's single-phase sum regardless of merge order. This is the
-    aggregation-side counterpart of join_salted
+    _agg_salts); phase 2 merges the 3·salts partial rows. Partial sums are
+    dsum's long partials until the final recombination, so the result is
+    bit-identical to the oracle's single-phase sum regardless of merge
+    order. This is the aggregation-side counterpart of join_salted
     (plans/extended_ops.py): same pattern Spark's AQE cannot apply for
     you, because a low-cardinality groupBy key is skew BY DESIGN, not a
     runtime anomaly.
@@ -641,12 +641,12 @@ def agg_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_returnflag", "salt")
         .agg(
             F.count(F.lit(1)).alias("pn"),
-            F.sum(dec(F.col("l_extendedprice"), 2)).alias("psum"),
+            *dsum_parts(F.col("l_extendedprice"), 2, "p"),
         )
     )
     return partial.groupBy("l_returnflag").agg(
         F.sum("pn").alias("n_rows"),
-        F.sum("psum").cast("double").alias("sum_price"),
+        dsum_from_parts(F.sum("p_hi"), F.sum("p_lo"), 2).alias("sum_price"),
     )
 
 

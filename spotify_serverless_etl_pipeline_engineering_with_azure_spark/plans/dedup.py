@@ -32,7 +32,7 @@ from ..catalog import (
     share,
     table,
 )
-from ..functions.exact import roundk, sql_double, sql_roundk
+from ..functions.exact import dsum, roundk, sql_dsum, sql_roundk
 from ..functions.hashing import (
     MINHASH_N_BANDS as N_BANDS,
     MINHASH_PARAMS,
@@ -1339,9 +1339,9 @@ def _pagerank_oracle() -> str:
         iters.append(f"""
 iter{k} AS (
   SELECT d.v,
-         {sql_roundk(f"(CAST(1 AS DOUBLE) - CAST({PR_DAMPING} AS DOUBLE)) / CAST(n.cnt AS DOUBLE) + {PR_DAMPING} * {sql_double('s.contrib')}", 6)} AS r
+         {sql_roundk(f"(CAST(1 AS DOUBLE) - CAST({PR_DAMPING} AS DOUBLE)) / CAST(n.cnt AS DOUBLE) + {PR_DAMPING} * s.contrib", 6)} AS r
   FROM (
-    SELECT e.b AS v, SUM(CAST({sql_roundk("p.r / d2.deg", 9)} AS DECIMAL(28,12))) AS contrib
+    SELECT e.b AS v, {sql_dsum(sql_roundk("p.r / d2.deg", 9), 9)} AS contrib
     FROM edges e
     JOIN {prev} p ON p.v = e.a
     JOIN deg d2 ON d2.v = e.a
@@ -1420,17 +1420,13 @@ def _pagerank_on_pairs(pairs: DataFrame) -> DataFrame:
         contribs = (
             edges.join(ranks.withColumnRenamed("v", "rv"), F.col("rv") == F.col("a"))
             .join(deg.select(F.col("v").alias("dv"), "deg"), F.col("dv") == F.col("a"))
-            .select(
-                "b",
-                roundk(F.col("r") / F.col("deg"), 9).cast("decimal(28,12)").alias("c"),
-            )
             .groupBy("b")
-            .agg(F.sum("c").alias("contrib"))
+            .agg(dsum(roundk(F.col("r") / F.col("deg"), 9), 9).alias("contrib"))
         )
         ranks = materialize(
             contribs.select(
                 F.col("b").alias("v"),
-                roundk(F.lit(base) + PR_DAMPING * F.col("contrib").cast("double"), 6).alias("r"),
+                roundk(F.lit(base) + PR_DAMPING * F.col("contrib"), 6).alias("r"),
             )
         )
     return ranks.select(F.col("v").alias("doc_id"), F.col("r").alias("pagerank"))

@@ -15,7 +15,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import share, table
-from ..functions.exact import dec, dsum, roundk, sql_dsum, sql_roundk
+from ..functions.exact import (
+    dsum, dsum_from_parts, dsum_parts, roundk, sql_dsum, sql_dsum_over, sql_roundk,
+)
 from ..registry import register
 
 
@@ -152,9 +154,7 @@ def observe_pipeline_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("o_orderpriority").isNull(), 1).otherwise(0))
         .cast("long")
         .alias("n_null_priority"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("total_price"),
+        dsum(F.col("o_totalprice"), 2).alias("total_price"),
         F.min("o_orderkey").alias("min_key"),
         F.max("o_orderkey").alias("max_key"),
     )
@@ -317,7 +317,7 @@ WITH per_part AS (
   FROM lineitem GROUP BY l_partkey
 ),
 tot AS (
-  SELECT SUM(revenue) AS total_revenue, CAST(COUNT(*) AS BIGINT) AS n_parts
+  SELECT {sql_dsum("revenue", 2)} AS total_revenue, CAST(COUNT(*) AS BIGINT) AS n_parts
   FROM per_part
 ),
 top AS (SELECT l_partkey, revenue FROM per_part
@@ -325,7 +325,8 @@ top AS (SELECT l_partkey, revenue FROM per_part
 ranked AS (
   SELECT l_partkey, revenue,
          ROW_NUMBER() OVER w AS rnk,
-         SUM(revenue) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_revenue
+         {sql_dsum_over("revenue", 2, "(w ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)")}
+           AS cum_revenue
   FROM top
   WINDOW w AS (ORDER BY revenue DESC, l_partkey)
 )
@@ -340,25 +341,25 @@ def top_parts_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pareto (80/20) revenue-concentration analysis: parts ranked by
     revenue with cumulative share of total.
 
-    Data-sized work is keyed aggregation (per-part exact decimal
-    revenue); the head is then selected by a DISTRIBUTED top-100
-    (TakeOrderedAndProject) and the totals by a 1-row aggregate, so the
-    ranking/cumulative window runs over ≤100 rows — NOT over the full
-    per-part frame, which grows linearly with SF and would funnel into
-    a single unpartitioned-window task. cum_revenue sums the SAME
-    doubles in the SAME rank order in both engines (ties broken by
-    key), so the cumulative shares match bit-for-bit before the 6dp
-    round; in_top20pct flags the Pareto head.
+    Data-sized work is keyed aggregation (per-part exact revenue, kept
+    as dsum's long partials); the head is then selected by a
+    DISTRIBUTED top-100 (TakeOrderedAndProject) and the totals by a
+    1-row aggregate, so the ranking/cumulative window runs over ≤100
+    rows — NOT over the full per-part frame, which grows linearly with
+    SF and would funnel into a single unpartitioned-window task. The
+    total and the cumulative revenue re-sum the per-part partials, so
+    both are exact decimal sums, independent of summation order;
+    in_top20pct flags the Pareto head.
     """
     li = table(spark, sf_dir, "lineitem")
     # shared by the 1-row totals and the distributed top-100
     per_part = share(
-        li.groupBy("l_partkey").agg(
-            F.sum(dec(F.col("l_extendedprice"), 2)).cast("double").alias("revenue")
-        )
+        li.groupBy("l_partkey")
+        .agg(*dsum_parts(F.col("l_extendedprice"), 2, "rev"))
+        .withColumn("revenue", dsum_from_parts(F.col("rev_hi"), F.col("rev_lo"), 2))
     )
     tot = per_part.agg(
-        F.sum("revenue").alias("total_revenue"),
+        dsum_from_parts(F.sum("rev_hi"), F.sum("rev_lo"), 2).alias("total_revenue"),
         F.count(F.lit(1)).alias("n_parts"),
     )
     top = per_part.orderBy(F.desc("revenue"), F.asc("l_partkey")).limit(100)
@@ -368,7 +369,9 @@ def top_parts_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(w).alias("rnk"),
         "l_partkey",
         "revenue",
-        F.sum("revenue").over(run).alias("cum_revenue"),
+        dsum_from_parts(
+            F.sum("rev_hi").over(run), F.sum("rev_lo").over(run), 2
+        ).alias("cum_revenue"),
     )
     return ranked.crossJoin(F.broadcast(tot)).select(
         "rnk",

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..functions.exact import dec, dsum, roundk, sql_double, sql_dsum, sql_roundk
+from ..functions.exact import dsum, dsum_over, roundk, sql_dsum, sql_dsum_over, sql_roundk
 from ..registry import register
 
 
@@ -74,7 +74,7 @@ def window_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 SELECT user_id, event_id,
        CAST(COUNT(*) OVER w AS BIGINT) AS n_last7d,
-       {sql_double("SUM(CAST(value AS DECIMAL(18,2))) OVER w")} AS sum_last7d
+       {sql_dsum_over("value", 2, "w")} AS sum_last7d
 FROM events
 WHERE user_id % 7 = 0
 WINDOW w AS (PARTITION BY user_id ORDER BY EPOCH_US(ts)
@@ -106,7 +106,7 @@ def window_time_range_trailing(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_id",
         F.count(F.lit(1)).over(w).alias("n_last7d"),
-        F.sum(dec(F.col("value"), 2)).over(w).cast("double").alias("sum_last7d"),
+        dsum_over(F.col("value"), 2, w).alias("sum_last7d"),
     )
 
 

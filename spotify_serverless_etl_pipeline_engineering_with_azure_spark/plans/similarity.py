@@ -12,7 +12,7 @@ multi-probe; verified against brute force in tests/test_similarity.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import cached_index, checkpoint_frame, scatter, table
@@ -24,7 +24,7 @@ from ..functions.vectors import (
     sql_cosine6,
     sql_lsh_bucket,
 )
-from ..functions.exact import roundk, sql_double, sql_roundk
+from ..functions.exact import davg, roundk, sql_davg, sql_roundk
 from ..registry import register
 
 # Oracle-side cosine fragments bit-identical to cosine6 —
@@ -263,11 +263,15 @@ KMEANS_ITERS = 3
 # DuckDB's sequential folds can never diverge between iterations.
 
 
+def _centroid_mean(val: Column) -> Column:
+    """Centroid component: ``val`` quantized to 9dp, averaged exactly,
+    quantized to 6dp."""
+    return roundk(davg(roundk(val, 9), 9), 6)
+
+
 def _sql_centroid_mean(val: str) -> str:
-    """Oracle centroid component: ``val`` quantized to 9dp, summed
-    exactly in DECIMAL(28,12), divided by the count, quantized to 6dp."""
-    total = sql_double(f"SUM(CAST({sql_roundk(val, 9)} AS DECIMAL(28,12)))")
-    return sql_roundk(f"{total} / COUNT(*)", 6)
+    """SQL twin of :func:`_centroid_mean`."""
+    return sql_roundk(sql_davg(sql_roundk(val, 9), 9), 6)
 
 
 def _kmeans_oracle() -> str:
@@ -398,15 +402,7 @@ def cluster_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.posexplode(F.col("embedding").cast("array<double>")).alias("pos", "val"),
             )
             .groupBy("cid", "pos")
-            .agg(
-                F.sum(roundk(F.col("val"), 9).cast("decimal(28,12)")).alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .select(
-                "cid",
-                "pos",
-                roundk(F.col("s").cast("double") / F.col("n"), 6).alias("cval"),
-            )
+            .agg(_centroid_mean(F.col("val")).alias("cval"))
             .collect()
         )
         nxt = {cid: list(vals) for cid, vals in centroids.items()}
@@ -460,17 +456,9 @@ def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label", F.posexplode(F.col("embedding").cast("array<double>")).alias("pos", "val")
     ).filter(F.col("pos") < 8)
     return expanded.groupBy("label", "pos").agg(
-        # 9dp-quantize (roundk) then decimal-sum, the kmeans-update
-        # discipline: a raw double SUM is summation-order-dependent
-        # across partitions, so the pre-round mean could straddle a
-        # 6dp boundary differently per engine; the quantized decimal
-        # sum is order-independent and bit-identical, and the final
-        # mean is one shared IEEE division + multiply-form round.
-        roundk(
-            F.sum(roundk(F.col("val"), 9).cast("decimal(28,12)"))
-            .cast("double")
-            / F.count(F.lit(1)),
-            6,
-        ).alias("centroid_val"),
+        # the kmeans-update mean: a raw double SUM is
+        # summation-order-dependent across partitions, so the pre-round
+        # mean could straddle a 6dp boundary differently per engine.
+        _centroid_mean(F.col("val")).alias("centroid_val"),
         F.count(F.lit(1)).alias("n_vectors"),
     )

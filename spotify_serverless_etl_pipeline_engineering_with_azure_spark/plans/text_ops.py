@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import scatter, share, table
-from ..functions.exact import dec, roundk, sql_davg, sql_roundk
+from ..functions.exact import davg, roundk, sql_davg, sql_roundk
 from ..functions.hashing import md5_int48, sql_md5_int48
 from ..registry import register
 
@@ -613,8 +613,8 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = share(toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt")))
     total = vocab.agg(F.sum("cnt").alias("n_total"))
     # roundk on the raw log2 (the divergent cross-engine ROUND class;
-    # the quantized k/10⁶ double then survives dec() exactly — see
-    # functions/exact.py's shortest-repr caveat).
+    # the quantized k/10⁶ double then survives davg() exactly — see
+    # functions/exact.py's input contract).
     lp = roundk(
         F.log2(F.col("cnt").cast("double") / F.col("n_total").cast("double")), 6
     )
@@ -631,7 +631,5 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         # systematically — the sf1 sweep caught exactly this here
         # (doc with Σlp = −325.579749, n = 66 → quotient −4.93302650:
         # Spark HALF_UP said …026, DuckDB float-round said …027).
-        roundk(
-            -(F.sum(dec(F.col("lp"), 6)).cast("double") / F.count(F.lit(1))), 6
-        ).alias("h_bits"),
+        roundk(-davg(F.col("lp"), 6), 6).alias("h_bits"),
     )

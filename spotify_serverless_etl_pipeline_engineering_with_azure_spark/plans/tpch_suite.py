@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 from ..catalog import share, table
 from ..functions.exact import (
     davg,
-    dec,
     dsum,
     dsum_from_parts,
     dsum_parts,
@@ -286,12 +285,8 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             "nation",
         )
     )
-    num = F.sum(
-        F.when(F.col("nation") == "NATION_2", dec(F.col("volume"), 6)).otherwise(
-            F.lit(0).cast("decimal(18,6)")
-        )
-    ).cast("double")
-    den = F.sum(dec(F.col("volume"), 6)).cast("double")
+    num = dsum(F.when(F.col("nation") == "NATION_2", F.col("volume")).otherwise(0), 6)
+    den = dsum(F.col("volume"), 6)
     return joined.groupBy("o_year").agg((num / den).alias("mkt_share"))
 
 
@@ -485,12 +480,8 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < _ts("1997-10-01"))
     )
     part = table(spark, sf_dir, "part")
-    num = F.sum(
-        F.when(F.col("p_type") == "PROMO", dec(_revenue_col(), 6)).otherwise(
-            F.lit(0).cast("decimal(18,6)")
-        )
-    ).cast("double")
-    den = F.sum(dec(_revenue_col(), 6)).cast("double")
+    num = dsum(F.when(F.col("p_type") == "PROMO", _revenue_col()).otherwise(0), 6)
+    den = dsum(_revenue_col(), 6)
     return (
         li.join(part, F.col("l_partkey") == F.col("p_partkey"))
         .agg((F.lit(100.0) * num / den).alias("promo_revenue"))
@@ -631,11 +622,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(part, F.col("l_partkey") == F.col("p_partkey"))
         .join(per_part, F.col("l_partkey") == F.col("pk"))
         .filter(F.col("l_quantity") < 0.2 * F.col("avg_qty"))
-        .agg(
-            (F.sum(dec(F.col("l_extendedprice"), 2)).cast("double") / 7.0).alias(
-                "avg_yearly"
-            )
-        )
+        .agg((dsum(F.col("l_extendedprice"), 2) / 7.0).alias("avg_yearly"))
     )
 
 
@@ -818,7 +805,7 @@ def q12_priority_by_linestatus(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "q20_promotion_suppliers",
-    oracle="""
+    oracle=f"""
 SELECT s_suppkey, s_name
 FROM supplier
 WHERE s_suppkey IN (
@@ -826,7 +813,7 @@ WHERE s_suppkey IN (
   WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_type = 'SMALL')
     AND l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
   GROUP BY l_suppkey
-  HAVING SUM(CAST(l_quantity AS DECIMAL(18,2))) > 400.0
+  HAVING {sql_dsum("l_quantity", 2)} > 400.0
 )
 """,
     tags=("subquery", "in", "nested"),
@@ -853,7 +840,7 @@ def q20_promotion_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             "left_semi",
         )
         .groupBy("l_suppkey")
-        .agg(F.sum(dec(F.col("l_quantity"), 2)).alias("sq"))
+        .agg(dsum(F.col("l_quantity"), 2).alias("sq"))
         .filter(F.col("sq") > 400.0)
         .select("l_suppkey")
     )

@@ -24,7 +24,12 @@ it back with every field present:
   a Sort, is an ENSURE_REQUIREMENTS hash exchange — a rank filter
   without a map-side group limit funnels every row of a group there;
 - ``sort_over_single``: Sorts directly over a SinglePartition exchange
-  (a serialized global sort).
+  (a serialized global sort);
+- ``float_aggs``: aggregates whose double result depends on the order
+  rows are summed in — a Sum or Average over a floating column, and
+  every central-moment, correlation and covariance aggregate — in
+  aggregate and window nodes, each counted once (its Partial or
+  Complete mode). ``functions/exact.py``'s sums read as long sums.
 
 A checkpointed or cached-index frame shows only an RDD scan, so
 ``digests`` builds every query with ``catalog.share`` rebound to
@@ -59,7 +64,12 @@ PYTHON = {"ArrowEvalPython", "MapInArrow", "MapInPandas", "FlatMapGroupsInPandas
 _COUNTERS = ("exchange", "join", "group_limit", "python")
 _COUNTS = (
     "broadcast", "agg", "window", "generate", "window_fed_by_exchange", "sort_over_single",
+    "float_aggs",
 )
+# Sum and Average are order-dependent over a floating input; these
+# aggregate families are over any input.
+FLOAT_SUMS = {"Sum", "Average"}
+FLOAT_FAMILIES = {"CentralMomentAgg", "PearsonCorrelation", "Covariance"}
 _EXPR_ID = re.compile(r"#\d+L?")
 
 
@@ -109,6 +119,25 @@ def _batch_scan(node) -> list:
     return [str(node.table().name()), list(node.scan().readSchema().fieldNames()), []]
 
 
+def _float_aggs(exprs) -> int:
+    """Order-dependent floating aggregates under ``exprs``, each counted
+    in the mode that reads input rows (Partial or Complete), so a
+    partial/final pair counts once."""
+    n = 0
+    for e in exprs:
+        if _cls(e) == "AggregateExpression":
+            if str(e.mode().toString()) in ("Partial", "Complete"):
+                f = e.aggregateFunction()
+                family = str(f.getClass().getSuperclass().getSimpleName())
+                n += family in FLOAT_FAMILIES or (
+                    _cls(f) in FLOAT_SUMS
+                    and str(f.child().dataType().typeName()) in ("double", "float")
+                )
+        else:
+            n += _float_aggs(_seq(e.children()))
+    return n
+
+
 def _is_hash_requirement(node) -> bool:
     return (
         _cls(node) == "ShuffleExchangeExec"
@@ -133,8 +162,10 @@ def _walk(node, rec: dict) -> None:
         rec["join"][JOINS[kind]] += 1
     elif kind in AGGREGATES:
         rec["agg"] += 1
+        rec["float_aggs"] += _float_aggs(_seq(node.aggregateExpressions()))
     elif kind == "WindowExec":
         rec["window"] += 1
+        rec["float_aggs"] += _float_aggs(_seq(node.windowExpression()))
         feed = children[0]
         if _cls(feed) == "SortExec":
             feed = _unwrap(feed.child())

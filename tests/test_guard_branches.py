@@ -392,6 +392,50 @@ def numeric_rule_copies(path: str, source: str) -> list[str]:
     return sorted(found)
 
 
+# A hand-written exact sum: a decimal cast with a fractional scale (or
+# the deleted ``dec``) inside a Spark or SQL sum, windowed or not, or a
+# Spark column cast to one for a later sum. A scale-0 cast is an
+# integer fold, and a decimal rendered straight to a string is a
+# display format; neither is an exact-decimal sum.
+SUM_CALL = re.compile(r"\bsum\(", re.IGNORECASE)
+SCALED_DECIMAL = re.compile(r"\bdec\(|decimal\(\s*\d+\s*,\s*[1-9]\d*\s*\)", re.IGNORECASE)
+SCALED_CAST = re.compile(
+    r"\.cast\(\s*[\"'](decimal\(\s*\d+\s*,\s*[1-9]\d*\s*\))[\"']\s*\)"
+    r"(?!\s*\.cast\(\s*[\"']string[\"']\s*\))"
+)
+IMPORT = re.compile(r"^\s*from\s+\S+\s+import\s+(\([^)]*\)|[^\n]*)", re.MULTILINE)
+
+
+def exact_sum_copies(path: str, source: str) -> list[str]:
+    """Every sum outside functions/exact.py whose argument casts to a
+    scaled decimal, every other Spark cast to one, and every import of
+    ``dec``: the exact sum is dsum/dsum_over/dsum_parts on Spark and
+    sql_dsum/sql_dsum_over in SQL text."""
+    if path == NUMERIC_HOME:
+        return []
+
+    def at(pos: int, text: str) -> tuple[int, str]:
+        return pos, f"{path}:{source.count(chr(10), 0, pos) + 1}: {' '.join(text.split())}"
+
+    found, sums = [], []
+    for m in SUM_CALL.finditer(source):
+        depth, i = 1, m.end()
+        while depth and i < len(source):
+            depth += {"(": 1, ")": -1}.get(source[i], 0)
+            i += 1
+        cast = SCALED_DECIMAL.search(source, m.end(), i)
+        if cast:
+            sums.append(range(m.start(), i))
+            found.append(at(m.start(), f"{m.group(0)}…{cast.group(0)}"))
+    for m in SCALED_CAST.finditer(source):
+        if not any(m.start() in span for span in sums):
+            found.append(at(m.start(), f"cast…{m.group(1)}"))
+    for m in IMPORT.finditer(source):
+        if re.search(r"\bdec\b", m.group(1)):
+            found.append(at(m.start(1), "import dec"))
+    return [text for _, text in sorted(found)]
+
+
 def test_all_rounds_use_engine_deterministic_multiply_form():
     """ROUND(x, k) on a raw computed double is NOT cross-engine
     deterministic (Spark: HALF_UP on the exact binary expansion;
@@ -401,8 +445,9 @@ def test_all_rounds_use_engine_deterministic_multiply_form():
     (a) no plan module may call F.round with a scale argument; (b)
     every ROUND( in every registered oracle must have its inner
     expression end with a power-of-ten multiplier; (c) no file of the
-    package outside functions/exact.py writes either rule out by hand,
-    so a change to DuckDB's cast or rounding is made in one place."""
+    package outside functions/exact.py writes either rule, or an exact
+    decimal sum, out by hand, so a change to DuckDB's cast or rounding
+    is made in one place."""
     import os
 
     import spotify_serverless_etl_pipeline_engineering_with_azure_spark.plans as plans_pkg
@@ -460,7 +505,8 @@ def test_all_rounds_use_engine_deterministic_multiply_form():
     copies = []
     for full in sorted(glob.glob(os.path.join(root, PACKAGE, "**", "*.py"), recursive=True)):
         with open(full, encoding="utf-8") as f:
-            copies += numeric_rule_copies(os.path.relpath(full, root), f.read())
+            rel, source = os.path.relpath(full, root), f.read()
+        copies += numeric_rule_copies(rel, source) + exact_sum_copies(rel, source)
     assert not copies, f"numeric rule written outside functions/exact.py: {copies}"
 
 
@@ -489,3 +535,40 @@ def test_numeric_scan_flags_a_hand_copy():
         "hi = F.floor(prod / 4294967296.0)\n"
     )
     assert not numeric_rule_copies(path, kept)
+
+
+def test_exact_sum_scan_flags_a_hand_written_sum():
+    """Spark sums over a scaled decimal cast (plain, windowed across a
+    line break, or through ``dec``), a column cast to one for a later
+    sum, a SQL sum over one, and a ``dec`` import are copies; a min/max
+    rendered to a string, a scale-0 integer fold and a sum of longs are
+    not."""
+    path = f"{PACKAGE}/plans/q.py"
+    source = (
+        "from ..functions.exact import (\n"
+        "    dec,\n"
+        ")\n"
+        'total = F.sum(dec(F.col("v"), 2)).cast("double")\n'
+        "contrib = F.sum(roundk(x, 9).cast(\"decimal(28,12)\"))\n"
+        "running = F.sum(\n"
+        '    F.col("v").cast("decimal(18,2)")\n'
+        ").over(w)\n"
+        'ORACLE = "SELECT SUM(CAST(v AS DECIMAL(28,12))) FROM t"\n'
+        'c = roundk(F.col("r") / F.col("deg"), 9).cast("decimal(28,12)").alias("c")\n'
+    )
+    assert exact_sum_copies(path, source) == [
+        f"{path}:1: import dec",
+        f"{path}:4: sum(…dec(",
+        f"{path}:5: sum(…decimal(28,12)",
+        f"{path}:6: sum(…decimal(18,2)",
+        f"{path}:9: SUM(…DECIMAL(28,12)",
+        f"{path}:10: cast…decimal(28,12)",
+    ]
+    assert not exact_sum_copies(NUMERIC_HOME, source)
+    kept = (
+        "from ..functions.exact import dsum, roundk\n"
+        'mn = F.min(c).cast("decimal(18,2)").cast("string")\n'
+        'm2 = F.sum((c * c).cast("decimal(38,0)"))\n'
+        'n_rows = F.sum("pn")\n'
+    )
+    assert not exact_sum_copies(path, kept)

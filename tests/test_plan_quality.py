@@ -24,6 +24,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from spotify_serverless_etl_pipeline_engineering_with_azure_spark import catalog, registry
+from spotify_serverless_etl_pipeline_engineering_with_azure_spark.functions.exact import dsum
 from spotify_serverless_etl_pipeline_engineering_with_azure_spark.plans import (
     advanced_ops as _advanced_ops,
 )
@@ -132,6 +133,9 @@ GUARDS = {
     "length_band_filter_never_shuffles_text": (
         "corpus_length_band_filter",
         lambda p: _reads_only(p, {"doc_id", "text"}) and ("BNLJ" in p["join"] or p["broadcast"])),
+    # the Pareto total and running revenue re-sum exact long partials,
+    # never the per-part doubles (an order-dependent sum)
+    "pareto_sums_exactly": ("top_parts_pareto", lambda p: not p["float_aggs"]),
 }
 
 
@@ -210,6 +214,10 @@ def test_attribution_is_single_shuffle(plan_records):
 
 def test_length_band_filter_never_shuffles_text(plan_records):
     _guard(plan_records, "length_band_filter_never_shuffles_text")
+
+
+def test_pareto_sums_exactly(plan_records):
+    _guard(plan_records, "pareto_sums_exactly")
 
 
 @pytest.mark.parametrize(
@@ -341,6 +349,17 @@ def _grouped_in_python(spark):
     )
 
 
+def _pareto_over_doubles(spark):
+    """top_parts_pareto's totals as double sums of per-part doubles."""
+    per_part = _t(spark, "lineitem").groupBy("l_partkey").agg(
+        dsum(F.col("l_extendedprice"), 2).alias("revenue")
+    )
+    run = Window.orderBy(F.desc("revenue")).rowsBetween(Window.unboundedPreceding, 0)
+    return per_part.select("revenue", F.sum("revenue").over(run).alias("cum")).crossJoin(
+        per_part.agg(F.sum("revenue").alias("total"))
+    )
+
+
 def _unbroadcast_join(spark):
     return _t(spark, "orders").join(
         _t(spark, "customer"), F.col("o_custkey") == F.col("c_custkey")
@@ -376,6 +395,7 @@ NEGATIVE = {
     "attribution_is_single_shuffle": (_NO_BROADCAST, _self_join),
     "length_band_filter_never_shuffles_text": (
         {}, lambda s: _t(s, "documents").select("doc_id", "text", "lang").repartition(4)),
+    "pareto_sums_exactly": ({}, _pareto_over_doubles),
 }
 
 

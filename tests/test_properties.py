@@ -20,6 +20,7 @@ import pandas as pd
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from spotify_serverless_etl_pipeline_engineering_with_azure_spark.functions.dates import (
@@ -27,8 +28,11 @@ from spotify_serverless_etl_pipeline_engineering_with_azure_spark.functions.date
 )
 from spotify_serverless_etl_pipeline_engineering_with_azure_spark.functions.exact import (
     dsum,
+    dsum_over,
     roundk,
+    sql_double,
     sql_dsum,
+    sql_dsum_over,
     sql_roundk,
 )
 from spotify_serverless_etl_pipeline_engineering_with_azure_spark.functions.hashing import (
@@ -96,15 +100,16 @@ def test_release_date_padding_matches_pandas(spark, specs):
 
 
 
-def _on_both_engines(spark, values):
-    """A Spark frame and a DuckDB table ``t`` over the same (g, x) rows."""
+def _on_both_engines(spark, values, schema="g int, x double"):
+    """A Spark frame and a DuckDB table ``t`` over the same rows."""
     con = duckdb.connect()
-    con.register("t", pd.DataFrame(values, columns=["g", "x"]))
-    return spark.createDataFrame(values, "g int, x double"), con
+    columns = [c.split()[0] for c in schema.split(",")]
+    con.register("t", pd.DataFrame(values, columns=columns))
+    return spark.createDataFrame(values, schema), con
 
 
-def _bits(rows) -> list[str]:
-    return [y.hex() for (y,) in rows]
+def _bits(rows) -> list[str | None]:
+    return [None if y is None else y.hex() for (y,) in rows]
 
 
 def test_roundk_twins_agree_at_half_boundaries(spark):
@@ -133,7 +138,9 @@ def test_dsum_twins_agree_past_2_53_units(spark):
     """dsum and sql_dsum give the same double for exact 2dp sums past
     2^53 units (the sf1 q1 sum_charge case); DuckDB's direct
     DECIMAL→DOUBLE cast of the same sums does not, so the inputs
-    discriminate."""
+    discriminate. The windowed twins agree on the same sums frame by
+    frame, and the 9dp sums of quantized raw doubles agree with the
+    wide decimal sum."""
     rng = random.Random(7)
     values = [(g, rng.randrange(5 * 10**14, 10**15) / 100) for g in range(40) for _ in range(20)]
     df, con = _on_both_engines(spark, values)
@@ -146,3 +153,51 @@ def test_dsum_twins_agree_past_2_53_units(spark):
     assert min(float.fromhex(y) for y in twin_duckdb) * 100 > 2**53
     direct = _bits(con.execute(f"SELECT CAST(SUM(CAST(x AS DECIMAL(18,2))) AS DOUBLE){per_group}").fetchall())
     assert direct != twin_duckdb
+
+    # Windowed arm: dsum_over and sql_dsum_over agree frame by frame on
+    # a running ROWS frame and a RANGE frame, and a frame over NULLs
+    # only (group 40) is NULL on both engines.
+    rows = [(g, i, x) for i, (g, x) in enumerate(values)] + [(40, 800 + i, None) for i in range(5)]
+    df, con = _on_both_engines(spark, rows, "g int, i int, x double")
+    by_g = Window.partitionBy("g").orderBy("i")
+    frames = {
+        "running rows": (
+            by_g.rowsBetween(Window.unboundedPreceding, Window.currentRow),
+            "(PARTITION BY g ORDER BY i ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)",
+        ),
+        "range": (
+            by_g.rangeBetween(-3, Window.currentRow),
+            "(PARTITION BY g ORDER BY i RANGE BETWEEN 3 PRECEDING AND CURRENT ROW)",
+        ),
+    }
+    for frame, (w, sql_w) in frames.items():
+        got = _bits(
+            df.select("g", "i", dsum_over(F.col("x"), 2, w).alias("s"))
+            .orderBy("g", "i")
+            .select("s")
+            .collect()
+        )
+        want = _bits(
+            con.execute(f"SELECT {sql_dsum_over('x', 2, sql_w)} FROM t ORDER BY g, i").fetchall()
+        )
+        assert got == want, frame
+        assert got[-5:] == [None] * 5 and None not in got[:-5], frame
+
+    # 9dp arm: dsum of roundk(x, 9), the exact contribution sum of
+    # PageRank and the centroid means, equals the DECIMAL(28,12) sum on
+    # both engines, and sql_dsum at scale 9 is its twin.
+    values = [(g, rng.random() / rng.randrange(1, 50)) for g in range(40) for _ in range(20)]
+    df, con = _on_both_engines(spark, values)
+    q9 = roundk(F.col("x"), 9)
+    got = _bits(df.groupBy("g").agg(dsum(q9, 9).alias("s")).orderBy("g").select("s").collect())
+    wide = _bits(
+        df.groupBy("g")
+        .agg(F.sum(q9.cast("decimal(28,12)")).cast("double").alias("s"))
+        .orderBy("g")
+        .select("s")
+        .collect()
+    )
+    wide_sql = sql_double(f"SUM(CAST({sql_roundk('x', 9)} AS DECIMAL(28,12)))")
+    for sql in (wide_sql, sql_dsum(sql_roundk("x", 9), 9)):
+        assert got == _bits(con.execute(f"SELECT {sql}{per_group}").fetchall())
+    assert got == wide
