@@ -79,17 +79,16 @@ def main() -> None:
     for name in HEADLINE:
         qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
 
-    # Five measured INTERLEAVED passes (every query once per pass, in
+    # Five timed INTERLEAVED passes (every query once per pass, in
     # suite order), reporting the per-query MEDIAN plus a dispersion
     # figure. Interleaving matters: host drift (another process, GC
     # pressure, thermal state) moves in minutes-long waves, so
     # back-to-back repetitions of one query share the same wave and
     # their spread understates the truth, while interleaved reps sample
     # different waves and the median cancels them. Median, not min:
-    # rounds 3-4 proved per-query claims unfalsifiable under min-of-3
-    # (measured ±25% total drift on identical binaries — a "0.86 s
-    # measured" vs "1.13 s recorded" standoff); the median is a
-    # consistent estimator under asymmetric noise, and the reported
+    # under drift a min-of-3 makes per-query claims unfalsifiable,
+    # while the median is a consistent estimator under asymmetric
+    # noise, and the reported
     # spread (max − min across passes) tells the reader which
     # regressions are attributable and which are weather. A regression
     # claim is only real if it exceeds the query's spread.
@@ -106,15 +105,13 @@ def main() -> None:
 
     timings = {name: round(median(v), 3) for name, v in passes.items()}
     spread = {name: round(max(v) - min(v), 3) for name, v in passes.items()}
-    # queries_min preserves comparability with rounds ≤4, whose recorded
-    # numbers were min-of-3: compare min to min across rounds, median to
-    # median within this round's discipline. Min over the FIRST 3 passes
-    # only — a minimum over more passes is biased lower, so min-of-5
-    # would systematically flatter later rounds in the cross-round
-    # comparison (round-5 ADVICE).
+    # queries_min keeps comparability with older records, which are
+    # min-of-3: compare min to min, median to median. Min over the
+    # FIRST 3 passes only — a minimum over more passes is biased lower,
+    # so min-of-5 would systematically flatter a run with more passes.
     # With fewer than 3 passes the min is over fewer samples than the
-    # rounds-<=4 min-of-3 convention; the stat label says how many so a
-    # cross-round reader can't be misled by an implicit "of_first_3".
+    # min-of-3 convention; the stat label says how many so a reader
+    # can't be misled by an implicit "of_first_3".
     n_min = min(3, n_passes)
     mins = {name: round(min(v[:n_min]), 3) for name, v in passes.items()}
     total = round(sum(timings.values()), 3)
@@ -130,18 +127,15 @@ def main() -> None:
             "value_min": round(sum(mins.values()), 3),
             "stat": stat,
             "sf": sf,
-            # Effective parallelism + master: lets the driver VERIFY
-            # the $SPARK_GRAFT_CPUS contract (r10 PERF heuristic
-            # false-positived "cpus ignored" because nothing in this
-            # line reported it).
+            # Effective parallelism + master: lets a reader VERIFY
+            # the $SPARK_GRAFT_CPUS contract from the line itself.
             "cpus_effective": spark.sparkContext.defaultParallelism,
             "master": spark.sparkContext.master,
         }
     )
     # The line is ~4 KB and grows with query count; a log-capture that
-    # truncates its tail loses the whole record (r10's PERF comparison
-    # lost the round-over-round table exactly this way). Keep stdout as
-    # the contract, and ALSO write the line whole to
+    # truncates its tail loses the whole record. Keep stdout as the
+    # contract, and ALSO write the line whole to
     # $SPARK_GRAFT_BENCH_OUT when a harness sets it.
     print(line)
     out_path = os.environ.get("SPARK_GRAFT_BENCH_OUT")

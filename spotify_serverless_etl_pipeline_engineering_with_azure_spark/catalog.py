@@ -42,8 +42,8 @@ TABLES = (
     "embeddings",
 )
 
-# Loaded-table cache: spark.read.parquet costs a ~60 ms py4j round
-# trip (file listing + footer/schema read) per call, and a query plan
+# Loaded-table cache: spark.read.parquet costs a py4j round trip
+# (file listing + footer/schema read) per call, and a query plan
 # touches up to 4 tables — pure driver-side latency repeated on every
 # query build. A DataFrame is an immutable lazy plan, so the loaded
 # frame is reusable across queries; caching it is what a metastore-
@@ -102,8 +102,8 @@ def dataset_cached(cache: dict, spark: SparkSession, sf_dir: str,
       pin N data-sized indexes for the application's lifetime. Opt-in
       because it would be WRONG for the cheap caches: _TABLE_CACHE
       holds lazy plan handles (kilobytes of driver memory, one entry
-      per (table, dir)) whose whole point is amortizing the ~60 ms
-      py4j read per query build — a shared cap would silently turn it
+      per (table, dir)) whose whole point is amortizing the py4j
+      read per query build — a shared cap would silently turn it
       into a thrash set once a test session's fixture dirs exceed the
       bound. Eviction is LRU (hits refresh recency via dict reinsert),
       and the only cost of a wrong eviction is a rebuild on the next
@@ -212,7 +212,7 @@ def share(df: DataFrame) -> DataFrame:
 
 # Rows per partition under which a cached-index frame's partitions are
 # task-overhead-bound rather than compute-bound in its search-side
-# consumers (IVF_FLOOR_AB_r10.json).
+# consumers.
 _FLOOR_ROWS_PER_PART = 2048
 
 
@@ -253,12 +253,11 @@ def _host_hash() -> str:
     pids — rmtree would then destroy a LIVE driver's sink outputs and
     stream drains. The identity therefore folds in the boot id
     (distinguishes machines that share a hostname across a fleet) and
-    this process's
-    PID-NAMESPACE inode (distinguishes co-hosted containers; a pid is
-    only probe-able within its own namespace). 12 hex chars (48 bits):
-    a 10^4-driver fleet has ~4e-7 pair-collision odds, vs percent-level
-    at the old 32-bit hostname-only hash. Mismatched dirs are left
-    alone (leak-safe), never deleted."""
+    this process's PID-NAMESPACE inode (distinguishes co-hosted
+    containers; a pid is only probe-able within its own namespace).
+    12 hex chars (48 bits): a 10^4-driver fleet has ~4e-7
+    pair-collision odds. Mismatched dirs are left alone (leak-safe),
+    never deleted."""
     import hashlib
     import os
     import socket

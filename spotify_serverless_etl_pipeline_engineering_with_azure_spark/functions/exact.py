@@ -136,9 +136,8 @@ def sql_double(decimal: str) -> str:
     decimal→double cast: routed through STRING. DuckDB's direct
     DECIMAL→DOUBLE cast divides the scaled integer by 10^scale in float
     arithmetic (two roundings), which lands 1 ulp off the correctly
-    rounded value once the value exceeds ~2^53 units — found by the sf1
-    sweep on q1's sum_charge (19 significant digits), invisible at
-    sf0.01 where sums still fit a double exactly. The string parse
+    rounded value once the value exceeds ~2^53 units, which sums over
+    small datasets never reach. The string parse
     (strtod) is correctly rounded, matching Spark's
     BigDecimal.doubleValue on the identical exact decimal. STRING, not
     VARCHAR: DuckDB reads it as VARCHAR's alias, and Spark's parser
@@ -170,10 +169,8 @@ def roundk(col: Column, k: int) -> Column:
     for values within 1 ulp of a half boundary — Spark's ROUND is
     HALF_UP on the EXACT binary expansion while DuckDB rounds in float
     arithmetic — and the class is SYSTEMATIC, not rare, for
-    terminating ratios (cume_dist k/1280: 125 divergent values in one
-    sf1 member; a decimal(·,6) sum divided by a small count landed
-    text_unigram_logprob's h_bits exactly on the 7-digit half
-    boundary). Multiplying first makes both engines round the SAME
+    terminating ratios (cume_dist's k/n, or a decimal(·,6) sum divided
+    by a small count). Multiplying first makes both engines round the SAME
     IEEE product double with the same half-away-from-zero tie rule —
     deterministic for every input, boundary or not. Every registered
     query's k-dp quantization of a COMPUTED double must use this form

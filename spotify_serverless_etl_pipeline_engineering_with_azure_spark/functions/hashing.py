@@ -57,7 +57,7 @@ MINHASH_PARAMS: list[tuple[int, int]] = [
 ]
 # 16 hashes → 8 bands × 2 rows (r=2 keeps band-collision probability
 # j^2, high enough to surface candidates on low-similarity corpora).
-# Fixed-constant audit (round 7): (b, r) are SEMANTIC, not fan-out —
+# (b, r) are SEMANTIC, not fan-out —
 # they define the LSH S-curve's match threshold t ≈ (1/b)^(1/r) ≈
 # 0.35, i.e. WHICH similarity level counts as a candidate pair, the
 # same class as k-means K=4. Deriving them from corpus size would

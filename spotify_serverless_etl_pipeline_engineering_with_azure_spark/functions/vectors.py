@@ -89,18 +89,16 @@ def sql_cosine6(a: str, b: str) -> str:
     return sql_roundk(f"({sql_dot(a, b)}) / (SQRT({sql_dot(a, a)}) * SQRT({sql_dot(b, b)}))", 6)
 
 
-# Multi-table OR-construction: L tables of k bits each. Calibrated on
-# the synthetic corpus (vectors are near-orthogonal random — labels
-# carry no cosine structure): k=4 gives ~7% of the corpus per bucket;
-# two tables give recall@3≈0.3 vs brute-force top-5 at ~13% scan
-# fraction. More tables buy recall linearly in cost.
+# Multi-table OR-construction: L tables of k bits each, sized for the
+# synthetic corpus (vectors are near-orthogonal random — labels carry
+# no cosine structure). More tables buy recall linearly in cost.
 # SIZING CONTRACT: bits-per-table must grow ~log2(corpus/target-bucket-
 # size) — a FIXED 4-bit space means 16 buckets per table holding ~n/16
 # of the corpus each, so candidate scans degrade to Θ(n) (a constant 8×
 # better than brute force) and the (t, bucket) join develops 16 giant
 # skew groups. These constants are the deterministic test shape baked
 # into the oracle; production re-derives them from corpus cardinality.
-# Fixed-constant audit (round 7): these stay literal, on the k-means
+# These stay literal, on the k-means
 # K=4 precedent — bits/tables are RECALL hyperparameters (they decide
 # which candidates are scored, i.e. the answer; an oracle-mirrored
 # √N-style derivation would silently change recall as data grows,

@@ -237,10 +237,10 @@ def decode_media(payload: bytes, media_type: str) -> dict[str, Any]:
         }
     if media_type == "video/x-mbmp":
         # Header-only walk: metadata needs the frame COUNT and one
-        # decodable frame, so only frame 0's bytes are sliced — the old
-        # list(iter_mbmp_frames(...)) copied every frame's payload into
-        # a per-row list, doubling per-row memory inside an already
-        # payload-heavy Arrow batch for data it never read.
+        # decodable frame, so only frame 0's bytes are sliced —
+        # list(iter_mbmp_frames(...)) would copy every frame's payload
+        # into a per-row list, doubling per-row memory inside an already
+        # payload-heavy Arrow batch for data it never reads.
         magic, n_frames = struct.unpack_from("<4sI", payload, 0)
         if magic != b"MBMP":
             raise ValueError("not an MBMP payload")
@@ -506,7 +506,7 @@ def sample_frames(media: DataFrame, every_k: int) -> DataFrame:
 
         # One generator over the whole 1→N expansion, chunked by BYTES:
         # accumulating a full input batch's expansion into one list
-        # (the old form) holds input_rows × ceil(n_frames/k) frame
+        # would hold input_rows × ceil(n_frames/k) frame
         # payloads before the first yield — with real video that is the
         # Arrow offset cliff from the output side.
         def rows_of(pdf: pd.DataFrame):

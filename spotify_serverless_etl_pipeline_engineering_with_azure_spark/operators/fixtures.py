@@ -77,8 +77,7 @@ def blob_name(d: int) -> str:
     breaks it at d >= 10 ('...010.json' sorts before '...02.json'),
     silently changing dedup winners relative to fixture_df's padded
     doc_order — a divergence both engines would agree on (they read
-    the same filenames), so oracle parity could never catch it. The
-    padding keeps d <= 9 names byte-identical to the historical form."""
+    the same filenames), so oracle parity could never catch it."""
     return f"spotify_raw_2023010100{d:04d}.json"
 
 

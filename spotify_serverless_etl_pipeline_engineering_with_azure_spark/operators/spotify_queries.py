@@ -80,10 +80,10 @@ def _ensure_ds_fixture() -> str:
 
     Repair is CONVERGENT, never destructive-then-rebuild: expected
     files land first via write_json_dir's atomic per-file replace, THEN
-    stray files are removed. The old rmtree+restage form had a window
-    where a concurrent session (this is a fixed world-shared path by
-    design) saw an empty or partially-staged directory; two sessions
-    staging concurrently now race only on byte-identical seed-42
+    stray files are removed. An rmtree+restage repair would open a
+    window where a concurrent session (this is a fixed world-shared
+    path by design) sees an empty or partially-staged directory; two
+    sessions staging concurrently race only on byte-identical seed-42
     replaces, which os.replace makes harmless.
     """
     import glob as _glob

@@ -123,9 +123,8 @@ def asof_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 # IVF approximate nearest neighbors (the scale path beyond LSH)
 # ---------------------------------------------------------------------------
 _N_CENTROIDS_MIN = 8  # nlist floor: keeps tiny fixtures on a stable shape
-# Fixed-constant audit (round 7, the CELL_PAIR_SALTS sweep): the three
-# constants below are SEMANTIC, not fan-out sizing, so they stay
-# literal — unlike nlist/nprobe (corpus-derived, _ivf_k/_ivf_nprobe)
+# The three constants below are SEMANTIC, not fan-out sizing, so they
+# stay literal — unlike nlist/nprobe (corpus-derived, _ivf_k/_ivf_nprobe)
 # and the per-cell pair salts (width-derived, dedup._cell_salts_expr):
 # - _PROBE_MOD defines the test WORKLOAD (every 29th vector acts as a
 #   query), mirrored verbatim in the oracle; the probe set scales as
@@ -142,11 +141,9 @@ _N_PROBE_MIN = 3
 def _ivf_k(n: int) -> int:
     """nlist for an n-vector corpus: max(8, ⌊√n + 0.5⌋) — FAISS
     practice sizes the coarse quantizer ~√N so cells stay ~√N wide.
-    This CANNOT be a constant: round 6's 100x probe (200k vectors)
-    ran sim_ann_ivf with nlist=8 — cells were N/8 = 25k wide, the
-    probe load expanded to ~0.5 BILLION candidate rows carrying
-    vectors and filled the host's disk with shuffle spill before
-    being killed. floor(x+0.5) matches the oracle's FLOOR(...+0.5)
+    This CANNOT be a constant: a fixed nlist makes cells N/nlist wide,
+    so the vector-carrying probe load grows quadratically with the
+    corpus. floor(x+0.5) matches the oracle's FLOOR(...+0.5)
     on the same correctly-rounded IEEE sqrt (Python round() is
     banker's and does not)."""
     import math
@@ -159,8 +156,8 @@ def _ivf_nprobe(k: int) -> int:
     scales probe breadth with the cell count. Per-query scan fraction
     is nprobe/nlist ≈ k^(−1/2) and per-query cost nprobe·N/nlist ≈
     N/√k — sublinear in the corpus, unlike a fixed nprobe at fixed
-    nlist (constant fraction of N) or the old fixed nlist=8 (3N/8 per
-    query: brute force with extra steps)."""
+    nlist (a constant fraction of N per query: brute force with extra
+    steps)."""
     import math
 
     return max(_N_PROBE_MIN, int(math.floor(math.sqrt(k) + 0.5)))
@@ -677,7 +674,7 @@ def agg_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
       standard errors of the configured rsd; HLL++ is deterministic
       per dataset (hash-based, no RNG), so the verdict is stable.
     - pct_within_bounds: the RANK of approx_percentile(0.5,
-      accuracy=10000)'s answer, measured exactly by a second counting
+      accuracy=10000)'s answer, computed exactly by a second counting
       pass, sits inside the 45th–55th-percentile band — generous
       against the sketch's n/10000 rank-error guarantee. The rank is
       verified by COUNTING (two conditional longs per group), NOT by an
@@ -770,9 +767,9 @@ def timeseries_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ONE data-sized pass: the bounds derive from the daily counts
     (date_trunc is monotone, so min(day) = trunc(min(ts)) and
-    max(day) = trunc(max(ts))) — the earlier form aggregated the raw
-    events table twice, two full-corpus scans+shuffles for a min/max
-    the days-sized frame already contains."""
+    max(day) = trunc(max(ts))), so no second full-corpus scan+shuffle
+    of the raw events computes a min/max the days-sized frame already
+    contains."""
     ev = table(spark, sf_dir, "events")
     # shared by the bounds aggregation and the spine join
     daily = share(

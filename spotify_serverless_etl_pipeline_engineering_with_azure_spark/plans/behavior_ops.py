@@ -589,9 +589,9 @@ def events_point_in_time_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Salt fan-out floor for the skewed aggregation: the actual fan-out is
-# DERIVED from the session's parallelism (_agg_salts below) — round 7's
-# fixed-constant audit; a constant 16 leaves a 1000-core cluster 98%
-# idle during phase 1's hot-key reduction. The floor keeps tiny test
+# DERIVED from the session's parallelism (_agg_salts below): a constant
+# 16 would leave a 1000-core cluster 98% idle during phase 1's hot-key
+# reduction. The floor keeps tiny test
 # sessions on a stable multi-salt shape.
 _AGG_SALT_MIN = 16
 

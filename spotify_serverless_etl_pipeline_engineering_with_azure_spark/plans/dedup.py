@@ -257,9 +257,9 @@ def _band_signatures(docs: DataFrame) -> DataFrame:
     row-locally. The two-slice affine family keeps shingle identity at
     96 md5 bits (see MINHASH_PARAMS in functions/hashing.py for the
     collision analysis); md5 is computed once in its own projection so
-    neither engine re-hashes per slice. SQL-string construction (one
-    py4j call per F.expr) — identical plan, ~6× cheaper driver-side
-    build than per-Column operator calls."""
+    neither engine re-hashes per slice. It is built from SQL strings
+    (one py4j call per F.expr): the plan is identical to per-Column
+    operator calls and cheaper to build on the driver."""
     hexed = _shingles(docs).select("doc_id", F.md5("sh").alias("hx"))
     hashed = hexed.select(
         "doc_id",
@@ -428,15 +428,13 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     SUM aggregates, each carrying four 16-bit per-bit popcounts in one
     long (bit 4k+i lives at field i·16 of packed sum k) → unpack and
     reassemble bits row-locally. Versus the naive 48 SUM(±1) columns
-    this quarters the per-row aggregate update work (measured
-    0.87 s → 0.61 s at sf0.1); versus a nested higher-order-function
-    fold (shuffle-free but interpreted — HOF lambdas skip whole-stage
-    codegen) it measured ~5× faster. The plan carries ONE exchange
+    this quarters the per-row aggregate update work, and unlike a
+    nested higher-order-function fold it keeps whole-stage codegen
+    (HOF lambdas are interpreted). The plan carries ONE exchange
     total: the small-input parallelism repair is
     scatter(docs, "doc_id"), whose hashpartitioning the
-    groupBy(doc_id) reuses (guide §2.4), so the packed aggregation
-    runs as a single in-stage pass with no second shuffle (the
-    round-robin comparison is recorded in SIMHASH_AB_r11.json).
+    groupBy(doc_id) reuses, so the packed aggregation runs as a
+    single in-stage pass with no second shuffle.
 
     Capacity: each 16-bit field holds a popcount ≤ 65535 and the packed
     sum stays below 2^63 for ≤ 32767 tokens per document — far above
@@ -452,12 +450,11 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of content, while the n-guard below still detects oversized docs
     # (their capped count is MAX+1). The cap is a position filter on
     # posexplode output — not an array slice, which would materialize a
-    # second token array per doc (measured +20% on this, the slowest
-    # headline query); the generator emits rows straight into a codegen'd
-    # row filter and only surviving tokens reach md5.
+    # second token array per doc; the generator emits rows straight into
+    # a codegen'd row filter and only surviving tokens reach md5.
     # The parallelism-repair shuffle is KEYED by doc_id: the
     # packed-popcount groupBy(doc_id) below reuses its partitioning, so
-    # the plan has 1 Exchange + one Complete-mode agg (guide §2.4), and
+    # the plan has 1 Exchange + one Complete-mode agg, and
     # the keyed repartition skips round-robin's sortBeforeRepartition
     # pass. doc_id is unique, so hash balance matches round-robin's.
     src = scatter(docs, "doc_id")
@@ -470,9 +467,8 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_packs = SIMHASH_BITS // 4
     # The wide expressions are built as SQL strings (ONE py4j call per
     # F.expr) rather than hundreds of Column-operator calls: the
-    # resulting Catalyst plan is identical, but driver-side plan
-    # construction drops from ~1.5 s to ~0.1 s per invocation — real
-    # per-query latency in any interactive use.
+    # resulting Catalyst plan is identical, and building it is a
+    # fraction of the driver-side cost.
     packs = [
         "SUM("
         + " + ".join(
@@ -555,7 +551,7 @@ def _ngram_index_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     past 2³¹ members a hard JVM array limit) just to throw it away.
     The window buffers one shingle's rows in a spillable sorter, never
     one JVM array, and the subsequent groupBy reuses the window's
-    hash partitioning — one shuffle total, same as the old shape.
+    hash partitioning — one shuffle total.
     """
     docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
     sh = _shingles(docs).withColumn(
@@ -642,10 +638,8 @@ def _semdedup_k(n: int) -> int:
 
     K balances assignment cost O(N·K) against in-cell pair cost
     O(Σ cell²) ≈ O(N²/K); d/dK[N·K + N²/2K] = 0 at K = √(N/2). This
-    CANNOT be a constant: round 6's 100x scale probe (200k vectors)
-    showed K=8 makes cells N/8 wide and the pair stream N²/16 ≈ 2.5
-    BILLION rows — the within-cell join filled 78 GB of executor spill
-    and aborted; at K=√(N/2) the same corpus enumerates ~63M pairs.
+    CANNOT be a constant: a fixed K makes cells N/K wide, so the pair
+    stream grows as N²/2K with the corpus.
     floor(x + 0.5) rather than Python round(): both engines evaluate
     the same correctly-rounded IEEE sqrt, and half-away-from-zero on
     it matches the oracle's FLOOR(...+0.5) exactly, while Python's
@@ -699,14 +693,13 @@ def _semdedup_member(spark: SparkSession, sf_dir: str) -> DataFrame:
 # small enough to parallelize a hot cell, large enough that salting
 # never fragments a healthy cell. This is the one SEMANTIC constant of
 # the salting scheme (a per-task work budget, like a split size); the
-# FAN-OUT itself is derived per cell from measured widths below —
-# round 6's 100x probe showed what a fixed fan-out constant does once
-# data outgrows it (the K=8 codebooks: 78 GB of spill).
+# FAN-OUT itself is derived per cell from its width below, because a
+# fixed fan-out stops spreading the work once data outgrows it.
 TARGET_CELL_PAIRS_PER_TASK = 2_000_000
 
 
 def _cell_salts_expr(w):
-    """Per-cell salt count DERIVED from the cell's measured width w:
+    """Per-cell salt count DERIVED from the cell's row count w:
 
         salts(w) = clamp(⌈w²/(2·TARGET_CELL_PAIRS_PER_TASK)⌉, 1, w)
 
@@ -740,7 +733,7 @@ def _cell_salts_expr(w):
 def _cell_salt_plan(member: DataFrame) -> DataFrame:
     """(cluster, salts): the broadcast salt table the cell self-join
     keys on — one row per cell (≤ K ≈ √(N/2) rows, broadcastable at
-    any corpus size), widths MEASURED from the checkpointed assignment
+    any corpus size), widths COUNTED from the checkpointed assignment
     table with a plain count aggregate, salts derived by
     _cell_salts_expr. No driver job: the width stats ride the query
     plan as a broadcast-exchange subtree, the same pre-collection
@@ -770,14 +763,14 @@ def _cell_pair_cosines(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cosine is computed in the join's output pipeline — the
     quadratic pair stream is never exchanged. Joining bare (va, vb)
     ids and attaching vectors afterwards would hash-partition the
-    O(Σ cell²) pair rows, ~550 bytes wide, through two shuffles.
+    O(Σ cell²) vector-wide pair rows through two shuffles.
     Carrying vectors makes the shuffled volume corpus-sized
     (N·(1+salts) store rows); consumers reduce the pair stream
     map-side (filter ≥ τ, or partial max per vb) before anything else
     is exchanged.
 
     Hot cells get the join_salted treatment, implemented here with a
-    fan-out DERIVED from each cell's measured width (never a
+    fan-out DERIVED from each cell's row count (never a
     constant): a broadcast (cluster, salts) table
     (_cell_salt_plan) joins both sides map-side; the left row carries
     salt = vec_id % salts_c, the right row replicates ×salts_c via an
@@ -799,8 +792,7 @@ def _cell_pair_cosines(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Deliberately NOT shared although both pair sides consume it: the
     # two sides project differently so no ReusedExchange forms, but
     # storing this corpus-sized, vector-wide frame costs more than
-    # evaluating the attach join twice (OPTIMIZATION_r11.md, "Numbers
-    # moved out of docstrings").
+    # evaluating the attach join twice.
     attached = member.join(store, "vec_id").join(salts, "cluster")
     a = attached.select(
         F.col("cluster").alias("ca"),
@@ -1170,9 +1162,8 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 # localCheckpoint truncates LINEAGE but carries the plan's estimated
 # sizeInBytes forward as the checkpointed frame's originStats — and a
 # round's plan multiplies that estimate into itself ~4x (two label
-# self-joins), so the BigInt estimate's BIT LENGTH doubles per round
-# (measured at a 300x corpus: 222 -> 553 -> 1215 -> 2539 -> 5187 ->
-# 10483 bits over rounds 1-6). Past ~24 rounds the estimate exceeds
+# self-joins), so the BigInt estimate's BIT LENGTH doubles per round.
+# Within a few dozen rounds the estimate exceeds
 # BigInteger's 2^31-bit ceiling and Catalyst's stats visitor kills the
 # job with "BigInteger would overflow supported range" — on exactly
 # the slow-converging giant graphs the loop exists for. A parquet
@@ -1203,7 +1194,7 @@ def _min_label_components(pairs: DataFrame, max_rounds: int = 200) -> DataFrame:
     Returns (v, label) for every vertex incident to a pair."""
     spark = pairs.sparkSession
     edges = _undirected_edges(pairs)
-    # share(): round 1 reads the initial label table three times
+    # share(): the first round reads the initial label table three times
     # (neighbor-min join, hook join, convergence count).
     labels = share(
         edges.select(F.col("a").alias("v")).distinct().withColumn("label", F.col("v"))
@@ -1324,8 +1315,7 @@ PR_DAMPING = 0.85
 # ROUND(x·10^k)/10^k — NOT ROUND(x, k): rounding the raw double at k
 # decimals diverges across engines for values within 1 ulp of a k-dp
 # half boundary (Spark's ROUND is HALF_UP on the exact binary
-# expansion, DuckDB's is float arithmetic — the class the sf1 sweep
-# caught systematically in the digest layer). Multiplying FIRST makes
+# expansion, DuckDB's is float arithmetic). Multiplying FIRST makes
 # both engines round the SAME IEEE product double with the same
 # half-away-from-zero tie rule, and the final division by the same
 # power of ten is one more shared correctly-rounded IEEE op
@@ -1455,24 +1445,20 @@ def _pfj_index(
       frozen INJECTIVE int64 shingle id.
     - ``prefix`` (doc_id, i, m, shid): each doc's (m − ⌈t·m⌉ + 1)
       rarest shingles with their df-order position i and set size m —
-      the join's probe entries. In the index since r10: the window
-      pipeline behind it is per-corpus-snapshot stable, and as a LAZY
-      localCheckpoint in the query plan its two join-side consumers
-      raced to materialize it — the sf10 stage log showed the full
-      11M-row window pipeline executing TWICE (~100 s·wall of
-      duplicate work; lazy checkpoint blocks dedupe only after one
-      evaluation COMPLETES, and concurrent stages both start before
-      either finishes). Eager in the index, it is built exactly once
-      and both join sides read blocks.
+      the join's probe entries. It lives in the index because the
+      window pipeline behind it is per-corpus-snapshot stable, and a
+      LAZY localCheckpoint in the query plan would let its two
+      join-side consumers both evaluate it (lazy checkpoint blocks
+      dedupe only after one evaluation COMPLETES, and concurrent
+      stages both start before either finishes). Eager in the index,
+      it is built exactly once and both join sides read blocks.
     - ``profiles`` (doc_id, shs): each doc's SORTED ARRAY of shingle
       ids — the ride-along verification payload.
 
-    WHY ids at all: the ride-along arrays used to carry the raw
-    3-token shingle STRINGS, so every candidate's exact intersection
-    paid `array_intersect`'s per-element string hashing/equality over
-    ~175-element arrays — measured at ~220 µs·core per
-    filter-surviving candidate at sf10, 95.1% of the uncontended wall
-    (PFJ_ENGINE_r09.json). Substituting any BIJECTION for the shingle
+    WHY ids at all: ride-along arrays of the raw 3-token shingle
+    STRINGS would make every candidate's exact intersection pay
+    per-element string hashing and equality, the dominant PFJ cost.
+    Substituting any BIJECTION for the shingle
     alphabet changes no set cardinality — n_common/n_union/jaccard are
     bit-identical — while the intersection hash-set runs on longs and
     the prefix-frame exchanges shrink by the string/long width ratio.
@@ -1538,12 +1524,10 @@ def _pfj_intersect_batches(batches, threshold: float | None = None):
     binary-search merge instead of JVM array_intersect's per-row boxed
     hash set.
 
-    FUSED THRESHOLD (r11, guide §4.2 — shrink the boundary): with
-    ``threshold`` set, only rows whose jaccard passes it are emitted,
-    so failing candidates never cross the Arrow IPC boundary back to
-    the JVM. At sf10 the join stage shipped every candidate's
-    (doc_a, doc_b, n_common, ma, mb) back even though only the
-    result-rate fraction survives the downstream filter. The predicate
+    FUSED THRESHOLD: with ``threshold`` set, only rows whose jaccard
+    passes it are emitted, so failing candidates never cross the Arrow
+    IPC boundary back to the JVM; only the result-rate fraction of the
+    candidates survives the filter. The predicate
     is computed EXACTLY as the SQL tail computes it —
     ``float64(n_common) / float64(ma + mb − n_common) >= t`` — numpy
     float64 division is the same IEEE-754 double division the JVM
@@ -1554,14 +1538,11 @@ def _pfj_intersect_batches(batches, threshold: float | None = None):
     inner joins over non-empty profile arrays give ma, mb >= 1 and
     n_common <= min(ma, mb).
 
-    WHY: PFJ_ENGINE_r09.json measured ~48 µs·core per candidate in
-    size(array_intersect) on ~175-element long arrays (boxed
-    OpenHashSet insert+probe per element); this kernel runs the same
-    population at ~11 µs/row single-thread (micro-benched at the r10
-    rewrite on sf10-shaped batches: 10k rows × ~175-element sides),
-    dominated by one np.searchsorted of every a-element against the
-    batch's packed b-keys — the same batched sorted-merge the numpy
-    mirror uses. The rows never leave the join's stage: mapInArrow
+    WHY: size(array_intersect) pays a boxed OpenHashSet insert and
+    probe per element; this kernel's cost is one np.searchsorted of
+    every a-element against the batch's packed b-keys — the same
+    batched sorted-merge the numpy mirror uses. The rows never leave
+    the join's stage: mapInArrow
     pipelines inside it (no exchange), so the plan's shuffle shape is
     IDENTICAL to a JVM projection's and the only new cost is the Arrow
     IPC hop, linear in candidate bytes.
@@ -1680,14 +1661,13 @@ def _pfj_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Each doc's SORTED SHINGLE-SET ARRAY rides the prefix entries INTO
     # the pair-generating self-join — the _cell_pair_cosines lesson
     # (payloads ride the join that creates pairs; the pair stream is
-    # never exchanged). Two rejected shapes, both measured:
+    # never exchanged). Two rejected shapes:
     # (a) token-level verification (cand ⋈ toks_a on doc_a ⋈ toks_b on
-    #     (doc_b, sh) + groupBy) shuffles Σ_cand |S_a| token rows —
-    #     370M intermediate rows at sf1, ~37e9 rows / ~1.8 TB at sf10;
+    #     (doc_b, sh) + groupBy) shuffles Σ_cand |S_a| token rows;
     # (b) pair-level array attach (distinct cand, then two profile
-    #     joins) halves that but must route the 700M-pair stream WITH
-    #     a ~1.3 KB array through the second attach's shuffle once the
-    #     profile side outgrows broadcast — ~500 GB at sf10.
+    #     joins) halves that but must route the whole pair stream WITH
+    #     its arrays through the second attach's shuffle once the
+    #     profile side outgrows broadcast.
     # Riding the arrays makes every shuffle corpus-linear: the prefix
     # side costs prefix-entries × array width (id-keyed: 8 B/element
     # instead of the shingle string), the emission stream is filtered
@@ -1801,8 +1781,7 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     (_pfj_intersect_batches, pipelined mapInArrow: no new exchange)
     rather than JVM array_intersect's per-row hash set — see
     _pfj_candidates for the two rejected shapes and why every shuffle
-    here is corpus-linear (the verification-backend A/Bs are recorded
-    in PFJ_AB_r1*.json). Integer-over-integer division
+    here is corpus-linear. Integer-over-integer division
     makes the threshold decision engine-exact.
 
     Honest quadratic contract: a cluster of k docs that genuinely ARE
@@ -1826,9 +1805,9 @@ def dedup_prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle scatter+explode pipeline runs once at build time instead
     of four times in the query plan (Spark shares no subplans).
     Candidates STREAM from a self-join of the index's EAGER prefix
-    frame (since r10 — as a lazy checkpoint in the query plan its two
-    join-side consumers raced into double evaluation; eager in the
-    index, both sides read checkpoint blocks) — not from a
+    frame (as a lazy checkpoint in the query plan its two join-side
+    consumers could both evaluate it; eager in the index, both sides
+    read checkpoint blocks) — not from a
     collect_list bucket expansion: prefix buckets have no width cap
     (capping would break the no-false-negatives guarantee), so an
     array-expansion bucket of k members would materialize k²/2 structs

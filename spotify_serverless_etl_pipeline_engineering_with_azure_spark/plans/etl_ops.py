@@ -63,9 +63,9 @@ def merge_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     inserts = (
         orders.filter(F.col("o_orderkey") % 1000 == 0)
         # negated re-key: -(k+1) can NEVER collide with the non-negative
-        # natural key space at ANY scale — a fixed additive offset
-        # (previously +1e8) collides once the table passes 1e8 dense
-        # keys (~sf67), fanning out the full-outer join with duplicate
+        # natural key space at ANY scale — a fixed additive offset such
+        # as +1e8 collides once the table passes that many dense
+        # keys, fanning out the full-outer join with duplicate
         # merge keys while the oracle agrees on the wrong answer.
         .withColumn("o_orderkey", -(F.col("o_orderkey") + 1))
         .withColumn("o_orderstatus", F.lit("N"))

@@ -277,8 +277,7 @@ def scalar_math_transcendental(spark: SparkSession, sf_dir: str) -> DataFrame:
         # hold the SAME double; if the JVM's and libm's EXP/LN/SIN/
         # ATAN ever differ by an ulp for some input, the engines
         # round DIFFERENT products and can still land on opposite
-        # sides of a boundary — no such input has surfaced through
-        # sf1.
+        # sides of a boundary — no such input is known.
         roundk(F.exp("l_discount"), 6).alias("disc_exp"),
         roundk(F.log("l_extendedprice"), 6).alias("price_ln"),
         roundk(F.log10("l_extendedprice"), 6).alias("price_log10"),
@@ -464,8 +463,8 @@ def agg_statistical_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
         # come from each engine's own merge order of moment partials,
         # so a pair straddling a k-dp boundary by >1 product-ulp can
         # still differ — the exact-integer-moment rewrite
-        # (events_anomaly_zscore's discipline) is the full fix if the
-        # sweep ever hits it here.
+        # (events_anomaly_zscore's discipline) is the full fix if a
+        # dataset ever hits it here.
         roundk(F.stddev_samp("c_acctbal"), 4).alias("std_bal"),
         roundk(F.var_samp("c_acctbal"), 4).alias("var_bal"),
         roundk(

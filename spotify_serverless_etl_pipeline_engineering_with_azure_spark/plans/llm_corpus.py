@@ -28,20 +28,18 @@ CHUNK_S = 24
 # Sequence packing: shard the corpus, pack each shard into 512-token
 # training sequences by cumulative offset.
 PACK_BUDGET = 512
-# Sequence-packing shard sizing (round 7's fixed-constant audit: the
-# old fixed PACK_SHARDS=8 documented "production sizes it to the data"
-# without implementing it — the same pattern as the round-6 codebook
-# cliff, here funneling corpus/8 rows through each window-sort task).
-# Shard count is now DERIVED from the corpus and MIRRORED in the
+# Sequence-packing shard sizing: a fixed shard count would funnel a
+# fixed fraction of the corpus through each window-sort task, so the
+# shard count is DERIVED from the corpus and MIRRORED in the
 # oracle: shards = max(8, ⌈n_docs / PACK_DOCS_PER_SHARD⌉). Shard count
 # changes bin assignments, so the derivation (same IEEE division, same
 # ceil) is part of the result contract on both engines, exactly like
-# _semdedup_k. The floor keeps every test/recorded scale (≤500k docs)
-# on the historical 8-shard shape.
+# _semdedup_k. The floor keeps every corpus of at most
+# 8·PACK_DOCS_PER_SHARD docs on 8 shards.
 PACK_SHARDS_MIN = 8
 # Docs one window task sorts: 64k docs × ~10² tokens ≈ a few MB of
 # sort state — the per-task work granule (semantic budget; the FAN-OUT
-# derives from it and the measured corpus).
+# derives from it and the corpus's document count).
 PACK_DOCS_PER_SHARD = 65536
 _SQL_PACK_SHARDS = (
     f"(SELECT GREATEST({PACK_SHARDS_MIN}, "
@@ -439,8 +437,8 @@ def corpus_mix_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Quality-filter thresholds, calibrated to the synthetic corpus so the
-# filter genuinely splits it (~10% repetitive, ~5% boilerplate at
-# sf0.01): the decision op is what matters, not the constants.
+# filter genuinely splits it: the decision op is what matters, not the
+# constants.
 QF_MIN_TOKENS = 15
 QF_MAX_DUP_FRAC = 0.67
 QF_MAX_TOP_FRAC = 0.15
@@ -580,8 +578,8 @@ def corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     train = gram_arrays(docs.filter(~is_bench)).select(
         "doc_id",
-        # cast: size() is INT; the published schema (and the old
-        # count-based aggregate) is BIGINT — the h3 dtype pin catches
+        # cast: size() is INT; the published schema is BIGINT — the h3
+        # dtype pin catches
         # exactly this drift.
         F.size("gs").cast("long").alias("n_grams"),
         F.explode("gs").alias("sh"),

@@ -84,9 +84,9 @@ def ref_x2_runid_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).first()[0]
     # sink_run_dir: fresh base per invocation (a fixed dir wiped with
     # rmtree would destroy files backing previously returned frames),
-    # and — unlike the old bare-uuid /tmp dirs, which nothing ever
-    # reclaimed — nested under the swept app root so a long-lived
-    # driver's leftovers are bounded and dead apps' are collected.
+    # nested under the swept app root (nothing would reclaim bare-uuid
+    # /tmp dirs) so a long-lived driver's leftovers are bounded and
+    # dead apps' are collected.
     base = sink_run_dir(spark, "runid", sf_dir)
     out = run_output_dir(base, "orders", run_id)
     agg = (

@@ -401,7 +401,7 @@ def events_error_budget_sli(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_total",
         "n_errors",
         # roundk: k/n ratios hit 7-digit half boundaries
-        # systematically (the cume_dist sf1 class).
+        # systematically, as cume_dist's do.
         roundk(F.col("n_errors").cast("double") / F.col("n_total"), 6).alias("error_rate"),
         roundk(rate7, 6).alias("error_rate_7d"),
         (rate7 > 0.25).alias("budget_burned"),

@@ -329,7 +329,7 @@ def _kmeans_assign_expr(centroids: dict[int, list[float]]) -> str:
     """One SQL string ranking all K centroids per row: K zip_with
     squared-distance folds over literal arrays, sorted on (dist, cid).
     Single py4j call — per-Column construction of K 64-wide folds costs
-    ~1 s of driver time per invocation. The literal form is valid HERE
+    a py4j call per operator on the driver. The literal form is valid HERE
     because k-means' K is a semantic hyperparameter (4 clusters), not a
     corpus-sizing rule: the K ~ √N quantizers (SemDeDup, IVF) use the
     broadcast-codebook join (advanced_ops._broadcast_codebook), whose

@@ -7,7 +7,6 @@ oracle-checkable.
 Per-invocation cost is per-trigger micro-batch machinery (plan build,
 query start, WAL commits, a no-data finalization trigger) on top of
 the aggregation itself; it scales with trigger count, not data volume.
-The measured breakdown is in OPTIMIZATION_r11.md (verdict item 7).
 """
 
 from __future__ import annotations

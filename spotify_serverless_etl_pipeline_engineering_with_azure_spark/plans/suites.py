@@ -1,8 +1,8 @@
 """Suite (digest) queries: one driver-checkable row per member query.
 
 The external driver hash-compares a BOUNDED PREFIX of the registry
-against DuckDB (round 1 checked exactly the first 50 registered
-queries). With far more oracle-backed queries than that, per-query
+against DuckDB (the first 50 registered queries). With far more
+oracle-backed queries than that, per-query
 driver rows cannot cover the full surface — so each suite here re-runs
 a whole family of registered queries and reduces every member's FULL
 result to an order-insensitive digest row:
@@ -32,16 +32,14 @@ record:
   bit-identical doubles (decimal-cast sum discipline,
   functions/exact.py); both engines then scale by the same IEEE
   multiply and round the SAME product double half-away-from-zero —
-  deterministic for every input.
-  (The previous ROUND(x, 6) form was NOT: a double 1 ulp below a 6dp
-  half boundary rounds down under Spark's exact-binary HALF_UP and up
-  under DuckDB's float-arithmetic ROUND; cume_dist = k/1280 at sf1
-  terminates at 7 decimal digits ending in 5 and hit the window
-  systematically. The intermediate DECIMAL(38,0) serialization was
-  not either: past 2^53 Spark's double→decimal cast rounds the
-  SHORTEST decimal repr while DuckDB casts the exact binary value —
-  the hi/lo split in _canon_spark/_canon_sql uses only IEEE-exact
-  ops, so no decimal cast of a big double exists anywhere.)
+  deterministic for every input. ROUND(x, 6) would not be: a double
+  1 ulp below a 6dp half boundary rounds down under Spark's
+  exact-binary HALF_UP and up under DuckDB's float-arithmetic ROUND.
+  Nor would a DECIMAL(38,0) serialization: past 2^53 Spark's
+  double→decimal cast rounds the SHORTEST decimal repr while DuckDB
+  casts the exact binary value — the hi/lo split in
+  _canon_spark/_canon_sql uses only IEEE-exact ops, so no decimal
+  cast of a big double exists anywhere.
 - class 't' (timestamp): epoch MICROSECONDS (unix_micros / EPOCH_US) —
   session-timezone-independent on the Spark side.
 
@@ -162,9 +160,8 @@ SUITES: dict[str, tuple[str, ...]] = {
     ),
     # Heavier members split out of etl_misc_suite: iterative operators
     # (pagerank, k-means, SemDeDup) run eager driver-side jobs during
-    # plan build, and multimodal ops pay a Python-worker round trip —
-    # together they made the single etl_misc row a ~50 s timeout
-    # magnet. Each digest row now stays well under half that.
+    # plan build, and multimodal ops pay a Python-worker round trip,
+    # so they get their own digest row and keep etl_misc's row short.
     "advanced_misc_suite": (
         "multimodal_binary_meta", "multimodal_decode_features",
         "multimodal_resize", "multimodal_frame_sample",
@@ -232,9 +229,8 @@ def _canon_spark(name: str, cls: str) -> Column:
         # ROUND(x, 6). Rounding the raw double at 6dp diverges across
         # engines for doubles within 1 ulp of a 6dp half boundary:
         # Spark's ROUND is HALF_UP on the EXACT binary expansion while
-        # DuckDB's is float arithmetic, and the sf1 sweep hit the class
-        # SYSTEMATICALLY (cume_dist = k/1280 terminates at 7 decimal
-        # digits ending in 5 — 125 divergent values in one member).
+        # DuckDB's is float arithmetic, and k/n ratios such as
+        # cume_dist land on such boundaries SYSTEMATICALLY.
         # Multiplying FIRST makes both engines round the SAME IEEE
         # product double with the same half-away-from-zero tie rule —
         # deterministic for every input, boundary or not.
@@ -243,10 +239,8 @@ def _canon_spark(name: str, cls: str) -> Column:
         # power-of-two split, NOT a decimal(38,0) cast: Spark's
         # double→decimal cast goes through BigDecimal.valueOf — the
         # SHORTEST decimal representation — while DuckDB casts the
-        # exact binary value, and past 2^53 the two differ (found by
-        # the round-6 sf1 sweep: table_diff_snapshot's sum_old
-        # 334364019400.21 ×10⁶ canonicalized to …210050 in Spark vs
-        # …210048 in DuckDB). The split uses only IEEE-exact ops on
+        # exact binary value, and past 2^53 the two differ. The split
+        # uses only IEEE-exact ops on
         # the shared product double: ÷2^32 is an exponent shift,
         # floor of a double is exact, hi·2^32 is exact for |hi|<2^53,
         # and the final subtraction's result (<2^32) is representable
@@ -315,11 +309,11 @@ def digest_fold_exprs(h) -> tuple:
     h1 = Σh mod M and h2 = Σ(h² mod M) mod M — the first two POWER SUMS
     of the hash multiset.
 
-    h2 must NOT be an affine map of h: an earlier (31·h + 7) fold made
+    h2 must NOT be an affine map of h: a (31·h + 7) fold makes
     h2 ≡ 31·h1 + 7·n_rows (mod M) identically — fully determined by h1
     and the row count, so any corruption whose row-hash deltas
-    cancelled in h1 passed h2 automatically and the "two folds"
-    carried ~31 bits, not ~62. The quadratic power sum is an
+    cancel in h1 passes h2 automatically and the "two folds"
+    carry ~31 bits, not ~62. The quadratic power sum is an
     independent constraint (tests pin this with an engineered
     equal-h1 multiset pair). h < 2³¹ so h² < 2⁶² stays inside int64
     before the DECIMAL cast.

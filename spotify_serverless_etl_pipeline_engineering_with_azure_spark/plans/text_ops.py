@@ -223,11 +223,12 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal into one 40-char identity string. Two deliberate choices,
     both sized for a 10¹¹–10¹²-document corpus rather than the test SF:
 
-    - Token values are md5 folds, not a cheap surrogate: an earlier
-      ascii(first)+7·length revision made same-first-char/same-length
+    - Token values are md5 folds, not a cheap surrogate: a surrogate
+      such as ascii(first)+7·length makes same-first-char/same-length
       tokens ("car"/"cat") indistinguishable, so real-text collisions
-      were SYSTEMATIC — the iid birthday analysis did not apply, and
-      the oracle agreed because both engines shared the expression.
+      would be SYSTEMATIC — the iid birthday analysis would not apply,
+      and the oracle could not tell because both engines share the
+      expression.
     - Four 30-bit folds (~2¹²⁰ states), not a 61-bit pack: 61 bits has
       a 50% first-collision at ~2·10⁹ docs and ~10³–10⁵ expected
       silent collisions at production corpus sizes; at 2¹²⁰ the
@@ -236,34 +237,20 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     The md5 runs ONCE per token: the hashed-long array is BOUND in its
     own projection (CollapseProject keeps it single-evaluated — it
     refuses to inline an alias consumed more than once), then each fold
-    is its own scalar-long F.aggregate over that array. Cost anatomy,
-    measured INTERLEAVED at sf0.1 (sequential per-variant timing is
-    untrustworthy on this host — a sequential run once showed a phantom
-    1.6× gap between formulations that interleaving erased): tokenize
-    + scan ≈ 0.14 s, + per-token md5+conv ≈ 0.35 s, + the four folds
-    ≈ 0.62 s median. Three fold formulations (4-field struct
-    accumulator, two packed-pair longs, four scalar passes) are
-    indistinguishable under interleaving — higher-order lambdas
-    evaluate interpreted per element, and that per-element walk, not
-    accumulator shape, is the cost — so the fold price is the price of
-    the ~120-bit identity itself; the scalar form is kept for being
-    the simplest. Every intermediate stays < 2⁴⁹ (acc·43 + 2⁴⁸) —
-    exact in int64 on both engines.
+    is its own scalar-long F.aggregate over that array. Higher-order
+    lambdas evaluate interpreted per element, and that per-element
+    walk, not the accumulator shape, is the fold cost, so the scalar
+    form is kept as the simplest. Every intermediate stays < 2⁴⁹
+    (acc·43 + 2⁴⁸) — exact in int64 on both engines.
 
-    scatter() (r11): the rounds-5/6 "the cost IS the identity"
-    adjudication was measuring SINGLE-CORE execution — the documents
-    table is ONE parquet row group at every test SF (sf10: 55 MB,
-    unsplittable below a row group no matter what maxPartitionBytes
-    or minPartitionNum say), so the zero-shuffle plan ran the whole
+    scatter(): the documents table can be ONE parquet row group,
+    unsplittable below a row group whatever maxPartitionBytes or
+    minPartitionNum say, so a zero-shuffle plan would run the whole
     md5+fold pipeline as one task. One small-input repair shuffle of
     the compact doc rows buys full machine width for the per-token
-    work: measured interleaved 0.51 → 0.33 s median at sf0.1,
-    2.51 → 0.50 s at sf1, 24.3 → 2.66 s at sf10 (9.1×) — identical
-    output (FP_SCATTER_AB_r11.json). At real corpus scale the scan
-    spans many files/row groups and scatter's width check passes the
-    frame through untouched, so the zero-shuffle property is preserved
-    exactly where it matters (§2: scale-adaptive partitioning cuts
-    both ways).
+    work. At real corpus scale the scan spans many files/row groups
+    and scatter's width check passes the frame through untouched, so
+    the zero-shuffle property is preserved exactly where it matters.
     """
     docs = scatter(table(spark, sf_dir, "documents"))
     hv = F.transform(_tokens(), lambda t: md5_int48(t))
@@ -478,7 +465,7 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
             "token",
             "cnt",
             # roundk: k/n ratios terminate near half boundaries
-            # SYSTEMATICALLY (the cume_dist sf1 class).
+            # SYSTEMATICALLY, as cume_dist's do.
             roundk(F.sum("cnt").over(cum).cast("double") / F.col("n_total"), 6).alias(
                 "cum_share"
             ),
@@ -526,13 +513,12 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id so no global sort exists anywhere.
     """
     docs = table(spark, sf_dir, "documents")
-    # Keyed parallelism repair (r11, guide §2.4): hashpartitioning
+    # Keyed parallelism repair: hashpartitioning
     # (doc_id) satisfies the tf aggregation's ClusteredDistribution
     # (doc_id, term) — subset rule — so the near-corpus-cardinality
     # (doc_id, term) exchange disappears; and when the df join
     # broadcasts, the shared tf's partitioning survives to the
-    # per-doc top-k window, which then skips ITS exchange too
-    # (measured 5 → 4 Exchanges, see OPTIMIZATION_r11.md).
+    # per-doc top-k window, which then skips ITS exchange too.
     tok = scatter(docs, "doc_id").select(
         "doc_id", F.explode(_tokens()).alias("term")
     )
@@ -598,7 +584,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical across engines.
     """
     docs = table(spark, sf_dir, "documents")
-    # Keyed parallelism repair (r11, guide §2.4): when the vocab join
+    # Keyed parallelism repair: when the vocab join
     # broadcasts (vocabulary is Heaps-sublinear), the token stream
     # keeps this hashpartitioning(doc_id) all the way to the final
     # per-doc aggregation, which then reuses it instead of paying its
@@ -628,8 +614,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_tokens"),
         # roundk, not ROUND(·, 6): a decimal(·,6) sum divided by a
         # small integer count terminates ON 7-digit half boundaries
-        # systematically — the sf1 sweep caught exactly this here
-        # (doc with Σlp = −325.579749, n = 66 → quotient −4.93302650:
-        # Spark HALF_UP said …026, DuckDB float-round said …027).
+        # systematically, where Spark's HALF_UP and DuckDB's float
+        # ROUND disagree.
         roundk(-davg(F.col("lp"), 6), 6).alias("h_bits"),
     )

@@ -63,7 +63,7 @@ def udf_apply_in_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     each group becomes one pandas DataFrame on an executor. Keyed on a
     BOUNDED composite (15 groups) deliberately: grouped-map pays a
     Python dispatch + Arrow round-trip PER GROUP, so high-cardinality
-    keys (e.g. per-customer: 15k tiny groups, measured ~6× slower here)
+    keys (e.g. per-customer: 15k tiny groups)
     belong in built-in aggregates (agg_stats) — reserve applyInPandas
     for group logic that genuinely needs pandas on big groups.
 

@@ -179,8 +179,8 @@ def session_confs(
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         # 32g: local[32] runs the driver AND all 32 executor threads in
-        # one JVM, and a smaller heap GC-throttles long bench sessions
-        # (OPTIMIZATION_r11.md). The heap is committed lazily.
+        # one JVM, and a smaller heap GC-throttles long bench sessions.
+        # The heap is committed lazily.
         "spark.driver.memory": e.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
         "spark.ui.enabled": "false",
         "spark.sql.parquet.filterPushdown": "true",

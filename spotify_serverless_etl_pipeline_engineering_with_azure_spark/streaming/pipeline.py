@@ -181,7 +181,7 @@ GROUP BY user_id, session_seq
 # streaming parallelism should track STATE SIZE, not the batch session's
 # core count: every shuffle partition materializes a state store
 # (directory, provider, commit per micro-batch), so 32 stores for a few
-# thousand keys is pure fixed overhead (OPTIMIZATION_r11.md, appendix).
+# thousand keys is pure fixed overhead.
 # A production job sizes this to keys×bytes/store-budget; it is fixed at
 # the FIRST run of a checkpoint and must not change across restarts.
 STREAM_STATE_PARTITIONS = 8
@@ -203,22 +203,6 @@ def narrow_state_partitions(spark: SparkSession):
 
 # Seconds a bounded availableNow drain may run before it is stopped.
 DRAIN_TIMEOUT_S = 300
-
-
-def _foreach_batch_drain(
-    df: DataFrame, sink, checkpoint: str, name: str, *, output_mode: str
-) -> StreamingQuery:
-    """Start ``df`` → foreachBatch(``sink``) with availableNow under
-    narrow_state_partitions and block until drained (``await_drain``)."""
-    with narrow_state_partitions(df.sparkSession):
-        q = (
-            df.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", checkpoint)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-    return await_drain(q, name)
 
 
 def await_drain(q: StreamingQuery, name: str) -> StreamingQuery:
@@ -248,6 +232,8 @@ def run_to_parquet(
     ``batch_transform`` (optional) is applied to each micro-batch
     DataFrame before the write — the per-batch PARTIAL AGGREGATION
     hook (e.g. pre-counting join pairs so only counts land on disk).
+    The stream runs availableNow under narrow_state_partitions, and
+    the call blocks until it has drained (``await_drain``).
     The run dir is ``catalog.sink_run_dir``'s (run-unique, app-scoped,
     dead-process dirs swept), checkpoint inside it, so a re-invocation
     never deletes files under a previously returned lazy frame.
@@ -261,7 +247,15 @@ def run_to_parquet(
         out = batch_transform(batch_df) if batch_transform else batch_df
         out.write.mode("overwrite").parquet(f"{run}/data/batch_id={batch_id}")
 
-    q = _foreach_batch_drain(df, sink, f"{run}/_ckpt", prefix, output_mode=output_mode)
+    with narrow_state_partitions(spark):
+        q = (
+            df.writeStream.foreachBatch(sink)
+            .option("checkpointLocation", f"{run}/_ckpt")
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+    await_drain(q, prefix)
     # The read-back's shape: batch_transform (it may change the schema)
     # over an empty frame. Handing its schema to the reader spares the
     # footer-inference job a schema-less parquet read runs.

@@ -8,8 +8,9 @@ next runs it. Each file is parsed, never executed.
 
 The package also shares frames in one place: only catalog.py
 checkpoints, and nothing persists. It writes the read pins once:
-session.READ_PINS. And it writes each operator once: no run of
-CLONE_RUN code lines appears twice."""
+session.READ_PINS. It writes each operator once: no run of CLONE_RUN
+code lines appears twice. And its prose states contracts: no docstring
+or comment carries round history or a measured number."""
 
 from __future__ import annotations
 
@@ -19,6 +20,7 @@ import importlib
 import importlib.util
 import io
 import os
+import re
 import tokenize
 
 import pytest
@@ -319,30 +321,87 @@ def test_pin_scan_flags_a_second_copy():
 CLONE_RUN = 6
 
 
-def code_lines(source: str) -> list[tuple[int, str]]:
-    """(line number, whitespace-normalised text) of every code line of
-    ``source``: blank lines, comments, docstrings and import statements
-    are left out; lines inside other strings (oracle SQL) are code."""
-    skip = set()
+def line_layout(source: str) -> tuple[set[int], set[int], dict[int, int]]:
+    """(docstring line numbers, import line numbers, {line number:
+    column of its comment}) of ``source``: the one reading of where
+    code, docstrings and comments sit, shared by the clone guard, the
+    history guard and count_lines."""
+    docstrings, imports = set(), set()
     for node in ast.walk(ast.parse(source)):
         if isinstance(node, (ast.Import, ast.ImportFrom)):
-            skip.update(range(node.lineno, node.end_lineno + 1))
+            imports.update(range(node.lineno, node.end_lineno + 1))
         elif (
             isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
             and ast.get_docstring(node, clean=False) is not None
         ):
-            skip.update(range(node.body[0].lineno, node.body[0].end_lineno + 1))
+            docstrings.update(range(node.body[0].lineno, node.body[0].end_lineno + 1))
     comment_at = {
         tok.start[0]: tok.start[1]
         for tok in tokenize.generate_tokens(io.StringIO(source).readline)
         if tok.type == tokenize.COMMENT
     }
+    return docstrings, imports, comment_at
+
+
+def code_lines(source: str) -> list[tuple[int, str]]:
+    """(line number, whitespace-normalised text) of every code line of
+    ``source``: blank lines, comments, docstrings and import statements
+    are left out; lines inside other strings (oracle SQL) are code."""
+    docstrings, imports, comment_at = line_layout(source)
     found = []
     for n, line in enumerate(source.splitlines(), 1):
         text = " ".join(line[: comment_at.get(n)].split())
-        if text and n not in skip:
+        if text and n not in docstrings and n not in imports:
             found.append((n, text))
     return found
+
+
+def prose_lines(source: str) -> list[tuple[int, str]]:
+    """(line number, text) of every docstring line and every comment of
+    ``source``, trailing comments included; other strings (oracle SQL)
+    are not prose."""
+    docstrings, _, comment_at = line_layout(source)
+    found = []
+    for n, line in enumerate(source.splitlines(), 1):
+        if n in docstrings:
+            found.append((n, line.strip()))
+        elif n in comment_at:
+            found.append((n, line[comment_at[n] :]))
+    return found
+
+
+def count_lines(paths: list[str]) -> dict[str, int]:
+    """Non-blank lines of the files at ``paths`` (relative to the repo
+    root) by kind: "docstring", "comment" (a line holding only a
+    comment) and "code" (everything else, imports and oracle SQL
+    included).
+
+    python -c "import sys; sys.path.insert(0, 'tests');
+    import test_tooling_imports as t; print(t.count_lines(t.PACKAGE_FILES))"
+    """
+    counts = {"code": 0, "docstring": 0, "comment": 0}
+    for path in paths:
+        with open(os.path.join(ROOT, path), encoding="utf-8") as f:
+            source = f.read()
+        docstrings, _, comment_at = line_layout(source)
+        for n, line in enumerate(source.splitlines(), 1):
+            if not line.strip():
+                continue
+            if n in docstrings:
+                counts["docstring"] += 1
+            elif not line[: comment_at.get(n)].strip():
+                counts["comment"] += 1
+            else:
+                counts["code"] += 1
+    return counts
+
+
+def test_count_lines_splits_code_docstrings_and_comments(tmp_path):
+    path = tmp_path / "m.py"
+    path.write_text(
+        '"""Doc\n\nmore."""\nimport os  # trailing\n\n# alone\nx = """SELECT 1\nFROM t"""\n'
+    )
+    assert count_lines([str(path)]) == {"code": 3, "docstring": 2, "comment": 1}
 
 
 def repeated_blocks(sources: dict[str, str]) -> list[list[str]]:
@@ -416,3 +475,64 @@ def test_clone_scan_flags_a_copied_block():
     commented = "".join(f"# {s}\n" for s in steps)
     assert repeated_blocks({"a.py": original, "e.py": edited}) == []
     assert repeated_blocks({"a.py": original, "c.py": quoted, "d.py": commented}) == []
+
+
+# Round history and measured numbers in prose: a round tag (r11, the
+# _r10 of a result-file name, round 7, round-6), a PR tag, a
+# "measured" claim, or a duration on the same line as a scale factor.
+HISTORY = re.compile(
+    r"(?<![A-Za-z0-9])r\d{1,2}(?!\d)"
+    r"|\brounds?[- ]\d"
+    r"|\bPR[- ]?\d"
+    r"|\bmeasured\b"
+    r"|\d\s?(?:µs|ms|s|min)\b.*\bsf\s?\d",
+    re.IGNORECASE,
+)
+
+
+def history_lines(sources: dict[str, str]) -> list[str]:
+    """"path:line: text" of every docstring or comment line that carries
+    round history or a measured number."""
+    return [
+        f"{path}:{n}: {text}"
+        for path, source in sources.items()
+        for n, text in prose_lines(source)
+        if HISTORY.search(text)
+    ]
+
+
+def test_no_docstring_carries_history():
+    """Docstrings and comments state contracts: the reason for a shape
+    and the conditions it needs. Round history and measured numbers
+    belong in the OPTIMIZATION notes, which a later change can update
+    without touching the code."""
+    sources = {}
+    for path in PACKAGE_FILES:
+        with open(os.path.join(ROOT, path), encoding="utf-8") as f:
+            sources[path] = f.read()
+    found = history_lines(sources)
+    assert not found, "history in package prose:\n" + "\n".join(found)
+
+
+def test_history_scan_flags_round_tags_and_timings():
+    flagged = [
+        "# Keyed repair (r11): reuses the hashpartitioning.",
+        "# the round-6 probe filled the disk.",
+        "# Added in PR 17 for the blob stream.",
+        "# consumers (IVF_FLOOR_AB_r10.json).",
+        "# this quarters the update work (measured at sf1).",
+        "# work: 0.51 → 0.33 s at sf0.1.",
+    ]
+    kept = [
+        "# two independent 48-bit slices, quantized to 6dp",
+        "# exact while the sum stays under 2^53 units",
+        "# O(log diameter) rounds; the first round reads the labels",
+        "# a 50% first-collision at ~2·10⁹ docs",
+    ]
+    source = "".join(f"{line}\n" for line in flagged + kept)
+    assert history_lines({"m.py": source}) == [
+        f"m.py:{n}: {line}" for n, line in enumerate(flagged, 1)
+    ]
+    # Docstrings are scanned like comments; SQL text is not prose.
+    documented = 'def q():\n    """Faster since round 7."""\n    return "SELECT r11 FROM t"\n'
+    assert history_lines({"q.py": documented}) == ['q.py:2: """Faster since round 7."""']
